@@ -138,7 +138,8 @@ class PipelineRunner:
         Stage row counts ride on ``df.observe`` — accumulated DURING
         the write instead of a second ``count()`` job per stage (the
         Metaflow-card metrics analog; at 100 TB a free byproduct vs a
-        full re-scan)."""
+        full re-scan). The metric is read with a bounded wait; if it
+        never fires, the written artifact is counted instead."""
         path = os.path.join(self.base, name)
         if self.resume and self._complete(name):
             # the sidecar is written via temp+rename so a present file
@@ -156,11 +157,18 @@ class PipelineRunner:
                 return self.spark.read.parquet(path)
         from pyspark.sql import Observation
 
+        from post_modern_stack_spark.operators.obs import observed_value
+
         obs = Observation(f"stage:{name}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(path)
-        rows = obs.get["rows"]
+        out = self.spark.read.parquet(path)
+        # bounded read: a metric that never fires costs one count of the
+        # written artifact, never a hang
+        rows = observed_value(obs, "rows")
+        if rows is None:
+            rows = out.count()
         # temp + atomic rename: a process killed mid-write must never
         # leave a present-but-truncated sidecar next to a _SUCCESS
         # marker (resume would otherwise trust it)
@@ -168,7 +176,6 @@ class PipelineRunner:
         with open(tmp, "w") as f:
             json.dump({"stage": name, "rows": rows}, f)
         os.replace(tmp, self._meta_path(name))
-        out = self.spark.read.parquet(path)
         self.results.append(StageResult(name, path, rows))
         return out
 

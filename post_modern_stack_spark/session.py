@@ -98,6 +98,9 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+        # vocab.map_literal escapes tokens with backslashes, which the
+        # parser honours only while escaped string literals are off
+        ("spark.sql.parser.escapedStringLiterals", "false"),
     ):
         try:
             spark.conf.set(k, v)

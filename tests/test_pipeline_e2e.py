@@ -12,18 +12,27 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from post_modern_stack_spark.functions import pad_sequence
+from post_modern_stack_spark.operators import vocab
 from post_modern_stack_spark.operators.sessionize import (
     events_exploded,
     latest_etl,
     session_events,
 )
-from post_modern_stack_spark.plans.nep_flow import run_nep_flow
+from post_modern_stack_spark.plans.nep_flow import MAX_LEN, run_nep_flow
 from post_modern_stack_spark.sources import ingest
 
 API_A = "aaaaaaaa-0000-0000-0000-000000000000"
 API_B = "bbbbbbbb-0000-0000-0000-000000000000"
 
 BASE_MS = 1_547_528_000_000  # 2019-01-15ish, matching reference date era
+DAY_MS = 86_400_000
+FLOW_KW = dict(api_key=API_A, start_date="2019-01-01", end_date="2019-03-14")
+# Spark jobs a fully resumed run_nep_flow launches: the schema-inference
+# job of each of the 4 checkpoint read-backs, the 3 AQE stages of the
+# dbt-test aggregate and the metrics collect (20 while the flow collected
+# the vocab into a map literal and ran one action per metric).
+RESUME_JOBS = 8
 
 
 def _event(sku, ms, action="detail", etype="event_product", session="s1"):
@@ -80,6 +89,30 @@ def raw_log(spark, tmp_path_factory):
     ingest.ingest_events(
         sessions_b, out, API_B, etl_id="etl-new", etl_timestamp_ms=BASE_MS + 10
     )
+    return out
+
+
+@pytest.fixture(scope="module")
+def oov_log(spark, tmp_path_factory):
+    """Ten tenant-A sessions on ten consecutive days. The time split puts
+    the last one in test, and its inputs mix tokens seen in train with
+    two never-seen ones."""
+    out = str(tmp_path_factory.mktemp("oovlog") / "raw_events")
+    seen = ["p1", "p2", "p3", "p4", "p5"]
+    days = [[seen[(d + j) % 5] for j in range(3 + d % 3)] for d in range(9)]
+    days.append(["p1", "new1", "p3", "new2", "p2"])
+    sessions = spark.createDataFrame(
+        [
+            Row(
+                events=[
+                    _event(sku, BASE_MS + d * DAY_MS + 1000 * j, session=f"d{d}")
+                    for j, sku in enumerate(skus)
+                ]
+            )
+            for d, skus in enumerate(days)
+        ]
+    )
+    ingest.ingest_events(sessions, out, API_A, etl_id="etl-1", etl_timestamp_ms=BASE_MS)
     return out
 
 
@@ -230,3 +263,115 @@ def test_stage_rows_observed_without_extra_jobs(spark, raw_log, tmp_path):
         assert rows is not None
         on_disk = spark.read.parquet(out["run_dir"] + "/" + name).count()
         assert rows == on_disk, name
+
+
+def test_dataset_encoding_matches_map_literal_encode(spark, oov_log, tmp_path):
+    """The flow's join encode gives the dataset exactly what the
+    map-literal ``vocab.encode`` gives over the same train-x vocabulary:
+    x_enc, y_enc and x_padded, with unseen test tokens mapped to UNK."""
+    raw = ingest.read_raw_events(spark, oov_log)
+    out = run_nep_flow(spark, raw, str(tmp_path), "run-enc", **FLOW_KW)
+    ds = spark.read.parquet(out["run_dir"] + "/dataset")
+    vb = vocab.build_vocab(ds.filter(F.col("split") == "train"), "x")
+    pairs = vb.select("token", "token_id").collect()
+    ref = vocab.encode(
+        vocab.encode(ds.withColumn("y_arr", F.array("y")), vb, "y_arr", "y_ref", pairs),
+        vb,
+        "x",
+        "x_ref",
+        pairs,
+    ).withColumn("padded_ref", pad_sequence("x_ref", MAX_LEN, 0))
+    rows = {r["session_id"]: r for r in ref.collect()}
+    assert len(rows) == 10
+    for sid, r in rows.items():
+        assert r["x_enc"] == r["x_ref"], sid
+        assert r["y_enc"] == r["y_ref"][0], sid
+        assert r["x_padded"] == r["padded_ref"], sid
+
+    test = rows["d9"]
+    assert [sid for sid, r in rows.items() if r["split"] == "test"] == ["d9"]
+    # x = [p1, new1, p3, new2]: seen tokens keep their ids, unseen → UNK
+    unk = [i == vocab.UNK_ID for i in test["x_enc"]]
+    assert unk == [False, True, False, True]
+    assert test["y_enc"] != vocab.UNK_ID
+
+
+def test_metrics_artifact_persisted_and_resumed(spark, raw_log, tmp_path):
+    """The ``metrics`` checkpoint on disk is what the flow returns, and a
+    fully resumed run returns that persisted artifact (Metaflow resume
+    parity) rather than recomputing it."""
+    raw = ingest.read_raw_events(spark, raw_log)
+    out = run_nep_flow(spark, raw, str(tmp_path), "run-met", **FLOW_KW)
+    path = out["run_dir"] + "/metrics"
+    on_disk = {r["name"]: r["value"] for r in spark.read.parquet(path).collect()}
+    assert on_disk == out["metrics"]
+    # s1 (5) and s2 (3) train, s3 (25) test; vocab = the 6 train-x tokens
+    assert out["metrics"] == {
+        "n_sessions": 3.0,
+        "avg_session_len": 11.0,
+        "n_train": 2.0,
+        "n_test": 1.0,
+        "vocab_size": 6.0,
+    }
+
+    # resume reads the artifact: a doctored value comes back as written
+    # (test_resume_skips_completed_stages checks the untouched round trip)
+    doctored = [(k, 99.0 if k == "n_test" else v) for k, v in on_disk.items()]
+    spark.createDataFrame(doctored, "name string, value double").write.mode(
+        "overwrite"
+    ).parquet(path)
+    out2 = run_nep_flow(spark, raw, str(tmp_path), "run-met", resume=True, **FLOW_KW)
+    assert out2["resumed_stages"] == out["stages"]
+    assert out2["metrics"] == dict(doctored)
+
+
+def test_empty_extraction_window_fails_fast(spark, raw_log, tmp_path):
+    """An extraction window with no sessions stops the flow at the
+    reference's empty-dataset assertion, read from the observed row
+    count of the ``extracted`` checkpoint."""
+    raw = ingest.read_raw_events(spark, raw_log)
+    with pytest.raises(AssertionError, match="empty dataset"):
+        run_nep_flow(
+            spark,
+            raw,
+            str(tmp_path),
+            "run-empty",
+            api_key=API_A,
+            start_date="2018-01-01",
+            end_date="2018-12-31",
+        )
+
+
+def test_resumed_flow_job_budget(spark, raw_log, tmp_path):
+    """A fully resumed flow launches a pinned number of Spark jobs, so a
+    regression to an eager vocabulary collect or to per-metric actions
+    fails here, not only in the benchmark. The jobs are tagged with the
+    thread's SparkContext job tag: a session ``spark.addTag`` tag does
+    not reach the schema-inference job of ``spark.read.parquet``."""
+    raw = ingest.read_raw_events(spark, raw_log)
+    run_nep_flow(spark, raw, str(tmp_path), "run-jobs", **FLOW_KW)
+    sc = spark.sparkContext
+    tag = "nep-resume-job-budget"
+    sc.addJobTag(tag)
+    try:
+        out = run_nep_flow(spark, raw, str(tmp_path), "run-jobs", resume=True, **FLOW_KW)
+    finally:
+        sc.removeJobTag(tag)
+    assert out["resumed_stages"] == out["stages"]
+    jobs = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+    assert len(jobs) == RESUME_JOBS
+
+
+def test_checkpoint_counts_artifact_when_metric_never_fires(
+    spark, tmp_path, monkeypatch
+):
+    """The observed row count is a bounded read: when the metric never
+    arrives, the checkpoint counts its written artifact instead of
+    blocking on ``Observation.get``."""
+    from post_modern_stack_spark.operators import obs
+    from post_modern_stack_spark.plans.pipeline import PipelineRunner
+
+    monkeypatch.setattr(obs, "observed_value", lambda o, key, timeout_s=30.0: None)
+    runner = PipelineRunner(spark, str(tmp_path), "run-fallback")
+    assert runner.checkpoint("ids", spark.range(7)).count() == 7
+    assert runner.results[-1].rows == 7
