@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from post_modern_stack_spark.operators.obs import checkpoint_observed
+
 
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -89,7 +91,7 @@ def shingle_stream(
     Measured at sf0.1 (single input partition, 3-sample medians):
     2.51 s vs 32.95 s for the r07 inline size+explode double-build and
     12.38 s for the r06 alias form whose inferred filter re-splits per
-    shingle — scripts/exp_shingle_forms.py.
+    shingle — the microbench written up in NOTES_r13.md.
     """
     sh_arr = shingles_from_tokens(F.col("__toks"), shingle_n)
     return (
@@ -291,33 +293,6 @@ def jaccard_pairs(
     ).filter(F.col("jaccard") >= min_jaccard)
 
 
-def _observed_n_changed(
-    obs, old_labels: DataFrame, new_labels: DataFrame, timeout_s: float = 30.0
-) -> int:
-    """Bounded read of the convergence observe metric (ADVICE r11):
-    ``Observation.get`` blocks with NO timeout, so on any Spark
-    build/config where the eager localCheckpoint materializes outside
-    the tracked query execution the loop would hang forever — the old
-    join+limit+count check could not hang. Poll the JVM-side
-    ``getOrEmpty`` (each call waits ≤100 ms) up to ``timeout_s``; once
-    the metric is present, ``obs.get`` returns without blocking. If it
-    never fires (or the internal accessor is unavailable on this
-    build), degrade to the pre-r11 inequality check — one extra
-    node-grain join job, never a hang."""
-    from post_modern_stack_spark.operators.obs import observed_value
-
-    v = observed_value(obs, "n_changed", timeout_s=timeout_s)
-    if v is not None:
-        return int(v)
-    return (
-        new_labels.alias("n")
-        .join(old_labels.alias("o"), "node")
-        .filter(F.col("n.label") != F.col("o.label"))
-        .limit(1)
-        .count()
-    )
-
-
 def cluster_pairs(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -350,9 +325,7 @@ def cluster_pairs(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
-
-    for it in range(max_iterations):
+    for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -362,16 +335,16 @@ def cluster_pairs(
         # without it every round re-plans (and re-runs) all prior
         # rounds — plan compilation alone goes super-linear.
         #
-        # Convergence detection rides the SAME materialization as an
-        # observe() metric (r11 optimization round): the old form ran
-        # a separate new⋈old join + limit+count ACTION per iteration —
-        # one extra job AND a node-grain shuffle join per round at any
-        # scale. The propagated label is monotone non-increasing, so
-        # "any label strictly below its previous value" is exactly the
-        # old inequality check, computable row-by-row during the
-        # checkpoint write for free.
-        obs = Observation(f"cc_changed_{it}")
-        new_labels = (
+        # Convergence detection rides the SAME materialization
+        # (operators/obs.checkpoint_observed, r11 optimization round):
+        # the old form ran a separate new⋈old join + limit+count ACTION
+        # per iteration — one extra job AND a node-grain shuffle join
+        # per round at any scale. The propagated label is monotone
+        # non-increasing, so "any label strictly below its previous
+        # value" is exactly the old inequality check, computable
+        # row-by-row during the checkpoint write for free. ``__old``
+        # stays in the checkpoint so the fallback aggregate resolves.
+        new_labels, m = checkpoint_observed(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -379,22 +352,13 @@ def cluster_pairs(
                 F.least(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        (F.col("label") != F.col("__old")).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("n_changed"),
-            )
-            .select("node", "label")
-            .localCheckpoint()
+            ),
+            n_changed=F.coalesce(
+                F.sum((F.col("label") != F.col("__old")).cast("long")), F.lit(0)
+            ),
         )
-        n_changed = _observed_n_changed(obs, labels, new_labels)
-        labels = new_labels
-        if n_changed == 0:
+        labels = new_labels.select("node", "label")
+        if m["n_changed"] == 0:
             break
     else:
         # returning unconverged labels would silently split components

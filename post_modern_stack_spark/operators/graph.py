@@ -19,15 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _observed_dangling(obs) -> float | None:
-    """Bounded read of the dangling-mass observe metric; ``None`` (the
-    in-plan aggregate route) when the metric does not fire — see
-    operators/obs.observed_value."""
-    from post_modern_stack_spark.operators.obs import observed_value
-
-    v = observed_value(obs, "_dang")
-    return None if v is None else float(v)
+from post_modern_stack_spark.operators.obs import checkpoint_observed
 
 
 def pagerank(
@@ -38,7 +30,6 @@ def pagerank(
     dst: str = "dst",
     checkpoint_interval: int = 2,
     broadcast_ranks: bool = False,
-    observe_dangling: bool = True,
 ) -> DataFrame:
     """PageRank over an edge list; returns (node, rank), Σrank = 1.
 
@@ -86,19 +77,18 @@ def pagerank(
 
     dang_sum = F.coalesce(
         F.sum(F.when(~F.col("_has_out"), F.col("rank"))), F.lit(0.0)
-    ).alias("_dang")
+    )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    # ``observe_dangling`` (r12, VERDICT r11 item 5): the dangling-mass
-    # scalar of a CHECKPOINTED rank frame rides the checkpoint's own
-    # materialization as an observe() metric (the cluster_pairs /
-    # funnel-count pattern), so the next iteration's update uses a
-    # plain double literal instead of re-aggregating the rank frame
-    # in-plan — one fewer rank-frame reference (aggregate subtree +
-    # 1-row broadcast exchange) in every post-checkpoint iteration's
-    # plan. Iterations NOT preceded by a checkpoint (and any build
-    # where the metric fails to fire) keep the in-plan aggregate —
-    # identical math: the observe computes the same sum(when(...))
-    # over the same materialized rows the in-plan aggregate scanned.
+    # r12 (VERDICT r11 item 5): the dangling-mass scalar of a
+    # CHECKPOINTED rank frame rides the checkpoint's own
+    # materialization (operators/obs.checkpoint_observed), so the next
+    # iteration's update uses a plain double literal instead of
+    # re-aggregating the rank frame in-plan — one fewer rank-frame
+    # reference (aggregate subtree + 1-row broadcast exchange) in every
+    # post-checkpoint iteration's plan. Iterations NOT preceded by a
+    # checkpoint keep the in-plan aggregate — identical math: the
+    # observe computes the same sum(when(...)) over the same
+    # materialized rows the in-plan aggregate scans.
     dang_known: float | None = None
     for it in range(iters):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
@@ -110,7 +100,9 @@ def pagerank(
         )
         updated = nodes.join(contribs, "node", "left_outer")
         if dang_known is None:
-            updated = updated.crossJoin(F.broadcast(ranks.agg(dang_sum)))
+            updated = updated.crossJoin(
+                F.broadcast(ranks.agg(dang_sum.alias("_dang")))
+            )
             dang_col = F.col("_dang")
         else:
             dang_col = F.lit(dang_known)
@@ -125,14 +117,8 @@ def pagerank(
         )
         dang_known = None
         if (it + 1) % checkpoint_interval == 0 and it + 1 < iters:
-            if observe_dangling:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                ranks = ranks.observe(obs, dang_sum)
-            ranks = ranks.localCheckpoint()
-            if observe_dangling:
-                dang_known = _observed_dangling(obs)
+            ranks, m = checkpoint_observed(ranks, dang=dang_sum)
+            dang_known = float(m["dang"])
     return ranks.select("node", "rank")
 
 

@@ -221,9 +221,9 @@ def rounded_pair_cosine(qv: str | F.Column, cv: str | F.Column) -> F.Column:
     test-pinned, including the zero-vector NULL), kept as the MEASURED-
     WORSE alternative and a cross-implementation parity anchor.
 
-    r10 controlled A/B (scripts/exp_pair_scoring.py, pinned 2M-pair
-    frame, interleaved, both orderings): the expression form JIT-warms
-    to **1.3-2.1 s / 2M pairs (~0.7 µs/row)** while this form sits at
+    r10 controlled A/B (BASELINE.md "candidate-scoring hypothesis",
+    pinned 2M-pair frame, interleaved, both orderings): the expression
+    form JIT-warms to **1.3-2.1 s / 2M pairs (~0.7 µs/row)** while this form sits at
     **4.4-20.8 s**, bounded below by Arrow-serializing both 64-d
     vectors (~1 KB/pair) to Python workers and exposed to the host's
     Python-worker band. The cold first-run expression cost (the 18.6 s
@@ -1019,13 +1019,13 @@ def kmeans_lloyd(
     the executors (contrast ``_train_centroids``, which trains on a
     bounded driver sample for IVF).
 
-    Per iteration: assignment is one Arrow matmul per batch against
-    broadcast centroids (pandas UDF, argmin of squared distance);
-    the update is posexplode to (cluster, dim, val) + one hash agg —
-    map-side combine collapses each partition to ≤ k×dim partials, so
-    the shuffle is tiny regardless of corpus size. Only the k×dim
-    centroid matrix is ever collected (the PageRank/logreg iterative
-    pattern).
+    Per iteration: ONE fused ``mapInArrow`` pass (OPTIMIZATION_r12 §3)
+    assigns each batch (one GEMM argmin of squared distance) and emits
+    per-task (cluster, dim) partial sums and counts, ≤ k×dim rows per
+    task, so the merging hash agg's shuffle is tiny at any corpus size.
+    Only the k×dim centroid matrix is ever collected (the
+    PageRank/logreg iterative pattern). NULL or ragged embeddings
+    raise ``ValueError``.
 
     Init = k-means‖-style oversampling (Bahmani '12, VERDICT r04 item
     2): ONE distributed pass scores every vector by squared distance
@@ -1137,6 +1137,9 @@ def kmeans_lloyd(
                 if n == 0:
                     continue
                 col = batch.column(0)
+                if col.null_count or col.values.null_count:
+                    # a NULL element would become NaN: every point → cluster 0
+                    raise ValueError("NULL embedding or embedding element")
                 offs = np.asarray(col.offsets)
                 if not np.all(np.diff(offs) == dim):
                     raise ValueError(

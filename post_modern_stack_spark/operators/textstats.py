@@ -1122,7 +1122,6 @@ def curate_documents(
     checkpoint_gram_keys: bool | None = None,
     auto_partitions: bool = True,
     observations: dict | None = None,
-    checkpoint_near: bool | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end training-corpus curation — the five-stage pipeline
     every LLM data run executes, composed from this module's operators
@@ -1181,8 +1180,9 @@ def curate_documents(
     row-count metric (``n`` = count(1)) attached to the plan that the
     stage's OWN localCheckpoint materializes — ``quality`` rides the
     ``deduped`` checkpoint, since quality itself is recompute-cheap and
-    never checkpointed — so by the time this function returns,
-    ``obs.get["n"]`` holds every stage's survivor count WITHOUT any
+    never checkpointed — so by the time this function returns, every
+    stage's survivor count is delivered (read it with
+    ``operators.obs.read_observed(obs, "n", fallback)``) WITHOUT any
     extra action: the funnel queries used to re-scan each checkpointed
     stage (one count job per stage) and re-run the quality filter just
     to count it. Same design as cluster_pairs' convergence observe. At
@@ -1211,7 +1211,6 @@ def curate_documents(
                     checkpoint_gram_keys,
                     auto_partitions=False,
                     observations=observations,
-                    checkpoint_near=checkpoint_near,
                 )
 
     def _count_obs(name: str, frame: DataFrame) -> DataFrame:
@@ -1311,12 +1310,9 @@ def curate_documents(
     # appears once in trimmed's plan, so it still fires exactly once).
     # In PLAIN mode near has two consumers (the contamination gram
     # build and the clean anti-join) whose recompute repeats the gram
-    # shuffle — the checkpoint stays. ``checkpoint_near`` overrides for
-    # A/B probes.
-    if checkpoint_near is None:
-        checkpoint_near = not span_trim
+    # shuffle — the checkpoint stays.
     near = _count_obs("near", deduped.join(near_ids, "doc_id"))
-    if checkpoint_near:
+    if not span_trim:
         near = near.localCheckpoint()
 
     pre_clean = near

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from post_modern_stack_spark.operators.obs import checkpoint_observed
+
 UNK = "<UNK>"
 UNK_ID = 1
 
@@ -215,18 +217,12 @@ def bpe_train(
     Returns (merges, vocab_df): merges = [(rank, left, right, count)],
     vocab_df = (word, count, symbols) after all merges.
     """
-    from pyspark.sql import Observation
-
-    from post_modern_stack_spark.operators.obs import observed_value
-
     # word-table row count rides the checkpoint materialization as an
     # observe metric (r12, the §7 pattern): the driver-vs-distributed
     # routing needs only this scalar, and a separate count() job was
     # one of this query's 7 jobs — pure scheduler-overhead surface on
-    # a 2-job query. Falls back to the explicit count if the metric
-    # does not fire.
-    count_obs = Observation()
-    words = (
+    # a 2-job query.
+    words, m = checkpoint_observed(
         df.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
@@ -235,14 +231,10 @@ def bpe_train(
         # the word table is vocabulary-sized (tiny next to the corpus);
         # collapse to a few partitions so the 8 iteration jobs pay task
         # overhead on 4 tasks, not the corpus partitioning
-        .coalesce(4)
-        .observe(count_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .coalesce(4),
+        n=F.count(F.lit(1)),
     )
-    n_words = observed_value(count_obs, "n")
-    if n_words is None:
-        n_words = words.count()
-    if n_words <= driver_merge_threshold:
+    if m["n"] <= driver_merge_threshold:
         return _bpe_train_driver(words, n_merges)
     merges = []
     state = words

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from post_modern_stack_spark.operators import dedup, textstats
+from post_modern_stack_spark.operators.obs import read_observed
 from post_modern_stack_spark.operators.shaping import top_k_per_group
 from post_modern_stack_spark.plans.entryflow import query
 from post_modern_stack_spark.registry import load_table
@@ -1010,7 +1011,8 @@ def _funnel_row(corpus: DataFrame, benchmark: DataFrame, span_trim: bool) -> Dat
     on both sides of the quality join, so an observe there could fire
     twice per action), and the final stage keeps its count+token-sum
     aggregate — that action is what materializes the token-budget
-    plan. One action total instead of seven."""
+    plan. One action total instead of seven. A count whose metric never
+    arrives is taken from the stage frame (operators/obs.read_observed)."""
     from pyspark.sql import Observation
 
     stage_names = ["quality", "deduped", "near"] + (
@@ -1023,9 +1025,8 @@ def _funnel_row(corpus: DataFrame, benchmark: DataFrame, span_trim: bool) -> Dat
     toks = F.size(F.split(F.col("text"), r"\s+"))
     counts = stages["input"].agg(F.count(F.lit(1)).alias("n_input"))
     for name in stage_names:
-        counts = counts.withColumn(
-            f"n_{name}", F.lit(int(obs[name].get["n"])).cast("long")
-        )
+        n = read_observed(obs[name], "n", stages[name].count)
+        counts = counts.withColumn(f"n_{name}", F.lit(int(n)).cast("long"))
     final_agg = stages["final"].agg(
         F.count(F.lit(1)).alias("n_final"),
         F.sum(toks).alias("final_tokens"),

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from post_modern_stack_spark.operators.obs import checkpoint_observed
+
 
 @dataclass
 class Model:
@@ -138,8 +140,8 @@ class PipelineRunner:
         Stage row counts ride on ``df.observe`` — accumulated DURING
         the write instead of a second ``count()`` job per stage (the
         Metaflow-card metrics analog; at 100 TB a free byproduct vs a
-        full re-scan). The metric is read with a bounded wait; if it
-        never fires, the written artifact is counted instead."""
+        full re-scan). If the metric never arrives, the written
+        artifact is counted instead (operators/obs.checkpoint_observed)."""
         path = os.path.join(self.base, name)
         if self.resume and self._complete(name):
             # the sidecar is written via temp+rename so a present file
@@ -155,20 +157,13 @@ class PipelineRunner:
             if rows is not None:
                 self.results.append(StageResult(name, path, rows, resumed=True))
                 return self.spark.read.parquet(path)
-        from pyspark.sql import Observation
 
-        from post_modern_stack_spark.operators.obs import observed_value
+        def write(frame: DataFrame) -> DataFrame:
+            frame.write.mode("overwrite").parquet(path)
+            return self.spark.read.parquet(path)
 
-        obs = Observation(f"stage:{name}")
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        out = self.spark.read.parquet(path)
-        # bounded read: a metric that never fires costs one count of the
-        # written artifact, never a hang
-        rows = observed_value(obs, "rows")
-        if rows is None:
-            rows = out.count()
+        out, m = checkpoint_observed(df, write, rows=F.count(F.lit(1)))
+        rows = m["rows"]
         # temp + atomic rename: a process killed mid-write must never
         # leave a present-but-truncated sidecar next to a _SUCCESS
         # marker (resume would otherwise trust it)

@@ -37,25 +37,34 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (path, dir mtime) -> StructType. Schema inference re-reads parquet
+# (path, file listing) -> StructType. Schema inference re-reads parquet
 # footers and re-lists files on EVERY read.parquet call (~85 ms/table
 # measured) — a metastore resolves a table's schema once per catalog
 # entry, and this memo is that catalog entry. It holds ONLY schemas
 # (plain StructType values): every load_table still returns a fresh
 # DataFrame with fresh expr ids (no self-join ambiguity) and every
 # action still lists and reads the parquet files — no data, plan, or
-# result is cached. The mtime in the key invalidates naturally if a
-# table is rewritten in place.
+# result is cached. The listing (names, sizes, mtime_ns) changes on any
+# in-place rewrite, even one that keeps the directory mtime.
 _schema_memo: dict = {}
 _SCHEMA_MEMO_MAX = 64
 
 
-def _table_schema(spark: SparkSession, path: str):
+def _listing(path: str):
     try:
-        mtime = os.path.getmtime(path)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return st.st_size, st.st_mtime_ns
+        with os.scandir(path) as it:
+            return tuple(
+                sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it)
+            )
     except OSError:
-        mtime = None
-    key = (path, mtime)
+        return None
+
+
+def _table_schema(spark: SparkSession, path: str):
+    key = (path, _listing(path))
     schema = _schema_memo.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

@@ -554,6 +554,7 @@ def test_curate_documents_observed_counts_match_stage_counts(spark, span_trim):
     equal to its neighbor."""
     from pyspark.sql import Observation
 
+    from post_modern_stack_spark.operators.obs import read_observed
     from post_modern_stack_spark.operators.textstats import curate_documents
 
     span = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
@@ -586,11 +587,12 @@ def test_curate_documents_observed_counts_match_stage_counts(spark, span_trim):
     stages = curate_documents(
         docs, bench_docs, span_trim=span_trim, observations=obs
     )
+    # fallback None: a count that is not observed fails the comparison
+    c = {n: read_observed(obs[n], "n", lambda: None) for n in names}
     for n in names:
-        assert obs[n].get["n"] == stages[n].count(), n
+        assert c[n] == stages[n].count(), n
     # the funnel actually shrinks at every comparable stage — no count
     # is vacuously equal to its upstream neighbor
-    c = {n: obs[n].get["n"] for n in names}
     assert c["quality"] > c["deduped"] > c["near"] > c["clean"]
 
 
@@ -814,6 +816,17 @@ def test_kmeans_k_exceeds_n_is_safe(spark):
     assignments, cents = kmeans_lloyd(df, k=4, n_iter=2)
     got = {r["vec_id"]: r["cluster"] for r in assignments.collect()}
     assert set(got) == {1, 2} and len(cents) == 4
+
+
+def test_kmeans_rejects_null_embedding_element(spark):
+    """One NULL element would turn into NaN inside the fused update and
+    silently send every point to cluster 0; it must fail loudly."""
+    from post_modern_stack_spark.operators.similarity import kmeans_lloyd
+
+    rows = [(i, [float(i), 1.0]) for i in range(6)] + [(6, [2.0, None])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="NULL embedding"):
+        kmeans_lloyd(df, k=2, n_iter=1)
 
 
 def test_container_parsers_never_crash_on_fuzz():

@@ -371,7 +371,8 @@ def test_checkpoint_counts_artifact_when_metric_never_fires(
     from post_modern_stack_spark.operators import obs
     from post_modern_stack_spark.plans.pipeline import PipelineRunner
 
-    monkeypatch.setattr(obs, "observed_value", lambda o, key, timeout_s=30.0: None)
+    monkeypatch.setattr(obs, "_observed_value", lambda o, timeout_s: None)
+    monkeypatch.setattr(obs, "_missed", False)
     runner = PipelineRunner(spark, str(tmp_path), "run-fallback")
     assert runner.checkpoint("ids", spark.range(7)).count() == 7
     assert runner.results[-1].rows == 7

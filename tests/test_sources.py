@@ -4,6 +4,8 @@ shaping primitives (SURVEY.md §5 strategy 4).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
@@ -706,3 +708,22 @@ def test_versioned_merge_schema_evolution_and_dup_keys(spark, tmp_path):
     assert rows[1] == ("x2", 7.0)       # deterministic max-struct pick
     assert rows[2] == ("b", None)       # old row: new column is NULL
     assert rows[3] == ("c", 1.0)
+
+
+def test_load_table_sees_rewrite_that_keeps_dir_mtime(spark, tmp_path):
+    """The registry's schema memo is keyed on the table's file listing,
+    so an in-place rewrite that restores the directory mtime still
+    exposes the new column instead of null-filling a stale schema."""
+    path = str(tmp_path / "region.parquet")
+    first = spark.createDataFrame([(0, "AFRICA")], "r_regionkey long, r_name string")
+    first.write.parquet(path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    st = os.stat(path)
+    spark.createDataFrame(
+        [(0, "AFRICA", "new")], "r_regionkey long, r_name string, r_comment string"
+    ).write.mode("overwrite").parquet(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    rows = load_table(spark, str(tmp_path), "region").collect()
+    assert [r.asDict() for r in rows] == [
+        {"r_regionkey": 0, "r_name": "AFRICA", "r_comment": "new"}
+    ]
