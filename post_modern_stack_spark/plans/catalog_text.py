@@ -84,21 +84,32 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "lang_distribution",
     oracle="""
-    SELECT lang,
-           count(*)                 AS n_docs,
-           round(avg(n_chars), 2)   AS avg_chars,
-           round(avg(len(string_split(text, ' '))), 4) AS avg_tokens
-    FROM documents
-    GROUP BY lang
+    SELECT lang, n_docs,
+           CAST((200 * s_chars + c_chars) // (2 * c_chars) AS DOUBLE) / 100 AS avg_chars,
+           CAST((20000 * s_toks + c_toks) // (2 * c_toks) AS DOUBLE) / 10000 AS avg_tokens
+    FROM (SELECT lang, count(*) AS n_docs, sum(n_chars) AS s_chars, count(n_chars) AS c_chars,
+                 sum(len(string_split(text, ' '))) AS s_toks,
+                 count(len(string_split(text, ' '))) AS c_toks
+          FROM documents GROUP BY lang)
     """,
 )
 def q_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition rollup (K4 aggregate form)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
+    """Corpus composition rollup (K4 aggregate form). Both sides round
+    the means half-up from the integer sum and count: ``round(avg)``
+    disagreed at ties (avg 291.275: Spark rounds the double's decimal
+    string up, DuckDB rounds the binary double down)."""
+    toks = F.size(textstats.tokens("text"))
+    return load_table(spark, sf_dir, "documents").groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("n_chars"), 2).alias("avg_chars"),
-        F.round(F.avg(F.size(textstats.tokens("text"))), 4).alias("avg_tokens"),
+        F.sum("n_chars").alias("s_chars"), F.count("n_chars").alias("c_chars"),
+        F.sum(toks).alias("s_toks"), F.count(toks).alias("c_toks"),
+    ).select(
+        "lang",
+        "n_docs",
+        F.expr("CAST((200 * s_chars + c_chars) DIV (2 * c_chars) AS DOUBLE) / 100")
+        .alias("avg_chars"),
+        F.expr("CAST((20000 * s_toks + c_toks) DIV (2 * c_toks) AS DOUBLE) / 10000")
+        .alias("avg_tokens"),
     )
 
 

@@ -3,27 +3,31 @@
 The reference batch-simulates a stream: an append-only log reloaded per
 ETL (reference README.md:80). Here the same semantics run incrementally:
 
-- J1: file stream source over the events parquet layout; parquet sink
-  with checkpointing.
+- J1: file stream source over the events parquet layout (sinks call
+  ``writeStream`` directly).
 - J2: event-time watermark bounding late data and state.
 - J3: sessionization both by explicit session key (the reference's
   pre-keyed ``session_id``) and by inactivity gap
   (``session_window``) for keyless streams.
 - J4: tumbling/sliding event-time windows.
 - J5: stateful time-ordered interaction-array accumulation via
-  ``applyInPandasWithState`` — the one genuinely custom stateful
-  operator (ordered A7 semantics under incremental arrival).
+  ``applyInPandasWithState`` (``stateful_session_arrays_bucketed``),
+  plus the stateful ordered funnel (``stateful_funnel``).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# a user's session (and funnel) closes after this much processing-time
+# quiet, checked at micro-batch boundaries
+_QUIET_CLOSE_MS = 5_000
 
 # physical schema of the driver's events parquet (ts stored as ns long
 # when read with nanosAsLong — streaming sources need an explicit schema)
@@ -117,14 +121,6 @@ def gap_sessions(
     )
 
 
-SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_ns", T.ArrayType(T.LongType()), True),
-        T.StructField("event_id", T.ArrayType(T.LongType()), True),
-        T.StructField("k", T.ArrayType(T.StringType()), True),
-    ]
-)
-
 SESSION_OUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), True),
@@ -132,87 +128,6 @@ SESSION_OUT_SCHEMA = T.StructType(
         T.StructField("interactions", T.ArrayType(T.StringType()), True),
     ]
 )
-
-
-def _accumulate_sessions(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """J5 state update: accumulate (ts_ns, event_id, k) per user; emit
-    the ordered interaction array when the processing-time timeout
-    fires (session close). Ordering is applied at emission — the A7
-    sort-struct contract under out-of-order arrival.
-    """
-    if state.hasTimedOut:
-        (ts_ns, event_id, k) = state.get
-        rows = sorted(zip(ts_ns, event_id, k))
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [len(rows)],
-                "interactions": [[r[2] for r in rows]],
-            }
-        )
-        return
-    ts_ns: list[int] = []
-    event_id: list[int] = []
-    k: list[str] = []
-    if state.exists:
-        (ts_ns, event_id, k) = state.get
-        ts_ns, event_id, k = list(ts_ns), list(event_id), list(k)
-    for pdf in pdfs:
-        # r11 throughput fix (VERDICT r10 item 4): .tolist() converts
-        # the whole Arrow column in C (yielding native ints/strs, the
-        # state-encoder contract) — the old per-element int(x)/str(x)
-        # generator loops plus a per-group EMPTY DataFrame construction
-        # were ~60% of the per-group cost at 100k groups/batch
-        ts_ns.extend(pdf["ts_ns"].tolist())
-        event_id.extend(pdf["event_id"].tolist())
-        k.extend(pdf["k"].tolist())
-    state.update((ts_ns, event_id, k))
-    state.setTimeoutDuration(5_000)  # close session after 5 s quiet
-    # no output on update: an empty iterator is the supported "emit
-    # nothing" form and skips building 3 typed empty Series per group
-
-
-def stateful_session_arrays(events: DataFrame) -> DataFrame:
-    """J5: custom stateful ordered-array accumulation
-    (``applyInPandasWithState``, processing-time session timeout).
-
-    Input: the normalized event stream. Output: one row per closed
-    session with the time-ordered interaction array — streaming parity
-    with the batch flagship (catalog ``sessionize``).
-
-    This IS the supported J5 path. A ``transformWithStateInPandas``
-    (state API v2) variant with event-time-timer eviction existed
-    through round 3 behind a ``google.protobuf`` import gate; the
-    dependency (the v2 state-server protocol) cannot be satisfied in
-    this environment (no installer, no vendorable wheel), so the
-    variant was deleted rather than carried as permanently-gated dead
-    code (VERDICT round-3 item 6; the code remains in git history at
-    tag-commit 77a3766 for a protobuf-equipped deployment to revive).
-    On a real cluster v2's advantages are event-time correctness for
-    late data and RocksDB-backed ListState; v1's processing-time
-    timeout is the portable equivalent and is what the late-data
-    parity tests pin down.
-    """
-    # drop NULL-k events BEFORE accumulation: the pandas path would
-    # stringify None into a literal "None" token, silently diverging
-    # from batch semantics (where NULL array elements are dropped at
-    # the concat_ws edge)
-    prepped = events.select(
-        "user_id",
-        "ts_ns",
-        "event_id",
-        F.get_json_object("props", "$.k").alias("k"),
-    ).filter(F.col("k").isNotNull())
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _accumulate_sessions,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 BUCKET_STATE_SCHEMA = T.StructType(
@@ -228,21 +143,18 @@ BUCKET_STATE_SCHEMA = T.StructType(
     ]
 )
 
-_BUCKET_GAP_MS = 5_000  # same 5 s quiet-close as the per-user operator
-
-
 def _emit_quiet_users(users, last_ms, owner, ts_ns, event_id, k, now_ms):
     """Split bucket state into (emission DataFrame | None, kept state).
-    A user emits when ``now - last_seen >= gap`` — the same 'no data
-    for gap' contract the per-user operator's ProcessingTimeTimeout
-    enforces (both only ever fire at micro-batch boundaries). Emitted
-    rows are the per-user time-ordered interaction arrays, identical
-    content to _accumulate_sessions' timeout emission."""
+    A user emits once ``now - last_seen >= _QUIET_CLOSE_MS``; ``now`` is
+    the processing time of the micro-batch (or bucket timeout) being
+    handled, so a close is only ever decided at a batch boundary. Each
+    emitted row is one user's interaction array, ordered by
+    ``(ts_ns, event_id)``; the user's events leave the state."""
     import numpy as np
 
     users_a = np.asarray(users, dtype=np.int64)
     last_a = np.asarray(last_ms, dtype=np.int64)
-    quiet = last_a <= now_ms - _BUCKET_GAP_MS
+    quiet = last_a <= now_ms - _QUIET_CLOSE_MS
     if not quiet.any():
         return None, (users, last_ms, owner, ts_ns, event_id, k)
     emit_set = users_a[quiet]
@@ -278,19 +190,19 @@ def _emit_quiet_users(users, last_ms, owner, ts_ns, event_id, k, now_ms):
 def _accumulate_sessions_bucketed(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """J5 state update at BUCKET grain (r12, VERDICT r11 item 1): the
-    state group key is pmod(user_id, n_buckets), so the per-group
-    state-protocol round trip (Arrow slice → pandas frame → GroupState
-    codec) is paid once per BUCKET per batch instead of once per USER
-    per batch — the measured floor at 100k users was ~2.3 rows/group,
-    pure protocol. Per-user session semantics are preserved inside the
-    bucket: each user's last-seen processing time is tracked in state,
-    a user emits (content-identical, time-ordered interaction array)
-    once the bucket observes ≥5 s of quiet for that user — the same
-    'no data for 5 s, evaluated at micro-batch boundaries' contract as
-    the per-user operator — and a bucket-grain timeout sweeps users of
-    buckets receiving no data at all, re-arming itself while any user
-    remains un-quiet."""
+    """J5 state update for one bucket (group key
+    ``pmod(user_id, n_buckets)``). The state holds, per user, the
+    last-seen processing time, and per event its owner, ``ts_ns``,
+    ``event_id`` and ``k``. Each update appends the batch's events,
+    refreshes the last-seen time of the users in it, and emits every
+    user of the bucket that has been quiet for ``_QUIET_CLOSE_MS``.
+    A bucket that receives no data is swept by its processing-time
+    timeout, which re-arms while any of its users is still open.
+
+    Keying state by bucket, not by user, pays the per-group state
+    protocol (Arrow slice → pandas frame → GroupState codec) once per
+    bucket per batch: at 100k users a batch held ~2.3 rows per user,
+    so per-user groups were almost all protocol (OPTIMIZATION_r12)."""
     now = state.getCurrentProcessingTimeMs()
     if state.hasTimedOut:
         (users, last_ms, owner, ts_ns, event_id, k) = state.get
@@ -299,7 +211,7 @@ def _accumulate_sessions_bucketed(
         )
         if kept[0]:
             state.update(kept)
-            state.setTimeoutDuration(_BUCKET_GAP_MS)
+            state.setTimeoutDuration(_QUIET_CLOSE_MS)
         else:
             state.remove()
         if emission is not None:
@@ -337,7 +249,7 @@ def _accumulate_sessions_bucketed(
         users, last_ms, owner, ts_ns, event_id, k, now
     )
     state.update(kept)
-    state.setTimeoutDuration(_BUCKET_GAP_MS)
+    state.setTimeoutDuration(_QUIET_CLOSE_MS)
     if emission is not None:
         yield emission
 
@@ -345,15 +257,22 @@ def _accumulate_sessions_bucketed(
 def stateful_session_arrays_bucketed(
     events: DataFrame, n_buckets: int = 512
 ) -> DataFrame:
-    """J5 scale path: ``stateful_session_arrays`` with KEY-RANGE
-    COALESCING — state groups are ``pmod(user_id, n_buckets)`` buckets,
-    amortizing the per-group state-protocol round trip over ~|users| /
-    n_buckets users while emitting the identical per-user rows (same
-    5 s-quiet close, same time-ordered interaction arrays; parity test
-    drives both operators over one finite stream). Use when group
-    cardinality per batch is large relative to rows per group (the
-    measured v1 protocol floor); the per-user form remains the
-    simplest-correct reference."""
+    """J5: the stateful sessionizer (``applyInPandasWithState``), the
+    streaming twin of the batch flagship (catalog ``sessionize``).
+
+    Emits one ``(user_id, n_events, interactions)`` row per user once
+    the user has sent no event for 5 s (``_QUIET_CLOSE_MS``). The
+    contract is the batch reference: ``interactions`` holds all of the
+    user's events with a non-NULL ``props.k``, ordered by
+    ``(ts_ns, event_id)``, whatever the arrival order.
+
+    ``n_buckets`` sizes the state: groups are
+    ``pmod(user_id, n_buckets)``, each holding ~|users| / n_buckets
+    users. Fewer buckets amortize the per-group state protocol over
+    more users; the emitted rows do not depend on it."""
+    # drop NULL-k events before accumulation: the pandas path would
+    # stringify None into a literal "None" token, where batch drops
+    # NULL array elements at the concat_ws edge
     prepped = events.select(
         "user_id",
         "ts_ns",
@@ -369,22 +288,6 @@ def stateful_session_arrays_bucketed(
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def write_stream_parquet(
-    df: DataFrame, out_path: str, checkpoint: str, trigger_available_now: bool = True
-) -> Any:
-    """J1 sink: append-mode parquet with checkpointing (exactly-once
-    file sink — the streaming COPY INTO)."""
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def windowed_approx_distinct(
@@ -485,15 +388,8 @@ def _accumulate_funnel(
             elif et == "purchase":
                 purchases.append(ts)
     state.update((views, sorted(set(clicks)), sorted(set(purchases))))
-    state.setTimeoutDuration(5_000)
-    yield pd.DataFrame(
-        {
-            "user_id": pd.Series([], dtype="int64"),
-            "t1": pd.Series([], dtype="int64"),
-            "t2": pd.Series([], dtype="int64"),
-            "t3": pd.Series([], dtype="int64"),
-        }
-    )
+    state.setTimeoutDuration(_QUIET_CLOSE_MS)
+    # no output on update; the timeout branch's yield keeps this a generator
 
 
 def stateful_funnel(events: DataFrame) -> DataFrame:

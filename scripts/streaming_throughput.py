@@ -19,8 +19,9 @@ from the query's progress events:
   state_mb      max stateOperators memoryUsedBytes across batches
 
 Probes: dedup_events at a 10-minute AND a 2-hour watermark (state must
-track the horizon), stateful_session_arrays (applyInPandasWithState),
-windowed_event_counts (tumbling 1 h). Writes nothing outside /tmp.
+track the horizon), windowed_event_counts (tumbling 1 h), and the
+stateful sessionizer stateful_session_arrays_bucketed
+(applyInPandasWithState, default n_buckets). Writes nothing outside /tmp.
 """
 
 from __future__ import annotations
@@ -124,7 +125,6 @@ def main() -> None:
     from post_modern_stack_spark.session import get_spark
     from post_modern_stack_spark.streaming.dedup_stream import dedup_events
     from post_modern_stack_spark.streaming.sessionize_stream import (
-        stateful_session_arrays,
         stateful_session_arrays_bucketed,
         stream_events,
         windowed_event_counts,
@@ -229,7 +229,6 @@ def main() -> None:
         "windowed_counts_1h",
         lambda ev: windowed_event_counts(ev, window="1 hour", watermark="10 minutes"),
     )
-    probe_stateful("stateful_session_arrays", stateful_session_arrays)
     probe_stateful(
         "stateful_session_arrays_bucketed", stateful_session_arrays_bucketed
     )

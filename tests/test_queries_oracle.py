@@ -68,3 +68,29 @@ def test_no_vacuous_oracles_at_driver_sf():
             empties.append(name)
     con.close()
     assert not empties, f"oracles selecting 0 rows at sf0.01: {empties}"
+
+
+def test_lang_distribution_rounds_a_tie_like_its_oracle(spark, tmp_path):
+    """A group whose mean n_chars is exactly 291.275 (a tie at 2
+    decimals) rounds to the same value in Spark and in DuckDB."""
+    import duckdb
+    import pandas as pd
+
+    n = 40  # sum 291 * 40 + 11 = 11651, mean 291.275
+    pd.DataFrame(
+        {
+            "doc_id": range(n),
+            "lang": "zh",
+            "text": "a b",
+            "n_chars": [291 + (11 if i == 0 else 0) for i in range(n)],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    got = entry_mod.queries()["lang_distribution"](spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = con.execute(entry_mod.oracle_sql()["lang_distribution"]).fetchall()
+    con.close()
+    assert [tuple(r) for r in got] == want == [("zh", n, 291.28, 2.0)]

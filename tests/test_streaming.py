@@ -99,16 +99,24 @@ def test_foreachbatch_ingest_roundtrip(spark, events_dir, tmp_path):
     assert k.filter(F.col("sid").isNull()).count() == 0
 
 
-def test_stateful_session_arrays_parity(spark, events_dir, tmp_path):
-    """J5: the stateful operator must reproduce the batch flagship's
-    per-user ordered arrays once all sessions time out."""
+@pytest.mark.parametrize("n_buckets", [8, 512])
+def test_stateful_session_arrays_bucketed_parity(
+    spark, events_dir, tmp_path, n_buckets
+):
+    """J5: once every session has timed out, the stateful sessionizer
+    must reproduce the batch flagship's per-user ordered arrays.
+    n_buckets=8 puts many users in each state group, so the per-user
+    close and emission inside a bucket are exercised (incl. the late
+    flush by the bucket timeout sweep); n_buckets=512 gives each of
+    the fixture's users its own group."""
     import time
 
     stream = S.stream_events(spark, events_dir, max_files_per_trigger=2)
-    sdf = S.stateful_session_arrays(stream)
+    sdf = S.stateful_session_arrays_bucketed(stream, n_buckets=n_buckets)
+    sink = f"state_sess_bucketed_{n_buckets}"
     q = (
         sdf.writeStream.format("memory")
-        .queryName("state_sess")
+        .queryName(sink)
         .outputMode("append")
         .trigger(processingTime="2 seconds")
         .start()
@@ -124,7 +132,7 @@ def test_stateful_session_arrays_parity(spark, events_dir, tmp_path):
         )
         emitted = 0
         while time.time() < deadline:
-            emitted = spark.table("state_sess").count()
+            emitted = spark.table(sink).count()
             if emitted >= expected:
                 break
             time.sleep(2)
@@ -133,66 +141,7 @@ def test_stateful_session_arrays_parity(spark, events_dir, tmp_path):
 
     got = {
         r["user_id"]: r["interactions"]
-        for r in spark.table("state_sess").collect()
-    }
-    batch = {
-        r["user_id"]: r["interactions"]
-        for r in load_table(spark, SF, "events")
-        .select(
-            "user_id",
-            "ts_ns",
-            "event_id",
-            F.get_json_object("props", "$.k").alias("k"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("ts_ns", "event_id", "k"))),
-                lambda s: s.getField("k"),
-            ).alias("interactions")
-        )
-        .collect()
-    }
-    assert len(got) == len(batch)
-    assert got == batch
-
-
-def test_stateful_session_arrays_bucketed_parity(spark, events_dir, tmp_path):
-    """r12 key-range coalescing: the bucketed operator (state groups =
-    pmod(user_id, n_buckets)) must emit the IDENTICAL per-user ordered
-    interaction arrays as the per-user operator's contract — checked
-    against the same batch reference, with n_buckets=8 so every bucket
-    holds many users and the per-user close/emission logic inside the
-    bucket is genuinely exercised (incl. late flush via the bucket
-    timeout sweep)."""
-    import time
-
-    stream = S.stream_events(spark, events_dir, max_files_per_trigger=2)
-    sdf = S.stateful_session_arrays_bucketed(stream, n_buckets=8)
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName("state_sess_bucketed")
-        .outputMode("append")
-        .trigger(processingTime="2 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        expected = (
-            load_table(spark, SF, "events").select("user_id").distinct().count()
-        )
-        emitted = 0
-        while time.time() < deadline:
-            emitted = spark.table("state_sess_bucketed").count()
-            if emitted >= expected:
-                break
-            time.sleep(2)
-    finally:
-        q.stop()
-
-    got = {
-        r["user_id"]: r["interactions"]
-        for r in spark.table("state_sess_bucketed").collect()
+        for r in spark.table(sink).collect()
     }
     batch = {
         r["user_id"]: r["interactions"]
