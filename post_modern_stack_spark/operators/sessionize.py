@@ -53,7 +53,20 @@ def events_exploded(raw: DataFrame) -> DataFrame:
 
     The 1-row ``latest_etl`` join is broadcast (A6) — at 100 TB this is
     a dynamic filter, never a shuffle.
+
+    B1: one ``json_tuple`` parses each payload once for all five fields
+    (five ``json_get`` calls parse it five times). Its per-field
+    semantics are ``get_json_object``'s: missing key or malformed JSON →
+    NULL, strings unquoted; the timestamp is ``try_cast`` like
+    ``json_get(..., "long")``.
     """
+    fields = {
+        "hashed_url": "url",
+        "product_action": "product_action",
+        "product_sku": "sku",
+        "server_timestamp_epoch_ms": "event_epoch_timestamp",
+        "session_id": "session_id",
+    }
     flat = (
         raw.join(F.broadcast(latest_etl(raw)), "etl_id", "inner")
         .select(
@@ -61,13 +74,15 @@ def events_exploded(raw: DataFrame) -> DataFrame:
             "api_key",
             "event_date",
             "event_type",
-            json_get("raw_data", "hashed_url", "string").alias("url"),
-            json_get("raw_data", "product_action", "string").alias("product_action"),
-            normalize_sku(json_get("raw_data", "product_sku", "string")).alias("sku"),
-            json_get("raw_data", "server_timestamp_epoch_ms", "long").alias(
-                "event_epoch_timestamp"
-            ),
-            json_get("raw_data", "session_id", "string").alias("session_id"),
+            F.json_tuple("raw_data", *fields).alias(*fields.values()),
+        )
+        .withColumns(
+            {
+                "sku": normalize_sku("sku"),
+                "event_epoch_timestamp": F.col("event_epoch_timestamp").try_cast(
+                    "long"
+                ),
+            }
         )
     )
     # A9: stamp each event with its session's first event_date

@@ -87,6 +87,11 @@ def encode(
     SKU catalog) use :func:`encode_via_join`, as
     ``nep_flow.run_nep_flow`` does.
 
+    The lookup is row-local, so it needs no row keys: duplicate rows,
+    empty and NULL arrays pass through as they are. (The join path
+    re-collects arrays and must join them back, which is why it takes
+    unique ``keys`` or assigns a synthetic id once.)
+
     ``pairs`` (r11): a caller that already collected the vocab rows
     (e.g. to size the model's class count) passes them here and skips
     this function's own collect — one vocab-plan execution instead of
@@ -115,22 +120,35 @@ def encode_via_join(
 ) -> DataFrame:
     """F2 scale path for vocabularies too large to collect into a map
     literal: posexplode tokens (keeping positions), broadcast-join the
-    vocab, re-assemble arrays ordered by position.
+    vocab, re-assemble arrays ordered by position, and join them back to
+    ``df``'s rows. Each token maps as :func:`encode` maps it (the parity
+    tests pin this); ``out_col`` is appended after ``df``'s columns.
 
     Costs one shuffle on the row keys (the re-collect), but no driver
     collect and a plan whose size does not depend on the vocab; use
     :func:`encode` (zero-shuffle map lookup) only for small vocabs.
-    Results are identical — see the parity tests.
+
+    ``keys``: columns that are unique and non-NULL over ``df`` (a
+    primary key). The arrays are re-collected on them and joined back
+    lazily; rows sharing a key would merge their token arrays, and a
+    NULL-key row would be dropped. Without ``keys``, a synthetic row id
+    carries the rows, and it is assigned ONCE, on a materialized copy of
+    ``df`` (one eager job): ``monotonically_increasing_id`` depends on
+    the partitioning of the plan it sits in, and Catalyst prunes
+    different operators (an upstream Window, say) from the explode side
+    and the join-back side, so ids assigned lazily in both branches stop
+    agreeing once ``df`` spans more than one partition. Empty and NULL
+    arrays survive either way (``posexplode_outer`` keeps them as a
+    NULL-position row).
     """
-    # a synthetic row id (not caller keys) carries rows through the
-    # explode/re-collect: caller keys may not be unique (identical key
-    # rows would merge their token arrays), and empty/NULL arrays must
-    # survive the round trip (posexplode_outer emits a NULL-pos row for
-    # them; a plain posexplode would drop the row entirely).
-    with_id = df.withColumn("_row_id", F.monotonically_increasing_id())
-    exploded = with_id.select(
-        "_row_id", F.posexplode_outer(arr_col).alias("_pos", "token")
-    )
+    if keys:
+        rows = df
+    else:
+        keys = ["_row_id"]
+        rows = df.withColumn(
+            "_row_id", F.monotonically_increasing_id()
+        ).localCheckpoint()
+    exploded = rows.select(*keys, F.posexplode_outer(arr_col).alias("_pos", "token"))
     joined = exploded.join(
         F.broadcast(vocab.select("token", "token_id")), "token", "left"
     )
@@ -143,7 +161,7 @@ def encode_via_join(
     )
     from post_modern_stack_spark.functions import ordered_collect
 
-    collected = encoded.groupBy("_row_id").agg(
+    collected = encoded.groupBy(*keys).agg(
         F.filter(
             ordered_collect(
                 F.struct(F.col("_pos").alias("p"), F.col("_id").alias("i")), "_pos"
@@ -151,12 +169,9 @@ def encode_via_join(
             lambda s: s.getField("p").isNotNull(),
         ).alias("_enc_structs")
     )
-    return (
-        with_id.join(collected, "_row_id")
-        .withColumn(
-            out_col, F.transform("_enc_structs", lambda s: s.getField("i"))
-        )
-        .drop("_row_id", "_enc_structs")
+    return rows.join(collected, keys).select(
+        *[c for c in df.columns if c != out_col],
+        F.transform("_enc_structs", lambda s: s.getField("i")).alias(out_col),
     )
 
 

@@ -2,10 +2,19 @@
 (reference src/my_dbt_flow.py: start → run_transformation → get_dataset
 → [train/test/deploy are out of engine scope, SURVEY.md §2 non-goals]).
 
-Stages over one SparkSession, parquet-checkpointed per stage:
-ingest → transform (model registry: events_exploded → session_events)
-→ extract(start, end, api_key) → split (90/10 by time) → encode (vocab
-join + pad) → metrics (one checkpointed aggregate; resume returns it).
+One SparkSession, five parquet-checkpointed stages, each computed once:
+- ``session_events``: ingest → transform (model registry:
+  events_exploded → session_events); the dbt tests run once over the
+  artifact and are stored in its sidecar;
+- ``extracted``: extract(start, end, api_key);
+- ``vocab``: split (90/10 by time) → the train-x vocabulary (the
+  reference's tokenizer artifact);
+- ``dataset``: one keyed encode of each session → x/y ids → pad; the
+  metrics are observed during its write;
+- ``metrics``: the observed values as (name, value) rows.
+
+A resume reads complete stages back and replays the row counts,
+observed metrics and dbt-test result from their sidecars.
 
 The engine stops at the padded-int-array boundary where
 ``toPandas()``/Arrow hands off to any ML library (the reference's
@@ -18,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.functions import pad_sequence
+from post_modern_stack_spark.functions import (
+    last_element,
+    pad_sequence,
+    slice_drop_last,
+)
 from post_modern_stack_spark.operators import metrics as M
 from post_modern_stack_spark.operators import shaping, vocab
 from post_modern_stack_spark.operators.sessionize import (
@@ -58,7 +71,10 @@ def extract_training_set(
 ) -> DataFrame:
     """Parameterized training-set extraction (reference
     my_dbt_flow.py:234-252): tenant filter, half-open date window,
-    ARRAY_SIZE > 2, ordered by session_date ("sessions are ordered!").
+    ARRAY_SIZE > 2. Unordered: the reference sorts by session_date
+    ("sessions are ordered!") for its index-based split, and
+    ``shaping.split_by_time`` orders by (session_date, session_id)
+    itself.
     """
     return (
         sessions.filter(F.col("api_key") == F.lit(api_key))
@@ -67,7 +83,6 @@ def extract_training_set(
             & (F.col("session_date") <= F.lit(end_date).cast("date"))
         )
         .filter(F.size("interactions") >= min_len)
-        .orderBy("session_date")
     )
 
 
@@ -99,12 +114,16 @@ def run_nep_flow(
     built = reg.run(spark, {"raw_events": raw_events})
     sessions = runner.checkpoint("session_events", built["session_events"])
 
-    # dbt test parity: unique + not_null on the session key must hold
-    quality = M.data_quality_checks(sessions, "session_id").collect()[0]
+    # dbt test parity: unique + not_null on the session key must hold;
+    # run once over the artifact and replayed from its sidecar on resume
+    quality = runner.check(
+        "session_events",
+        lambda: M.data_quality_checks(sessions, "session_id").first().asDict(),
+    )
     assert quality["session_id_duplicates"] == 0, "dbt test: unique SESSION_ID"
     assert quality["session_id_nulls"] == 0, "dbt test: not_null SESSION_ID"
 
-    # get_dataset: extract → split → x/y → encode → pad
+    # get_dataset: extract → split → x/y → vocab → encode → pad
     extracted = runner.checkpoint(
         "extracted", extract_training_set(sessions, api_key, start_date, end_date)
     )
@@ -114,37 +133,64 @@ def run_nep_flow(
     split = shaping.split_by_time(extracted, ["session_date", "session_id"])
     shaped = shaping.xy_pairs(split, "interactions")
 
-    vb = vocab.build_vocab(
-        shaped.filter(F.col("split") == "train"), "x"
-    )  # vocab from train inputs only (reference fits tokenizer on x_train)
-    y_ids = F.broadcast(vb.select(F.col("token").alias("y"), "token_id"))
-    # x: broadcast join on the exploded tokens — the vocab never reaches
-    # the driver (a SKU-catalog map literal costs seconds, vocab.encode)
+    # the tokenizer artifact: fit on train inputs only (reference fits
+    # the tokenizer on x_train); its row count is the vocab size
+    vb = runner.checkpoint(
+        "vocab", vocab.build_vocab(shaped.filter(F.col("split") == "train"), "x")
+    )
+    vocab_size = runner.results[-1].rows
+
+    # ONE encode of the whole session, joined back on the unique
+    # session_id (the dbt test above), then sliced: x_enc is all but the
+    # last id and y_enc the last (UNK for an empty session). The vocab
+    # never reaches the driver (a SKU-catalog map literal costs seconds,
+    # vocab.encode).
+    enc = vocab.encode_via_join(
+        shaped, vb, "interactions", "_enc", keys=["session_id"]
+    )
     encoded = (
-        vocab.encode_via_join(shaped, vb, "x", "x_enc")
-        .join(y_ids, "y", "left")
-        .withColumn(
-            "y_enc", F.coalesce(F.col("token_id"), F.lit(vocab.UNK_ID)).cast("int")
+        enc.select(
+            "y",
+            "session_id",
+            "api_key",
+            "session_date",
+            "interactions",
+            "split",
+            "x",
+            slice_drop_last("_enc").alias("x_enc"),
+            F.coalesce(last_element("_enc"), F.lit(vocab.UNK_ID)).alias("y_enc"),
         )
         # label = token_id - 1 (the reference's off-by-one trap,
         # my_dbt_flow.py:339-340 — SURVEY.md §7 watch-list 5)
         .withColumn("y_label", F.col("y_enc") - 1)
         .withColumn("x_padded", pad_sequence("x_enc", max_len, 0))
-        .drop("token_id")
     )
-    dataset = runner.checkpoint("dataset", encoded)
-
-    # test_model analog: ONE aggregate unpivoted to (name, value) rows; a
-    # resume returns the persisted metrics (Metaflow artifact parity)
-    stats = dataset.agg(
-        F.count(F.lit(1)).cast("double").alias("n_sessions"),
-        F.round(F.avg(F.size("interactions")), 4).alias("avg_session_len"),
-        F.count(F.when(F.col("split") == "train", 1)).cast("double").alias("n_train"),
-        F.count(F.when(F.col("split") == "test", 1)).cast("double").alias("n_test"),
-    ).crossJoin(vb.agg(F.count(F.lit(1)).cast("double").alias("vocab_size")))
-    metrics = runner.checkpoint(
-        "metrics", stats.unpivot([], stats.columns, "name", "value")
+    # test_model analog: the metrics ride the dataset write as observed
+    # aggregates (no re-scan of the dataset)
+    runner.checkpoint(
+        "dataset",
+        encoded,
+        avg_session_len=F.round(F.avg(F.size("interactions")), 4),
+        n_train=F.count(F.when(F.col("split") == "train", 1)),
+        n_test=F.count(F.when(F.col("split") == "test", 1)),
     )
+    ds = runner.results[-1]
+    metrics = {
+        "n_sessions": float(ds.rows),
+        **{k: float(ds.observed[k]) for k in ("avg_session_len", "n_train", "n_test")},
+        "vocab_size": float(vocab_size),
+    }
+    # (name, value) rows from literals: writing a createDataFrame of
+    # Python rows costs ~1 s more on a cold JVM
+    row = spark.range(0, 1, 1, 1).select(
+        *[F.lit(v).alias(k) for k, v in metrics.items()]
+    )
+    stored = runner.checkpoint(
+        "metrics", row.unpivot([], list(metrics), "name", "value")
+    )
+    if runner.results[-1].resumed:
+        # a resume returns the persisted artifact (Metaflow artifact parity)
+        metrics = {r["name"]: r["value"] for r in stored.collect()}
 
     return {
         "info": info,
@@ -153,5 +199,5 @@ def run_nep_flow(
         "stage_rows": {r.name: r.rows for r in runner.results},
         "resumed_stages": [r.name for r in runner.results if r.resumed],
         "manifest": reg.manifest(),
-        "metrics": {r["name"]: r["value"] for r in metrics.collect()},
+        "metrics": metrics,
     }

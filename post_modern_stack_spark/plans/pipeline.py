@@ -19,8 +19,9 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from post_modern_stack_spark.operators.obs import checkpoint_observed
 
@@ -95,6 +96,8 @@ class StageResult:
     path: str
     rows: int | None = None
     resumed: bool = False
+    # the checkpoint's extra observed aggregates, replayed on resume
+    observed: dict = field(default_factory=dict)
 
 
 class PipelineRunner:
@@ -104,11 +107,14 @@ class PipelineRunner:
     README.md run instructions): a stage whose artifact already exists
     COMPLETE under this run_id is read back instead of recomputed —
     the write is skipped, upstream lineage stays lazy and unexecuted,
-    and the recorded row count is replayed from the stage's metadata
-    sidecar. Completeness = Hadoop ``_SUCCESS`` marker + the sidecar;
-    a partially-written artifact (killed mid-write) has neither and
-    recomputes. At 100 TB this is the difference between re-running a
-    6-hour ingest and skipping straight to the failed stage."""
+    and what the write recorded is replayed from the stage's metadata
+    sidecar: the row count, the schema (so the read-back runs no
+    parquet schema-inference job), the observed aggregates and any
+    :meth:`check` result. Completeness = Hadoop ``_SUCCESS`` marker +
+    the sidecar; a partially-written artifact (killed mid-write) has
+    neither and recomputes. At 100 TB this is the difference between
+    re-running a 6-hour ingest and skipping straight to the failed
+    stage."""
 
     def __init__(
         self,
@@ -132,47 +138,80 @@ class PipelineRunner:
             self._meta_path(name)
         )
 
-    def checkpoint(self, name: str, df: DataFrame) -> DataFrame:
-        """Write a stage artifact and return the re-read DataFrame (so
-        downstream stages read the materialized checkpoint, cutting
-        lineage like Metaflow artifact snapshots do).
+    def _read_meta(self, name: str) -> dict | None:
+        # the sidecar is written via temp+rename so a present file is
+        # normally whole, but an older layout (or a copy made by
+        # non-atomic tooling) can leave a truncated or schema-less
+        # file: treat it as incomplete and recompute the stage rather
+        # than crash the resumed run
+        try:
+            with open(self._meta_path(name)) as f:
+                meta = json.load(f)
+            meta["schema"] = StructType.fromJson(meta["schema"])
+            whole = meta["rows"] is not None and isinstance(meta["observed"], dict)
+        except (ValueError, KeyError, TypeError, OSError):
+            return None
+        return meta if whole else None
 
-        Stage row counts ride on ``df.observe`` — accumulated DURING
-        the write instead of a second ``count()`` job per stage (the
-        Metaflow-card metrics analog; at 100 TB a free byproduct vs a
-        full re-scan). If the metric never arrives, the written
-        artifact is counted instead (operators/obs.checkpoint_observed)."""
-        path = os.path.join(self.base, name)
-        if self.resume and self._complete(name):
-            # the sidecar is written via temp+rename so a present file
-            # is normally whole, but an older layout (or a copy made by
-            # non-atomic tooling) can leave a truncated file: treat any
-            # unparseable sidecar as incomplete and recompute the stage
-            # rather than crash the resumed run
-            try:
-                with open(self._meta_path(name)) as f:
-                    rows = json.load(f)["rows"]
-            except (ValueError, KeyError, OSError):
-                rows = None
-            if rows is not None:
-                self.results.append(StageResult(name, path, rows, resumed=True))
-                return self.spark.read.parquet(path)
-
-        def write(frame: DataFrame) -> DataFrame:
-            frame.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
-
-        out, m = checkpoint_observed(df, write, rows=F.count(F.lit(1)))
-        rows = m["rows"]
+    def _write_meta(self, name: str, meta: dict) -> None:
         # temp + atomic rename: a process killed mid-write must never
         # leave a present-but-truncated sidecar next to a _SUCCESS
         # marker (resume would otherwise trust it)
         tmp = self._meta_path(name) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"stage": name, "rows": rows}, f)
+            json.dump(dict(meta, schema=meta["schema"].jsonValue()), f)
         os.replace(tmp, self._meta_path(name))
-        self.results.append(StageResult(name, path, rows))
+
+    def checkpoint(self, name: str, df: DataFrame, **observe: Column) -> DataFrame:
+        """Write a stage artifact and return the re-read DataFrame (so
+        downstream stages read the materialized checkpoint, cutting
+        lineage like Metaflow artifact snapshots do). The read-back
+        passes the frame's schema, so it launches no schema-inference
+        job.
+
+        The stage row count, and any ``observe`` aggregates (name →
+        aggregate Column over ``df``'s rows), ride on ``df.observe`` —
+        accumulated DURING the write instead of a second job per value
+        (the Metaflow-card metrics analog; at 100 TB a free byproduct vs
+        a full re-scan). They land in the stage's ``StageResult`` and
+        sidecar. If the metric never arrives, they are computed over the
+        written artifact instead (operators/obs.checkpoint_observed)."""
+        path = os.path.join(self.base, name)
+        if self.resume and self._complete(name):
+            meta = self._read_meta(name)
+            # a sidecar without every requested aggregate cannot replay it
+            if meta is not None and set(observe) <= set(meta["observed"]):
+                self.results.append(
+                    StageResult(name, path, meta["rows"], True, meta["observed"])
+                )
+                return self.spark.read.schema(meta["schema"]).parquet(path)
+
+        schema = df.schema
+
+        def write(frame: DataFrame) -> DataFrame:
+            frame.write.mode("overwrite").parquet(path)
+            return self.spark.read.schema(schema).parquet(path)
+
+        out, observed = checkpoint_observed(
+            df, write, rows=F.count(F.lit(1)), **observe
+        )
+        rows = observed.pop("rows")
+        self._write_meta(
+            name, {"stage": name, "rows": rows, "schema": schema, "observed": observed}
+        )
+        self.results.append(StageResult(name, path, rows, observed=observed))
         return out
+
+    def check(self, name: str, compute: Callable[[], dict]) -> dict:
+        """A test over checkpointed stage ``name`` (the dbt ``unique`` /
+        ``not_null`` analog): ``compute()`` runs once, after the stage
+        is written, and its result is stored in the stage's sidecar; a
+        resume replays it instead of re-running the test's jobs."""
+        meta = self._read_meta(name)
+        if "check" not in meta:
+            meta["check"] = compute()
+            self._write_meta(name, meta)
+        return meta["check"]
 
     def write_manifest(self, manifest: dict) -> str:
         os.makedirs(self.base, exist_ok=True)

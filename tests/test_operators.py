@@ -303,6 +303,31 @@ def test_encode_via_join_empty_arrays_and_duplicate_keys(spark):
     assert got[2] == (2, (), ())
 
 
+def test_encode_via_join_without_keys_survives_upstream_window(spark):
+    """Without keys, the synthetic row id must mean the same row on the
+    explode side and the join-back side. A global Window upstream runs
+    only where its column is used, so with the input in several
+    partitions, lazily assigned ids would differ between the two."""
+    from pyspark.sql import Window
+
+    rows = [
+        Row(sid=i, interactions=[f"t{(i * j) % 11}" for j in range(1, 2 + i % 5)])
+        for i in range(200)
+    ]
+    df = (
+        spark.createDataFrame(rows)
+        .repartition(4)
+        .withColumn("rank", F.percent_rank().over(Window.orderBy("sid")))
+    )
+    vb = vocab.build_vocab(df, "interactions")
+    ids = {r["token"]: r["token_id"] for r in vb.collect()}
+    out = vocab.encode_via_join(df, vb, "interactions").collect()
+    assert sorted(r["sid"] for r in out) == list(range(200))
+    for r in out:
+        assert r["encoded"] == [ids[t] for t in r["interactions"]], r["sid"]
+        assert r["rank"] == r["sid"] / 199
+
+
 def test_cluster_pairs_raises_on_nonconvergence(spark):
     from pyspark.sql import Row
 

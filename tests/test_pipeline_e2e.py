@@ -7,12 +7,14 @@ sessionization invariants.
 from __future__ import annotations
 
 import json
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.functions import pad_sequence
+from post_modern_stack_spark.functions import json_get, normalize_sku, pad_sequence
 from post_modern_stack_spark.operators import vocab
 from post_modern_stack_spark.operators.sessionize import (
     events_exploded,
@@ -28,11 +30,13 @@ API_B = "bbbbbbbb-0000-0000-0000-000000000000"
 BASE_MS = 1_547_528_000_000  # 2019-01-15ish, matching reference date era
 DAY_MS = 86_400_000
 FLOW_KW = dict(api_key=API_A, start_date="2019-01-01", end_date="2019-03-14")
-# Spark jobs a fully resumed run_nep_flow launches: the schema-inference
-# job of each of the 4 checkpoint read-backs, the 3 AQE stages of the
-# dbt-test aggregate and the metrics collect (20 while the flow collected
-# the vocab into a map literal and ran one action per metric).
-RESUME_JOBS = 8
+# Spark jobs a fully resumed run_nep_flow launches: only the read of the
+# metrics artifact it returns. Checkpoints read back with the schema in
+# their sidecar (no parquet schema-inference job) and the dbt-test result
+# is replayed from the session_events sidecar (8 jobs while each read-back
+# inferred its schema and the dbt test re-ran, 20 while the flow also
+# collected the vocab into a map literal and ran one action per metric).
+RESUME_JOBS = 1
 
 
 def _event(sku, ms, action="detail", etype="event_product", session="s1"):
@@ -116,6 +120,32 @@ def oov_log(spark, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def many_log(spark, tmp_path_factory):
+    """Fifty-five tenant-A sessions on consecutive days inside the
+    extraction window, 3-8 events each, drawing from 17 SKUs: enough
+    sessions that ``extracted`` spans several files when shuffle
+    partitions are not coalesced."""
+    out = str(tmp_path_factory.mktemp("manylog") / "raw_events")
+    sessions = spark.createDataFrame(
+        [
+            Row(
+                events=[
+                    _event(
+                        f"k{(d * 7 + j * 5) % 17}",
+                        BASE_MS + d * DAY_MS + 1000 * j,
+                        session=f"m{d:02d}",
+                    )
+                    for j in range(3 + d % 6)
+                ]
+            )
+            for d in range(55)
+        ]
+    )
+    ingest.ingest_events(sessions, out, API_A, etl_id="etl-1", etl_timestamp_ms=BASE_MS)
+    return out
+
+
 def test_ingest_schema_and_append(spark, raw_log):
     raw = ingest.read_raw_events(spark, raw_log)
     assert set(raw.columns) == {
@@ -138,6 +168,47 @@ def test_latest_etl_selection(spark, raw_log):
     flat = events_exploded(raw)
     assert flat.select("etl_id").distinct().collect()[0]["etl_id"] == "etl-new"
     assert flat.count() == 35 + 4  # one load's worth
+
+
+def test_events_exploded_single_parse_matches_json_get(spark):
+    """Model 1 parses each payload once; every field equals its own
+    ``json_get`` extraction on awkward payloads: missing keys, JSON
+    null, numbers and objects as values, escapes, a non-numeric or
+    fractional timestamp, malformed and NULL documents."""
+    payloads = [
+        '{"hashed_url":"u1","product_action":"add","product_sku":"SKU A",'
+        '"server_timestamp_epoch_ms":"1547528000000","session_id":"s1"}',
+        '{"product_sku":"b","server_timestamp_epoch_ms":1547528000001}',
+        '{"hashed_url":null,"product_action":"detail","product_sku":7,'
+        '"server_timestamp_epoch_ms":"soon","session_id":{"id":1}}',
+        '{"product_sku":"q\\"uote \\u00e9","server_timestamp_epoch_ms":"12.5",'
+        '"session_id":"s2","product_action":true}',
+        '[1, 2]',
+        "not json",
+        None,
+    ]
+    raw = spark.createDataFrame(
+        [(0, "etl", f"e{i}", API_A, None, p) for i, p in enumerate(payloads)],
+        "etl_timestamp long, etl_id string, event_type string, api_key string, "
+        "event_date date, raw_data string",
+    )
+    got = events_exploded(raw).select(
+        "event_type", "url", "product_action", "sku", "event_epoch_timestamp",
+        "session_id",
+    )
+    want = raw.select(
+        "event_type",
+        json_get("raw_data", "hashed_url", "string").alias("url"),
+        json_get("raw_data", "product_action", "string").alias("product_action"),
+        normalize_sku(json_get("raw_data", "product_sku", "string")).alias("sku"),
+        json_get("raw_data", "server_timestamp_epoch_ms", "long").alias(
+            "event_epoch_timestamp"
+        ),
+        json_get("raw_data", "session_id", "string").alias("session_id"),
+    )
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.filter(F.col("event_type") == "e0").first()["sku"] == "sku_a"
 
 
 def test_session_arrays_ordered_exactly(spark, raw_log):
@@ -203,8 +274,6 @@ def test_resume_skips_completed_stages(spark, raw_log, tmp_path):
     instead of recomputing — artifacts untouched on disk, recorded row
     counts replayed from the stage metadata sidecars, and the final
     outputs identical. A fresh run_id still computes everything."""
-    import os
-
     raw = ingest.read_raw_events(spark, raw_log)
     kw = dict(api_key=API_A, start_date="2019-01-01", end_date="2019-03-14")
     out1 = run_nep_flow(spark, raw, str(tmp_path), "run-res", **kw)
@@ -296,6 +365,40 @@ def test_dataset_encoding_matches_map_literal_encode(spark, oov_log, tmp_path):
     assert test["y_enc"] != vocab.UNK_ID
 
 
+def test_flow_keeps_and_encodes_every_session_across_partitions(
+    spark, many_log, tmp_path
+):
+    """With shuffle partitions left uncoalesced, ``extracted`` spans
+    several files. Every extracted session still reaches the dataset,
+    and each row's x_enc / y_enc is a plain Python encode of its own
+    x / y under the train vocabulary (freq desc, token asc, ids from 2,
+    OOV → UNK)."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        raw = ingest.read_raw_events(spark, many_log)
+        out = run_nep_flow(spark, raw, str(tmp_path), "run-parts", **FLOW_KW)
+        ds = spark.read.parquet(out["run_dir"] + "/dataset").collect()
+    finally:
+        spark.conf.set(key, prev)
+    extracted_dir = out["run_dir"] + "/extracted"
+    assert sum(f.endswith(".parquet") for f in os.listdir(extracted_dir)) > 1
+    n_extracted = spark.read.parquet(extracted_dir).count()
+    assert n_extracted == 55
+    assert out["metrics"]["n_sessions"] == n_extracted == len(ds)
+    assert out["metrics"]["n_test"] > 0
+
+    freq = Counter(t for r in ds if r["split"] == "train" for t in r["x"])
+    ranked = sorted(freq, key=lambda t: (-freq[t], t))
+    ids = {t: i + 2 for i, t in enumerate(ranked)}
+    assert out["metrics"]["vocab_size"] == len(ids)
+    for r in ds:
+        assert r["x"] + [r["y"]] == r["interactions"], r["session_id"]
+        assert r["x_enc"] == [ids.get(t, vocab.UNK_ID) for t in r["x"]], r["session_id"]
+        assert r["y_enc"] == ids.get(r["y"], vocab.UNK_ID), r["session_id"]
+
+
 def test_metrics_artifact_persisted_and_resumed(spark, raw_log, tmp_path):
     """The ``metrics`` checkpoint on disk is what the flow returns, and a
     fully resumed run returns that persisted artifact (Metaflow resume
@@ -323,6 +426,52 @@ def test_metrics_artifact_persisted_and_resumed(spark, raw_log, tmp_path):
     out2 = run_nep_flow(spark, raw, str(tmp_path), "run-met", resume=True, **FLOW_KW)
     assert out2["resumed_stages"] == out["stages"]
     assert out2["metrics"] == dict(doctored)
+
+
+def test_flow_fallback_aggregates_match_observed_metrics(
+    spark, raw_log, tmp_path, monkeypatch
+):
+    """With observed metrics missed, every checkpoint computes its row
+    count and the dataset's metric aggregates over the written artifact;
+    the flow returns the same metrics and stage rows as the observed
+    route."""
+    from post_modern_stack_spark.operators import obs
+
+    raw = ingest.read_raw_events(spark, raw_log)
+    monkeypatch.setattr(obs, "_missed", False)
+    monkeypatch.setattr(obs, "fallbacks", 0)
+    observed = run_nep_flow(spark, raw, str(tmp_path), "run-observed", **FLOW_KW)
+    assert obs.fallbacks == 0
+    monkeypatch.setattr(obs, "_missed", True)
+    forced = run_nep_flow(spark, raw, str(tmp_path), "run-forced", **FLOW_KW)
+    assert obs.fallbacks == len(forced["stages"])
+    assert forced["metrics"] == observed["metrics"]
+    assert forced["stage_rows"] == observed["stage_rows"]
+
+
+def test_dbt_test_result_stored_and_replayed(spark, raw_log, tmp_path):
+    """The dbt unique/not_null result is stored in the session_events
+    sidecar with the stage's rows, schema and observed aggregates, and a
+    resume replays the stored result instead of re-running the test: a
+    doctored duplicate count fails the resumed flow."""
+    raw = ingest.read_raw_events(spark, raw_log)
+    out = run_nep_flow(spark, raw, str(tmp_path), "run-dbt", **FLOW_KW)
+    meta_path = os.path.join(out["run_dir"], "session_events.meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["check"] == {"session_id_duplicates": 0, "session_id_nulls": 0}
+    assert meta["rows"] == out["stage_rows"]["session_events"]
+    assert [f["name"] for f in meta["schema"]["fields"]] == [
+        "session_id", "api_key", "session_date", "interactions"
+    ]
+    with open(os.path.join(out["run_dir"], "dataset.meta.json")) as f:
+        assert set(json.load(f)["observed"]) == {"avg_session_len", "n_train", "n_test"}
+
+    meta["check"]["session_id_duplicates"] = 1
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(AssertionError, match="dbt test: unique"):
+        run_nep_flow(spark, raw, str(tmp_path), "run-dbt", resume=True, **FLOW_KW)
 
 
 def test_empty_extraction_window_fails_fast(spark, raw_log, tmp_path):
