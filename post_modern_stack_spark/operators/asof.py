@@ -2,19 +2,15 @@
 row at-or-before its timestamp, per key.
 
 The reference engine family exposes this as a first-class temporal join;
-Spark has no built-in, so it is re-expressed two ways (SURVEY.md §2
+Spark has no built-in, so it is re-expressed (SURVEY.md §2
 custom-operator policy):
 
-- ``asof_join`` (default, JVM-only): the *union-window* idiom. Tag both
+- ``asof_join`` (JVM-only): the *union-window* idiom. Tag both
   sides, union, and run ``last(value, ignorenulls=True)`` over a
   per-key time-ordered running window. One shuffle (the window's
   partitionBy), whole-stage-codegen throughout, no Python in the hot
   path — this is the 100 TB shape: cost is a sort within each key
   partition, identical to any windowed aggregate.
-- ``asof_join_pandas``: cogrouped ``applyInPandas`` over
-  ``pd.merge_asof`` — the escape hatch for semantics the union idiom
-  can't express (nearest-direction, interpolation). Arrow-batched, but
-  per-key pandas; keep for parity tests and small keyed frames.
 
 Determinism: right-side ties on the time key are broken by an explicit
 ``right_tie`` column (max wins); at equal timestamps the right row sorts
@@ -105,47 +101,3 @@ def asof_join(
         *[F.col(f"{_RV}.{c}").alias(c) for c in right_cols],
     )
 
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: Sequence[str],
-    schema: str,
-    tolerance: int | None = None,
-) -> DataFrame:
-    """Backward as-of join via cogrouped ``pd.merge_asof`` (Arrow path).
-
-    Cogroups both sides on ``by`` and merges within each key group.
-    ``schema`` is the output DDL (left columns then right value
-    columns, ``by`` included once). ``tolerance`` bounds the lookback
-    in the time column's own units.
-    """
-    import pandas as pd
-
-    by = list(by)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=lpdf.columns.tolist() + [
-                c for c in rpdf.columns if c not in lpdf.columns
-            ])
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        rpdf = rpdf.sort_values(on, kind="mergesort")
-        kwargs = {}
-        if tolerance is not None:
-            kwargs["tolerance"] = tolerance
-        return pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=by),
-            on=on,
-            direction="backward",
-            **kwargs,
-        )
-
-    return (
-        left.groupby(*by)
-        .cogroup(right.groupby(*by))
-        .applyInPandas(merge, schema=schema)
-    )

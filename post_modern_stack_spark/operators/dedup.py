@@ -57,16 +57,6 @@ def shingles_from_tokens(toks: F.Column, n: int = 3) -> F.Column:
     )
 
 
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Word n-gram shingle set of a whitespace-tokenized text column.
-
-    Prefer projecting ``split(text)`` to a column and calling
-    ``shingles_from_tokens`` — this inline form re-splits the text
-    once per shingle under interpreted HOF eval (see there)."""
-    toks = F.split(F.col(text_col) if isinstance(text_col, str) else text_col, r"\s+")
-    return shingles_from_tokens(toks, n)
-
-
 def shingle_stream(
     df: DataFrame,
     id_col: str = "doc_id",

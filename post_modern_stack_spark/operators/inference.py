@@ -47,21 +47,6 @@ def batched_top_k_predict(
     return dataset.withColumn(out_col, predict(F.col(x_col)))
 
 
-def popularity_model(n_classes: int) -> Callable:
-    """Deterministic stand-in model: scores every class by a fixed
-    pseudo-popularity (hash-derived), ignoring the input — the simplest
-    baseline the HitRate@K suite can evaluate end-to-end."""
-    import numpy as np
-
-    rng = np.random.RandomState(42)
-    scores = rng.rand(n_classes)
-
-    def fn(batch):
-        return np.tile(scores, (batch.shape[0], 1))
-
-    return fn
-
-
 def rank_popularity_model(n_classes: int) -> Callable:
     """TRUE-popularity baseline: class score = negative frequency rank.
 
@@ -344,7 +329,7 @@ def score_logreg(
 ) -> DataFrame:
     """Scoring half over SPARSE FEATURES: weights as a literal map
     expression + one doc-grain agg → sigmoid probability per doc.
-    For streams use ``score_logreg_rowwise`` (no agg, no shuffle)."""
+    For streams use ``logreg_prob_expr`` (no agg, no shuffle)."""
     from itertools import chain
 
     import numpy as np
@@ -363,27 +348,6 @@ def score_logreg(
             id_col,
             (1.0 / (1.0 + F.exp(-(F.col("m") + float(bias))))).alias("p"),
         )
-    )
-
-
-def score_logreg_rowwise(
-    df: DataFrame,
-    weights,
-    bias: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_features: int = 256,
-) -> DataFrame:
-    """Stateless per-row scorer: hashes each token, folds the weight
-    lookups inside the row — NO featurize shuffle, no grouping — so it
-    drops straight into a streaming ``select`` (train offline with
-    ``train_logreg``, score in-flight here). Numerically equal to
-    ``score_logreg`` over ``hashed_text_features`` up to float
-    summation order (parity-tested at 1e-9): margin =
-    Σ_tok w[bucket(tok)] / n_tokens."""
-    return df.select(
-        id_col,
-        logreg_prob_expr(text_col, weights, bias, n_features).alias("p"),
     )
 
 

@@ -185,7 +185,7 @@ def encode_wav_g711(samples, rate: int) -> bytes:
 
 
 def encode_wav(samples, rate: int) -> bytes:
-    """Inverse of :func:`decode_wav` (test fixture + sink side)."""
+    """Inverse of :func:`decode_wav` (test fixture)."""
     import struct
 
     import numpy as np
@@ -843,28 +843,6 @@ def sample_frames(media: DataFrame, every_ms: int = 40) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, FRAMES_SCHEMA)
 
 
-def frame_sample_plan(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame timestamp to
-    extract (the decode itself is the stubbed codec call). Pure
-    expression: sequence over the duration — no UDF until the codec
-    boundary."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def media_dedup(media: DataFrame) -> DataFrame:
     """K1 applied to binary columns: exact dedup on the content digest
     (sha2 over binary works JVM-side — no decode needed)."""
@@ -953,123 +931,6 @@ def resize_media(
             )
 
     return media.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def resample_audio(samples, in_rate: int, out_rate: int):
-    """REAL linear-interpolation resample (pure numpy): output sample k
-    sits at input position k*in_rate/out_rate, linearly interpolated
-    between neighbors. Channel-preserving."""
-    import numpy as np
-
-    arr = np.asarray(samples, dtype=np.float64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    n_in = arr.shape[0]
-    n_out = max(int(round(n_in * out_rate / in_rate)), 1)
-    pos = np.arange(n_out) * (in_rate / out_rate)
-    lo = np.minimum(pos.astype(np.int64), n_in - 1)
-    hi = np.minimum(lo + 1, n_in - 1)
-    frac = (pos - lo)[:, None]
-    return arr[lo] * (1.0 - frac) + arr[hi] * frac
-
-
-def resample_media(
-    media: DataFrame, out_rate: int = 8000, require_real_codecs: bool = True
-) -> DataFrame:
-    """Audio-rate normalization over binary WAV columns: decode (real
-    PCM-16 codec) → linear resample → re-encode at ``out_rate``.
-    Same streaming mapInPandas contract as resize_media; output is
-    binary, so it composes with media_dedup / extract_features."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for c in pdf["content"]:
-                c = bytes(c or b"")
-                if c[:4] == b"RIFF" and c[8:12] == b"WAVE":
-                    samples, rate = decode_wav(c)
-                    out.append(encode_wav(resample_audio(samples, rate, out_rate), out_rate))
-                elif require_real_codecs:
-                    raise NotImplementedError(
-                        "resample_media: only PCM-16 WAV decodes natively"
-                    )
-                else:
-                    out.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_h": out_rate,  # rate rides in the out_h slot
-                    "out_w": 0,
-                    "content": out,
-                }
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
-
-
-SPECTROGRAM_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("start_sample", T.LongType(), False),
-        T.StructField("spectrum", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def spectrogram_frames(
-    media: DataFrame,
-    frame_len: int = 256,
-    hop: int = 128,
-    n_bins: int = 8,
-    require_real_codecs: bool = True,
-) -> DataFrame:
-    """Audio → spectrogram frames: decode PCM-16 WAV, slide a
-    ``frame_len`` window at ``hop`` stride, rFFT each frame, average
-    magnitudes into ``n_bins`` bands — one output row per frame, the
-    feature grid audio models train on. All frames of one clip compute
-    in a single numpy call (strided view + batched rFFT), streamed per
-    Arrow batch; output is long-form so downstream ops shuffle at frame
-    grain, never clip grain."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, starts, specs = [], [], [], []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                c = bytes(c or b"")
-                if not (c[:4] == b"RIFF" and c[8:12] == b"WAVE"):
-                    if require_real_codecs:
-                        raise NotImplementedError(
-                            "spectrogram_frames: only PCM-16 WAV decodes natively"
-                        )
-                    continue
-                samples, _ = decode_wav(c)
-                mono = samples.mean(axis=1)
-                n_frames = max((len(mono) - frame_len) // hop + 1, 0)
-                if n_frames == 0:
-                    continue
-                idx = np.arange(frame_len)[None, :] + hop * np.arange(n_frames)[:, None]
-                frames = mono[idx]  # (n_frames, frame_len)
-                mags = np.abs(np.fft.rfft(frames, axis=1))  # (n_frames, frame_len//2+1)
-                bands = np.stack(
-                    [b.mean(axis=1) for b in np.array_split(mags, n_bins, axis=1)],
-                    axis=1,
-                )  # (n_frames, n_bins)
-                ids.extend([mid] * n_frames)
-                idxs.extend(range(n_frames))
-                starts.extend((hop * np.arange(n_frames)).tolist())
-                specs.extend([row.astype("float32") for row in bands])
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "start_sample": starts,
-                    "spectrum": specs,
-                }
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, SPECTROGRAM_SCHEMA)
 
 
 # --- MP3 / MP4 container parsing (real, stdlib-only) -----------------------

@@ -28,8 +28,7 @@ def split_by_time(
 
     Implemented with ``percent_rank`` over the ordering keys. A global
     window is a single-partition sort at scale (SURVEY.md §7 watch-list
-    3) — acceptable at session granularity (#sessions ≪ #events); the
-    scale path for event-grain data is :func:`split_by_time_cutoff`.
+    3) — acceptable at session granularity (#sessions ≪ #events).
 
     ``percent_rank`` = (rank-1)/(n-1), so the boundary row semantics
     match the reference's ``int(len(ds) * frac)`` index split when rows
@@ -39,28 +38,6 @@ def split_by_time(
     return df.withColumn(
         split_col,
         F.when(F.percent_rank().over(w) < train_frac, F.lit("train")).otherwise(
-            F.lit("test")
-        ),
-    )
-
-
-def split_by_time_cutoff(
-    df: DataFrame,
-    ts_col: str,
-    train_frac: float = 0.9,
-    split_col: str = "split",
-) -> DataFrame:
-    """Scale path for E1: one pass computes the ``train_frac`` quantile
-    of the time column (exact, via sort-free percentile_approx with high
-    accuracy), then a map-side comparison labels rows. No global sort,
-    no single-partition window — survives 100 TB.
-    """
-    cutoff = df.agg(
-        F.percentile_approx(ts_col, train_frac, 1_000_000).alias("c")
-    ).collect()[0]["c"]
-    return df.withColumn(
-        split_col,
-        F.when(F.col(ts_col) <= F.lit(cutoff), F.lit("train")).otherwise(
             F.lit("test")
         ),
     )

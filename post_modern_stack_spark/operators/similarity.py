@@ -187,25 +187,6 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def rp_bucket(vec_col: str | F.Column, dim: int, bits: int = 8, seed: int = 42) -> F.Column:
-    """Sign-of-projection bucket id (0..2^bits-1) for one vector column."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    planes = _hyperplanes(dim, bits, seed)
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(w) for w in plane]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _round_half_away(x):
     """round-half-away-from-zero, matching Spark ``F.round`` and DuckDB
     ``round`` (numpy's own ``round`` is half-to-even and would diverge
@@ -213,68 +194,6 @@ def _round_half_away(x):
     import numpy as np
 
     return np.sign(x) * np.floor(np.abs(x) + 0.5)
-
-
-def rounded_pair_cosine(qv: str | F.Column, cv: str | F.Column) -> F.Column:
-    """Arrow-vectorized rounded cosine for candidate-pair scoring —
-    value-identical to ``F.round(cosine_similarity(a, b), 6)`` (parity
-    test-pinned, including the zero-vector NULL), kept as the MEASURED-
-    WORSE alternative and a cross-implementation parity anchor.
-
-    r10 controlled A/B (BASELINE.md "candidate-scoring hypothesis",
-    pinned 2M-pair frame, interleaved, both orderings): the expression
-    form JIT-warms to **1.3-2.1 s / 2M pairs (~0.7 µs/row)** while this form sits at
-    **4.4-20.8 s**, bounded below by Arrow-serializing both 64-d
-    vectors (~1 KB/pair) to Python workers and exposed to the host's
-    Python-worker band. The cold first-run expression cost (the 18.6 s
-    round-0 sample, and the r08 "226 s for 32M joined rows" note) is
-    interpreter/C2-warmup plus join-row materialization — NOT the
-    steady state. ivf/lsh therefore default to ``score="expr"``; this
-    path exists for engines/debugging and to keep the negative result
-    reproducible.
-
-    Rounding is numpy round-half-away at 6 dp — the same convention as
-    ``brute_force_top_k_arrow`` (F.round/DuckDB-parity). Edge parity
-    with the expression form (ADVICE r10): NULL input vector → NULL
-    (``dot_product`` of NULL is NULL), zero-norm pair → NULL (the
-    ``nullif`` guard), a vector CONTAINING NaN → NaN (NaN/NaN survives
-    ``F.round``). The UDF returns a (val, kind) struct because Arrow's
-    pandas conversion coerces NaN→null in BOTH float64 and object
-    batches, so neither NULL nor NaN can ride the double column itself:
-    kind 0 = value, 1 = SQL NULL, 2 = NaN, decoded JVM-side.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("val double, kind tinyint")
-    def pair_cos6(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        valid = np.array(
-            [x is not None and y is not None for x, y in zip(a, b)], dtype=bool
-        )
-        vals = np.zeros(len(a))
-        kinds = np.ones(len(a), dtype=np.int8)  # null-input rows → SQL NULL
-        if valid.any():
-            q = np.vstack(a[valid].to_numpy()).astype(np.float64)
-            c = np.vstack(b[valid].to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", q, c)
-            den = np.linalg.norm(q, axis=1) * np.linalg.norm(c, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = num / den
-            sims = _round_half_away(sims * 1_000_000.0) / 1_000_000.0
-            k = np.zeros(len(sims), dtype=np.int8)
-            k[np.isnan(sims)] = 2  # NaN elements → NaN (expression parity)
-            k[den == 0] = 1  # nullif(0) → SQL NULL
-            vals[valid] = np.nan_to_num(sims)
-            kinds[valid] = k
-        return pd.DataFrame({"val": vals, "kind": kinds})
-
-    s = pair_cos6(as_double_array(qv), as_double_array(cv))
-    return (
-        F.when(s.getField("kind") == 1, F.lit(None))
-        .when(s.getField("kind") == 2, F.lit(float("nan")))
-        .otherwise(s.getField("val"))
-    )
 
 
 def quantized_planes(
@@ -307,12 +226,11 @@ def _all_table_buckets_udf(
     """Arrow-vectorized bucket computation for every LSH table at once:
     one (batch × dim) @ (dim × bits·tables) matmul per record batch.
 
-    This is the sanctioned pandas-UDF case (SURVEY.md intro): the
-    expression-tree equivalent (``rp_bucket`` × tables) re-walks the
-    vector array bits×tables times per row and measured ~4× slower at
-    sf0.1. Hyperplanes are seeded identically to ``rp_bucket``
-    (seed + 1000·table), so both paths bucket identically up to
-    float-summation-order sign flips at exact zero.
+    This is the sanctioned pandas-UDF case (SURVEY.md intro): an
+    expression-tree equivalent (one sign-of-projection ``F.aggregate``
+    per plane × tables) re-walks the vector array bits×tables times per
+    row and measured ~4× slower at sf0.1. Table t's hyperplanes are
+    :func:`_hyperplanes` seeded ``seed + 1000·t``.
 
     With ``quantize_scale`` set, vectors and planes are quantized to
     ``round(x*scale)`` int64 and the matmul is exact integer math —
@@ -480,7 +398,6 @@ def ivf_top_k(
     quantize_scale: int | None = None,
     dim: int | None = None,
     seed: int = 42,
-    score: str = "expr",
 ) -> DataFrame:
     """Approximate top-K via IVF (inverted-file) partitioning — the
     FAISS-style scale path complementary to RP-LSH:
@@ -564,24 +481,20 @@ def ivf_top_k(
         F.explode(probe_cells(F.col(vec_col))).alias("cell"),
     )
     # candidate fan-out is n_probe/n_centroids of the corpus per query
-    # — millions of rows at ladder scale. score="expr" (default) keeps
-    # the cosine in the JVM (JIT-warmed ~0.7 µs/row — the r10 pinned-
-    # frame A/B beat the Arrow form 3-10x; see rounded_pair_cosine).
+    # — millions of rows at ladder scale. The cosine stays in the JVM
+    # (JIT-warmed ~0.7 µs/row — the r10 pinned-frame A/B beat an Arrow
+    # pandas-UDF scorer 3-10x; BASELINE.md "candidate-scoring
+    # hypothesis").
     # NO pair dedup here: unlike LSH, IVF pairs are unique by
     # construction (every corpus vector lives in exactly ONE cell and a
     # query's probed cells are distinct), and the r10 ladder measured
     # the old dropDuplicates as pure overhead — worse, hoisted before
     # scoring it shuffled (qv, cv) wide rows (~1 KB/row x 10M
     # candidates at the 10M rung: 420 s vs 147 s).
-    sim = (
-        rounded_pair_cosine("qv", "cv")
-        if score == "arrow"
-        else F.round(cosine_similarity("qv", "cv"), 6)
-    )
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", sim)
+        .withColumn("cos_sim", F.round(cosine_similarity("qv", "cv"), 6))
         .select("query_id", "neighbor_id", "cos_sim")
     )
     return top_k_per_group(
@@ -602,7 +515,6 @@ def rp_lsh_top_k(
     bits: int = 8,
     n_tables: int = 4,
     quantize_scale: int | None = None,
-    score: str = "expr",
 ) -> DataFrame:
     """Approximate top-K: multi-table LSH. Each of ``n_tables`` hash
     tables buckets on ``bits`` hyperplane signs (independent seeds);
@@ -644,16 +556,12 @@ def rp_lsh_top_k(
     # carries narrow (pair, cos_sim) rows instead of the (qv, cv)
     # ~1 KB-wide ones (the payload that made the pre-r10 wide dedup a
     # 3x regression in the ivf twin). Duplicate scores are identical,
-    # so which row survives the dedup is value-irrelevant. score="expr"
-    # (default) keeps the cosine in the JVM — the pinned-frame A/B beat
-    # the Arrow form 3-10x (see rounded_pair_cosine).
-    sim = (
-        rounded_pair_cosine("qv", "cv")
-        if score == "arrow"
-        else F.round(cosine_similarity("qv", "cv"), 6)
-    )
+    # so which row survives the dedup is value-irrelevant. The cosine
+    # stays in the JVM — the pinned-frame A/B beat an Arrow scorer 3-10x.
     scored = joined.select(
-        "query_id", "neighbor_id", sim.alias("cos_sim")
+        "query_id",
+        "neighbor_id",
+        F.round(cosine_similarity("qv", "cv"), 6).alias("cos_sim"),
     ).dropDuplicates(["query_id", "neighbor_id"])
     return top_k_per_group(
         scored,

@@ -14,7 +14,6 @@ Keras ``Tokenizer(filters='', lower=False, oov_token='<UNK>')``:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -356,7 +355,6 @@ def bpe_encode(
     merges,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_udf: bool = False,
 ) -> DataFrame:
     """[EXT] apply a trained BPE merge table to the corpus — the
     token-budget denominator computed with the ACTUAL tokenizer
@@ -367,20 +365,11 @@ def bpe_encode(
     sized — millions of rows at 100 TB, not trillions), then the
     word → token-count map broadcast-joins back to the corpus word
     occurrences; the corpus-grain pass is one explode + one hash agg.
-    Two interchangeable word-encode paths (parity-tested):
-
-    - ``use_udf=False``: each merge is one chained ``F.aggregate``
-      fold — the exact expression ``bpe_train`` rewrites state with,
-      so train→encode round-trips bit-identically. Right for the
-      small merge tables the catalog trains (expression depth grows
-      with the merge count).
-    - ``use_udf=True``: one Arrow-batched pandas UDF running the
-      standard rank-priority BPE loop per word — the implemented loop
-      rescans adjacent pairs each merge, so it is quadratic in word
-      length worst case (ADVICE r05; fine at natural word lengths —
-      a heap-based encode would reach O(len·log len) if it mattered),
-      and independent of merge-table size; the production path for
-      real 30k-merge tokenizers where 30k chained folds cannot plan.
+    Each merge is one chained ``F.aggregate`` fold — the exact
+    expression ``bpe_train`` rewrites state with, so train→encode
+    round-trips bit-identically. Right for the small merge tables the
+    catalog trains: expression depth grows with the merge count, so a
+    real 30k-merge tokenizer would need a per-word loop instead.
 
     Returns (id, n_words, n_bpe_tokens, fertility) per document.
     """
@@ -389,34 +378,10 @@ def bpe_encode(
     ).filter(F.length("w") > 0)
     words = toks.select("w").distinct().coalesce(4)
 
-    if use_udf:
-        ranks = {(left, right): rank for rank, left, right, *_ in merges}
-
-        @F.pandas_udf("int")
-        def n_bpe(col: pd.Series) -> pd.Series:
-            def encode(word: str) -> int:
-                syms = list(word)
-                while len(syms) > 1:
-                    # lowest-rank adjacent pair, leftmost on ties —
-                    # rank order reproduces the greedy fold sequence
-                    best, at = None, -1
-                    for i in range(len(syms) - 1):
-                        r = ranks.get((syms[i], syms[i + 1]))
-                        if r is not None and (best is None or r < best):
-                            best, at = r, i
-                    if best is None:
-                        break
-                    syms[at : at + 2] = [syms[at] + syms[at + 1]]
-                return len(syms)
-
-            return col.map(encode).astype("int32")
-
-        encoded = words.select("w", n_bpe("w").alias("w_tokens"))
-    else:
-        syms = F.split("w", "")
-        for rank, left, right, *_ in merges:
-            syms = _apply_merge(syms, left, right)
-        encoded = words.select("w", F.size(syms).cast("int").alias("w_tokens"))
+    syms = F.split("w", "")
+    for rank, left, right, *_ in merges:
+        syms = _apply_merge(syms, left, right)
+    encoded = words.select("w", F.size(syms).cast("int").alias("w_tokens"))
 
     return (
         toks.join(F.broadcast(encoded), "w")

@@ -174,8 +174,7 @@ def q_user_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-ordered 90/10 split (E1; reference my_dbt_flow.py:256-268)
-    at session grain via percent_rank — the oracle-checkable exact
-    variant; ``shaping.split_by_time_cutoff`` is the 100 TB path."""
+    at session grain via percent_rank."""
     sess = driver_session_events(load_table(spark, sf_dir, "events"))
     out = shaping.split_by_time(
         sess.select("user_id", "session_date"), ["session_date", "user_id"]
@@ -472,9 +471,7 @@ def q_predict_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10 most frequent training tokens, no RNG), so the whole loop
     — session build, vocab ranking, encode, top-K predict, metric —
     replays in SQL: HitRate@10 ≡ share of labels whose frequency rank
-    is ≤ 10 (y_enc BETWEEN 2 AND 11; UNK=1 never predicted). The
-    hash-random stand-in scorer remains available as
-    inference.popularity_model for the boundary tests."""
+    is ≤ 10 (y_enc BETWEEN 2 AND 11; UNK=1 never predicted)."""
     from post_modern_stack_spark.functions import pad_sequence
     from post_modern_stack_spark.operators import inference, metrics, shaping, vocab
 
@@ -1835,7 +1832,7 @@ def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT count(*) AS n_keys,
            CAST(max(n) AS BIGINT) AS max_rows,
            round(avg(n), 4) AS avg_rows,
-           CAST(quantile_cont(n, 0.99) AS BIGINT) AS p99_rows,
+           CAST(round(quantile_cont(n, 0.99)) AS BIGINT) AS p99_rows,
            round(max(n) / avg(n), 4) AS skew_factor,
            CAST(sum(CASE WHEN n > 2 * (SELECT avg(n) FROM per_key)
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_hot_keys
@@ -1848,7 +1845,9 @@ def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     remedy (operators/skew): max/avg/p99 per-key row counts, the
     max-to-mean skew factor, and the hot-key count (> 2x mean). One
     key-grain agg then one 1-row summary; the 2x-mean threshold is a
-    broadcast scalar, not a second scan of the fact."""
+    broadcast scalar, not a second scan of the fact. The interpolated
+    p99 is rounded before its cast on both sides: Spark's cast
+    truncates (86.56 → 86) where DuckDB's rounds (87)."""
     ev = load_table(spark, sf_dir, "events")
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     mean = per_key.agg(F.avg("n").alias("mean_n"))
@@ -1858,7 +1857,7 @@ def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_keys"),
             F.max("n").alias("max_rows"),
             F.round(F.avg("n"), 4).alias("avg_rows"),
-            F.percentile("n", F.lit(0.99)).cast("bigint").alias("p99_rows"),
+            F.round(F.percentile("n", F.lit(0.99))).cast("bigint").alias("p99_rows"),
             F.round(F.max("n") / F.avg("n"), 4).alias("skew_factor"),
             F.sum(
                 (F.col("n") > 2 * F.col("mean_n")).cast("bigint")

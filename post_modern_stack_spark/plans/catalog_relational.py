@@ -1832,8 +1832,7 @@ def q_monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     The window runs over the POST-aggregate frame (one row per month),
     so the unpartitioned ORDER BY is a few-dozen-row sort on one task
     — deliberately after the shuffle-reducing groupBy, never on the
-    raw fact table (contrast split_by_time's cutoff scale path for
-    event-grain global ordering).
+    raw fact table.
     """
     orders = load_table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
@@ -1902,10 +1901,10 @@ def q_weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     l AS (
         SELECT l_orderkey AS okey,
-               round(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+               CAST((sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                          * (100 - CAST(round(l_discount * 100) AS BIGINT))
                          * (100 + CAST(round(l_tax * 100) AS BIGINT)))
-                     / 1000000.0, 2) AS got_total
+                     + 5000) // 10000 AS DOUBLE) / 100 AS got_total
         FROM lineitem GROUP BY l_orderkey
     )
     SELECT coalesce(o.okey, l.okey) AS okey,
@@ -1942,17 +1941,22 @@ def q_reconcile_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact 1e-6-unit integer charge (functions.core.cents): the
     # recomputed total is deterministic, so the 1% drift classification
-    # cannot flip on merge-order float noise
+    # cannot flip on merge-order float noise. The group sum stays an
+    # int128 integer (sum128 without its cast to double) so both sides
+    # round it to cents half-up in integers: round() of the double
+    # disagreed at half cents (8446.925: Spark rounds the decimal string
+    # up, DuckDB the binary double down).
     l = li.groupBy(F.col("l_orderkey").alias("okey_l")).agg(
-        F.round(
-            sum128(
+        F.sum(
+            (
                 cents("l_extendedprice")
                 * (100 - cents("l_discount"))
                 * (100 + cents("l_tax"))
-            )
-            / 1000000.0,
-            2,
-        ).alias("got_total")
+            ).cast("decimal(38,0)")
+        ).alias("charge")
+    ).select(
+        "okey_l",
+        F.expr("CAST((charge + 5000) DIV 10000 AS DOUBLE) / 100").alias("got_total"),
     )
     j = o.join(l, o["okey_o"] == l["okey_l"], "full_outer")
     status = (

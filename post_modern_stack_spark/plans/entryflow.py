@@ -66,8 +66,8 @@ DEFER_FROM_WINDOW: tuple[str, ...] = (
     # 46 never-checked paired queries already queued for the r05
     # window (40 bucket-1 + the 6 twins above), so the final never-
     # checked backlog is cleared first; they fill the remaining window
-    # slots (47-50) themselves. tests/test_catalog_freeze.py asserts
-    # all paired-unverified names still fit in the 50-slot window.
+    # slots (47-50) themselves. tests/test_window_ordering.py pins the
+    # 50-slot window order these deferrals rely on.
     "ann_recall_report",
     "bpe_train_merges",
     "predict_hit_rate",

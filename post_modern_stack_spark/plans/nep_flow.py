@@ -94,8 +94,6 @@ def run_nep_flow(
     api_key: str,
     start_date: str,
     end_date: str,
-    train_frac: float = 0.9,
-    max_len: int = MAX_LEN,
     resume: bool = False,
 ) -> dict:
     """Execute the full flow; returns stage artifacts + metric rows.
@@ -163,7 +161,7 @@ def run_nep_flow(
         # label = token_id - 1 (the reference's off-by-one trap,
         # my_dbt_flow.py:339-340 — SURVEY.md §7 watch-list 5)
         .withColumn("y_label", F.col("y_enc") - 1)
-        .withColumn("x_padded", pad_sequence("x_enc", max_len, 0))
+        .withColumn("x_padded", pad_sequence("x_enc", MAX_LEN, 0))
     )
     # test_model analog: the metrics ride the dataset write as observed
     # aggregates (no re-scan of the dataset)

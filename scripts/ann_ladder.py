@@ -103,9 +103,6 @@ def main() -> None:
                     help="reuse truth from a prior run (debugging only)")
     ap.add_argument("--only", type=str, default=None,
                     help="comma list of variants (brute,lsh,ivf,pq)")
-    ap.add_argument("--ab", action="store_true",
-                    help="also run the expression-scoring twins of lsh/ivf "
-                    "(same-window A/B for the arrow candidate scoring)")
     args = ap.parse_args()
 
     from post_modern_stack_spark.session import get_spark
@@ -181,19 +178,6 @@ def main() -> None:
                 "ivf": "ivf_top_k",
                 "pq": "pq_top_k",
             }
-            if args.ab:
-                # same-window Arrow-scoring twins: the defaults are
-                # score="expr" (the measured winner — see the
-                # rounded_pair_cosine docstring), so the A/B arm must
-                # flip to "arrow" to measure the transfer-bound path
-                variants["lsh_arrow"] = lambda: rp_lsh_top_k(
-                    corpus, queries, k=args.k, dim=args.dim, score="arrow", **p["lsh"]
-                )
-                variants["ivf_arrow"] = lambda: ivf_top_k(
-                    corpus, queries, k=args.k, score="arrow", **p["ivf"]
-                )
-                names["lsh_arrow"] = "rp_lsh_top_k[score=arrow]"
-                names["ivf_arrow"] = "ivf_top_k[score=arrow]"
             if n <= 1_000_000:
                 # PQ pool law: on a near-tie clustered corpus ADC cannot
                 # rank cluster siblings, so recall ~= min(1, pool/cluster)
@@ -218,7 +202,7 @@ def main() -> None:
                     recall = round(sum(recalls) / len(recalls), 4)
                 else:
                     recall = None
-                pkey = "pq" if key == "pq_pool" else key.split("_")[0]
+                pkey = "pq" if key == "pq_pool" else key
                 pp = dict(p[pkey], refine_factor=1000) if key == "pq_pool" else p[pkey]
                 print(
                     json.dumps(

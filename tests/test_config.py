@@ -1,32 +1,5 @@
 from __future__ import annotations
 
-import pytest
-
-from post_modern_stack_spark.config import EngineConfig
-
-
-def test_default_config_validates():
-    cfg = EngineConfig(sf_dir="/root/testdata/sf0.001").validate()
-    assert cfg.max_len == 20 and cfg.train_frac == 0.9
-
-
-@pytest.mark.parametrize(
-    "kwargs,msg",
-    [
-        ({"sf_dir": "/nope/nothing"}, "sf_dir"),
-        ({"start_date": "2020-01-01", "end_date": "2019-01-01"}, "date window"),
-        ({"train_frac": 1.5}, "train_frac"),
-        ({"max_len": 0}, "max_len"),
-        ({"min_session_len": 0}, "min_session_len"),
-        ({"max_sessions": -5}, "max_sessions"),
-    ],
-)
-def test_invalid_configs_fail_fast(kwargs, msg):
-    base = {"sf_dir": "/root/testdata/sf0.001"}
-    base.update(kwargs)
-    with pytest.raises(ValueError, match=msg):
-        EngineConfig(**base).validate()
-
 
 def test_driver_green_reads_correctness_files():
     """driver_green() unions recorded CORRECTNESS_r*.json greens with

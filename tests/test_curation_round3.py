@@ -315,7 +315,9 @@ def test_rowwise_scorer_matches_sparse_scorer(spark):
     }
     rowwise = {
         r["doc_id"]: r["p"]
-        for r in inference.score_logreg_rowwise(docs, w, b).collect()
+        for r in docs.select(
+            "doc_id", inference.logreg_prob_expr("text", w, b).alias("p")
+        ).collect()
     }
     assert set(sparse) == set(rowwise)
     assert all(abs(sparse[k] - rowwise[k]) < 1e-9 for k in sparse)
@@ -598,9 +600,8 @@ def test_curate_documents_observed_counts_match_stage_counts(spark, span_trim):
 
 def test_bpe_encode_matches_reference_both_paths(spark):
     """Encode half: per-doc token counts from the trained merge table
-    must equal the reference BPE's final symbol counts — via BOTH the
-    expression-fold path (training's exact rewrite) and the pandas-UDF
-    rank-priority path (the production 30k-merge form)."""
+    must equal the reference BPE's final symbol counts through the
+    expression-fold encode (training's exact rewrite)."""
     from post_modern_stack_spark.operators.vocab import bpe_encode, bpe_train
 
     texts = ["low lower lowest", "new newer newest", "low low new"]
@@ -618,34 +619,39 @@ def test_bpe_encode_matches_reference_both_paths(spark):
         i: (len(t.split()), sum(len(want_state[w]) for w in t.split()))
         for i, t in enumerate(texts)
     }
-    for use_udf in (False, True):
-        got = {
-            r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-            for r in bpe_encode(df, merges, use_udf=use_udf).collect()
-        }
-        assert got == expected, f"use_udf={use_udf}"
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
+        for r in bpe_encode(df, merges).collect()
+    }
+    assert got == expected
 
 
 def test_bpe_encode_paths_agree_on_overlapping_runs(spark):
     """Overlapping same-symbol runs (``aaaa`` under merge (a,a)) are
     where greedy-fold vs rank-priority implementations classically
-    diverge — both paths must produce identical counts."""
+    diverge — the fold encode must match the reference BPE's counts."""
     from post_modern_stack_spark.operators.vocab import bpe_encode, bpe_train
 
-    df = spark.createDataFrame(
-        [(1, "aaaa aaa aa a ab"), (2, "aaaa aaaa b ab aab")],
-        "doc_id long, text string",
-    )
+    texts = {1: "aaaa aaa aa a ab", 2: "aaaa aaaa b ab aab"}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     merges, _ = bpe_train(df, n_merges=4)
+
+    counts = {}
+    for t in texts.values():
+        for w in t.split():
+            counts[w] = counts.get(w, 0) + 1
+    want_merges, want_state = _reference_bpe(counts, 4)
+    assert merges == want_merges
+    expected = {}
+    for i, t in texts.items():
+        n_words = len(t.split())
+        n_tok = sum(len(want_state[w]) for w in t.split())
+        expected[i] = (n_words, n_tok, round(n_tok / n_words, 6))
     fold = {
         r["doc_id"]: (r["n_words"], r["n_bpe_tokens"], r["fertility"])
-        for r in bpe_encode(df, merges, use_udf=False).collect()
+        for r in bpe_encode(df, merges).collect()
     }
-    udf = {
-        r["doc_id"]: (r["n_words"], r["n_bpe_tokens"], r["fertility"])
-        for r in bpe_encode(df, merges, use_udf=True).collect()
-    }
-    assert fold == udf
+    assert fold == expected
 
 
 def _synth_mp3(n_frames=5, pad_id3=False):

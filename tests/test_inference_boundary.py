@@ -38,7 +38,7 @@ def test_encode_via_join_matches_map_encode(spark, sessions):
 
 def test_batched_topk_predict_and_hitrate(spark, sessions):
     n_classes = 10
-    model = inference.popularity_model(n_classes)
+    model = inference.rank_popularity_model(n_classes)
     ds = sessions.select(
         "sid",
         F.transform(
@@ -52,6 +52,8 @@ def test_batched_topk_predict_and_hitrate(spark, sessions):
     # deterministic model → identical preds on every row, ids in 1..n
     assert len({tuple(r["preds"]) for r in rows}) == 1
     assert all(1 <= p <= n_classes for r in rows for p in r["preds"])
+    # the 3 most popular real tokens, never UNK (id 1)
+    assert rows[0]["preds"] == [2, 3, 4]
     # the metric plumbing consumes the prediction frame directly
     hr = metrics.hit_rate_at_k(pred, "y", "preds").collect()[0]["hit_rate"]
     assert 0.0 <= hr <= 1.0

@@ -1,5 +1,5 @@
 """K5 multimodal tests: binary columns, Arrow-batched decode pipeline,
-frame plans, binary dedup. BMP/WAV/PPM decode+resize are REAL (pure
+binary dedup. BMP/WAV/PPM decode+resize are REAL (pure
 numpy, round-trip-tested below); compressed codecs stay stubbed with a
 deterministic digest fake.
 """
@@ -42,13 +42,6 @@ def test_feature_extraction_shape(spark, media):
 def test_real_codec_stub_raises(spark, media):
     with pytest.raises(Exception, match="NotImplementedError|codecs"):
         MM.extract_features(media, require_real_codecs=True).collect()
-
-
-def test_frame_sample_plan(spark, media):
-    frames = MM.frame_sample_plan(media, every_ms=1000).collect()
-    # 3200 ms video sampled at 1000 ms → ts 0,1000,2000,3000
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
-    assert all(r["media_id"] == 4 for r in frames)
 
 
 def test_media_dedup(spark, media):
@@ -191,57 +184,6 @@ def test_resize_media_real_roundtrip(spark):
     got = mm.decode_bmp(bytes(row["content"]))
     assert (got == mm.resize_image(img, 4, 3)).all()
     assert (row["out_h"], row["out_w"]) == (4, 3)
-
-
-def test_resample_audio_real(spark):
-    """resample_media: 16 kHz → 8 kHz through Spark halves the sample
-    count and matches the numpy-side linear interpolation (to PCM-16
-    quantization)."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    from post_modern_stack_spark.operators import multimodal as mm
-
-    wav = np.sin(2 * np.pi * 220 * np.arange(3200) / 16000.0)[:, None] * 0.7
-    media = spark.createDataFrame(
-        [Row(media_id=1, kind="audio", content=bytearray(mm.encode_wav(wav, 16000)),
-             mime="audio/wav", width=None, height=None, duration_ms=200)],
-        mm.MEDIA_SCHEMA,
-    )
-    row = mm.resample_media(media, out_rate=8000).collect()[0]
-    got, rate = mm.decode_wav(bytes(row["content"]))
-    assert rate == 8000 and got.shape[0] == 1600
-    dec_in, _ = mm.decode_wav(mm.encode_wav(wav, 16000))
-    want = mm.resample_audio(dec_in, 16000, 8000)
-    assert np.abs(got - want).max() < 1.0 / 32768 + 1e-9
-
-
-def test_spectrogram_frames_matches_numpy(spark):
-    """spectrogram_frames through Spark == per-frame numpy rFFT band
-    means on the decoded samples; frame count/stride follow the hop."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    from post_modern_stack_spark.operators import multimodal as mm
-
-    rng = np.random.RandomState(9)
-    wav = rng.uniform(-0.5, 0.5, size=(1000, 1))
-    media = spark.createDataFrame(
-        [Row(media_id=7, kind="audio", content=bytearray(mm.encode_wav(wav, 8000)),
-             mime="audio/wav", width=None, height=None, duration_ms=125)],
-        mm.MEDIA_SCHEMA,
-    )
-    rows = sorted(
-        mm.spectrogram_frames(media, frame_len=256, hop=128, n_bins=8).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert len(rows) == (1000 - 256) // 128 + 1
-    mono = mm.decode_wav(mm.encode_wav(wav, 8000))[0].mean(axis=1)
-    for r in rows:
-        s = r["start_sample"]
-        mags = np.abs(np.fft.rfft(mono[s : s + 256]))
-        want = [b.mean() for b in np.array_split(mags, 8)]
-        assert np.allclose(r["spectrum"], want, rtol=1e-5)
 
 
 def test_png_roundtrip_all_shapes():

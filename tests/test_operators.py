@@ -17,7 +17,7 @@ from post_modern_stack_spark.functions import (
     pad_sequence,
     slice_drop_last,
 )
-from post_modern_stack_spark.operators import dedup, shaping, vocab
+from post_modern_stack_spark.operators import dedup, vocab
 
 
 def _arr_df(spark, arrs):
@@ -70,13 +70,6 @@ def test_normalize_sku(spark):
 def test_cosine_zero_vector_null_not_error(spark):
     df = spark.createDataFrame([Row(a=[0.0, 0.0], b=[1.0, 2.0])])
     assert df.select(cosine_similarity("a", "b").alias("c")).collect()[0]["c"] is None
-
-
-def test_split_by_time_cutoff_fractions(spark):
-    df = spark.range(1000).withColumn("ts", F.col("id"))
-    out = shaping.split_by_time_cutoff(df, "ts", 0.9)
-    frac = out.filter(F.col("split") == "train").count() / 1000
-    assert 0.88 <= frac <= 0.92
 
 
 def test_vocab_encode_decode_roundtrip(spark):
@@ -190,72 +183,15 @@ def test_lsh_recall_vs_brute_force(spark):
 
 
 def test_arrow_pair_cosine_matches_expression_scoring(spark):
-    """rounded_pair_cosine (the r10 Arrow candidate-scoring path — the
-    measured-worse alternative kept as a parity anchor; score="expr" is
-    the shipped default) must be VALUE-IDENTICAL to the expression form
-    F.round(cosine_similarity, 6): full lsh+ivf result-set equality on
-    real embeddings, and the zero-vector pair must come back NULL (the
-    nullif contract), not NaN."""
-    from pyspark.sql import Row
-
-    from post_modern_stack_spark.operators import similarity
-    from post_modern_stack_spark.registry import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-    for fn, kw in [
-        (similarity.rp_lsh_top_k, {"bits": 4}),
-        (similarity.ivf_top_k, {"n_centroids": 16, "n_probe": 4}),
-    ]:
-        arrow = {
-            (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rank"])
-            for r in fn(emb, queries, k=5, score="arrow", **kw).collect()
-        }
-        expr = {
-            (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rank"])
-            for r in fn(emb, queries, k=5, score="expr", **kw).collect()
-        }
-        assert arrow == expr, f"{fn.__name__} arrow/expr scoring diverged"
-
+    """The candidate scorer ivf/lsh use, F.round(cosine_similarity, 6),
+    scores a zero-vector pair NULL (the nullif contract), not NaN."""
     zero = spark.createDataFrame(
         [Row(qv=[0.0, 0.0], cv=[1.0, 2.0]), Row(qv=[1.0, 0.0], cv=[1.0, 0.0])]
     )
     got = zero.select(
-        similarity.rounded_pair_cosine("qv", "cv").alias("c")
+        F.round(cosine_similarity("qv", "cv"), 6).alias("c")
     ).collect()
     assert [r["c"] for r in got] == [None, 1.0]
-
-    # ADVICE r10 edge parity vs F.round(cosine_similarity, 6): NULL
-    # input vector -> NULL (not a vstack crash); a vector CONTAINING
-    # NaN -> NaN (not NULL); interleaved with normal rows so the masked
-    # scatter path is exercised, not just the all-valid fast path.
-    from post_modern_stack_spark.functions.core import cosine_similarity
-
-    schema = "qv array<double>, cv array<double>"
-    edge = spark.createDataFrame(
-        [
-            ([1.0, 2.0], None),
-            (None, [1.0, 2.0]),
-            ([float("nan"), 1.0], [1.0, 2.0]),
-            ([3.0, 4.0], [3.0, 4.0]),
-            (None, None),
-        ],
-        schema,
-    )
-    both = edge.select(
-        similarity.rounded_pair_cosine("qv", "cv").alias("arrow_c"),
-        F.round(cosine_similarity("qv", "cv"), 6).alias("expr_c"),
-    ).collect()
-    import math
-
-    for r in both:
-        a, e = r["arrow_c"], r["expr_c"]
-        if e is None or a is None:
-            assert a is None and e is None, f"null divergence: {a} vs {e}"
-        elif math.isnan(e):
-            assert math.isnan(a), f"NaN divergence: {a} vs {e}"
-        else:
-            assert a == e, f"value divergence: {a} vs {e}"
 
 
 def test_ivf_recall_vs_brute_force(spark):

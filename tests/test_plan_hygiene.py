@@ -12,13 +12,19 @@ is compiled (no execution) and checked for scale hazards —
   sf0.1, r07) — the token array must be projected to an attribute
   first (textstats/dedup token-projection pattern).
 
+It also holds an AST-only guard against fully dead code: every public,
+undecorated top-level function or class in the package must be used
+by name somewhere outside its own body.
+
 Plan compilation only: the sweep explains ~200 queries in seconds and
 catches hazard regressions without running any data.
 """
 
 from __future__ import annotations
 
+import ast
 import io
+import pathlib
 from contextlib import redirect_stdout
 
 import pytest
@@ -90,3 +96,53 @@ def test_no_cartesian_and_bnlj_only_where_documented(spark):
         f"per-element re-split (slice over inline split) in: "
         f"{offenders_resplit}"
     )
+
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _used_names(tree: ast.Module) -> set[str]:
+    """Every identifier the module uses — names, attributes, imports and
+    exact-name strings (``getattr``-style lookups) — except a top-level
+    definition's uses of its own name inside its own body."""
+    used: set[str] = set()
+
+    def collect(node: ast.AST, skip: str | None = None) -> None:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                name = n.id
+            elif isinstance(n, ast.Attribute):
+                name = n.attr
+            elif isinstance(n, ast.alias):
+                name = n.name.rsplit(".", 1)[-1]
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                name = n.value
+            else:
+                continue
+            if name != skip:
+                used.add(name)
+
+    for stmt in tree.body:
+        collect(stmt, stmt.name if isinstance(stmt, _DEFS) else None)
+    return used
+
+
+def test_every_public_definition_is_referenced():
+    pkg = sorted((ROOT / "post_modern_stack_spark").rglob("*.py"))
+    users = pkg + [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    for d in ("perfbench", "scripts", "tests"):
+        users += sorted((ROOT / d).rglob("*.py"))
+    used: set[str] = set()
+    for p in users:
+        used |= _used_names(ast.parse(p.read_text(), str(p)))
+    dead = [
+        f"{p.relative_to(ROOT)}:{node.lineno} {node.name}"
+        for p in pkg
+        for node in ast.parse(p.read_text(), str(p)).body
+        if isinstance(node, _DEFS)
+        and not node.name.startswith("_")
+        and not node.decorator_list
+        and node.name not in used
+    ]
+    assert dead == [], f"defined but referenced nowhere: {dead}"

@@ -1,12 +1,11 @@
-"""As-of join (union-window + pandas strategies) and bucketed range
-join: hand-computed expectations, strategy parity, naive-join parity,
-and plan-shape guards."""
+"""As-of join (union-window) and bucketed range join: hand-computed
+expectations, naive-join parity, and plan-shape guards."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.operators.asof import asof_join, asof_join_pandas
+from post_modern_stack_spark.operators.asof import asof_join
 from post_modern_stack_spark.operators.rangejoin import interval_join_buckets
 
 
@@ -64,26 +63,6 @@ def test_asof_strict_excludes_equal_time(spark):
     got = {(r.k, r.t): r.rid for r in out.collect()}
     assert got[("a", 10)] == 100   # t=10 right row no longer eligible
     assert got[("b", 10)] is None  # only equal-t rows existed for b
-
-
-def test_asof_pandas_strategy_parity(spark):
-    left, right = _frames(spark)
-    jvm = asof_join(
-        left, right, on="t", by=["k"], right_cols=["rid", "rv"], right_tie="rid"
-    )
-    pd_out = asof_join_pandas(
-        left,
-        right,
-        on="t",
-        by=["k"],
-        schema="k string, t long, lbl string, rid long, rv double",
-    )
-    # merge_asof tie behavior: last row in sorted order wins — same
-    # max-rid semantics because right is sorted (t, input-order) with
-    # mergesort stability; normalize row order and compare
-    a = sorted(map(tuple, jvm.select("k", "t", "lbl", "rid", "rv").collect()))
-    b = sorted(map(tuple, pd_out.select("k", "t", "lbl", "rid", "rv").collect()))
-    assert a == b
 
 
 def test_asof_single_exchange_plan(spark):
