@@ -1,7 +1,21 @@
 """Benchmark runner — times every catalog query at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+    python bench.py [q1 q2 ...]
+
+Prints ONE JSON line (plus ``n_queries``, ``cutoff_sec``, ``detail``, ...):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+``queries`` holds the slowest queries that fit 1800 chars; ``cutoff_sec``
+is the smallest time printed there. Query names restrict the sweeps to
+those queries (each sweep visits each once, so samples interleave),
+print one JSON line per query (samples, median, counters) before the
+summary line, and write no BENCH_DETAIL file.
+
+Counters: each query's sweep-1 run carries the job tag ``bench:<query>``;
+after it (outside the timed region, inside the sweep budget) its jobs,
+stages, tasks, shuffle and input bytes go to BENCH_DETAIL.json's
+``counters`` with the ``cores`` they were counted at, and stderr gets a
+diff against the committed artifact's. A query whose time moves while
+its counters repeat did the same work: the move is host noise.
 
 ``value`` = sum of per-query MEDIAN times over up to REPS sweeps (the
 driver's headline number, compared against BASELINE.md round over
@@ -95,9 +109,7 @@ def load_py_band_queries(plans_path: str | None = None) -> set[str]:
     are the band-exposed class: their cost includes Python-worker
     startup/state that this host swings 1.4–9× between windows (the
     r08 media_jpeg_pipeline spike, the r09 media_video_frames drift),
-    so bench policy guarantees them a median-of-3 (VERDICT r09 item 2)
-    and checks them against their quiet-median HISTORY, not just the
-    previous artifact."""
+    so bench policy guarantees them a median-of-3 (VERDICT r09 item 2)."""
     path = plans_path or os.path.join(_REPO_DIR, "PLANS.md")
     out: set[str] = set()
     try:
@@ -140,24 +152,11 @@ def estimate(vals: list[float]) -> float:
     return sorted(vals)[len(vals) // 2]
 
 
-def _print_median_regressions(
-    detail_path: str,
-    timings: dict[str, float],
-    cur_sf,
-    threshold: float = 1.5,
-) -> None:
-    """Full-catalog median diff vs the LAST COMMITTED BENCH_DETAIL.json
-    (VERDICT r07 item 2): the r07 token-projection rewrite silently
-    regressed 5 shingle-family queries 1.8–2.8× because only the
-    queries being worked on were re-measured and the sweep TOTAL masked
-    them. Print every per-query median mover >``threshold``× in EITHER
-    direction to stderr, so every sweep — in-session or driver — shows
-    the whole catalog's movement, not just the touched queries.
-
-    Baseline = git HEAD's BENCH_DETAIL.json (falls back to the on-disk
-    file if git is unavailable); comparisons only make sense between
-    sweeps at the same sf, so mismatched-sf baselines are skipped.
-    """
+def load_baseline(detail_path: str, cur_sf) -> tuple[dict | None, str]:
+    """(artifact, description) of the baseline both diffs compare to:
+    git HEAD's BENCH_DETAIL.json, falling back to the on-disk file if
+    git is unavailable. None when neither reads or its sf differs:
+    comparisons only make sense between sweeps at the same sf."""
     import subprocess
 
     prev = None
@@ -181,16 +180,35 @@ def _print_median_regressions(
             with open(detail_path) as f:
                 prev = json.load(f)
         except Exception:
-            return
+            return None, baseline_desc
     # ADVICE r08: compare sfs NUMERICALLY — the artifact stores
     # float(sf) ('1.0') while the env path parses to '1', so a string
     # compare silently skipped the diff at any integer sf.
     try:
         if float(prev.get("sf")) != float(cur_sf):
-            return
+            return None, baseline_desc
     except (TypeError, ValueError):
         if str(prev.get("sf")) != str(cur_sf):
-            return
+            return None, baseline_desc
+    return prev, baseline_desc
+
+
+def _print_median_regressions(
+    prev: dict | None,
+    baseline_desc: str,
+    timings: dict[str, float],
+    threshold: float = 1.5,
+) -> None:
+    """Full-catalog median diff vs the LAST COMMITTED BENCH_DETAIL.json
+    (VERDICT r07 item 2): the r07 token-projection rewrite silently
+    regressed 5 shingle-family queries 1.8–2.8× because only the
+    queries being worked on were re-measured and the sweep TOTAL masked
+    them. Print every per-query median mover >``threshold``× in EITHER
+    direction to stderr, so every sweep — in-session or driver — shows
+    the whole catalog's movement, not just the touched queries.
+    """
+    if prev is None:
+        return
     movers = []
     for name, t_new in timings.items():
         t_old = prev.get("queries", {}).get(name, -1)
@@ -214,86 +232,75 @@ def _print_median_regressions(
         )
 
 
-def check_band_history(
-    history: dict,
-    timings: dict[str, float],
-    band: set[str],
-    threshold: float = 1.5,
-) -> list[tuple[str, float, float, float, list[float]]]:
-    """Drift check for the Python-operator band vs its QUIET-MEDIAN
-    HISTORY (VERDICT r09 item 2: media_video_frames moved 1.43× across
-    two artifacts without tripping the prev-artifact diff because each
-    sweep only sees its predecessor — slow uniform drift needs the
-    whole history as the comparator). ``history`` maps query →
-    chronological list of recorded sweep medians at the default sf;
-    returns (name, current, history_median, ratio, history_tail) for
-    every band query whose current median is >threshold× off the
-    median of its history. Pure function — the caller prints and
-    persists."""
-    out = []
-    for name in sorted(band):
-        cur = timings.get(name, -1)
-        hist = [v for v in history.get(name, []) if v > 0]
-        if cur <= 0 or len(hist) < 3:
-            continue
-        ref = sorted(hist)[len(hist) // 2]
-        ratio = cur / ref
-        if ratio > threshold or ratio < 1 / threshold:
-            out.append((name, cur, ref, ratio, hist[-5:]))
-    return out
+# per-query counters: scheduling volume and bytes moved, which repeat where times do not
+COUNTED = ("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes", "input_bytes")
 
 
-def _update_band_history(
-    history_path: str, timings: dict[str, float], band: set[str], cap: int = 12
-) -> list:
-    """Print band-history drift vs the committed BENCH_HISTORY.json,
-    then append this sweep's medians (all queries, most recent last,
-    capped) and rewrite the file. Default-sf sweeps only — history at
-    mixed sfs would compare incomparables."""
-    try:
-        with open(history_path) as f:
-            history = json.load(f)
-    except (OSError, ValueError):
-        history = {}
-    drift = check_band_history(history, timings, band)
-    for name, cur, ref, ratio, tail in drift:
-        print(
-            f"bench: band-history DRIFT {name}: {cur:.3f}s vs quiet-median "
-            f"{ref:.3f}s ({ratio:.2f}x; last medians {tail})",
-            file=sys.stderr,
-        )
-    if not drift:
-        print(
-            f"bench: band-history clean — {len(band)} py-op queries within "
-            "1.5x of their quiet-median history",
-            file=sys.stderr,
-        )
-    for name, t in timings.items():
-        if t > 0:
-            history.setdefault(name, []).append(t)
-            history[name] = history[name][-cap:]
-    try:
-        with open(history_path, "w") as f:
-            json.dump(history, f, indent=1, sort_keys=True)
-    except OSError:
-        pass
-    return drift
+def read_counters(spark, tag: str) -> dict[str, int]:
+    """COUNTED summed over the jobs tagged ``tag``. Their ids come from
+    the JVM status tracker and only they and their stages are read from
+    the REST API: the UI keeps 1000 jobs (a sweep launches more), and
+    re-reading the whole /jobs list costs time that grows with it."""
+    import urllib.request
+
+    from stats import aggregate_by_tag
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    base = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}"
+
+    def get(path: str):
+        with urllib.request.urlopen(base + path, timeout=30) as r:
+            return json.loads(r.read())
+
+    tracker = sc._jsc.sc().statusTracker()
+    jobs = [get(f"/jobs/{i}") for i in tracker.getJobIdsForTag(tag)]
+    # past 1000 stages the UI evicts SKIPPED ones (completion time -1)
+    # first, even this query's: read only the stages it still holds
+    sids = {s for j in jobs for s in j["stageIds"] if tracker.getStageInfo(s).isDefined()}
+    stages = [st for s in sids for st in get(f"/stages/{s}?details=false")]
+    acc = aggregate_by_tag(jobs, stages).get(tag, {})
+    return {k: int(acc.get(k, 0)) for k in COUNTED}
 
 
-def main() -> None:
+def _print_counter_diff(prev: dict | None, baseline_desc: str, counters: dict, cores: int) -> None:
+    """Print every counter that did not repeat the baseline's; task counts
+    follow the cores, so a baseline at other cores (or sf) is skipped. A
+    query whose time moves while its counters repeat did the same work."""
+    from stats import diff_counters
+
+    if not prev or prev.get("cores") != cores or not prev.get("counters"):
+        print("bench: counter diff skipped — no baseline counters at this sf/cores", file=sys.stderr)
+        return
+    old = {n: c for n, c in prev["counters"].items() if n in counters}
+    moved = [r for r in diff_counters(old, counters) if not r["same"]]
+    sched = {r["key"] for r in moved if r["counter"] in ("jobs", "stages", "tasks")}
+    print(f"bench: counter diff — jobs/stages/tasks repeat for {len(counters) - len(sched)}"
+          f"/{len(counters)} queries vs {baseline_desc}", file=sys.stderr)
+    for r in moved:
+        print(f"bench: counter-diff {r['key']} {r['counter']}: {r['prev']} -> {r['cur']}",
+              file=sys.stderr)
+
+
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
     from post_modern_stack_spark.session import get_spark
 
-    spark = get_spark(app_name="pmss-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    catalog = entry_mod.queries()
+    qs = {n: catalog[n] for n in names} if names else catalog
+    # read_counters and _print_counter_diff import perfbench's stats flat
+    sys.path.insert(0, os.path.join(os.path.dirname(entry_mod.__file__), "perfbench"))
 
-    qs = entry_mod.queries()
+    spark = get_spark(app_name="pmss-bench")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+
     py_band = load_py_band_queries() & set(qs)
-    timings: dict[str, float] = {}
     # warm the JVM + parquet footers once so per-query numbers measure
     # the plan, not session startup
-    next(iter(qs.values()))(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    next(iter(catalog.values()))(spark, sf_dir).write.format("noop").mode("overwrite").save()
     # warm the Python/Arrow worker pool too (first pandas UDF in a
     # session pays ~8 s of interpreter+Arrow startup otherwise)
     from pyspark.sql.functions import col, pandas_udf
@@ -355,6 +362,9 @@ def main() -> None:
     failed_elapsed = 0.0  # a broken query must not IMPROVE the headline
     samples: dict[str, list[float]] = {n: [] for n in qs}
     failed: set[str] = set()
+    # sweep 1's counters per query; their reads count against the budget
+    counters: dict[str, dict] = {}
+    counter_read_s = 0.0
     for sweep in range(REPS):
         if sweep == 0:
             order = list(qs)
@@ -406,6 +416,9 @@ def main() -> None:
                 # eating the 600 s driver-timeout margin).
                 if samples[name] and max(samples[name]) > remaining:
                     continue
+            tag = f"bench:{name}"
+            if sweep == 0:
+                sc.addJobTag(tag)
             t0 = time.perf_counter()
             try:
                 samples[name].append(run_once(name))
@@ -418,6 +431,15 @@ def main() -> None:
                 failed.add(name)
                 failed_elapsed += time.perf_counter() - t0
                 print(f"bench: {name} FAILED: {e}", file=sys.stderr)
+            if sweep == 0:
+                sc.removeJobTag(tag)
+                c0 = time.perf_counter()
+                try:
+                    if name not in failed:
+                        counters[name] = read_counters(spark, tag)
+                except Exception as e:  # nor must a counter read
+                    print(f"bench: {name} counters unread: {e}", file=sys.stderr)
+                counter_read_s += time.perf_counter() - c0
         else:
             continue
         break  # budget reached: stop outer sweeps too
@@ -496,6 +518,9 @@ def main() -> None:
         # their point estimate is one side of a bimodal distribution,
         # so a reader must not treat it as a stable median
         "bimodal": sorted(n for n, v in samples.items() if is_bimodal(v)),
+        "counters": counters,
+        "cores": sc.defaultParallelism,
+        "counter_read_s": round(counter_read_s, 3),
     }
     # BENCH_DETAIL.json is the committed round-over-round baseline at
     # the driver's default sf — a local probe sweep at another sf must
@@ -507,18 +532,18 @@ def main() -> None:
         if sf_dir.rstrip("/") == "/root/testdata/sf0.1"
         else f"BENCH_DETAIL_sf{sf}.json"
     )
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), detail_name
-    )
-    _print_median_regressions(detail_path, timings, sf_val)
-    if detail_name == "BENCH_DETAIL.json":
-        # default-sf sweeps also check the Python-operator band against
-        # its quiet-median HISTORY and extend it (VERDICT r09 item 2)
-        _update_band_history(
-            os.path.join(_REPO_DIR, "BENCH_HISTORY.json"), timings, py_band
-        )
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    detail_path = os.path.join(_REPO_DIR, detail_name)
+    prev, baseline_desc = load_baseline(detail_path, sf_val)
+    _print_median_regressions(prev, baseline_desc, timings)
+    _print_counter_diff(prev, baseline_desc, counters, detail["cores"])
+    if names:
+        # a named subset prints its queries and never clobbers the artifact
+        for name in qs:
+            print(json.dumps({"query": name, "samples": samples[name],
+                              "median": timings[name], "counters": counters.get(name)}))
+    else:
+        with open(detail_path, "w") as f:
+            json.dump(detail, f, indent=1, sort_keys=True)
 
     # The driver captures only the last 2000 chars of stdout and parses
     # the JSON line from that tail; 90+ query names overflow it. Emit the
@@ -530,10 +555,12 @@ def main() -> None:
         "unit": "sec",
         "queries": {},
         "n_queries": len(timings),
+        # the smallest time in ``queries``: faster ones are only in the sidecar
+        "cutoff_sec": None,
         # the actual sidecar written above — non-default sfs get an
         # sf-suffixed name, and pointing the reader at the default-sf
-        # artifact would be stale (ADVICE r09)
-        "detail": detail_name,
+        # artifact would be stale (ADVICE r09); a named subset writes none
+        "detail": None if names else detail_name,
         "sf": sf_val,
     }
     if failed:
@@ -541,13 +568,15 @@ def main() -> None:
     if detail["bimodal"]:
         line_obj["bimodal"] = detail["bimodal"]
     for name in sorted(timings, key=lambda n: -timings[n]):
-        line_obj["queries"][name] = timings[name]
+        cutoff = line_obj["cutoff_sec"]
+        line_obj["queries"][name] = line_obj["cutoff_sec"] = timings[name]
         if len(json.dumps(line_obj, separators=(",", ":"))) > 1800:
             del line_obj["queries"][name]
+            line_obj["cutoff_sec"] = cutoff
             break
     print(json.dumps(line_obj, separators=(",", ":")))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

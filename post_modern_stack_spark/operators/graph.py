@@ -31,7 +31,8 @@ def pagerank(
     checkpoint_interval: int = 2,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
-    """PageRank over an edge list; returns (node, rank), Σrank = 1.
+    """PageRank over an edge list; returns (node, rank), Σrank = 1
+    (no rows for an empty edge list).
 
     Deterministic for a fixed iteration count (no convergence
     threshold — thresholds make results depend on float noise).
@@ -73,6 +74,9 @@ def pagerank(
         .localCheckpoint()
     )
     n = nodes.count()
+    if n == 0:
+        # no edges, no nodes: an empty (node, rank) frame, not 1/0
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     annotated = e.join(outdeg, src).localCheckpoint()
 
     dang_sum = F.coalesce(

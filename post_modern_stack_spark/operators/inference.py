@@ -275,6 +275,8 @@ def train_logreg(
             .localCheckpoint()
         )
     n_docs = packed.count()  # also materializes the checkpoint
+    if n_docs == 0:
+        raise ValueError("train_logreg: no labeled documents to train on")
 
     w = np.zeros(n_features)
     b = 0.0

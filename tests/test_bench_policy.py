@@ -6,8 +6,11 @@ __main__-guarded), so the policy helpers are tested directly."""
 
 from __future__ import annotations
 
-import sys
+import json
 import os
+import shutil
+import subprocess
+import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -92,30 +95,22 @@ def test_load_py_band_real_plans_md_includes_codecs():
     assert "sessionize" not in band
 
 
-def test_band_history_flags_slow_uniform_drift():
-    """The exact r09 miss: media_video_frames drifted 2.86->4.09s
-    (1.43x vs the PREVIOUS artifact — under the 1.5x prev-diff line)
-    but sits >1.5x over its QUIET-MEDIAN history."""
-    history = {"media_video_frames": [2.47, 2.38, 2.38, 2.61, 2.62, 2.69]}
-    drift = bench.check_band_history(
-        history, {"media_video_frames": 4.09}, {"media_video_frames"}
-    )
-    assert len(drift) == 1
-    name, cur, ref, ratio, tail = drift[0]
-    assert name == "media_video_frames" and cur == 4.09
-    assert ref == 2.545 or abs(ref - sorted(history[name])[3]) < 1e-9
-    assert ratio > 1.5
-    # quiet value: no flag
-    assert not bench.check_band_history(
-        history, {"media_video_frames": 2.9}, {"media_video_frames"}
-    )
-    # <3 history points: not enough evidence, no flag
-    assert not bench.check_band_history(
-        {"x": [1.0, 9.0]}, {"x": 9.0}, {"x"}
-    )
-    # improvements are reported too (a 3x speedup on no code change is
-    # as suspicious as a 3x slowdown on this host)
-    fast = bench.check_band_history(
-        history, {"media_video_frames": 1.0}, {"media_video_frames"}
-    )
-    assert len(fast) == 1 and fast[0][3] < 1 / 1.5
+def test_named_queries_print_counters_and_write_no_file(tmp_path, sf_dir):
+    """``bench.py q1 q2``: one line per query with its sweep-1 Spark
+    counters, then the summary line; no BENCH_DETAIL file is written."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copy(os.path.join(repo, "bench.py"), tmp_path)
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_SF_DIR=sf_dir,
+               SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_DRIVER_MEM="2g")
+    names = ["pricing_summary", "sessionize"]
+    out = subprocess.run([sys.executable, "bench.py", *names], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    *per_query, summary = out.stdout.strip().splitlines()
+    per_query = [json.loads(line) for line in per_query]
+    assert [d["query"] for d in per_query] == names
+    assert all(isinstance(v, int) for d in per_query for v in d["counters"].values())
+    assert all(d["counters"]["jobs"] >= 1 for d in per_query)
+    assert len(summary) < 1800
+    assert json.loads(summary)["cutoff_sec"] == min(json.loads(summary)["queries"].values())
+    assert not list(tmp_path.glob("BENCH_DETAIL*.json"))

@@ -207,6 +207,14 @@ def test_jaccard_prefix_filter_matches_plain_and_prunes(spark):
     assert len(plain) > 0
 
 
+def test_pagerank_of_empty_graph_is_empty(spark):
+    from post_modern_stack_spark.operators.graph import pagerank
+
+    got = pagerank(spark.createDataFrame([], "src long, dst long"))
+    assert got.dtypes == [("node", "bigint"), ("rank", "double")]
+    assert got.count() == 0
+
+
 def test_pagerank_matches_dense_power_iteration(spark):
     """pagerank == numpy dense power iteration (same damping, iters,
     dangling redistribution) on a random 40-node graph, atol 1e-9."""

@@ -131,6 +131,16 @@ def test_logreg_learns_planted_signal(spark):
     assert all(scored[i + 100] < 0.4 for i in range(20))
 
 
+def test_logreg_without_documents_raises_named_error(spark):
+    from post_modern_stack_spark.operators import inference
+
+    docs = spark.createDataFrame([], "doc_id long, text string, y double")
+    with pytest.raises(ValueError, match="no labeled documents"):
+        inference.train_logreg(
+            inference.hashed_text_features(docs), docs.select("doc_id", "y")
+        )
+
+
 def test_logreg_matches_numpy_reference(spark):
     import numpy as np
     from post_modern_stack_spark.operators import inference
