@@ -197,6 +197,7 @@ def _print_median_regressions(
     prev: dict | None,
     baseline_desc: str,
     timings: dict[str, float],
+    cores: int,
     threshold: float = 1.5,
 ) -> None:
     """Full-catalog median diff vs the LAST COMMITTED BENCH_DETAIL.json
@@ -205,9 +206,16 @@ def _print_median_regressions(
     queries being worked on were re-measured and the sweep TOTAL masked
     them. Print every per-query median mover >``threshold``× in EITHER
     direction to stderr, so every sweep — in-session or driver — shows
-    the whole catalog's movement, not just the touched queries.
+    the whole catalog's movement, not just the touched queries. Medians
+    timed at other cores are not comparable (a local[4] sweep against a
+    32-core baseline flags most of the catalog), so that baseline is
+    skipped, as in the counter diff. A baseline that records no cores is
+    still compared: it is not known to be from other cores.
     """
     if prev is None:
+        return
+    if prev.get("cores") not in (None, cores):
+        print("bench: median diff skipped — baseline timed at other cores", file=sys.stderr)
         return
     movers = []
     for name, t_new in timings.items():
@@ -240,26 +248,35 @@ def read_counters(spark, tag: str) -> dict[str, int]:
     """COUNTED summed over the jobs tagged ``tag``. Their ids come from
     the JVM status tracker and only they and their stages are read from
     the REST API: the UI keeps 1000 jobs (a sweep launches more), and
-    re-reading the whole /jobs list costs time that grows with it."""
-    import urllib.request
+    re-reading the whole /jobs list costs time that grows with it. All
+    reads share one keep-alive connection."""
+    import http.client
 
     from stats import aggregate_by_tag
 
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    port = sc.uiWebUrl.rsplit(":", 1)[1]
-    base = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}"
+    port = int(sc.uiWebUrl.rsplit(":", 1)[1])
+    base = f"/api/v1/applications/{sc.applicationId}"
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
 
     def get(path: str):
-        with urllib.request.urlopen(base + path, timeout=30) as r:
-            return json.loads(r.read())
+        conn.request("GET", base + path)
+        r = conn.getresponse()
+        body = r.read()
+        if r.status != 200:
+            raise RuntimeError(f"GET {path}: HTTP {r.status}")
+        return json.loads(body)
 
     tracker = sc._jsc.sc().statusTracker()
-    jobs = [get(f"/jobs/{i}") for i in tracker.getJobIdsForTag(tag)]
-    # past 1000 stages the UI evicts SKIPPED ones (completion time -1)
-    # first, even this query's: read only the stages it still holds
-    sids = {s for j in jobs for s in j["stageIds"] if tracker.getStageInfo(s).isDefined()}
-    stages = [st for s in sids for st in get(f"/stages/{s}?details=false")]
+    try:
+        jobs = [get(f"/jobs/{i}") for i in tracker.getJobIdsForTag(tag)]
+        # past 1000 stages the UI evicts SKIPPED ones (completion time -1)
+        # first, even this query's: read only the stages it still holds
+        sids = {s for j in jobs for s in j["stageIds"] if tracker.getStageInfo(s).isDefined()}
+        stages = [st for s in sids for st in get(f"/stages/{s}?details=false")]
+    finally:
+        conn.close()
     acc = aggregate_by_tag(jobs, stages).get(tag, {})
     return {k: int(acc.get(k, 0)) for k in COUNTED}
 
@@ -534,7 +551,7 @@ def main(names: list[str]) -> None:
     )
     detail_path = os.path.join(_REPO_DIR, detail_name)
     prev, baseline_desc = load_baseline(detail_path, sf_val)
-    _print_median_regressions(prev, baseline_desc, timings)
+    _print_median_regressions(prev, baseline_desc, timings, detail["cores"])
     _print_counter_diff(prev, baseline_desc, counters, detail["cores"])
     if names:
         # a named subset prints its queries and never clobbers the artifact

@@ -19,9 +19,12 @@ n-grams) should be frequency-capped upstream at 100 TB.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from post_modern_stack_spark.operators import vectors
 from post_modern_stack_spark.operators.obs import checkpoint_observed
 
 
@@ -494,7 +497,6 @@ def _corpus_memo_key(embeddings: DataFrame, id_col: str, vec_col: str):
 
 
 def _corpus_broadcast(embeddings: DataFrame, id_col: str, vec_col: str):
-    import numpy as np
     from collections import OrderedDict
 
     global _corpus_memo
@@ -503,11 +505,11 @@ def _corpus_broadcast(embeddings: DataFrame, id_col: str, vec_col: str):
     key = _corpus_memo_key(embeddings, id_col, vec_col)
     bc = _corpus_memo.pop(key, None)
     if bc is None:
-        b_rows = embeddings.select(id_col, vec_col).collect()
-        b_ids = np.array([r[0] for r in b_rows], dtype=np.int64)
-        b_mat = np.array([r[1] for r in b_rows], dtype=np.float64)
+        b_ids, b_mat = vectors.collect_matrix(embeddings, id_col, vec_col)
         b_norms = np.linalg.norm(b_mat, axis=1)
-        bc = embeddings.sparkSession.sparkContext.broadcast((b_ids, b_mat, b_norms))
+        bc = embeddings.sparkSession.sparkContext.broadcast(
+            (b_ids.astype(np.int64), b_mat, b_norms)
+        )
     _corpus_memo[key] = bc  # re-insert → most-recently-used
     while len(_corpus_memo) > _CORPUS_MEMO_MAX:
         _, old = _corpus_memo.popitem(last=False)
@@ -597,33 +599,25 @@ def embedding_near_dups(
             )
 
     if candidates == "exact":
-        import numpy as np
-        import pandas as pd
-
         bc = _corpus_broadcast(embeddings, id_col, vec_col)
 
         def block_sims(batches):
             ids_b, mat_b, norms_b = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                a_mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            for batch in batches:
+                a_ids = batch.column(0).to_numpy().astype(np.int64)
+                a_mat = vectors.matrix(batch.column(1), mat_b.shape[1])
                 a_norms = np.linalg.norm(a_mat, axis=1)
                 denom = np.outer(a_norms, norms_b)
                 with np.errstate(divide="ignore", invalid="ignore"):
                     sims = np.round((a_mat @ mat_b.T) / denom, 6)
                 keep = (sims >= threshold) & (a_ids[:, None] < ids_b[None, :])
                 ai, bi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "id_a": a_ids[ai],
-                        "id_b": ids_b[bi],
-                        "cos_sim": sims[ai, bi],
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(a_ids[ai]), pa.array(ids_b[bi]), pa.array(sims[ai, bi])],
+                    names=["id_a", "id_b", "cos_sim"],
                 )
 
-        return embeddings.select(id_col, vec_col).mapInPandas(
+        return embeddings.select(id_col, vec_col).mapInArrow(
             block_sims, schema="id_a long, id_b long, cos_sim double"
         )
     elif candidates == "lsh":
@@ -942,7 +936,7 @@ def semantic_dedup(
     Here the cluster assignment is the ``cluster_col`` column (the
     deterministic stand-in for the k-means step; ``similarity.ivf_top_k``
     holds the trained-centroid machinery). The quadratic pairwise pass
-    runs PER CLUSTER as numpy GEMMs inside applyInPandas — exactly
+    runs PER CLUSTER as numpy GEMMs inside applyInArrow — exactly
     the SemDeDup recipe: clustering bounds the O(n²) to cluster sizes,
     clusters dedup in parallel across executors, and nothing is ever
     all-pairs across the corpus. At 100 TB the same plan holds as long
@@ -963,8 +957,6 @@ def semantic_dedup(
 
     Emits one row per vector: (id, cluster, n_close_lower, keep).
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     # id/cluster output types mirror the INPUT schema (ADVICE round-3:
@@ -982,12 +974,12 @@ def semantic_dedup(
 
     block_rows = 4096
 
-    def dedup_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
+    def dedup_cluster(t: pa.Table) -> pa.Table:
+        t = t.sort_by(id_col)
+        mat = vectors.matrix(t.column(vec_col))
         norms = np.linalg.norm(mat, axis=1)
         norms[norms == 0] = 1.0
-        n = len(pdf)
+        n = t.num_rows
         n_close = np.zeros(n, dtype=np.int64)
         # row-blocked strictly-lower-triangular pass: rows s..e-1 only
         # ever need columns < e, so each block's sims slab is
@@ -998,19 +990,19 @@ def semantic_dedup(
             # neighbors with a strictly smaller id (col index < row index)
             lower = np.arange(e)[None, :] < np.arange(s, e)[:, None]
             n_close[s:e] = ((sims >= threshold) & lower).sum(axis=1)
-        return pd.DataFrame(
+        return pa.table(
             {
-                id_col: pdf[id_col],
-                cluster_col: pdf[cluster_col],
-                "n_close_lower": n_close.astype("int64"),
-                "keep": (n_close == 0).astype("int32"),
+                id_col: t.column(id_col),
+                cluster_col: t.column(cluster_col),
+                "n_close_lower": n_close,
+                "keep": (n_close == 0).astype(np.int32),
             }
         )
 
     return (
         embeddings.select(id_col, cluster_col, vec_col)
         .groupBy(cluster_col)
-        .applyInPandas(dedup_cluster, schema=schema)
+        .applyInArrow(dedup_cluster, schema=schema)
     )
 
 
@@ -1052,8 +1044,6 @@ def semantic_dedup_sharded(
     overhead. Dispatch on max observed cluster size upstream, or run
     this form unconditionally when the clustering is untrusted.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     in_schema = embeddings.schema
@@ -1110,39 +1100,40 @@ def semantic_dedup_sharded(
     # over executors instead of riding the block-agg partitioning
     pair_tasks = pair_tasks.repartition("__cl", "__bj", "__bi")
 
-    def run(batches: "pd.DataFrame"):
-        for pdf in batches:
-            out_id, out_cl, out_n = [], [], []
-            # zip over column arrays, not iterrows — the per-row Series
-            # construction dominates when the GEMM blocks are small
-            for cl, bj, bi, r_items, c_items in zip(
-                pdf["__cl"].values,
-                pdf["__bj"].values,
-                pdf["__bi"].values,
-                pdf["__rows"].values,
-                pdf["__cols"].values,
-            ):
-                rid = [it[id_col] for it in r_items]
-                rmat = np.array([it[vec_col] for it in r_items], dtype=np.float64)
-                cid = np.array([it[id_col] for it in c_items])
-                cmat = np.array([it[vec_col] for it in c_items], dtype=np.float64)
-                rn = np.linalg.norm(rmat, axis=1)
-                cn = np.linalg.norm(cmat, axis=1)
-                rn[rn == 0] = 1.0
-                cn[cn == 0] = 1.0
-                sims = (rmat @ cmat.T) / np.outer(rn, cn)
+    def run(batches):
+        for batch in batches:
+            # each task row packs id-sorted (id, vec) structs; the
+            # flattened struct children hold every task's rows and cols
+            rows, cols = batch.column("__rows"), batch.column("__cols")
+            r_items, c_items = rows.flatten(), cols.flatten()
+            rid = r_items.field(id_col).to_numpy(zero_copy_only=False)
+            cid = c_items.field(id_col).to_numpy(zero_copy_only=False)
+            rmat = vectors.matrix(r_items.field(vec_col))
+            cmat = vectors.matrix(c_items.field(vec_col), rmat.shape[1])
+            rn, cn = np.linalg.norm(rmat, axis=1), np.linalg.norm(cmat, axis=1)
+            rn[rn == 0] = 1.0
+            cn[cn == 0] = 1.0
+            r_off = np.cumsum([0, *rows.value_lengths().to_numpy()])
+            c_off = np.cumsum([0, *cols.value_lengths().to_numpy()])
+            bi, bj = batch.column("__bi").to_numpy(), batch.column("__bj").to_numpy()
+            n_close = np.zeros(len(rid), dtype=np.int64)
+            for i in range(batch.num_rows):
+                r, c = slice(r_off[i], r_off[i + 1]), slice(c_off[i], c_off[i + 1])
+                sims = (rmat[r] @ cmat[c].T) / np.outer(rn[r], cn[c])
                 close = sims >= threshold
-                if bi == bj:
-                    rid_arr = np.asarray(rid)
-                    close &= cid[None, :] < rid_arr[:, None]
-                out_id.extend(rid)
-                out_cl.extend([cl] * len(rid))
-                out_n.extend(close.sum(axis=1).astype("int64").tolist())
-            yield pd.DataFrame(
-                {id_col: out_id, cluster_col: out_cl, "__partial": out_n}
+                if bi[i] == bj[i]:
+                    close &= cid[c][None, :] < rid[r][:, None]
+                n_close[r] = close.sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    r_items.field(id_col),
+                    batch.column("__cl").take(rows.value_parent_indices()),
+                    pa.array(n_close),
+                ],
+                names=[id_col, cluster_col, "__partial"],
             )
 
-    partials = pair_tasks.mapInPandas(run, schema=partial_schema)
+    partials = pair_tasks.mapInArrow(run, schema=partial_schema)
     return partials.groupBy(id_col, cluster_col).agg(
         F.sum("__partial").alias("n_close_lower")
     ).select(

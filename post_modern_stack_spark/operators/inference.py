@@ -5,7 +5,8 @@ predict_batch_udf hands off to any ML library").
 ``batched_top_k_predict`` reproduces the reference's inference dataflow
 (reference src/model/lstm_model.py:28-41: batched ``model.predict`` over
 128-session chunks, then ``np.argsort(probs)[:, -k:][:, ::-1]``) as an
-Arrow-batched pandas UDF. The model itself is pluggable — any callable
+Arrow UDF over ``vectors.matrix`` batches. The model itself is
+pluggable — any callable
 ``(np.ndarray[batch, maxlen]) -> np.ndarray[batch, n_classes]``; tests
 use a deterministic fake. A real Keras/Torch model drops in unchanged
 (load it lazily inside the UDF so each executor materializes it once).
@@ -15,9 +16,13 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+
+from post_modern_stack_spark.operators import vectors
 
 
 def batched_top_k_predict(
@@ -33,16 +38,14 @@ def batched_top_k_predict(
     class index + 1, the −1 label offset inverse; reference
     lstm_model.py:40 ``index_word[i + 1]``).
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<int>")
-    def predict(x: pd.Series) -> pd.Series:
-        mat = np.vstack(x.to_numpy())  # (batch, maxlen)
+    @arrow_udf("array<int>")
+    def predict(x: pa.Array) -> pa.Array:
+        mat = vectors.matrix(x, dtype=np.int64)  # (batch, maxlen)
         probs = model_fn(mat)  # (batch, n_classes)
         # argsort[:, -k:][:, ::-1] — exactly the reference idiom
         top = np.argsort(probs, axis=1)[:, -k:][:, ::-1]
-        return pd.Series([(row + 1).astype("int32").tolist() for row in top])
+        return vectors.list_array(top + 1, pa.list_(pa.int32()))
 
     return dataset.withColumn(out_col, predict(F.col(x_col)))
 
@@ -58,8 +61,6 @@ def rank_popularity_model(n_classes: int) -> Callable:
     never predicts OOV. No RNG anywhere, so the whole inference loop
     is engine-replayable: the oracle twin reduces HitRate@K to
     ``y_enc BETWEEN 2 AND K+1``."""
-    import numpy as np
-
     scores = np.arange(n_classes, 0.0, -1.0)
     scores[0] = -1.0
 
@@ -173,8 +174,6 @@ def _weights_array_sql(weights) -> str:
     to the identical IEEE values."""
     import math
 
-    import numpy as np
-
     def lit(v: float) -> str:
         if math.isfinite(v):
             return f"CAST({v!r} AS DOUBLE)"
@@ -251,8 +250,6 @@ def train_logreg(
 
     Returns (weights ndarray [n_features], bias float).
     """
-    import numpy as np
-
     # Pack ONCE: (id, y, fx) — the doc-grain shuffle and the labels
     # join leave the loop entirely. Docs with no surviving features
     # get an empty array (margin 0, bias-only gradient), matching a
@@ -334,8 +331,6 @@ def score_logreg(
     For streams use ``logreg_prob_expr`` (no agg, no shuffle)."""
     from itertools import chain
 
-    import numpy as np
-
     wmap = F.create_map(
         *chain.from_iterable(
             (F.lit(int(i)), F.lit(float(v)))
@@ -363,8 +358,6 @@ def logreg_prob_expr(
     streaming gate composes into its projection
     (streaming/curation_stream.quality_gate)."""
     from itertools import chain
-
-    import numpy as np
 
     wmap = F.create_map(
         *chain.from_iterable(

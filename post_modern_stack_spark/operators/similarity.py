@@ -3,24 +3,33 @@
 - ``brute_force_top_k``: exact cosine top-K — the correctness baseline.
   Query side is broadcast; corpus side never shuffles; per-partition
   top-K via window (Catalyst WindowGroupLimit pushes the limit down).
-- ``rp_lsh_top_k``: random-hyperplane LSH (sign buckets) — the scale
-  path. Buckets shrink the candidate set ~2^bits-fold; probing multiple
-  buckets (multi-probe by Hamming-1 neighbors) trades recall vs cost.
+- ``rp_lsh_top_k``, ``ivf_top_k``, ``pq_top_k``: the approximate scale
+  paths (hyperplane buckets, coarse-quantizer cells, product codes).
+- ``whiten_embeddings``, ``quantized_assign``, ``kmeans_lloyd``: the
+  embedding post-processing and clustering steps.
 
-Both are pure DataFrame ops; the dot products run JVM-side via
-``aggregate(zip_with(...))`` (functions.core.dot_product).
+Candidate scoring stays JVM-side (``aggregate(zip_with(...))``,
+functions.core.dot_product). The batched matrix math — buckets, cells,
+codes, moments, Lloyd rounds — runs in ``arrow_udf`` / ``mapInArrow``
+Python over ``vectors.matrix`` views, so every operator here follows
+the one vector contract stated in operators/vectors.py.
 """
 
 from __future__ import annotations
 
 import random
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from post_modern_stack_spark.functions import cosine_similarity
+from post_modern_stack_spark.operators import vectors
 from post_modern_stack_spark.operators.shaping import top_k_per_group
+
+_INT_LIST = pa.list_(pa.int32())
 
 
 def as_double_array(col: str | F.Column) -> F.Column:
@@ -99,15 +108,11 @@ def brute_force_top_k_arrow(
     k=5 — expression path 226 s, this path 9.8 s (23x): the join
     row-explosion disappears into (batch x dim) @ (dim x nq) matmuls.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
+    qids, qmat = vectors.collect_matrix(queries, id_col, vec_col)
+    if not len(qids):
         empty = "query_id long, neighbor_id long, cos_sim double, rank int"
         return corpus.sparkSession.createDataFrame([], empty)
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
+    qids = qids.astype(np.int64)
     qnorm = np.linalg.norm(qmat, axis=1)
     qnorm[qnorm == 0] = 1.0
     dim = qmat.shape[1]
@@ -127,14 +132,7 @@ def brute_force_top_k_arrow(
             if n == 0:
                 continue
             nid = batch.column("neighbor_id").to_numpy(zero_copy_only=False)
-            col = batch.column("cv")
-            offs = np.asarray(col.offsets)
-            if not np.all(np.diff(offs) == dim):
-                raise ValueError("ragged embedding column; expected dim=%d" % dim)
-            # zero-copy: the list child buffer IS the (n*dim) value vector
-            mat = np.asarray(col.values, dtype=np.float64)[
-                offs[0] : offs[-1]
-            ].reshape(n, dim)
+            mat = vectors.matrix(batch.column("cv"), dim)
             norms = np.linalg.norm(mat, axis=1)
             norms[norms == 0] = 1.0
             sims = (mat @ qmat.T) / np.outer(norms, qnorm)  # (n, nq)
@@ -191,8 +189,6 @@ def _round_half_away(x):
     """round-half-away-from-zero, matching Spark ``F.round`` and DuckDB
     ``round`` (numpy's own ``round`` is half-to-even and would diverge
     at exact .5 quantization boundaries)."""
-    import numpy as np
-
     return np.sign(x) * np.floor(np.abs(x) + 0.5)
 
 
@@ -226,9 +222,8 @@ def _all_table_buckets_udf(
     """Arrow-vectorized bucket computation for every LSH table at once:
     one (batch × dim) @ (dim × bits·tables) matmul per record batch.
 
-    This is the sanctioned pandas-UDF case (SURVEY.md intro): an
-    expression-tree equivalent (one sign-of-projection ``F.aggregate``
-    per plane × tables) re-walks the vector array bits×tables times per
+    An Arrow UDF, because the expression-tree equivalent (one
+    sign-of-projection ``F.aggregate`` per plane × tables) re-walks the vector array bits×tables times per
     row and measured ~4× slower at sf0.1. Table t's hyperplanes are
     :func:`_hyperplanes` seeded ``seed + 1000·t``.
 
@@ -236,9 +231,6 @@ def _all_table_buckets_udf(
     ``round(x*scale)`` int64 and the matmul is exact integer math —
     deterministic across engines (see :func:`quantized_planes`).
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     if quantize_scale is not None:
         planes = np.array(
             [
@@ -258,41 +250,41 @@ def _all_table_buckets_udf(
         ).T  # (dim, bits*n_tables)
     weights = np.tile(1 << np.arange(bits), n_tables)  # per-bit bucket weights
 
-    @pandas_udf("array<int>")
-    def buckets(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)  # (n, dim)
+    @arrow_udf("array<int>")
+    def buckets(emb: pa.Array) -> pa.Array:
+        mat = vectors.matrix(emb, dim)
         if quantize_scale is not None:
             mat = _round_half_away(mat * quantize_scale).astype(np.int64)
         signs = (mat @ planes) > 0  # (n, bits*n_tables)
         contrib = signs * weights
-        out = contrib.reshape(len(mat), n_tables, bits).sum(axis=2).astype("int32")
-        return pd.Series(list(out))
+        out = contrib.reshape(len(mat), n_tables, bits).sum(axis=2)
+        return vectors.list_array(out, _INT_LIST)
 
     return buckets
+
+
+def _sample_matrix(
+    corpus: DataFrame, vec_col: str, cap: int = 10_000, seed: int = 42
+):
+    """numpy matrix of a seeded sample of at most ``cap`` corpus vectors
+    (the bounded training set of IVF and PQ; the corpus itself never
+    leaves executors)."""
+    n = corpus.count()
+    frac = min(1.0, cap / max(n, 1))
+    sample = corpus.sample(withReplacement=False, fraction=frac, seed=seed)
+    return vectors.matrix(sample.limit(cap).select(vec_col).toArrow().column(0))
 
 
 def _train_centroids(
     corpus: DataFrame,
     vec_col: str,
     n_centroids: int,
-    sample_cap: int = 10_000,
     iters: int = 5,
     seed: int = 42,
 ):
-    """IVF coarse quantizer: k-means on a deterministic hash-sample of
-    the corpus, run driver-side in numpy (the sample is bounded; the
-    corpus itself never leaves executors). Returns (n_centroids, dim)."""
-    import numpy as np
-
-    n = corpus.count()
-    frac = min(1.0, sample_cap / max(n, 1))
-    sample = (
-        corpus.select(vec_col)
-        .sample(withReplacement=False, fraction=frac, seed=seed)
-        .limit(sample_cap)
-        .collect()
-    )
-    mat = np.array([r[0] for r in sample], dtype=np.float64)
+    """IVF coarse quantizer: k-means in numpy on a seeded sample
+    (:func:`_sample_matrix`). Returns (n_centroids, dim)."""
+    mat = _sample_matrix(corpus, vec_col, seed=seed)
     rng = np.random.RandomState(seed)
     return _lloyd_numpy(mat, n_centroids, iters, rng)
 
@@ -306,11 +298,10 @@ def _lloyd_numpy(mat, k: int, iters: int, rng):
     at every ladder size (r10). The identity |x|^2 - 2 x.c + |c|^2
     plus bincount centroid updates runs the same iterations in
     milliseconds. Same init draw from ``rng`` as the old loop; empty
-    clusters keep their previous centroid (same policy)."""
-    import numpy as np
-
+    clusters keep their previous centroid (same policy); an empty
+    sample trains an empty codebook."""
     centroids = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(iters if len(mat) else 0):
         d2 = (
             (mat * mat).sum(axis=1)[:, None]
             - 2.0 * (mat @ centroids.T)
@@ -366,21 +357,17 @@ def quantized_assign(
     one batched integer GEMM per Arrow batch; zero shuffles — the
     output inherits the input partitioning.
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     centroids_q = np.array(
         quantized_centroids(dim, k, seed, scale), dtype=np.int64
     )
     ctq = centroids_q.T
     sq = (centroids_q**2).sum(axis=1)
 
-    @pandas_udf("int")
-    def nearest_cell(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        mq = _round_half_away(mat * scale).astype(np.int64)
+    @arrow_udf("int")
+    def nearest_cell(emb: pa.Array) -> pa.Array:
+        mq = _round_half_away(vectors.matrix(emb, dim) * scale).astype(np.int64)
         scores = 2 * (mq @ ctq) - sq
-        return pd.Series(scores.argmax(axis=1).astype("int32"))
+        return pa.array(scores.argmax(axis=1).astype(np.int32))
 
     return df.select(
         F.col(id_col), nearest_cell(F.col(vec_col)).alias("cluster")
@@ -423,9 +410,6 @@ def ivf_top_k(
     cross-engine verifiability, same trade as ``rp_lsh_top_k``'s
     quantized mode.
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     if quantize_scale is not None:
         if dim is None:
             raise ValueError("quantized IVF needs an explicit dim")
@@ -442,6 +426,7 @@ def ivf_top_k(
 
     else:
         centroids = _train_centroids(corpus, vec_col, n_centroids)
+        dim = centroids.shape[1]
         ct = centroids.T  # (dim, n_centroids)
         csq = (centroids**2).sum(axis=1)
 
@@ -449,21 +434,19 @@ def ivf_top_k(
             # nearest by L2: argmin(|x|²-2x·c+|c|²) = argmax(x·c-|c|²/2)
             return mat @ ct - csq / 2.0
 
-    @pandas_udf("int")
-    def nearest_cell(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        scores = _cell_scores(mat)
+    @arrow_udf("int")
+    def nearest_cell(emb: pa.Array) -> pa.Array:
+        scores = _cell_scores(vectors.matrix(emb, dim))
         # argmax takes the FIRST max → ties break to the lowest cell,
         # matching the oracle's ORDER BY score DESC, cell
-        return pd.Series(scores.argmax(axis=1).astype("int32"))
+        return pa.array(scores.argmax(axis=1).astype(np.int32))
 
-    @pandas_udf("array<int>")
-    def probe_cells(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        scores = _cell_scores(mat)
+    @arrow_udf("array<int>")
+    def probe_cells(emb: pa.Array) -> pa.Array:
+        scores = _cell_scores(vectors.matrix(emb, dim))
         # stable sort of -scores → score desc, ties by ascending cell
         top = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in top])
+        return vectors.list_array(top, _INT_LIST)
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -483,7 +466,7 @@ def ivf_top_k(
     # candidate fan-out is n_probe/n_centroids of the corpus per query
     # — millions of rows at ladder scale. The cosine stays in the JVM
     # (JIT-warmed ~0.7 µs/row — the r10 pinned-frame A/B beat an Arrow
-    # pandas-UDF scorer 3-10x; BASELINE.md "candidate-scoring
+    # Python scorer 3-10x; BASELINE.md "candidate-scoring
     # hypothesis").
     # NO pair dedup here: unlike LSH, IVF pairs are unique by
     # construction (every corpus vector lives in exactly ONE cell and a
@@ -686,9 +669,6 @@ def pq_top_k(
     is ONE map-side-combined aggregation over the m-int code tuples —
     O(corpus) with tiny shuffle rows, run once at construction.
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     if quantize_scale is not None:
         if dim is None:
             raise ValueError("quantized PQ needs an explicit dim")
@@ -708,9 +688,9 @@ def pq_top_k(
         )  # (m, n_codes, sub) int64
         books_sq = (books_arr.astype(np.int64) ** 2).sum(axis=2)  # (m, n_codes)
 
-        @pandas_udf("array<int>")
-        def encode(emb: pd.Series) -> pd.Series:
-            x = np.vstack(emb.to_numpy()).astype(np.float64)
+        @arrow_udf("array<int>")
+        def encode(emb: pa.Array) -> pa.Array:
+            x = vectors.matrix(emb, dim)
             xq = _round_half_away(x * quantize_scale).astype(np.int64)
             codes = np.empty((len(x), m), dtype=np.int32)
             for s in range(m):
@@ -719,13 +699,13 @@ def pq_top_k(
                 # first-min tie-break → lowest code, as the oracle orders
                 score = books_sq[s] - 2 * (xs @ books_arr[s].T)
                 codes[:, s] = score.argmin(axis=1)
-            return pd.Series(list(codes))
+            return vectors.list_array(codes, _INT_LIST)
 
-        @pandas_udf("double")
-        def adc(qv: pd.Series, codes: pd.Series) -> pd.Series:
-            q = np.vstack(qv.to_numpy()).astype(np.float64)
+        @arrow_udf("double")
+        def adc(qv: pa.Array, codes: pa.Array) -> pa.Array:
+            q = vectors.matrix(qv, dim)
             qq = _round_half_away(q * quantize_scale).astype(np.int64)
-            c = np.vstack(codes.to_numpy()).astype(np.int64)
+            c = vectors.matrix(codes, m, dtype=np.int64)
             score = np.zeros(len(q), dtype=np.int64)
             for s in range(m):
                 qs = qq[:, s * sub : (s + 1) * sub]
@@ -733,21 +713,12 @@ def pq_top_k(
                     "nd,nd->n", qs, books_arr[s][c[:, s]]
                 ).astype(np.int64)
             # integer-valued; double carries it exactly below 2^53
-            return pd.Series(score.astype(np.float64))
+            return pa.array(score.astype(np.float64))
 
     else:
         # --- train per-subspace codebooks on a bounded normalized sample
-        n = corpus.count()
-        cap = 10_000
-        frac = min(1.0, cap / max(n, 1))
-        rows = (
-            corpus.select(vec_col)
-            .sample(withReplacement=False, fraction=frac, seed=42)
-            .limit(cap)
-            .collect()
-        )
-        mat = np.array([r[0] for r in rows], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        mat = _sample_matrix(corpus, vec_col)
+        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
         dim = mat.shape[1]
         if dim % m:
             raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -761,27 +732,27 @@ def pq_top_k(
             books.append(_lloyd_numpy(xs, n_codes, 5, rng))
         books_arr = np.stack(books)  # (m, n_codes, sub)
 
-        @pandas_udf("array<int>")
-        def encode(emb: pd.Series) -> pd.Series:
-            x = np.vstack(emb.to_numpy()).astype(np.float64)
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        @arrow_udf("array<int>")
+        def encode(emb: pa.Array) -> pa.Array:
+            x = vectors.matrix(emb, dim)
+            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
             codes = np.empty((len(x), m), dtype=np.int32)
             for s in range(m):
                 xs = x[:, s * sub : (s + 1) * sub]
                 d2 = ((xs[:, None, :] - books_arr[s][None, :, :]) ** 2).sum(axis=2)
                 codes[:, s] = d2.argmin(axis=1)
-            return pd.Series(list(codes))
+            return vectors.list_array(codes, _INT_LIST)
 
-        @pandas_udf("double")
-        def adc(qv: pd.Series, codes: pd.Series) -> pd.Series:
-            q = np.vstack(qv.to_numpy()).astype(np.float64)
-            q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-            c = np.vstack(codes.to_numpy()).astype(np.int64)
+        @arrow_udf("double")
+        def adc(qv: pa.Array, codes: pa.Array) -> pa.Array:
+            q = vectors.matrix(qv, dim)
+            q = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
+            c = vectors.matrix(codes, m, dtype=np.int64)
             score = np.zeros(len(q))
             for s in range(m):
                 qs = q[:, s * sub : (s + 1) * sub]
                 score += np.einsum("nd,nd->n", qs, books_arr[s][c[:, s]])
-            return pd.Series(score)
+            return pa.array(score)
 
     enc = corpus.select(
         F.col(id_col).alias("neighbor_id"), encode(F.col(vec_col)).alias("codes")
@@ -859,57 +830,54 @@ def whiten_embeddings(
     Su et al. 2021).
 
     Scale shape: the covariance is a DISTRIBUTED moment aggregation —
-    each Arrow batch contributes (n, Σv, Σv·vᵀ) partials via
-    mapInPandas, combined on the driver (D×D doubles, KBs for any
-    realistic D — never the corpus). The eigendecomposition is a
-    driver-side numpy ``eigh`` of that D×D matrix; the projection
-    matrix broadcasts back inside a vectorized UDF closure. Three
-    passes total: moments, (driver eigh), project.
+    each task contributes (n, Σv, Σv·vᵀ) partials via mapInArrow,
+    collected and summed (D×D doubles, KBs for any realistic D — never
+    the corpus); D itself is read off the partials. The
+    eigendecomposition is a local numpy ``eigh`` of that D×D matrix;
+    the projection matrix broadcasts back inside an Arrow UDF closure.
+    Two passes total: moments, (local eigh), project. An empty corpus
+    gives an empty result.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    dim = len(corpus.select(vec_col).first()[0])
-
-    moment_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-            T.StructField("ss", T.ArrayType(T.DoubleType())),
-        ]
-    )
 
     def partials(batches):
-        for pdf in batches:
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [len(mat)],
-                    "s": [mat.sum(axis=0).tolist()],
-                    "ss": [(mat.T @ mat).reshape(-1).tolist()],
-                }
+        n, s, ss = 0, 0.0, 0.0
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            mat = vectors.matrix(batch.column(0), len(s) if n else None)
+            n, s, ss = n + len(mat), s + mat.sum(axis=0), ss + mat.T @ mat
+        if n:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([n], pa.int64()),
+                    vectors.list_array(s[None, :], pa.list_(pa.float64())),
+                    vectors.list_array(ss.reshape(1, -1), pa.list_(pa.float64())),
+                ],
+                names=["n", "s", "ss"],
             )
 
-    rows = corpus.select(vec_col).mapInPandas(partials, moment_schema).collect()
-    n = sum(r["n"] for r in rows)
-    s = np.sum([np.array(r["s"]) for r in rows], axis=0)
-    ss = np.sum([np.array(r["ss"]).reshape(dim, dim) for r in rows], axis=0)
+    moments = (
+        corpus.select(vec_col)
+        .mapInArrow(partials, "n long, s array<double>, ss array<double>")
+        .toArrow()
+    )
+    n = int(np.sum(moments.column("n").to_numpy()))
+    s = vectors.matrix(moments.column("s")).sum(axis=0)
+    dim = len(s)
+    ss = vectors.matrix(moments.column("ss"), dim * dim).sum(axis=0)
     mean = s / n
-    cov = ss / n - np.outer(mean, mean)
+    cov = ss.reshape(dim, dim) / n - np.outer(mean, mean)
     evals, evecs = np.linalg.eigh(cov)
     order = np.argsort(evals)[::-1]
     evals, evecs = evals[order], evecs[:, order]
     k = out_dim or dim
     # W maps x -> diag(1/sqrt(λ)) @ Vᵀ @ (x - mean), top-k components
     w_mat = (evecs[:, :k] / np.sqrt(np.maximum(evals[:k], eps))).T
-    mean_b = mean
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
-    def project(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        out = (mat - mean_b) @ w_mat.T
-        return pd.Series(list(out.astype(np.float32)))
+    @arrow_udf("array<float>")
+    def project(emb: pa.Array) -> pa.Array:
+        out = (vectors.matrix(emb, dim) - mean) @ w_mat.T
+        return vectors.list_array(out, pa.list_(pa.float32()))
 
     return corpus.select(
         F.col(id_col), project(F.col(vec_col)).alias("whitened")
@@ -933,7 +901,9 @@ def kmeans_lloyd(
     task, so the merging hash agg's shuffle is tiny at any corpus size.
     Only the k×dim centroid matrix is ever collected (the
     PageRank/logreg iterative pattern). NULL or ragged embeddings
-    raise ``ValueError``.
+    raise the ``ValueError`` of the vector contract (operators/vectors.py);
+    an empty corpus gives empty assignments and a (0, 0) centroid
+    matrix.
 
     Init = k-means‖-style oversampling (Bahmani '12, VERDICT r04 item
     2): ONE distributed pass scores every vector by squared distance
@@ -953,27 +923,26 @@ def kmeans_lloyd(
 
     Returns (assignments DataFrame [id, cluster], centroids ndarray).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    first = (
-        embeddings.select(id_col, vec_col).orderBy(id_col).limit(1).collect()
+    first = vectors.matrix(
+        embeddings.orderBy(id_col).limit(1).select(vec_col).toArrow().column(0)
     )
-    seed = np.asarray(first[0][1], dtype=np.float64)
+    if not len(first):
+        empty = embeddings.select(id_col, F.lit(None).cast("int").alias("cluster"))
+        return empty, first
+    seed = first[0]
+    dim = len(seed)
 
-    @pandas_udf("double")
-    def d2_seed(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        d = mat - seed[None, :]
-        return pd.Series((d * d).sum(axis=1))
+    @arrow_udf("double")
+    def d2_seed(emb: pa.Array) -> pa.Array:
+        d = vectors.matrix(emb, dim) - seed[None, :]
+        return pa.array((d * d).sum(axis=1))
 
     n_cand = max(16 * k, 256)
     mask = (1 << 52) - 1
     u = (
         F.xxhash64(F.col(id_col)).bitwiseAND(F.lit(mask)) + F.lit(1)
     ) / F.lit(float(mask) + 2.0)
-    cand_rows = (
+    cand_ids, cand = vectors.collect_matrix(
         embeddings.select(
             id_col, vec_col, d2_seed(F.col(vec_col)).alias("d2")
         )
@@ -981,15 +950,12 @@ def kmeans_lloyd(
         .select(id_col, vec_col, (F.log(u) / F.col("d2")).alias("skey"))
         # TakeOrderedAndProject: per-partition top-n_cand, no global sort
         .orderBy(F.desc("skey"), F.col(id_col))
-        .limit(n_cand)
-        .collect()
+        .limit(n_cand),
+        id_col,
+        vec_col,
     )
     chosen = [seed]
-    if cand_rows:
-        cand = np.vstack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in cand_rows]
-        )
-        cand_ids = np.asarray([r[id_col] for r in cand_rows])
+    if len(cand_ids):
         min_d2 = ((cand - seed[None, :]) ** 2).sum(axis=1)
         for _ in range(k - 1):
             # farthest candidate from everything chosen; ties → lowest id
@@ -999,17 +965,17 @@ def kmeans_lloyd(
             np.minimum(min_d2, step, out=min_d2)
     else:  # degenerate corpus: every vector equals the seed
         chosen.extend([seed.copy() for _ in range(k - 1)])
-    centroids = np.vstack(chosen)
+    centroids = np.stack(chosen)
 
     def assigner(cents):
         c = cents.copy()
 
-        @pandas_udf("int")
-        def assign(emb: pd.Series) -> pd.Series:
-            mat = np.vstack(emb.to_numpy()).astype(np.float64)
+        @arrow_udf("int")
+        def assign(emb: pa.Array) -> pa.Array:
+            mat = vectors.matrix(emb, dim)
             # argmin_c |x-c|^2 = argmin_c (|c|^2 - 2 x·c): one GEMM
             d = (c * c).sum(axis=1)[None, :] - 2.0 * (mat @ c.T)
-            return pd.Series(d.argmin(axis=1).astype("int32"))
+            return pa.array(d.argmin(axis=1).astype(np.int32))
 
         return assign
 
@@ -1027,7 +993,6 @@ def kmeans_lloyd(
     # tolerance anchor in tests/test_curation_round3.py pins that
     # fixture assignments are invariant under ≥1e-6-relative centroid
     # perturbation, far above any reassociation ulp.
-    dim = int(seed.shape[0])
     vecs = embeddings.select(as_double_array(vec_col).alias("v"))
 
     def updater(cents):
@@ -1036,26 +1001,11 @@ def kmeans_lloyd(
         kk = c.shape[0]
 
         def partials(batches):
-            import pyarrow as pa
-
             sums = np.zeros((kk, dim), dtype=np.float64)
             counts = np.zeros(kk, dtype=np.int64)
             for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                col = batch.column(0)
-                if col.null_count or col.values.null_count:
-                    # a NULL element would become NaN: every point → cluster 0
-                    raise ValueError("NULL embedding or embedding element")
-                offs = np.asarray(col.offsets)
-                if not np.all(np.diff(offs) == dim):
-                    raise ValueError(
-                        "ragged embedding column; expected dim=%d" % dim
-                    )
-                mat = np.asarray(col.values, dtype=np.float64)[
-                    offs[0] : offs[-1]
-                ].reshape(n, dim)
+                # a NULL element would become NaN: every point → cluster 0
+                mat = vectors.matrix(batch.column(0), dim)
                 d = cc[None, :] - 2.0 * (mat @ c.T)
                 a = d.argmin(axis=1)
                 np.add.at(sums, a, mat)
@@ -1064,16 +1014,10 @@ def kmeans_lloyd(
             if len(nz):
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(
-                            np.repeat(nz, dim).astype(np.int32),
-                            type=pa.int32(),
-                        ),
-                        pa.array(
-                            np.tile(np.arange(dim, dtype=np.int32), len(nz)),
-                            type=pa.int32(),
-                        ),
-                        pa.array(sums[nz].ravel(), type=pa.float64()),
-                        pa.array(np.repeat(counts[nz], dim), type=pa.int64()),
+                        pa.array(np.repeat(nz, dim).astype(np.int32)),
+                        pa.array(np.tile(np.arange(dim, dtype=np.int32), len(nz))),
+                        pa.array(sums[nz].ravel()),
+                        pa.array(np.repeat(counts[nz], dim)),
                     ],
                     names=["cluster", "dim", "s", "n"],
                 )
@@ -1087,15 +1031,13 @@ def kmeans_lloyd(
             )
             .groupBy("cluster", "dim")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
+            .toArrow()
         )
-        new = centroids.copy()
-        counts = np.zeros(k)
-        for r in sums:
-            new[r["cluster"], r["dim"]] = r["s"] / r["n"]
-            counts[r["cluster"]] = r["n"]
         # empty clusters keep their previous centroid
-        centroids = new
+        centroids = centroids.copy()
+        centroids[sums["cluster"].to_numpy(), sums["dim"].to_numpy()] = (
+            sums["s"].to_numpy() / sums["n"].to_numpy()
+        )
     assignments = embeddings.select(
         id_col, assigner(centroids)(F.col(vec_col)).alias("cluster")
     )

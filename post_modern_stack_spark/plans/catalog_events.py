@@ -1901,7 +1901,7 @@ def q_user_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_requests = requests.agg(F.count(F.lit(1)).alias("n"))
     return (
         joined.agg(
-            F.sum((F.col("req") == 1).cast("bigint")).alias("n_events_purged"),
+            F.sum(F.col("req").isNotNull().cast("bigint")).alias("n_events_purged"),
             F.sum(F.col("req").isNull().cast("bigint")).alias(
                 "n_events_remaining"
             ),
@@ -1909,7 +1909,7 @@ def q_user_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_requests))
         .select(
             F.col("n").alias("n_requests"),
-            F.coalesce("n_events_purged", F.lit(0)).alias("n_events_purged"),
+            "n_events_purged",
             "n_events_remaining",
         )
     )

@@ -563,7 +563,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] SemDeDup semantic dedup: per-cluster cosine neighborhoods,
     min-id representative kept (operators/dedup.semantic_dedup). The
     cluster column bounds the quadratic pass; one numpy GEMM per
-    cluster via applyInPandas — the paper's recipe verbatim, with
+    cluster via applyInArrow — the paper's recipe verbatim, with
     `label` standing in for the k-means assignment."""
     from post_modern_stack_spark.operators import dedup
 

@@ -50,7 +50,8 @@ def summarize(plan: str) -> dict:
             joins.append(f"{c}×{label}")
     pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "—"
     py = count("ArrowEvalPython") + count("BatchEvalPython") + count("MapInPandas") \
-        + count("FlatMapGroupsInPandas") + count("AggregateInPandas")
+        + count("FlatMapGroupsInPandas") + count("AggregateInPandas") \
+        + count("MapInArrow") + count("FlatMapGroupsInArrow")
     shuffles = sum(1 for n in nodes if re.match(r"^\(\d+\) Exchange", n))
     bcasts = count("BroadcastExchange")
     return {

@@ -69,6 +69,24 @@ def test_parse_sf_strict_and_fallback():
     assert isinstance(val, str) and "/" not in tok
 
 
+def test_median_diff_skips_baseline_at_other_cores(capsys):
+    """Medians timed at other cores are not comparable: a local[4]
+    sweep against a 32-core baseline printed 92 false movers."""
+    prev = {"cores": 32, "queries": {"q1": 1.0, "q2": 1.0}}
+    timings = {"q1": 3.0, "q2": 0.2}
+    bench._print_median_regressions(prev, "base", timings, cores=4)
+    err = capsys.readouterr().err
+    assert "median diff skipped" in err and "median-diff" not in err
+    bench._print_median_regressions(prev, "base", timings, cores=32)
+    err = capsys.readouterr().err
+    assert "median-diff REGRESSED q1" in err and "median-diff improved q2" in err
+    # a baseline without recorded cores is compared, not skipped
+    del prev["cores"]
+    bench._print_median_regressions(prev, "base", timings, cores=4)
+    err = capsys.readouterr().err
+    assert "median diff skipped" not in err and "median-diff REGRESSED q1" in err
+
+
 def test_load_py_band_queries_parses_plans_md(tmp_path):
     plans = tmp_path / "PLANS.md"
     plans.write_text(
