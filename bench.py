@@ -12,7 +12,7 @@ summary line, and write no BENCH_DETAIL file.
 
 Counters: each query's sweep-1 run carries the job tag ``bench:<query>``;
 after it (outside the timed region, inside the sweep budget) its jobs,
-stages, tasks, shuffle and input bytes go to BENCH_DETAIL.json's
+stages, tasks, shuffle bytes and input rows go to BENCH_DETAIL.json's
 ``counters`` with the ``cores`` they were counted at, and stderr gets a
 diff against the committed artifact's. A query whose time moves while
 its counters repeat did the same work: the move is host noise.
@@ -240,8 +240,10 @@ def _print_median_regressions(
         )
 
 
-# per-query counters: scheduling volume and bytes moved, which repeat where times do not
-COUNTED = ("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes", "input_bytes")
+# per-query counters: scheduling volume, rows read and bytes moved, which
+# repeat where times do not. Rows, not input bytes: a parquet scan's
+# inputBytes is not its data volume (7,356 B for 600,000 rows).
+COUNTED = ("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes", "input_rows")
 
 
 def read_counters(spark, tag: str) -> dict[str, int]:

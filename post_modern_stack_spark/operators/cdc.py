@@ -41,7 +41,7 @@ def apply_cdc(
     its keys to one candidate row before the shuffle, so shuffled bytes
     ≈ |keys|, not |snapshot|+|changes|) and needs no per-partition
     sort. The 100M-row probe measured the window variant 3× slower and
-    spill-bound (scripts/scale_probe.py ``cdc_apply``).
+    spill-bound (BASELINE.md "Scale-ladder probe", round 3, ``cdc_apply``).
     """
     snap = snapshot.withColumn(op_col, F.lit("U"))
     cols = snap.columns
@@ -79,8 +79,8 @@ def scd2_intervals(
     Catalyst plans ONE exchange and reuses the sort. Only the needed
     columns enter the window sort — on a fact table with wide payload
     columns (JSON props etc.) sorting full rows spilled the 100M-row
-    probe to disk at ~6× the runtime (scripts/scale_probe.py
-    ``scd2_runs``).
+    probe to disk at ~6× the runtime (BASELINE.md "Scale-ladder probe",
+    round 3, ``scd2_runs``).
     """
     ties = tie_cols or []
     events = events.select(*key_cols, attr_col, seq_col, *ties)

@@ -70,36 +70,6 @@ def rank_popularity_model(n_classes: int) -> Callable:
     return fn
 
 
-def hashed_text_features(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_features: int = 256,
-) -> DataFrame:
-    """Sparse hashed bag-of-words features: (id, bucket, x) with x =
-    the token count L1-normalized per doc (fasttext-style averaging).
-    The md5 bucket map keeps the featurizer engine-portable; storage
-    is sparse triples, never a dense vector column."""
-    toks = df.select(
-        id_col, F.explode(F.split(F.col(text_col), r"\s+")).alias("tok")
-    ).withColumn(
-        "bucket",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-        % F.lit(n_features),
-    )
-    from pyspark.sql import Window
-
-    # normalize over a window on the AGGREGATED counts — a totals agg
-    # straight off `toks` would recompute the explode+md5 pass a
-    # second time (measured 2× featurizer cost), and a join would add
-    # a third exchange
-    counts = toks.groupBy(id_col, "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    n = F.sum("c").over(Window.partitionBy(id_col))
-    return counts.select(id_col, "bucket", (F.col("c") / n).alias("x"))
-
-
 def packed_text_features(
     df: DataFrame,
     labels: DataFrame,
@@ -107,22 +77,22 @@ def packed_text_features(
     id_col: str = "doc_id",
     n_features: int = 256,
 ) -> DataFrame:
-    """Fused featurize+pack (r11 optimization round): the
+    """Sparse hashed bag-of-words features packed per doc: the
     ``(id, y, fx: array<struct<bucket,x>>)`` grain ``train_logreg``
-    iterates over, built in TWO keyed exchanges instead of the four the
-    ``hashed_text_features``→checkpoint→pack route paid:
+    iterates over. Bucket = the token's md5, first 8 hex digits, mod
+    ``n_features`` (engine-portable); x = the token count L1-normalized
+    per doc (fasttext-style averaging). Built in two keyed exchanges:
 
       explode(tokens) → groupBy(id, bucket) count          (exchange 1)
       → groupBy(id) collect_list + sum(c)                  (exchange 2)
       → x = c / Σc folded INSIDE the packed array (transform), so the
         per-doc L1 normalization needs no window pass at all
-      → right-join labels (broadcast-eligible).
+      → right-join labels (broadcast-eligible); a labeled doc with no
+        features gets an empty array.
 
-    Values are identical to the unfused route: Σc is an exact long sum,
-    x = c/Σc the same float division, and the array order is
-    collect_list order in both forms. The caller localCheckpoints (the
-    trainer re-reads this per iteration) and scores with
-    ``score_logreg_packed`` — the corpus is featurized exactly once.
+    The caller localCheckpoints (the trainer re-reads this per
+    iteration) and scores with ``score_logreg_packed`` — the corpus is
+    featurized exactly once.
     """
     toks = df.select(
         id_col, F.explode(F.split(F.col(text_col), r"\s+")).alias("tok")
@@ -200,9 +170,8 @@ def score_logreg_packed(
     packed: DataFrame, weights, bias: float, id_col: str = "doc_id"
 ) -> DataFrame:
     """Scoring over the packed grain: sigmoid of the in-array sparse
-    dot product — NO shuffle at all (contrast ``score_logreg``, which
-    re-aggregates the (id, bucket, x) triples per doc). Emits
-    (id, y, p) so the caller needs no labels re-join."""
+    dot product — NO shuffle at all. Emits (id, y, p) so the caller
+    needs no labels re-join."""
     return packed.select(
         id_col,
         "y",
@@ -213,21 +182,18 @@ def score_logreg_packed(
 
 
 def train_logreg(
-    feats: DataFrame,
-    labels: DataFrame,
+    packed: DataFrame,
     n_features: int = 256,
     n_iter: int = 30,
     lr: float = 2.0,
-    id_col: str = "doc_id",
-    packed: DataFrame | None = None,
 ):
     """[EXT] model-based quality filtering, training half: logistic
     regression by full-batch gradient descent where EVERY data-touching
     step is a DataFrame aggregation — the GPT-3/fasttext-style quality
     classifier trained without any ML library.
 
-    Features are PACKED once — one groupBy(id) + labels join up front,
-    localCheckpoint-ed as (id, y, fx: array<struct<bucket,x>>) — so
+    ``packed`` is the (id, y, fx: array<struct<bucket,x>>) grain of
+    ``packed_text_features``, localCheckpoint-ed by the caller, so
     each iteration is a SINGLE job with a SINGLE shuffle: weights
     enter the plan as a literal ``n_features`` array, the margin is an
     ``F.aggregate`` over the packed sparse pairs (no shuffle — the
@@ -243,34 +209,13 @@ def train_logreg(
 
     Corpus-scale contract: quality classifiers are TRAINED on a
     bounded labeled sample (GPT-3's filter: ~10⁵–10⁶ docs) and only
-    SCORED over the full corpus — pass sampled feats here (measured
-    ~25 s/iteration over 1 M-doc feats on local[32]; sample before
-    featurizing), then ``score_logreg`` streams the whole corpus in
-    one shuffle-light pass.
+    SCORED over the full corpus — pass a packed sample here (measured
+    ~25 s/iteration over 1 M docs on local[32]; sample before
+    featurizing), then ``score_logreg_packed`` streams the whole
+    corpus in one shuffle-free pass.
 
     Returns (weights ndarray [n_features], bias float).
     """
-    # Pack ONCE: (id, y, fx) — the doc-grain shuffle and the labels
-    # join leave the loop entirely. Docs with no surviving features
-    # get an empty array (margin 0, bias-only gradient), matching a
-    # left-join + na.fill(0) on the unpacked form. A caller that
-    # already holds the packed grain (``packed_text_features`` +
-    # its own checkpoint) passes it via ``packed`` and skips this
-    # pack + checkpoint entirely (r11).
-    if packed is None:
-        packed = (
-            feats.groupBy(id_col)
-            .agg(F.collect_list(F.struct("bucket", "x")).alias("fx"))
-            .join(labels, id_col, "right")
-            .select(
-                id_col,
-                "y",
-                F.coalesce(
-                    "fx", F.array().cast("array<struct<bucket:long,x:double>>")
-                ).alias("fx"),
-            )
-            .localCheckpoint()
-        )
     n_docs = packed.count()  # also materializes the checkpoint
     if n_docs == 0:
         raise ValueError("train_logreg: no labeled documents to train on")
@@ -318,34 +263,6 @@ def train_logreg(
         w -= lr * g / n_docs
         b -= lr * g_b / n_docs
     return w, b
-
-
-def score_logreg(
-    feats: DataFrame,
-    weights,
-    bias: float,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Scoring half over SPARSE FEATURES: weights as a literal map
-    expression + one doc-grain agg → sigmoid probability per doc.
-    For streams use ``logreg_prob_expr`` (no agg, no shuffle)."""
-    from itertools import chain
-
-    wmap = F.create_map(
-        *chain.from_iterable(
-            (F.lit(int(i)), F.lit(float(v)))
-            for i, v in enumerate(np.asarray(weights))
-        )
-    )
-    return (
-        feats.withColumn("w", F.element_at(wmap, F.col("bucket").cast("int")))
-        .groupBy(id_col)
-        .agg(F.sum(F.col("x") * F.col("w")).alias("m"))
-        .select(
-            id_col,
-            (1.0 / (1.0 + F.exp(-(F.col("m") + float(bias))))).alias("p"),
-        )
-    )
 
 
 def logreg_prob_expr(

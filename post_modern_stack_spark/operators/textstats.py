@@ -1117,9 +1117,7 @@ def curate_documents(
     dup_share_max: float = 0.8,
     contam_n: int = 8,
     budget_frac: float = 0.5,
-    chunked_budget: bool = True,
     span_trim: bool = False,
-    checkpoint_gram_keys: bool | None = None,
     auto_partitions: bool = True,
     observations: dict | None = None,
 ) -> dict[str, DataFrame]:
@@ -1150,12 +1148,11 @@ def curate_documents(
        ``contam_n``-gram with the benchmark set;
     5. ``final``    — token budget: keep docs, in doc_id order, while
        the running whitespace-token total stays within
-       ``budget_frac`` of the clean stage's total. Chunked prefix-sum
-       by default (VERDICT r05 item 3): the catalog plans ARE the
-       100 TB plans, and survivors are bit-identical (integer token
-       counts), so there is no correctness cost to defaulting the
-       scale path — measured 2.1x at 10M docs (30.8 -> 14.5 s) over
-       the single-task global cumsum it replaces.
+       ``budget_frac`` of the clean stage's total, as a chunked
+       prefix-sum (VERDICT r05 item 3): the catalog plans ARE the
+       100 TB plans, and survivors are bit-identical to the plain
+       cumsum (integer token counts) — measured 2.1x at 10M docs
+       (30.8 -> 14.5 s) over the single-task global cumsum.
 
     Returns the dict of stage DataFrames (shared prefixes are
     localCheckpoint-ed so a downstream stage or a funnel count never
@@ -1206,9 +1203,7 @@ def curate_documents(
                     dup_share_max,
                     contam_n,
                     budget_frac,
-                    chunked_budget,
                     span_trim,
-                    checkpoint_gram_keys,
                     auto_partitions=False,
                     observations=observations,
                 )
@@ -1252,17 +1247,11 @@ def curate_documents(
         # aggregate ONCE PER STAGE. substring_share_and_trim resolves
         # duplicated positions once and derives the doc-grain share
         # from the same stream, so the gram work runs in ONE action.
-        # The per_key checkpoint knob is kept for callers but no
-        # longer routed by corpus size: within a single action,
-        # ReuseExchange already shares the aggregate between its
+        # The gram-key aggregate is never checkpointed: within a
+        # single action, ReuseExchange already shares it between its
         # in-plan consumers, so materializing it buys nothing at any
         # scale.
-        per_key = gram_key_counts(deduped, text_col, n=8)
-        if checkpoint_gram_keys:
-            per_key = per_key.localCheckpoint()
-        fused = substring_share_and_trim(
-            deduped, text_col, n=8, per_key=per_key
-        )
+        fused = substring_share_and_trim(deduped, text_col, n=8)
         # doc-grain checkpoint (the fused plan has two downstream
         # consumers — the near gate and the trimmed swap — and its
         # recompute would repeat the gram shuffles plus the Arrow
@@ -1357,9 +1346,7 @@ def curate_documents(
     # only a narrow (doc_id, n_tokens) projection rides the running
     # sum; survivors rejoin by id (left_semi, key-grain build side)
     sizes = clean.select("doc_id", toks.alias("__nt"))
-    keep_ids = token_budget_keep_ids(
-        sizes, budget_frac, chunked=chunked_budget
-    )
+    keep_ids = token_budget_keep_ids(sizes, budget_frac)
     final = clean.join(keep_ids, "doc_id", "left_semi")
     return {
         "input": df,

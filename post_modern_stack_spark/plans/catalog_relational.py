@@ -17,6 +17,39 @@ from post_modern_stack_spark.plans.entryflow import query
 from post_modern_stack_spark.registry import load_table
 
 
+def _sets_with_grand_total(grouped, price_col: str) -> DataFrame:
+    """count(1) AS n_orders and round(sum(price_col), 2) AS revenue per
+    grouping set of ``grouped`` (a rollup, cube or groupingSets), with
+    SQL's grand-total row also on empty input. Spark's Expand emits no
+    row over an empty table, not even the ``()`` set's, where SQL gives
+    count 0 and a NULL sum. So a placeholder total row (count 0, sum
+    NULL) is unioned in and the sets are regrouped on their keys and
+    grouping id: the placeholder merges into the real total when there
+    is one. The table is still scanned once; the regroup shuffles only
+    the grouped rows."""
+    sets = grouped.agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(price_col).alias("s"),
+        F.grouping_id().alias("gid"),
+    )
+    keys = sets.columns[:-3]
+    total = sets.sparkSession.range(1, numPartitions=1).select(
+        *[F.lit(None).cast(sets.schema[k].dataType).alias(k) for k in keys],
+        F.lit(0).cast("long").alias("n_orders"),
+        F.lit(None).cast("double").alias("s"),
+        F.lit((1 << len(keys)) - 1).cast("long").alias("gid"),
+    )
+    return (
+        sets.unionByName(total)
+        .groupBy(*keys, "gid")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.round(F.sum("s"), 2).alias("revenue"),
+        )
+        .drop("gid")
+    )
+
+
 @query(
     "pricing_summary",
     oracle="""
@@ -566,11 +599,7 @@ def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
     return (
-        joined.rollup("r_name", "n_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
+        _sets_with_grand_total(joined.rollup("r_name", "n_name"), "o_totalprice")
         .select(
             F.coalesce(F.col("r_name"), F.lit("ALL")).alias("region"),
             F.coalesce(F.col("n_name"), F.lit("ALL")).alias("nation"),
@@ -597,10 +626,8 @@ def q_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — the full cross-dimensional rollup without four scans."""
     o = load_table(spark, sf_dir, "orders")
     return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        _sets_with_grand_total(
+            o.cube("o_orderstatus", "o_orderpriority"), "o_totalprice"
         )
         .select(
             F.coalesce(F.col("o_orderstatus"), F.lit("ALL")).alias("status"),
@@ -1187,14 +1214,13 @@ def q_status_priority_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     return (
-        o.groupingSets(
-            [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
-            "o_orderstatus",
-            "o_orderpriority",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        _sets_with_grand_total(
+            o.groupingSets(
+                [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
+                "o_orderstatus",
+                "o_orderpriority",
+            ),
+            "o_totalprice",
         )
         .select(
             F.coalesce(F.col("o_orderstatus"), F.lit("ALL")).alias("status"),
@@ -2297,22 +2323,34 @@ def q_priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping construct cube/rollup queries don't exercise), run
     through the SQL surface over registered views — mirroring how the
     reference's dbt models are SQL against named relations. A single
-    Expand + one hash agg; the NULL-vs-'ALL' collapse keys on
-    grouping(), not on data NULLs."""
+    Expand + one hash agg, then a regroup of the grouped rows that
+    keeps the grand total on empty input; the NULL-vs-'ALL' collapse
+    keys on grouping(), not on data NULLs."""
     from post_modern_stack_spark.registry import register_views
 
     register_views(spark, sf_dir, ["orders"])
+    # the placeholder row is SQL's grand total over an empty table,
+    # which Spark's Expand does not emit (see _sets_with_grand_total)
     return spark.sql(
         """
-        SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-               coalesce(o_orderstatus, 'ALL') AS status,
-               grouping(o_orderpriority) * 2 + grouping(o_orderstatus)
-                 AS grouping_id,
-               count(*) AS n_orders,
-               round(sum(o_totalprice), 2) AS revenue
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
-                                (o_orderpriority, o_orderstatus), ())
+        WITH sets AS (
+            SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+                   coalesce(o_orderstatus, 'ALL') AS status,
+                   grouping(o_orderpriority) * 2 + grouping(o_orderstatus)
+                     AS grouping_id,
+                   count(*) AS n_orders,
+                   sum(o_totalprice) AS s
+            FROM orders
+            GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
+                                    (o_orderpriority, o_orderstatus), ())
+            UNION ALL
+            SELECT 'ALL', 'ALL', 3, 0, CAST(NULL AS DOUBLE)
+        )
+        SELECT priority, status, grouping_id,
+               sum(n_orders) AS n_orders,
+               round(sum(s), 2) AS revenue
+        FROM sets
+        GROUP BY priority, status, grouping_id
         """
     ).withColumn("grouping_id", F.col("grouping_id").cast("long"))
 

@@ -2096,9 +2096,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("lang") == "en").cast("double").alias("y")
     )
     packed = inference.packed_text_features(docs, labels).localCheckpoint()
-    w, b = inference.train_logreg(
-        None, None, n_iter=8, lr=5.0, packed=packed
-    )
+    w, b = inference.train_logreg(packed, n_iter=8, lr=5.0)
     return inference.score_logreg_packed(packed, w, b).select(
         "doc_id",
         F.col("y").cast("int").alias("label"),

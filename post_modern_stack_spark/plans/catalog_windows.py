@@ -393,7 +393,8 @@ def q_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark has no DISTINCT aggregate over windows, so the distinct is
     expressed as ``size(collect_set(...))`` over the same RANGE frame
     — semantically identical, evaluated per-frame within one shuffle
-    on event_type. COST MODEL (measured, scripts/scale_probe.py):
+    on event_type. COST MODEL (measured: BASELINE.md "Scale-ladder
+    probe", round 4, ``sliding_distinct_users``):
     collect_set is non-invertible, so the frame recomputes per row —
     O(n × frame_rows). Fine while event density keeps frames small
     (here: sf0.1 frames are tens of rows); on a timeline dense enough

@@ -29,14 +29,12 @@ DEFAULT_SHUFFLE_PARTITIONS = 32  # sized for local[32]; a real cluster
 
 def get_spark(
     app_name: str = "post-modern-stack-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine session with scale-ready defaults."""
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+    """Build (or reuse) the engine session with scale-ready defaults;
+    ``SPARK_GRAFT_CPUS`` (default 32) sets the local[N] master."""
+    master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 

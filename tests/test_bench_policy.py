@@ -132,3 +132,40 @@ def test_named_queries_print_counters_and_write_no_file(tmp_path, sf_dir):
     assert len(summary) < 1800
     assert json.loads(summary)["cutoff_sec"] == min(json.loads(summary)["queries"].values())
     assert not list(tmp_path.glob("BENCH_DETAIL*.json"))
+
+
+def _rungs(*per_rung):
+    """Counters per rung from (jobs, stages, shuffle_write_bytes, input_rows)."""
+    keys = ("jobs", "stages", "shuffle_write_bytes", "input_rows")
+    return [dict(zip(keys, c)) for c in per_rung]
+
+
+def test_scale_ladder_flags():
+    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "scripts"))
+    import scale_ladder
+
+    mb = scale_ladder.SHUFFLE_FLOOR
+    # clean: plan repeats, shuffle grows with the input rows
+    assert scale_ladder.flags(
+        _rungs((4, 6, 2 * mb, 10**5), (4, 6, 6 * mb, 3 * 10**5), (4, 6, 20 * mb, 10**6))
+    ) == []
+    # jobs move with the data (an adaptive route)
+    assert scale_ladder.flags(
+        _rungs((6, 8, 0, 10**5), (6, 8, 0, 3 * 10**5), (4, 8, 0, 10**6))
+    ) == ["plan_moves"]
+    # stages move too
+    assert scale_ladder.flags(_rungs((4, 4, 0, 10), (4, 5, 0, 30))) == ["plan_moves"]
+    # shuffle grows 8x for 3x rows, above the floor
+    assert scale_ladder.flags(
+        _rungs((2, 3, mb, 10**5), (2, 3, 8 * mb, 3 * 10**5), (2, 3, 27 * mb, 10**6))
+    ) == ["shuffle_superlinear"]
+    # a shuffle that appears from nothing above the floor (broadcast -> shuffle join)
+    assert scale_ladder.flags(_rungs((2, 3, 0, 100), (2, 3, 5 * mb, 300))) == [
+        "shuffle_superlinear"
+    ]
+    # the same 8x growth below the floor says nothing
+    assert scale_ladder.flags(
+        _rungs((2, 3, 1_000, 10**5), (2, 3, 8_000, 3 * 10**5), (2, 3, 64_000, 10**6))
+    ) == []
+    # a rung without counters (the query failed there)
+    assert scale_ladder.flags([_rungs((1, 1, 0, 1))[0], None]) == ["unread"]

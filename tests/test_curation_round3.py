@@ -123,10 +123,14 @@ def test_logreg_learns_planted_signal(spark):
         (i + 100, "zz qq xx spam junk noise", 0.0) for i in range(20)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, y double")
-    feats = inference.hashed_text_features(docs).localCheckpoint()
-    labels = docs.select("doc_id", "y")
-    w, b = inference.train_logreg(feats, labels, n_iter=15, lr=5.0)
-    scored = {r["doc_id"]: r["p"] for r in inference.score_logreg(feats, w, b).collect()}
+    packed = inference.packed_text_features(
+        docs, docs.select("doc_id", "y")
+    ).localCheckpoint()
+    w, b = inference.train_logreg(packed, n_iter=15, lr=5.0)
+    scored = {
+        r["doc_id"]: r["p"]
+        for r in inference.score_logreg_packed(packed, w, b).collect()
+    }
     assert all(scored[i] > 0.6 for i in range(20))
     assert all(scored[i + 100] < 0.4 for i in range(20))
 
@@ -137,34 +141,58 @@ def test_logreg_without_documents_raises_named_error(spark):
     docs = spark.createDataFrame([], "doc_id long, text string, y double")
     with pytest.raises(ValueError, match="no labeled documents"):
         inference.train_logreg(
-            inference.hashed_text_features(docs), docs.select("doc_id", "y")
+            inference.packed_text_features(docs, docs.select("doc_id", "y"))
         )
 
 
 def test_logreg_matches_numpy_reference(spark):
+    """Packed features, GD weights and scores against a numpy replay
+    whose features are built here from the contract: bucket = the
+    token's md5, first 8 hex digits, mod n; x = c / Σc per doc."""
+    import hashlib
+
     import numpy as np
     from post_modern_stack_spark.operators import inference
 
-    rows = [(1, "a b", 1.0), (2, "a c", 1.0), (3, "d e", 0.0), (4, "d f", 0.0)]
+    rows = [
+        (i, " ".join(f"w{j % 17}" for j in range(3 + i % 9)), float(i % 3 > 0))
+        for i in range(60)
+    ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, y double")
     nf = 16
-    feats = inference.hashed_text_features(docs, n_features=nf)
-    labels = docs.select("doc_id", "y")
-    w, b = inference.train_logreg(feats, labels, n_features=nf, n_iter=5, lr=1.0)
+    X = np.zeros((len(rows), nf))
+    for i, (_, text, _) in enumerate(rows):
+        toks = text.split()
+        for t in toks:
+            X[i, int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % nf] += 1
+        X[i] /= len(toks)
+    y = np.array([r[2] for r in rows])
 
-    # dense numpy replay of the same GD
-    fp = feats.toPandas()
-    X = np.zeros((4, nf))
-    ids = {1: 0, 2: 1, 3: 2, 4: 3}
-    for _, r in fp.iterrows():
-        X[ids[r["doc_id"]], int(r["bucket"])] = r["x"]
-    y = np.array([1.0, 1.0, 0.0, 0.0])
+    packed = inference.packed_text_features(
+        docs, docs.select("doc_id", "y"), n_features=nf
+    ).localCheckpoint()
+    got = {r["doc_id"]: r for r in packed.collect()}
+    for i, (doc_id, _, label) in enumerate(rows):
+        dense = np.zeros(nf)
+        for s in got[doc_id]["fx"]:
+            dense[s["bucket"]] = s["x"]
+        assert got[doc_id]["y"] == label
+        assert np.allclose(dense, X[i], rtol=0, atol=1e-12), doc_id
+
+    w, b = inference.train_logreg(packed, n_features=nf, n_iter=5, lr=1.0)
     wn, bn = np.zeros(nf), 0.0
     for _ in range(5):
         p = 1.0 / (1.0 + np.exp(-(X @ wn + bn)))
-        wn -= 1.0 * (X.T @ (p - y)) / 4
-        bn -= 1.0 * (p - y).sum() / 4
+        wn -= 1.0 * (X.T @ (p - y)) / len(rows)
+        bn -= 1.0 * (p - y).sum() / len(rows)
     assert np.allclose(w, wn, atol=1e-9) and abs(b - bn) < 1e-9
+
+    pn = 1.0 / (1.0 + np.exp(-(X @ wn + bn)))
+    scored = {
+        r["doc_id"]: r["p"]
+        for r in inference.score_logreg_packed(packed, w, b).collect()
+    }
+    assert all(abs(scored[r[0]] - pn[i]) < 1e-9 for i, r in enumerate(rows))
 
 
 def test_weighted_sample_bias_toward_heavy_weights(spark):
@@ -317,10 +345,11 @@ def test_rowwise_scorer_matches_sparse_scorer(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     rng = np.random.RandomState(3)
     w, b = rng.randn(256) * 0.1, 0.2
+    labels = docs.select("doc_id", F.lit(0.0).alias("y"))
     sparse = {
         r["doc_id"]: r["p"]
-        for r in inference.score_logreg(
-            inference.hashed_text_features(docs), w, b
+        for r in inference.score_logreg_packed(
+            inference.packed_text_features(docs, labels), w, b
         ).collect()
     }
     rowwise = {
@@ -524,34 +553,6 @@ def test_token_budget_default_plan_is_chunked(spark):
     for q in (q_token_budget_sample, q_curation_funnel):
         plan = _plan_of(q(spark, sf))
         assert "hashpartitioning(_chunk" in plan, q.__name__
-
-
-def test_curate_documents_chunked_budget_parity(spark):
-    """End-to-end: the default (chunked_budget=True, the 100 TB plan)
-    returns the same final survivor set as the plain single-task
-    cumsum form."""
-    from post_modern_stack_spark.operators.textstats import curate_documents
-
-    docs = spark.createDataFrame(
-        [
-            (
-                i * 100_000,
-                "the "
-                + " ".join(f"w{i}x{j}" for j in range(12))
-                + f" tail{i}",
-                "en",
-                f"src{i % 3}",
-            )
-            for i in range(60)
-        ],
-        "doc_id long, text string, lang string, source string",
-    )
-    bench_docs = docs.filter(F.col("doc_id") % 500_000 == 0)
-    plain = curate_documents(docs, bench_docs, chunked_budget=False)["final"]
-    chunked = curate_documents(docs, bench_docs)["final"]
-    a = sorted(r["doc_id"] for r in plain.select("doc_id").collect())
-    b = sorted(r["doc_id"] for r in chunked.select("doc_id").collect())
-    assert a == b and len(a) > 0
 
 
 @pytest.mark.parametrize("span_trim", [False, True])
@@ -1391,54 +1392,3 @@ def test_grain_partitions_hint_stats_gate(spark, tmp_path, monkeypatch):
         docs, rows_per_partition=10, stats_gate=True
     )
     assert exact == grain_partitions_hint(docs, rows_per_partition=10)
-
-
-def test_packed_text_features_matches_unfused_route(spark):
-    """r11 fused featurize+pack: packed_text_features must hold the
-    same (bucket, x) multiset per doc and the same labels as the
-    hashed_text_features -> groupBy(id).collect_list -> join route,
-    and score_logreg_packed must match score_logreg to float noise."""
-    from post_modern_stack_spark.operators import inference
-
-    docs = spark.createDataFrame(
-        [
-            (i, " ".join(f"w{j % 17}" for j in range(3 + i % 9)), 
-             "en" if i % 3 else "fr")
-            for i in range(60)
-        ],
-        "doc_id long, text string, lang string",
-    )
-    labels = docs.select(
-        "doc_id", (F.col("lang") == "en").cast("double").alias("y")
-    )
-    feats = inference.hashed_text_features(docs)
-    old_packed = (
-        feats.groupBy("doc_id")
-        .agg(F.collect_list(F.struct("bucket", "x")).alias("fx"))
-        .join(labels, "doc_id", "right")
-        .select(
-            "doc_id",
-            "y",
-            F.coalesce(
-                "fx", F.array().cast("array<struct<bucket:long,x:double>>")
-            ).alias("fx"),
-        )
-    )
-    new_packed = inference.packed_text_features(docs, labels)
-
-    def norm(df):
-        return {
-            r["doc_id"]: (r["y"], sorted((s["bucket"], round(s["x"], 12)) for s in r["fx"]))
-            for r in df.collect()
-        }
-
-    assert norm(old_packed) == norm(new_packed)
-
-    w, b = inference.train_logreg(feats, labels, n_iter=3, lr=2.0)
-    old_p = {r["doc_id"]: r["p"] for r in inference.score_logreg(feats, w, b).collect()}
-    new_p = {
-        r["doc_id"]: r["p"]
-        for r in inference.score_logreg_packed(new_packed, w, b).collect()
-    }
-    assert set(old_p) == set(new_p)
-    assert all(abs(old_p[k] - new_p[k]) < 1e-9 for k in old_p)

@@ -32,6 +32,11 @@ EMPTY_CATALOG_QUERIES = [
     "knn_label_vote",
     "predict_hit_rate",
     "user_purge_audit",
+    # SQL's grand-total row, which Spark's Expand drops on empty input
+    "revenue_rollup",
+    "status_priority_cube",
+    "status_priority_sets",
+    "priority_grouping_sets",
 ]
 
 
