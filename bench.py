@@ -152,11 +152,14 @@ def estimate(vals: list[float]) -> float:
     return sorted(vals)[len(vals) // 2]
 
 
-def load_baseline(detail_path: str, cur_sf) -> tuple[dict | None, str]:
+def load_baseline(detail_path: str, sf_dir: str) -> tuple[dict | None, str]:
     """(artifact, description) of the baseline both diffs compare to:
     git HEAD's BENCH_DETAIL.json, falling back to the on-disk file if
-    git is unavailable. None when neither reads or its sf differs:
-    comparisons only make sense between sweeps at the same sf."""
+    git is unavailable. None when neither reads or it timed other
+    tables: comparisons only make sense between sweeps over the same
+    data, compared as real paths. A baseline that records no
+    ``sf_dir`` was timed over the default test data: the ``sf<sf>``
+    directory beside the default ``SPARK_GRAFT_SF_DIR``."""
     import subprocess
 
     prev = None
@@ -181,6 +184,7 @@ def load_baseline(detail_path: str, cur_sf) -> tuple[dict | None, str]:
                 prev = json.load(f)
         except Exception:
             return None, baseline_desc
+    sf, cur_sf = parse_sf(sf_dir)
     # ADVICE r08: compare sfs NUMERICALLY — the artifact stores
     # float(sf) ('1.0') while the env path parses to '1', so a string
     # compare silently skipped the diff at any integer sf.
@@ -190,6 +194,9 @@ def load_baseline(detail_path: str, cur_sf) -> tuple[dict | None, str]:
     except (TypeError, ValueError):
         if str(prev.get("sf")) != str(cur_sf):
             return None, baseline_desc
+    base_dir = prev.get("sf_dir", f"/root/testdata/sf{sf}")
+    if os.path.realpath(base_dir) != os.path.realpath(sf_dir):
+        return None, baseline_desc
     return prev, baseline_desc
 
 
@@ -526,6 +533,7 @@ def main(names: list[str]) -> None:
         "value": total,
         "unit": "sec",
         "sf": sf_val,
+        "sf_dir": os.path.realpath(sf_dir),
         "queries": timings,
         "estimator": "per-query median of up to %d samples" % REPS,
         "samples": samples,
@@ -552,7 +560,7 @@ def main(names: list[str]) -> None:
         else f"BENCH_DETAIL_sf{sf}.json"
     )
     detail_path = os.path.join(_REPO_DIR, detail_name)
-    prev, baseline_desc = load_baseline(detail_path, sf_val)
+    prev, baseline_desc = load_baseline(detail_path, sf_dir)
     _print_median_regressions(prev, baseline_desc, timings, detail["cores"])
     _print_counter_diff(prev, baseline_desc, counters, detail["cores"])
     if names:

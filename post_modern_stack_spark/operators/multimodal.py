@@ -1,34 +1,36 @@
-"""Multimodal columns (SURVEY.md §2 K5): image/audio/video as opaque
-``binary`` columns + typed metadata, processed with Arrow-batched
-``mapInPandas`` UDFs.
+"""Multimodal columns (SURVEY.md §2 K5): image, audio and video as
+opaque ``binary`` columns keyed by ``media_id`` and ``kind``.
 
-The Spark-side plumbing — schemas, batch iteration, partition sizing,
-metadata propagation — is real and tested. Codec status: these decode
-FOR REAL in pure numpy + stdlib (parser + pixel/sample math below,
-round-trip-tested): **JPEG** (baseline T.81 — Huffman entropy coder,
-DCT, 4:2:0, see ``operators/jpeg.py``), **PNG** (zlib DEFLATE inflate,
-all five scanline filters reconstructed per spec §9,
-gray/RGB/RGBA/palette), GIF (LZW), 24-bit BMP, P6 PPM, PCM-16 WAV, and
-**G.711 µ-law / A-law** companded WAV (the real 2:1 telephony codec,
-ITU-T expand tables). Only MP3/MP4 — whose entropy coders genuinely
-exceed stdlib reach — stay stubbed: deterministic digest fake by
-default, ``NotImplementedError`` when ``require_real_codecs=True``.
+Every Python pass here (featurize, frame sampling, resize, container
+inventory and the catalog's media synthesis) goes through one batch
+boundary, :func:`_map_rows`: a ``mapInArrow`` iterator that maps the
+rows of one Arrow record batch at a time, so a task holds one batch of
+media, never a partition.
+
+The codecs are pure numpy + stdlib, each round-trip-tested: baseline
+JPEG (T.81 Huffman entropy coder, DCT, 4:2:0; ``operators/jpeg.py``),
+PNG (zlib DEFLATE, all five scanline filters per spec §9, gray/RGB/
+RGBA/palette), GIF (LZW), 24-bit BMP, P6 PPM, PCM-16 WAV and G.711
+µ-law / A-law WAV. One table, ``_CODECS``, picks the codec of a byte
+string from its magic bytes. Bytes it does not know, MP3 and MP4
+included, raise ``NotImplementedError``; under
+``extract_features(on_error="null")`` they become a ``decode_error``
+row instead.
 
 MP3/MP4 SAMPLE decode is a PERMANENT exclusion (decided round 5,
 VERDICT r04 item 6): Layer-III decode hinges on the ISO 11172-3
 Annex B Huffman code tables and the 512-tap polyphase synthesis
 window — large arbitrary constant tables that cannot be derived from
-formulas, in an environment with no reference decoder and no real
-MP3 fixtures to validate against. A from-memory reproduction would
-be silently wrong with no way to detect it, which is strictly worse
-than this honest gate. Container parsing (``parse_mp3_info`` /
-``parse_mp4_info``) is real, fuzz-hardened, and covers every
-inventory/dedup/layout use the engine actually has for these
-formats; decoded-sample analytics are served by the WAV/G.711 path.
+formulas, with no reference decoder and no real MP3 fixtures to
+validate against. A from-memory reproduction would be silently wrong
+with no way to detect it, which is strictly worse than a loud error.
+Container parsing (``parse_mp3_info`` / ``parse_mp4_info``) is real,
+fuzz-hardened, and covers every inventory/dedup/layout use the engine
+has for these formats; decoded-sample analytics are served by the
+WAV/G.711 path.
 
 Design for 100 TB: media bytes ride in parquet binary columns;
-``spark.sql.files.maxPartitionBytes`` bounds per-task memory, and the
-UDFs stream record-batches (never materialize a partition). Feature
+``spark.sql.files.maxPartitionBytes`` bounds per-task memory. Feature
 outputs are fixed-width float arrays → friendly to the K3 similarity
 operators downstream.
 """
@@ -36,22 +38,23 @@ operators downstream.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+import struct
+import zlib
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from post_modern_stack_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
         T.StructField("kind", T.StringType(), False),  # image|audio|video
         T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
     ]
 )
 
@@ -81,10 +84,6 @@ def decode_bmp(content: bytes):
     external media libs): parses BITMAPFILEHEADER + BITMAPINFOHEADER,
     handles 4-byte row padding and bottom-up row order. Returns
     (h, w, 3) uint8 in RGB order."""
-    import struct
-
-    import numpy as np
-
     if content[:2] != b"BM":
         raise ValueError("not a BMP stream")
     data_off = struct.unpack_from("<I", content, 10)[0]
@@ -104,10 +103,6 @@ def decode_bmp(content: bytes):
 
 def encode_bmp(img) -> bytes:
     """Inverse of :func:`decode_bmp` (test fixture + sink side)."""
-    import struct
-
-    import numpy as np
-
     img = np.asarray(img, dtype=np.uint8)
     h, w, _ = img.shape
     row_bytes = (w * 3 + 3) & ~3
@@ -123,10 +118,6 @@ def encode_bmp(img) -> bytes:
 def decode_wav(content: bytes):
     """REAL decoder for PCM-16 WAV (pure numpy): walks RIFF chunks,
     returns (float64 samples in [-1, 1] shaped (n, channels), rate)."""
-    import struct
-
-    import numpy as np
-
     if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise ValueError("not a WAV stream")
     pos, rate, n_ch, bits, fmt = 12, None, None, None, None
@@ -159,10 +150,6 @@ def encode_wav_g711(samples, rate: int) -> bytes:
     """WAV container around G.711 µ-law payload (fmt tag 7): the real
     2:1 compressed telephony codec, encode side of the fmt=7 branch in
     :func:`decode_wav`."""
-    import struct
-
-    import numpy as np
-
     arr = np.asarray(samples, dtype=np.float64)
     if arr.ndim == 1:
         arr = arr[:, None]
@@ -186,10 +173,6 @@ def encode_wav_g711(samples, rate: int) -> bytes:
 
 def encode_wav(samples, rate: int) -> bytes:
     """Inverse of :func:`decode_wav` (test fixture)."""
-    import struct
-
-    import numpy as np
-
     arr = np.asarray(samples, dtype=np.float64)
     if arr.ndim == 1:
         arr = arr[:, None]
@@ -221,10 +204,6 @@ def decode_png(content: bytes):
     (Recon(x) = Filt(x) + Recon(x-bpp) telescopes), Average/Paeth keep
     the inherently sequential x-scan but vectorize across channels.
     """
-    import struct
-
-    import numpy as np
-
     if content[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG stream")
     pos, idat, palette = 8, [], None
@@ -252,8 +231,6 @@ def decode_png(content: bytes):
     channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
     if channels is None:
         raise ValueError(f"bad PNG color type {ctype}")
-    import zlib
-
     raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
     stride = w * channels
     raw = raw.reshape(h, stride + 1)
@@ -302,11 +279,6 @@ def encode_png(img, level: int = 6) -> bytes:
     choice: Up when it shrinks the minimum-sum-of-absolutes heuristic
     (PNG spec §12), else None — so decoders (including ours) see a mix
     of filter types on real data."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     img = np.asarray(img, dtype=np.uint8)
     if img.ndim == 2:
         img = img[:, :, None]
@@ -443,10 +415,6 @@ def decode_gif(content: bytes):
     delays, transparency), per-frame LZW decode, draw-over composition
     onto the canvas at each frame's (left, top) offset. Non-interlaced
     only. Returns (frames (n, h, w, 3) uint8, delays_ms list[int])."""
-    import struct
-
-    import numpy as np
-
     if content[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF stream")
     w, h, packed, _bg, _aspect = struct.unpack_from("<HHBBB", content, 6)
@@ -514,8 +482,6 @@ def decode_gif(content: bytes):
             raise ValueError(f"bad GIF block 0x{block:02x}")
     if not frames:
         raise ValueError("GIF stream has no image frames")
-    import numpy as np
-
     return np.stack(frames), delays
 
 
@@ -524,8 +490,6 @@ def encode_gif(frames, delays_ms=None) -> bytes:
     palette built from the frames' unique colors (≤256 required —
     median-cut quantization is a lossy design choice this exact
     round-trip codec deliberately refuses)."""
-    import numpy as np
-
     frames = np.asarray(frames, dtype=np.uint8)
     if frames.ndim == 3:
         frames = frames[None]
@@ -546,10 +510,6 @@ def encode_gif_indexed(indices, palette, delays_ms=None) -> bytes:
     holds (frame, row, col) palette indices (synthetic media, screen
     content, quantizer output), skip the unique/inverse color mapping
     entirely — the per-pixel work is then just the LZW coder."""
-    import struct
-
-    import numpy as np
-
     indices = np.asarray(indices)
     if indices.ndim == 2:
         indices = indices[None]
@@ -579,8 +539,6 @@ def encode_gif_indexed(indices, palette, delays_ms=None) -> bytes:
 
 def _g711_mulaw_decode_table():
     """ITU-T G.711 µ-law expand table (256 → int16), computed once."""
-    import numpy as np
-
     u = np.arange(256, dtype=np.int64) ^ 0xFF  # stored complemented
     sign = u & 0x80
     exponent = (u >> 4) & 0x07
@@ -591,8 +549,6 @@ def _g711_mulaw_decode_table():
 
 def _g711_alaw_decode_table():
     """ITU-T G.711 A-law expand table (256 → int16), computed once."""
-    import numpy as np
-
     a = np.arange(256, dtype=np.int64) ^ 0x55  # even bits inverted
     sign = a & 0x80
     exponent = (a >> 4) & 0x07
@@ -607,8 +563,6 @@ def mulaw_encode(samples) -> bytes:
     """G.711 µ-law compress float samples in [-1, 1] → one byte each
     (the real 2:1 telephony codec — search the expand table for the
     nearest level, which is exact because µ-law is monotonic)."""
-    import numpy as np
-
     table = _g711_mulaw_decode_table()
     order = np.argsort(table, kind="stable")
     levels = table[order]
@@ -622,8 +576,6 @@ def mulaw_encode(samples) -> bytes:
 
 def decode_ppm(content: bytes):
     """REAL decoder for binary PPM (P6), pure numpy."""
-    import numpy as np
-
     if content[:2] != b"P6":
         raise ValueError("not a P6 PPM stream")
     fields, pos = [], 2
@@ -649,13 +601,15 @@ def decode_ppm(content: bytes):
 
 
 def image_features(img) -> list[float]:
-    """Deterministic FEATURE_DIM vector from a decoded (h, w, 3) image:
+    """Deterministic FEATURE_DIM vector from a decoded (h, w, c) image:
     shape, per-channel mean/std (normalized), and a 2×3 luma grid —
-    the classic cheap visual descriptor."""
-    import numpy as np
-
+    the classic cheap visual descriptor. A gray image counts as RGB
+    with equal channels; alpha is ignored."""
+    img = np.asarray(img)
+    if img.shape[2] < 3:
+        img = np.repeat(img[..., :1], 3, axis=2)
     h, w, _ = img.shape
-    f = np.asarray(img, dtype=np.float64) / 255.0
+    f = np.asarray(img[..., :3], dtype=np.float64) / 255.0
     luma = f @ np.array([0.299, 0.587, 0.114])
     gh, gw = max(h // 2, 1), max(w // 3, 1)
     grid = [
@@ -678,8 +632,6 @@ def audio_features(samples, rate: int) -> list[float]:
     """Deterministic FEATURE_DIM vector from decoded PCM: duration,
     rate, mean/std/RMS, zero-crossing rate, and an 8-bin magnitude
     spectrum (numpy rFFT)."""
-    import numpy as np
-
     mono = np.asarray(samples, dtype=np.float64).mean(axis=1)
     n = len(mono)
     zcr = float(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) / max(
@@ -701,96 +653,97 @@ def audio_features(samples, rate: int) -> list[float]:
     return (feats + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
 
 
-def _decode_and_featurize(content: bytes, kind: str, require_real_codecs: bool):
-    """Codec dispatch by magic bytes. REAL pure-numpy decoders cover
-    baseline JPEG, PNG (zlib DEFLATE + all 5 scanline filters), GIF,
-    24-bit BMP, P6 PPM, PCM-16 WAV, and G.711 µ-law/A-law compressed
-    WAV; only MP3/MP4 remain stubbed — with ``require_real_codecs=True``
-    they raise instead of falling back to the deterministic digest
-    fake."""
-    content = content or b""
-    if content[:3] == b"\xff\xd8\xff":
-        from post_modern_stack_spark.operators.jpeg import decode_jpeg
+def _map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The module's one Python batch boundary: ``fn`` maps each row of
+    ``df`` (a dict) to a list of output rows of ``schema``, one Arrow
+    record batch at a time."""
+    arrow_schema = to_arrow_schema(schema)
 
-        return image_features(decode_jpeg(content))
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        frames, _delays = decode_gif(content)
-        return image_features(frames[0])  # keyframe descriptor
-    if content[:8] == b"\x89PNG\r\n\x1a\n":
-        img = decode_png(content)
-        if img.shape[2] == 1:  # grayscale → replicate for RGB features
-            import numpy as np
+    def run(batches):
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-            img = np.repeat(img, 3, axis=2)
-        return image_features(img[..., :3])
-    if content[:2] == b"BM":
-        return image_features(decode_bmp(content))
-    if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-        return audio_features(*decode_wav(content))
-    if content[:2] == b"P6":
-        return image_features(decode_ppm(content))
-    if require_real_codecs:
-        raise NotImplementedError(
-            "media codecs without stdlib entropy coders (MP3/MP4) are "
-            "unavailable in this environment; JPEG/PNG/GIF/BMP/PPM/"
-            "WAV(PCM+G.711) decode natively"
-        )
-    digest = hashlib.sha256(content).digest()
-    return [
-        float(int.from_bytes(digest[2 * i : 2 * i + 2], "big")) / 65535.0
-        for i in range(FEATURE_DIM)
-    ]
+    return df.mapInArrow(run, schema)
 
 
-def extract_features(
-    media: DataFrame, require_real_codecs: bool = False, on_error: str = "raise"
-) -> DataFrame:
-    """Decode + featurize media rows via ``mapInPandas`` (Arrow batch
-    transfer, iterator API — constant memory per task).
+def resize_image(img, out_h: int, out_w: int):
+    """REAL nearest-neighbor resize (pure numpy): index-map sampling,
+    the standard thumbnail path when no interpolation library exists.
+    Deterministic: output pixel (r, c) samples input
+    (floor(r*h/out_h), floor(c*w/out_w))."""
+    img = np.asarray(img)
+    h, w = img.shape[:2]
+    rows = (np.arange(out_h) * h) // out_h
+    cols = (np.arange(out_w) * w) // out_w
+    return img[rows][:, cols]
+
+
+# The one codec table: magic bytes at an offset → (decode, features of
+# the decoded value, encoder for a resized image). Raw formats are
+# written back as BMP; GIF and WAV have no resize route.
+_CODECS = (
+    (0, b"\xff\xd8\xff", decode_jpeg, image_features, encode_jpeg),
+    (0, b"GIF87a", lambda c: decode_gif(c)[0][0], image_features, None),
+    (0, b"GIF89a", lambda c: decode_gif(c)[0][0], image_features, None),
+    (0, b"\x89PNG\r\n\x1a\n", decode_png, image_features, encode_png),
+    (0, b"BM", decode_bmp, image_features, encode_bmp),
+    (8, b"WAVE", decode_wav, lambda d: audio_features(*d), None),
+    (0, b"P6", decode_ppm, image_features, encode_bmp),
+)
+
+
+def _codec(content: bytes):
+    """(decode, features, encode) of the codec whose magic ``content``
+    carries."""
+    for offset, magic, *codec in _CODECS:
+        if content[offset : offset + len(magic)] == magic:
+            return codec
+    raise NotImplementedError(
+        "no codec for these bytes: MP3/MP4 sample decode is not implemented; "
+        "JPEG/PNG/GIF/BMP/PPM/WAV(PCM+G.711) decode natively"
+    )
+
+
+def extract_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
+    """Decode + featurize media rows through the codec table.
 
     ``on_error`` (the PERMISSIVE-mode contract, mirroring Spark's JSON
-    reader): ``"raise"`` keeps strict semantics — any malformed byte
-    stream fails the task (right for codec-verification pipelines over
-    bytes you produced). ``"null"`` catches per-row decode errors and
-    emits (features=null, decode_error=<message>) instead: at corpus
-    scale one corrupt file in a billion must surface as a DATA row a
-    downstream filter can count/quarantine, never as a dead executor
-    task 6 hours into the job. Identity/bookkeeping columns (n_bytes,
-    content_sha) are still computed for failed rows, so quarantined
-    files remain addressable for dedup/audit."""
+    reader): ``"raise"`` keeps strict semantics — any malformed or
+    unknown byte stream fails the task (right for codec-verification
+    pipelines over bytes you produced). ``"null"`` catches per-row
+    decode errors and emits (features=null, decode_error=<message>)
+    instead: at corpus scale one corrupt file in a billion must surface
+    as a DATA row a downstream filter can count/quarantine, never as a
+    dead executor task 6 hours into the job. Identity/bookkeeping
+    columns (n_bytes, content_sha) are still computed for failed rows,
+    so quarantined files remain addressable for dedup/audit."""
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     permissive = on_error == "null"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats: list = []
-            errs: list = []
-            for c, k in zip(pdf["content"], pdf["kind"]):
-                if not permissive:
-                    feats.append(_decode_and_featurize(c, k, require_real_codecs))
-                    continue
-                try:
-                    feats.append(_decode_and_featurize(c, k, require_real_codecs))
-                    errs.append(None)
-                except Exception as e:  # corrupt bytes -> data, not task death
-                    feats.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:512])
-            out = {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": [len(c or b"") for c in pdf["content"]],
-                "content_sha": [
-                    hashlib.sha256(c or b"").hexdigest() for c in pdf["content"]
-                ],
-                "features": feats,
-            }
-            if permissive:
-                out["decode_error"] = errs
-            yield pd.DataFrame(out)
+    def featurize(content: bytes) -> list[float]:
+        decode, features, _ = _codec(content)
+        return features(decode(content))
+
+    def run(row: dict) -> list[dict]:
+        c = row["content"] or b""
+        out = {
+            "media_id": row["media_id"],
+            "kind": row["kind"],
+            "n_bytes": len(c),
+            "content_sha": hashlib.sha256(c).hexdigest(),
+        }
+        if not permissive:
+            return [{**out, "features": featurize(c)}]
+        try:
+            out["features"], out["decode_error"] = featurize(c), None
+        except Exception as e:  # corrupt bytes -> data, not task death
+            out["features"], out["decode_error"] = None, f"{type(e).__name__}: {e}"[:512]
+        return [out]
 
     schema = FEATURES_PERMISSIVE_SCHEMA if permissive else FEATURES_SCHEMA
-    return media.mapInPandas(run, schema)
+    return _map_rows(media.select("media_id", "kind", "content"), run, schema)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -808,39 +761,34 @@ def sample_frames(media: DataFrame, every_ms: int = 40) -> DataFrame:
     """REAL video frame sampling: decode animated GIF (LZW codec
     above), walk the cumulative frame-delay timeline, and emit the
     frame visible at each ``every_ms`` tick with its mean luma and a
-    content fingerprint. mapInPandas iterator API — one decoded video
-    in memory at a time per task; output rows are tiny (scalars +
-    sha), so frame explosion never materializes pixel data in the
-    shuffle."""
-    import hashlib as _hl
+    content fingerprint. One decoded video in memory at a time per
+    task; output rows are tiny (scalars + sha), so frame explosion
+    never materializes pixel data in the shuffle."""
 
-    import numpy as np
+    def run(row: dict) -> list[dict]:
+        frames, delays = decode_gif(row["content"] or b"")
+        # cumulative start time of each frame; 0-delay frames
+        # get a 1 ms floor so the timeline strictly advances
+        starts = np.cumsum([0] + [max(d, 1) for d in delays[:-1]])
+        total = starts[-1] + max(delays[-1], 1)
+        lumas = (
+            frames.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+        ).mean(axis=(1, 2)) / 255.0
+        out = []
+        for ts in range(0, int(total), every_ms):
+            i = int(np.searchsorted(starts, ts, side="right") - 1)
+            out.append(
+                {
+                    "media_id": row["media_id"],
+                    "frame_ts_ms": ts,
+                    "frame_idx": i,
+                    "mean_luma": round(float(lumas[i]), 6),
+                    "frame_sha": hashlib.sha256(frames[i].tobytes()).hexdigest(),
+                }
+            )
+        return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "frame_ts_ms", "frame_idx",
-                                    "mean_luma", "frame_sha")}
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                frames, delays = decode_gif(bytes(c or b""))
-                # cumulative start time of each frame; 0-delay frames
-                # get a 1 ms floor so the timeline strictly advances
-                starts = np.cumsum([0] + [max(d, 1) for d in delays[:-1]])
-                total = starts[-1] + max(delays[-1], 1)
-                lumas = (
-                    frames.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                ).mean(axis=(1, 2)) / 255.0
-                for ts in range(0, int(total), every_ms):
-                    i = int(np.searchsorted(starts, ts, side="right") - 1)
-                    rows["media_id"].append(mid)
-                    rows["frame_ts_ms"].append(ts)
-                    rows["frame_idx"].append(i)
-                    rows["mean_luma"].append(round(float(lumas[i]), 6))
-                    rows["frame_sha"].append(
-                        _hl.sha256(frames[i].tobytes()).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "content").mapInPandas(run, FRAMES_SCHEMA)
+    return _map_rows(media.select("media_id", "content"), run, FRAMES_SCHEMA)
 
 
 def media_dedup(media: DataFrame) -> DataFrame:
@@ -855,20 +803,6 @@ def media_dedup(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_image(img, out_h: int, out_w: int):
-    """REAL nearest-neighbor resize (pure numpy): index-map sampling,
-    the standard thumbnail path when no interpolation library exists.
-    Deterministic: output pixel (r, c) samples input
-    (floor(r*h/out_h), floor(c*w/out_w))."""
-    import numpy as np
-
-    img = np.asarray(img)
-    h, w = img.shape[:2]
-    rows = (np.arange(out_h) * h) // out_h
-    cols = (np.arange(out_w) * w) // out_w
-    return img[rows][:, cols]
-
-
 RESIZED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -879,58 +813,22 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_media(
-    media: DataFrame, out_h: int = 4, out_w: int = 4, require_real_codecs: bool = True
-) -> DataFrame:
-    """Thumbnail pipeline over binary image columns: decode (real codec
-    for JPEG/PNG/BMP/PPM) → nearest-neighbor resize → re-encode in the
-    input format (JPEG stays JPEG through the real baseline coder, PNG
-    stays PNG through the real zlib encoder, BMP/PPM emit BMP).
-    mapInPandas iterator API — record batches stream through,
-    constant memory per task; output is again an opaque binary column,
-    so the op composes with media_dedup / extract_features downstream."""
+def resize_media(media: DataFrame, out_h: int = 4, out_w: int = 4) -> DataFrame:
+    """Thumbnail pipeline over binary image columns: decode through the
+    codec table → nearest-neighbor resize → re-encode in the input
+    format (JPEG stays JPEG, PNG stays PNG, BMP/PPM emit BMP). The
+    output is again an opaque binary column, so the op composes with
+    media_dedup / extract_features downstream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for c in pdf["content"]:
-                c = bytes(c or b"")
-                if c[:8] == b"\x89PNG\r\n\x1a\n":
-                    out.append(encode_png(resize_image(decode_png(c), out_h, out_w)))
-                    continue
-                if c[:3] == b"\xff\xd8\xff":
-                    from post_modern_stack_spark.operators.jpeg import (
-                        decode_jpeg,
-                        encode_jpeg,
-                    )
+    def run(row: dict) -> list[dict]:
+        c = row["content"] or b""
+        decode, _, encode = _codec(c)
+        if encode is None:
+            raise NotImplementedError("resize_media: GIF and WAV bytes are not resized")
+        thumb = encode(resize_image(decode(c), out_h, out_w))
+        return [{"media_id": row["media_id"], "out_h": out_h, "out_w": out_w, "content": thumb}]
 
-                    out.append(
-                        encode_jpeg(resize_image(decode_jpeg(c), out_h, out_w))
-                    )
-                    continue
-                if c[:2] == b"BM":
-                    img = decode_bmp(c)
-                elif c[:2] == b"P6":
-                    img = decode_ppm(c)
-                elif require_real_codecs:
-                    raise NotImplementedError(
-                        "resize_media: only JPEG/PNG/BMP/PPM decode natively "
-                        "in this environment"
-                    )
-                else:
-                    out.append(None)
-                    continue
-                out.append(encode_bmp(resize_image(img, out_h, out_w)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_h": out_h,
-                    "out_w": out_w,
-                    "content": out,
-                }
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
+    return _map_rows(media.select("media_id", "content"), run, RESIZED_SCHEMA)
 
 
 # --- MP3 / MP4 container parsing (real, stdlib-only) -----------------------
@@ -999,8 +897,6 @@ def parse_mp4_info(content: bytes) -> dict:
     """Walk the ISO BMFF box tree: top-level sizes/types (64-bit
     largesize handled), recurse into ``moov`` for ``mvhd`` (version
     0/1 timescale + duration) and count ``trak`` boxes."""
-    import struct
-
     data = content or b""
 
     def walk(lo: int, hi: int):
@@ -1069,27 +965,120 @@ CONTAINER_SCHEMA = T.StructType(
 def container_info(media: DataFrame) -> DataFrame:
     """Media-inventory metadata pass: container kind, duration, frame/
     track counts, bitrate — parsed from headers only (constant work
-    per file regardless of media size), via the same mapInPandas
-    iterator shape as ``extract_features``."""
+    per file regardless of media size)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, c in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                c = c or b""
-                info = parse_mp3_info(c)
-                if not info["container"]:
-                    info = parse_mp4_info(c)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "container": info["container"],
-                        "duration_ms": info["duration_ms"],
-                        "n_units": info["n_units"],
-                        "bitrate_kbps": info["bitrate_kbps"],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def run(row: dict) -> list[dict]:
+        info = parse_mp3_info(row["content"])
+        if not info["container"]:
+            info = parse_mp4_info(row["content"])
+        return [{"media_id": row["media_id"], "kind": row["kind"], **info}]
 
-    return media.mapInPandas(run, CONTAINER_SCHEMA)
+    return _map_rows(media.select("media_id", "kind", "content"), run, CONTAINER_SCHEMA)
+
+
+# --- synthetic media for the catalog queries ------------------------------
+# The catalog's tables carry no media, so each media query builds its
+# bytes from a document's text (or id) with one of these functions.
+# They live here, not in the plans module, so Spark pickles them by
+# reference, and tests rebuild the same bytes to check a query's rows.
+
+
+def synthesize_media(docs: DataFrame, col: str, encode, kind) -> DataFrame:
+    """MEDIA_SCHEMA frame with one row per row of ``docs``: ``media_id``
+    is ``doc_id``, ``content`` is ``encode`` of the row's ``col`` value,
+    and ``kind`` is a constant or a function of the same value."""
+    kind_of = kind if callable(kind) else (lambda _: kind)
+
+    def run(row: dict) -> list[dict]:
+        value = row[col]
+        return [
+            {"media_id": row["doc_id"], "kind": kind_of(value), "content": encode(value)}
+        ]
+
+    return _map_rows(docs, run, MEDIA_SCHEMA)
+
+
+def digest_rgb(text: str):
+    """4×4 RGB image from the text's two sha256 digests."""
+    d = hashlib.sha256(text.encode()).digest() + hashlib.sha256(text.encode() + b"x").digest()
+    return np.frombuffer(d[:48], dtype=np.uint8).reshape(4, 4, 3)
+
+
+def digest_bmp(text: str) -> bytes:
+    return encode_bmp(digest_rgb(text))
+
+
+def gradient_rgb(text: str, side: int):
+    """side×side RGB image: a row gradient (it makes the PNG encoder's
+    Up filter fire) plus noise from the text's digests."""
+    grad = np.tile(np.arange(side, dtype=np.uint16)[:, None, None] * (192 // side), (1, side, 3))
+    n = side * side * 3
+    d = b"".join(hashlib.sha256(text.encode() + bytes([i])).digest() for i in range(n // 32))
+    noise = np.frombuffer(d[:n], dtype=np.uint8).reshape(side, side, 3)
+    return ((grad + (noise >> 3)) & 0xFF).astype(np.uint8)
+
+
+def gradient_png(text: str) -> bytes:
+    return encode_png(gradient_rgb(text, 8))
+
+
+def gradient_jpeg(text: str) -> bytes:
+    """16×16 = one 4:2:0 MCU, so decode runs the interleaved-MCU and
+    chroma-upsample paths."""
+    return encode_jpeg(gradient_rgb(text, 16), quality=85, subsample=True)
+
+
+def sine_wave(text: str):
+    """50 ms at 8 kHz of a sine whose frequency (200..1220 Hz) and
+    amplitude (0.2..0.7) come from the text's digest."""
+    d = hashlib.sha256(text.encode()).digest()
+    freq = 200.0 + (d[0] << 2)
+    amp = 0.2 + d[1] / 512.0
+    t_axis = np.arange(400) / 8000.0
+    return amp * np.sin(2 * np.pi * freq * t_axis)
+
+
+def g711_sine(text: str) -> bytes:
+    return encode_wav_g711(sine_wave(text), 8000)
+
+
+def gif_indices(text: str):
+    """(palette indices (4, 8, 8), palette (8, 3)) of a 4-frame 8×8
+    video, drawn from a PCG stream seeded by the text's digest."""
+    seed = int.from_bytes(hashlib.sha256(text.encode()).digest()[:8], "big")
+    rng = np.random.default_rng(seed)
+    palette = rng.integers(0, 256, (8, 3), dtype=np.uint8)
+    return rng.integers(0, 8, (4, 8, 8), dtype=np.uint8), palette
+
+
+def gif_video(text: str) -> bytes:
+    return encode_gif_indexed(*gif_indices(text), [40, 40, 40, 40])
+
+
+_MP3_FRAME = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(144 * 128000 // 44100 - 4)
+
+
+def container_kind(doc_id: int) -> str:
+    """'corrupt' when doc_id % 10 == 9, else 'audio' for an even id and
+    'video' for an odd one."""
+    if doc_id % 10 == 9:
+        return "corrupt"
+    return "audio" if doc_id % 2 == 0 else "video"
+
+
+def container_bytes(doc_id: int) -> bytes:
+    """The container :func:`container_kind` names: junk bytes; an MP3 of
+    1 + doc_id % 20 frames at 128 kbps; or an MP4 of 1 + doc_id % 30
+    seconds with two tracks."""
+    kind = container_kind(doc_id)
+    if kind == "corrupt":
+        return b"junkbytes" + bytes(doc_id % 7)
+    if kind == "audio":
+        return _MP3_FRAME * (1 + doc_id % 20)
+
+    def box(typ: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(payload)) + typ + payload
+
+    mvhd = bytes(12) + struct.pack(">II", 1000, 1000 * (1 + doc_id % 30)) + bytes(80)
+    moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", b"") * 2)
+    return box(b"ftyp", b"isom" + bytes(8)) + moov

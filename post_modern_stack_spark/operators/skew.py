@@ -24,18 +24,26 @@ def widen_narrow_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     """Guide §2.5 "input skew: one huge unsplittable file" remedy as a
     conditional operator (r11 optimization round): round-robin
     repartition a SCAN-stage frame to the session's default parallelism
-    when the source yields fewer partitions than
-    ``min_fraction × defaultParallelism``.
+    when the scan can run fewer than ``min_fraction ×
+    defaultParallelism`` tasks that carry rows.
 
-    Why: parquet assigns one task per row group — the bench corpus
+    Why: parquet hands each row group to one task — the bench corpus
     ships each table as a single-row-group file, so every per-row-heavy
     pass (JSON parse, exact percentile buffers, n-gram explode) runs on
     ONE core while 31 idle. The same shape appears in production with
     gzip inputs, single-row-group writers, or small dimension tables
-    feeding heavy per-row transforms. At real scale the file splits
-    already provide the parallelism, the probe sees a wide scan, and
-    this is a no-op — the extra exchange is never paid where it would
-    be pure cost.
+    feeding heavy per-row transforms. At real scale the row groups
+    already provide the parallelism and this is a no-op — the extra
+    exchange is never paid where it would be pure cost.
+
+    A scan's width is the smaller of its byte splits and its parquet
+    row groups: a one-row-group file that spans several splits still
+    reads on one task (the other splits hold no row group's midpoint).
+    Row groups are counted from the footers of ``df.inputFiles()``,
+    and only until the count reaches the bar. A frame whose files are
+    not all local parquet files with readable footers (gzip CSV/JSON,
+    ``s3a://`` or HDFS paths), or that reads no files, is judged by its
+    partitions alone.
 
     Call ONLY on shuffle-free frames (scan + projection/filter): the
     partition probe walks the physical RDD, which would materialize
@@ -49,11 +57,36 @@ def widen_narrow_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     rounding absorbs — the same reorder class post-shuffle collect_list
     already exhibits without this helper (ADVICE r11).
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, int(target * min_fraction)):
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    bar = max(1, int(target * min_fraction))
+    if df.rdd.getNumPartitions() >= bar:
+        groups = _row_groups(df.inputFiles(), bar)
+        if groups is None or groups >= bar:
+            return df
     return df.repartition(target)
+
+
+def _row_groups(files: list[str], stop_at: int) -> int | None:
+    """Parquet row groups across ``files``, read from their footers and
+    counted only until the total reaches ``stop_at``. None when there
+    are no files, or one is not a local file whose parquet footer
+    reads."""
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    n = 0
+    for uri in files:
+        if not uri.startswith("file:"):
+            return None
+        try:
+            fs, path = pafs.FileSystem.from_uri(uri)
+            n += pq.read_metadata(path, filesystem=fs).num_row_groups
+        except (OSError, pa.ArrowException):
+            return None
+        if n >= stop_at:
+            return n
+    return n if files else None
 
 
 def with_salt(df: DataFrame, buckets: int = 16, salt_col: str = "_salt") -> DataFrame:

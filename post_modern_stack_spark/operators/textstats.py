@@ -290,43 +290,29 @@ def fingerprint(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = False,
 ) -> DataFrame:
     """Order-sensitive rolling document fingerprint. Equal fingerprints
     ⇒ equal token sequences (modulo collision).
 
-    Default: fold token xxhashes with shift+xor (bitwise only — safe
-    under ANSI overflow checks; 64-bit space). ``portable=True``
-    switches to a polynomial rolling hash over character codes mod
-    1e9+7 — ~2^30 space, engine-REPLAYABLE arithmetic (no xxhash), so
-    the run gets a DuckDB oracle twin; the smaller space trades
-    collision odds for checkability, the 64-bit default stays the
-    at-scale path.
+    A polynomial rolling hash over character codes mod 1e9+7 (~2^30
+    space) in engine-replayable arithmetic, so the result has a DuckDB
+    oracle twin; the smaller space trades collision odds for
+    checkability.
     """
-    toks = tokens(text_col)
-    if portable:
-        p = 1000000007
+    p = 1000000007
 
-        def tok_val(t: F.Column) -> F.Column:
-            return F.aggregate(
-                F.split(t, ""),
-                F.lit(7).cast("long"),
-                lambda a, ch: (a * 31 + F.ascii(ch)) % p,
-            )
+    def tok_val(t: F.Column) -> F.Column:
+        return F.aggregate(
+            F.split(t, ""),
+            F.lit(7).cast("long"),
+            lambda a, ch: (a * 31 + F.ascii(ch)) % p,
+        )
 
-        fp = F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: (acc * 131 + tok_val(t)) % p,
-        )
-    else:
-        fp = F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: F.shiftleft(acc, 5)
-            .bitwiseXOR(F.shiftright(acc, 59))
-            .bitwiseXOR(F.xxhash64(t)),
-        )
+    fp = F.aggregate(
+        tokens(text_col),
+        F.lit(0).cast("long"),
+        lambda acc, t: (acc * 131 + tok_val(t)) % p,
+    )
     return df.select(F.col(id_col), fp.alias("fingerprint"))
 
 

@@ -1,14 +1,16 @@
-"""Multimodal-column queries (SURVEY.md §2 K5) with DuckDB oracles.
+"""Multimodal-column queries (SURVEY.md §2 K5).
 
-The driver's tables carry no real media, so the catalog queries
-construct the binary modality the way an ingest job would: document
-text → ``binary`` content column (UTF-8 encode — deterministic, both
-engines agree byte-for-byte), typed metadata alongside. Everything
-downstream of that construction is the REAL multimodal surface: binary
-digests (JVM-side sha2 — no decode), byte-length stats, kind-grained
-rollups, exact binary dedup (operators/multimodal.media_dedup). The
-codec boundary itself (decode/resize/frame-sample) stays in
-operators/multimodal with stubbed codecs per driver instruction.
+The catalog's tables carry no real media, so the queries construct
+the binary modality the way an ingest job would. The two
+oracle-paired queries encode document text as a ``binary`` content
+column (UTF-8 — deterministic, both engines agree byte-for-byte) and
+work on it JVM-side: digests, byte-length stats, kind-grained rollups,
+exact binary dedup (operators/multimodal.media_dedup). The seven
+rows-only queries build real media bytes per document with
+``multimodal.synthesize_media`` and one of its encoders, then run them
+through the real codecs of operators/multimodal: decode, featurize,
+resize, frame-sample and container parsing. tests/test_multimodal.py
+rebuilds the same bytes to check each of their rows.
 """
 
 from __future__ import annotations
@@ -16,20 +18,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.operators import multimodal
+from post_modern_stack_spark.operators import multimodal as mm
 from post_modern_stack_spark.plans.entryflow import query
 from post_modern_stack_spark.registry import load_table
 from post_modern_stack_spark.operators.skew import widen_narrow_scan
 
 
 def _as_media(docs: DataFrame) -> DataFrame:
-    """documents → media-shaped frame: binary content + typed metadata
-    (source plays the role of media kind)."""
+    """documents → MEDIA_SCHEMA-shaped frame: the text's bytes as
+    content (source plays the role of media kind)."""
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.col("source").alias("kind"),
         F.encode(F.col("text"), "UTF-8").alias("content"),
-        F.lit("application/octet-stream").alias("mime"),
     )
 
 
@@ -111,57 +112,20 @@ def q_media_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _as_media(
         corpus.withColumn("source", F.lit("replay")).select("doc_id", "source", "text")
     )
-    return multimodal.media_dedup(media).filter(F.col("n_copies") > 1)
+    return mm.media_dedup(media).filter(F.col("n_copies") > 1)
 
 
 @query("media_real_features")  # rows-only: BMP byte assembly + FFT math
 def q_media_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5 with the REAL codec path (no stubs, no external libs):
-    deterministic 4×4 RGB images are assembled per document from its
-    sha256 digest, encoded as genuine 24-bit BMP files, then decoded +
-    featurized by the pure-numpy codec (operators/multimodal.decode_bmp
-    → image_features) under ``require_real_codecs=True``, so any
-    fallback to the digest fake would fail the query. Rows-only: BMP
-    byte assembly isn't SQL-expressible; correctness is pytest-anchored
-    (tests/test_multimodal.py round-trip + parity tests)."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmp,
-        extract_features,
-    )
-
+    """K5 with the REAL codec path (no external libs): a deterministic
+    4×4 RGB image per document (``mm.digest_rgb``), encoded as a
+    genuine 24-bit BMP, then decoded + featurized by the pure-numpy
+    codec (decode_bmp → image_features). extract_features has no
+    fallback, so a codec failure fails the query. Rows-only: BMP byte
+    assembly isn't SQL-expressible."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                digest = _hl.sha256(t.encode()).digest() + _hl.sha256(
-                    t.encode() + b"x"
-                ).digest()
-                img = np.frombuffer(digest[:48], dtype=np.uint8).reshape(4, 4, 3)
-                content.append(encode_bmp(img))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "content": content,
-                    "mime": "image/bmp",
-                    "width": 4,
-                    "height": 4,
-                    "duration_ms": None,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    feats = extract_features(media, require_real_codecs=True)
-    return feats.select(
+    media = mm.synthesize_media(docs, "text", mm.digest_bmp, "image")
+    return mm.extract_features(media).select(
         "media_id",
         "n_bytes",
         "content_sha",
@@ -170,58 +134,27 @@ def q_media_real_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("media_thumbnails")  # rows-only: binary assembly not SQL-expressible
-def q_media_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5 resize surface with the REAL codec: the same digest-derived
-    4×4 BMPs as media_real_features, thumbnailed to 2×2 via
-    decode→nearest-neighbor-resize→re-encode (operators/multimodal.
-    resize_media) and fingerprinted — a byte-identical sha2 per input
-    proves the whole decode/resize/encode chain is deterministic
-    through Arrow batching."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmp,
-        resize_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                digest = _hl.sha256(t.encode()).digest() + _hl.sha256(
-                    t.encode() + b"x"
-                ).digest()
-                img = np.frombuffer(digest[:48], dtype=np.uint8).reshape(4, 4, 3)
-                content.append(encode_bmp(img))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "content": content,
-                    "mime": "image/bmp",
-                    "width": 4,
-                    "height": 4,
-                    "duration_ms": None,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    thumbs = resize_media(media, out_h=2, out_w=2)
-    return thumbs.select(
+def _thumbnails(media: DataFrame, side: int) -> DataFrame:
+    return mm.resize_media(media, out_h=side, out_w=side).select(
         "media_id",
         "out_h",
         "out_w",
         F.length("content").alias("n_bytes"),
         F.sha2("content", 256).alias("thumb_sha"),
     )
+
+
+@query("media_thumbnails")  # rows-only: binary assembly not SQL-expressible
+def q_media_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K5 resize surface with the REAL codec: the same 4×4 BMPs as
+    media_real_features, thumbnailed to 2×2 via
+    decode→nearest-neighbor-resize→re-encode (mm.resize_media) and
+    fingerprinted — a byte-identical sha2 per input proves the whole
+    decode/resize/encode chain is deterministic through Arrow
+    batching."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    media = mm.synthesize_media(docs, "text", mm.digest_bmp, "image")
+    return _thumbnails(media, 2)
 
 
 @query("media_png_pipeline")  # rows-only: PNG byte assembly not SQL-expressible
@@ -232,103 +165,23 @@ def q_media_png_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fire, so decode exercises filter reconstruction, not just
     filter-0 passthrough) is encoded as a genuine PNG, thumbnailed
     2×2 by resize_media (decode → NN-resize → re-encode PNG), and
-    fingerprinted. Any fallback to the digest fake fails the query
-    (strict codecs)."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_png,
-        resize_media,
-    )
-
+    fingerprinted."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grad = np.tile(np.arange(8, dtype=np.uint16)[:, None, None] * 24, (1, 8, 3))
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                d = b"".join(
-                    _hl.sha256(t.encode() + bytes([i])).digest() for i in range(6)
-                )
-                noise = np.frombuffer(d[:192], dtype=np.uint8).reshape(8, 8, 3)
-                img = ((grad + (noise >> 3)) & 0xFF).astype(np.uint8)
-                content.append(encode_png(img))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "content": content,
-                    "mime": "image/png",
-                    "width": 8,
-                    "height": 8,
-                    "duration_ms": None,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    thumbs = resize_media(media, out_h=2, out_w=2)
-    return thumbs.select(
-        "media_id",
-        "out_h",
-        "out_w",
-        F.length("content").alias("n_bytes"),
-        F.sha2("content", 256).alias("thumb_sha"),
-    )
+    media = mm.synthesize_media(docs, "text", mm.gradient_png, "image")
+    return _thumbnails(media, 2)
 
 
 @query("media_g711_audio")  # rows-only: G.711 byte assembly not SQL-expressible
 def q_media_g711_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 with the REAL G.711 µ-law codec (ITU-T companding tables,
     2:1 compressed telephony audio): per document, a deterministic
-    sine-plus-noise waveform is µ-law-compressed into a fmt=7 WAV,
-    then decoded + featurized strictly (expand table → float PCM →
+    sine (``mm.sine_wave``) is µ-law-compressed into a fmt=7 WAV, then
+    decoded + featurized (expand table → float PCM →
     duration/RMS/ZCR/spectrum features). Emits stable rounded scalars
     so the driver's rows-only check sees a deterministic frame."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_wav_g711,
-        extract_features,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t_axis = np.arange(400) / 8000.0
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                d = _hl.sha256(t.encode()).digest()
-                freq = 200.0 + (d[0] << 2)  # 200..1220 Hz, digest-pinned
-                amp = 0.2 + d[1] / 512.0
-                wave = amp * np.sin(2 * np.pi * freq * t_axis)
-                content.append(encode_wav_g711(wave, 8000))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "audio",
-                    "content": content,
-                    "mime": "audio/basic",
-                    "width": None,
-                    "height": None,
-                    "duration_ms": 50,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    feats = extract_features(media, require_real_codecs=True)
-    return feats.select(
+    media = mm.synthesize_media(docs, "text", mm.g711_sine, "audio")
+    return mm.extract_features(media).select(
         "media_id",
         "n_bytes",
         F.round(F.element_at("features", 1), 6).alias("duration_s"),
@@ -341,50 +194,14 @@ def q_media_g711_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 video surface with a REAL compressed codec end-to-end: per
     document a 4-frame animated GIF (LZW-encoded, palette from the doc
-    digest) is assembled, then operators/multimodal.sample_frames
-    decodes it and emits the frame visible at each 40 ms tick with
-    mean luma + frame fingerprint — the video keyframe-extraction
-    pattern with the pixel data never entering a shuffle (only scalars
-    and hashes leave the task)."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_gif_indexed,
-        sample_frames,
-    )
-
+    digest) is assembled, then mm.sample_frames decodes it and emits
+    the frame visible at each 40 ms tick with mean luma + frame
+    fingerprint — the video keyframe-extraction pattern with the pixel
+    data never entering a shuffle (only scalars and hashes leave the
+    task)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                # one digest seeds a PCG stream for palette + indices —
-                # deterministic per text, no per-pixel hashing
-                seed = int.from_bytes(_hl.sha256(t.encode()).digest()[:8], "big")
-                rng = np.random.default_rng(seed)
-                palette = rng.integers(0, 256, (8, 3), dtype=np.uint8)
-                idx = rng.integers(0, 8, (4, 8, 8), dtype=np.uint8)
-                content.append(encode_gif_indexed(idx, palette, [40, 40, 40, 40]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "video",
-                    "content": content,
-                    "mime": "image/gif",
-                    "width": 8,
-                    "height": 8,
-                    "duration_ms": 160,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    return sample_frames(media, every_ms=40)
+    media = mm.synthesize_media(docs, "text", mm.gif_video, "video")
+    return mm.sample_frames(media, every_ms=40)
 
 
 @query("media_jpeg_pipeline")  # rows-only: JPEG byte assembly not SQL-expressible
@@ -392,116 +209,33 @@ def q_media_jpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 with the REAL baseline JPEG codec (T.81 Huffman + DCT, pure
     numpy — operators/jpeg.py): per document, a deterministic 16×16
     RGB image (digest noise over a gradient) is encoded as genuine
-    4:2:0 baseline JPEG (16×16 = exactly one MCU plus chroma
-    subsampling, so decode exercises the interleaved-MCU and upsample
-    paths, not just 4:4:4), thumbnailed 8×8 by resize_media
-    (decode → NN-resize → re-encode JPEG), and fingerprinted. Any
-    fallback to the digest fake fails the query (strict codecs).
+    4:2:0 baseline JPEG, thumbnailed 8×8 by resize_media
+    (decode → NN-resize → re-encode JPEG), and fingerprinted.
 
     Bounded to 2000 docs: the Huffman entropy coder is per-image
     Python (correctness surface, not a throughput path — a production
     run would decode with a native library behind the same dispatch),
     so the query demonstrates the plumbing at a fixed cost per SF."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from post_modern_stack_spark.operators.jpeg import encode_jpeg
-    from post_modern_stack_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_media,
-    )
-
-    # the 2000 survivors sit in 1-2 parquet splits; the per-image
+    # the 2000 survivors sit in 1-2 parquet row groups; the per-image
     # Python coder is the cost, so spread rows across all cores
-    # (r11: conditional helper instead of a hard-coded repartition(32)
-    # — same effect locally, a no-op on already-wide scans)
     docs = widen_narrow_scan(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") < 2000)
     )
-
-    def to_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grad = np.tile(
-            np.arange(16, dtype=np.uint16)[:, None, None] * 12, (1, 16, 3)
-        )
-        for pdf in batches:
-            content = []
-            for t in pdf["text"]:
-                d = b"".join(
-                    _hl.sha256(t.encode() + bytes([i])).digest() for i in range(24)
-                )
-                noise = np.frombuffer(d[:768], dtype=np.uint8).reshape(16, 16, 3)
-                img = ((grad + (noise >> 3)) & 0xFF).astype(np.uint8)
-                content.append(encode_jpeg(img, quality=85, subsample=True))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "content": content,
-                    "mime": "image/jpeg",
-                    "width": 16,
-                    "height": 16,
-                    "duration_ms": None,
-                }
-            )
-
-    media = docs.mapInPandas(to_media, MEDIA_SCHEMA)
-    thumbs = resize_media(media, out_h=8, out_w=8)
-    return thumbs.select(
-        "media_id",
-        "out_h",
-        "out_w",
-        F.length("content").alias("n_bytes"),
-        F.sha2("content", 256).alias("thumb_sha"),
-    )
+    media = mm.synthesize_media(docs, "text", mm.gradient_jpeg, "image")
+    return _thumbnails(media, 8)
 
 
 @query("media_container_info")  # rows-only: binary container assembly
 def q_media_container_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 container-inventory pass: REAL MP3 frame-walk and MP4 box-walk
-    parsing (multimodal.parse_mp3_info/parse_mp4_info — header
-    arithmetic only, constant work per file) over synthesized
-    spec-conformant containers. Sample DECODE for these formats stays
-    honestly stubbed (entropy coders beyond stdlib); the inventory
-    fields every media pipeline reads first — duration, frame/track
-    counts, bitrate — are parsed for real."""
-    import struct
-    from typing import Iterator
-
-    import pandas as pd
-
+    parsing (mm.parse_mp3_info/parse_mp4_info — header arithmetic
+    only, constant work per file) over synthesized spec-conformant
+    containers (``mm.container_bytes``; one id in ten gets junk
+    bytes). Sample DECODE for these formats is not implemented; the
+    inventory fields every media pipeline reads first — duration,
+    frame/track counts, bitrate — are parsed for real."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        frame = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(144 * 128000 // 44100 - 4)
-
-        def box(typ: bytes, payload: bytes) -> bytes:
-            return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                if did % 10 == 9:
-                    content, kind = b"junkbytes" + bytes(int(did) % 7), "corrupt"
-                elif did % 2 == 0:
-                    content, kind = frame * (1 + int(did) % 20), "audio"
-                else:
-                    mvhd = (
-                        bytes(12)
-                        + struct.pack(">I", 1000)
-                        + struct.pack(">I", 1000 * (1 + int(did) % 30))
-                        + bytes(80)
-                    )
-                    moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", b"") * 2)
-                    content, kind = box(b"ftyp", b"isom" + bytes(8)) + moov, "video"
-                rows.append({"media_id": int(did), "kind": kind, "content": content})
-            yield pd.DataFrame(rows)
-
-    media = docs.mapInPandas(
-        synth, "media_id long, kind string, content binary"
-    )
-    return multimodal.container_info(media)
+    media = mm.synthesize_media(docs, "doc_id", mm.container_bytes, mm.container_kind)
+    return mm.container_info(media)

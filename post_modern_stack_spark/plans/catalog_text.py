@@ -309,13 +309,9 @@ def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4 order-sensitive rolling document fingerprint — the portable
-    polynomial-mod-1e9+7 variant, byte-replayable in any engine (the
-    xxhash64 64-bit fold stays the default scale path; identical fold
-    structure, parity-tested)."""
-    return textstats.fingerprint(
-        load_table(spark, sf_dir, "documents"), portable=True
-    )
+    """K4 order-sensitive rolling document fingerprint: a polynomial
+    hash mod 1e9+7, byte-replayable in any engine."""
+    return textstats.fingerprint(load_table(spark, sf_dir, "documents"))
 
 
 @query(

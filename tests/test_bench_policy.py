@@ -87,6 +87,32 @@ def test_median_diff_skips_baseline_at_other_cores(capsys):
     assert "median diff skipped" not in err and "median-diff REGRESSED q1" in err
 
 
+def test_load_baseline_matches_tables_not_just_sf(tmp_path):
+    """A baseline is compared only with a run over the tables it timed;
+    one that records no ``sf_dir`` timed the default test data."""
+    path = tmp_path / "BENCH_DETAIL.json"
+    path.write_text(json.dumps({"sf": 0.1, "sf_dir": "/data/a/sf0.1"}))
+    assert bench.load_baseline(str(path), "/data/a/sf0.1/")[0] is not None
+    assert bench.load_baseline(str(path), "/data/b/sf0.1")[0] is None
+    path.write_text(json.dumps({"sf": 0.1}))
+    assert bench.load_baseline(str(path), "/root/testdata/sf0.1")[0] is not None
+    assert bench.load_baseline(str(path), "/data/b/sf0.1")[0] is None
+    assert bench.load_baseline(str(path), "/root/testdata/sf0.01")[0] is None
+    # the same tables under another spelling: a symlink, a doubled
+    # slash, a relative path
+    real = tmp_path / "a" / "sf0.1"
+    real.mkdir(parents=True)
+    (tmp_path / "link").mkdir()
+    os.symlink(real, tmp_path / "link" / "sf0.1")
+    path.write_text(json.dumps({"sf": 0.1, "sf_dir": str(real)}))
+    for spelling in (
+        str(tmp_path / "link" / "sf0.1"),
+        str(tmp_path) + "//a/sf0.1",
+        os.path.relpath(real),
+    ):
+        assert bench.load_baseline(str(path), spelling)[0] is not None, spelling
+
+
 def test_load_py_band_queries_parses_plans_md(tmp_path):
     plans = tmp_path / "PLANS.md"
     plans.write_text(
@@ -115,15 +141,29 @@ def test_load_py_band_real_plans_md_includes_codecs():
 
 def test_named_queries_print_counters_and_write_no_file(tmp_path, sf_dir):
     """``bench.py q1 q2``: one line per query with its sweep-1 Spark
-    counters, then the summary line; no BENCH_DETAIL file is written."""
+    counters, then the summary line; no BENCH_DETAIL file is written.
+    The tables sit in another directory whose leaf is ``sf0.1``, so the
+    committed sf0.1 baseline, which records no ``sf_dir``, timed other
+    tables and no median is diffed against it."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     shutil.copy(os.path.join(repo, "bench.py"), tmp_path)
-    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_DRIVER_MEM="2g")
+    other = tmp_path / "other" / "sf0.1"
+    other.mkdir(parents=True)
+    for name in os.listdir(sf_dir):
+        os.symlink(os.path.join(sf_dir, name), other / name)
     names = ["pricing_summary", "sessionize"]
+    baseline = {"sf": 0.1, "queries": {n: 100.0 for n in names}}
+    (tmp_path / "BENCH_DETAIL.json").write_text(json.dumps(baseline))
+    git = ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@t"]
+    subprocess.run(["git", "init", "-q", str(tmp_path)], check=True)
+    subprocess.run(git + ["add", "BENCH_DETAIL.json"], check=True)
+    subprocess.run(git + ["commit", "-qm", "baseline"], check=True)
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_SF_DIR=str(other),
+               SPARK_GRAFT_BENCH_REPS="1", SPARK_GRAFT_DRIVER_MEM="2g")
     out = subprocess.run([sys.executable, "bench.py", *names], cwd=tmp_path, env=env,
                          capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-2000:]
+    assert "median-diff" not in out.stderr
     *per_query, summary = out.stdout.strip().splitlines()
     per_query = [json.loads(line) for line in per_query]
     assert [d["query"] for d in per_query] == names
@@ -131,7 +171,8 @@ def test_named_queries_print_counters_and_write_no_file(tmp_path, sf_dir):
     assert all(d["counters"]["jobs"] >= 1 for d in per_query)
     assert len(summary) < 1800
     assert json.loads(summary)["cutoff_sec"] == min(json.loads(summary)["queries"].values())
-    assert not list(tmp_path.glob("BENCH_DETAIL*.json"))
+    assert [p.name for p in tmp_path.glob("BENCH_DETAIL*.json")] == ["BENCH_DETAIL.json"]
+    assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text()) == baseline
 
 
 def _rungs(*per_rung):

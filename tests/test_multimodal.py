@@ -1,47 +1,52 @@
-"""K5 multimodal tests: binary columns, Arrow-batched decode pipeline,
-binary dedup. BMP/WAV/PPM decode+resize are REAL (pure
-numpy, round-trip-tested below); compressed codecs stay stubbed with a
-deterministic digest fake.
+"""K5 multimodal tests: binary columns, the Arrow-batched decode
+pipeline, binary dedup, the real codecs (round trips against numpy and
+spec references), property oracles for the seven media queries, and a
+source guard that keeps one batch boundary and one codec table.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pytest
 from pyspark.sql import Row
 
 from post_modern_stack_spark.operators import multimodal as MM
 
+_IMG = np.random.RandomState(1).randint(0, 256, size=(6, 5, 3), dtype=np.uint8)
+_BMP = MM.encode_bmp(_IMG)
+
 
 @pytest.fixture(scope="module")
 def media(spark):
     rows = [
-        Row(media_id=1, kind="image", content=b"\x89PNG fake a", mime="image/png",
-            width=64, height=64, duration_ms=None),
-        Row(media_id=2, kind="image", content=b"\x89PNG fake a", mime="image/png",
-            width=64, height=64, duration_ms=None),  # exact dup of 1
-        Row(media_id=3, kind="audio", content=b"RIFF fake", mime="audio/wav",
-            width=None, height=None, duration_ms=2500),
-        Row(media_id=4, kind="video", content=b"\x00\x00ftyp fake", mime="video/mp4",
-            width=320, height=240, duration_ms=3200),
+        Row(media_id=1, kind="image", content=bytearray(_BMP)),
+        Row(media_id=2, kind="image", content=bytearray(_BMP)),  # exact dup of 1
+        Row(media_id=3, kind="image", content=bytearray(MM.encode_png(_IMG[::-1]))),
+        Row(media_id=4, kind="video", content=b"\x00\x00ftyp fake"),
     ]
     return spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
 
 
 def test_feature_extraction_shape(spark, media):
-    out = MM.extract_features(media).collect()
-    assert len(out) == 4
+    out = MM.extract_features(media.filter("media_id < 4")).collect()
+    assert len(out) == 3
     by_id = {r["media_id"]: r for r in out}
     assert all(len(r["features"]) == MM.FEATURE_DIM for r in out)
-    assert all(0.0 <= v <= 1.0 for r in out for v in r["features"])
+    # the first two features are the image's height and width; the
+    # rest are normalized to [0, 1]
+    assert all(r["features"][:2] == [6.0, 5.0] for r in out)
+    assert all(0.0 <= v <= 1.0 for r in out for v in r["features"][2:])
     # deterministic: identical bytes → identical features and sha
     assert by_id[1]["features"] == by_id[2]["features"]
     assert by_id[1]["content_sha"] == by_id[2]["content_sha"]
-    assert by_id[1]["n_bytes"] == len(b"\x89PNG fake a")
+    assert by_id[1]["n_bytes"] == len(_BMP)
 
 
 def test_real_codec_stub_raises(spark, media):
     with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        MM.extract_features(media, require_real_codecs=True).collect()
+        MM.extract_features(media).collect()
 
 
 def test_media_dedup(spark, media):
@@ -71,9 +76,9 @@ def test_bmp_wav_ppm_roundtrip_numpy():
 
 
 def test_extract_features_real_codecs_through_spark(spark):
-    """extract_features with require_real_codecs=True over genuine
-    BMP/WAV bytes: the mapInPandas pipeline decodes for real and the
-    features match a driver-side numpy recomputation."""
+    """extract_features over genuine BMP/WAV bytes: the pipeline
+    decodes for real and the features match a driver-side numpy
+    recomputation."""
     import numpy as np
     from pyspark.sql import Row
 
@@ -83,15 +88,13 @@ def test_extract_features_real_codecs_through_spark(spark):
     img = rng.randint(0, 256, size=(8, 6, 3), dtype=np.uint8)
     wav = np.sin(2 * np.pi * 440 * np.arange(1600) / 8000.0)[:, None] * 0.5
     rows = [
-        Row(media_id=1, kind="image", content=bytearray(mm.encode_bmp(img)),
-            mime="image/bmp", width=6, height=8, duration_ms=None),
-        Row(media_id=2, kind="audio", content=bytearray(mm.encode_wav(wav, 8000)),
-            mime="audio/wav", width=None, height=None, duration_ms=200),
+        Row(media_id=1, kind="image", content=bytearray(mm.encode_bmp(img))),
+        Row(media_id=2, kind="audio", content=bytearray(mm.encode_wav(wav, 8000))),
     ]
     media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
     got = {
         r["media_id"]: r["features"]
-        for r in mm.extract_features(media, require_real_codecs=True).collect()
+        for r in mm.extract_features(media).collect()
     }
     want_img = mm.image_features(img)
     # expected audio features go through the same PCM-16 quantization
@@ -100,18 +103,16 @@ def test_extract_features_real_codecs_through_spark(spark):
     assert np.allclose(got[1], want_img, atol=1e-5)
     assert np.allclose(got[2], want_wav, atol=1e-5)
 
-    # genuinely-stubbed formats (MP3 here) still refuse loudly in
-    # strict mode — JPEG no longer qualifies, it decodes for real
+    # formats without a codec (MP3 here) refuse loudly
     bad = spark.createDataFrame(
-        [Row(media_id=3, kind="audio", content=bytearray(b"ID3\x04\x00....."),
-             mime="audio/mpeg", width=None, height=None, duration_ms=None)],
+        [Row(media_id=3, kind="audio", content=bytearray(b"ID3\x04\x00....."))],
         mm.MEDIA_SCHEMA,
     )
     import pytest
     from py4j.protocol import Py4JJavaError
 
     with pytest.raises(Exception) as ei:
-        mm.extract_features(bad, require_real_codecs=True).collect()
+        mm.extract_features(bad).collect()
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
@@ -136,18 +137,18 @@ def test_extract_features_permissive_quarantines_corrupt_bytes(spark):
     good = mm.encode_bmp(img)
     corrupt_png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 12  # magic ok, body garbage
     rows = [
-        Row(media_id=1, kind="image", content=bytearray(good),
-            mime="image/bmp", width=6, height=8, duration_ms=None),
-        Row(media_id=2, kind="image", content=bytearray(corrupt_png),
-            mime="image/png", width=None, height=None, duration_ms=None),
+        Row(media_id=1, kind="image", content=bytearray(good)),
+        Row(media_id=2, kind="image", content=bytearray(corrupt_png)),
+        Row(media_id=3, kind="audio", content=bytearray(b"ID3\x04\x00.....")),
     ]
     media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
     got = {
         r["media_id"]: r
-        for r in mm.extract_features(
-            media, require_real_codecs=True, on_error="null"
-        ).collect()
+        for r in mm.extract_features(media, on_error="null").collect()
     }
+    # bytes without a codec (MP3) are a data row too
+    assert got[3]["features"] is None
+    assert got[3]["decode_error"].startswith("NotImplementedError: no codec")
     assert np.allclose(got[1]["features"], mm.image_features(img), atol=1e-5)
     assert got[1]["decode_error"] is None
     assert got[2]["features"] is None
@@ -155,11 +156,11 @@ def test_extract_features_permissive_quarantines_corrupt_bytes(spark):
     assert got[2]["n_bytes"] == len(corrupt_png)
     assert got[2]["content_sha"] == hashlib.sha256(corrupt_png).hexdigest()
 
-    # strict mode unchanged: same corrupt row kills the job
+    # on_error='raise': the same corrupt row kills the job
     import pytest
 
     with pytest.raises(Exception):
-        mm.extract_features(media, require_real_codecs=True).collect()
+        mm.extract_features(media).collect()
     with pytest.raises(ValueError, match="on_error"):
         mm.extract_features(media, on_error="skip")
 
@@ -176,8 +177,7 @@ def test_resize_media_real_roundtrip(spark):
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, size=(9, 7, 3), dtype=np.uint8)
     media = spark.createDataFrame(
-        [Row(media_id=1, kind="image", content=bytearray(mm.encode_bmp(img)),
-             mime="image/bmp", width=7, height=9, duration_ms=None)],
+        [Row(media_id=1, kind="image", content=bytearray(mm.encode_bmp(img)))],
         mm.MEDIA_SCHEMA,
     )
     row = mm.resize_media(media, out_h=4, out_w=3).collect()[0]
@@ -326,8 +326,7 @@ def test_resize_media_png_stays_png(spark):
     rng = np.random.RandomState(5)
     img = rng.randint(0, 256, (8, 8, 3)).astype(np.uint8)
     media = spark.createDataFrame(
-        [Row(media_id=1, kind="image", content=bytearray(mm.encode_png(img)),
-             mime="image/png", width=8, height=8, duration_ms=None)],
+        [Row(media_id=1, kind="image", content=bytearray(mm.encode_png(img)))],
         mm.MEDIA_SCHEMA,
     )
     row = mm.resize_media(media, out_h=4, out_w=4).collect()[0]
@@ -336,8 +335,7 @@ def test_resize_media_png_stays_png(spark):
 
 
 def test_extract_features_png_real_codec(spark):
-    """PNG rides the require_real_codecs=True path (no digest fake):
-    features equal image_features of the decoded pixels."""
+    """PNG features equal image_features of the decoded pixels."""
     import numpy as np
     from pyspark.sql import Row
 
@@ -346,11 +344,10 @@ def test_extract_features_png_real_codec(spark):
     rng = np.random.RandomState(13)
     img = rng.randint(0, 256, (6, 6, 3)).astype(np.uint8)
     media = spark.createDataFrame(
-        [Row(media_id=9, kind="image", content=bytearray(mm.encode_png(img)),
-             mime="image/png", width=6, height=6, duration_ms=None)],
+        [Row(media_id=9, kind="image", content=bytearray(mm.encode_png(img)))],
         mm.MEDIA_SCHEMA,
     )
-    row = mm.extract_features(media, require_real_codecs=True).collect()[0]
+    row = mm.extract_features(media).collect()[0]
     assert np.allclose(row["features"], mm.image_features(img), rtol=1e-6)
 
 
@@ -391,8 +388,7 @@ def test_sample_frames_timeline(spark):
     frames = palette[rng.randint(0, 4, (3, 6, 6))]
     gif = mm.encode_gif(frames, [100, 50, 100])  # frame starts: 0, 100, 150
     media = spark.createDataFrame(
-        [Row(media_id=1, kind="video", content=bytearray(gif), mime="image/gif",
-             width=6, height=6, duration_ms=250)],
+        [Row(media_id=1, kind="video", content=bytearray(gif))],
         mm.MEDIA_SCHEMA,
     )
     rows = {r["frame_ts_ms"]: r for r in mm.sample_frames(media, every_ms=50).collect()}
@@ -406,8 +402,7 @@ def test_sample_frames_timeline(spark):
 
 
 def test_extract_features_gif_keyframe(spark):
-    """GIF rides the strict codec path: features == image_features of
-    the first frame."""
+    """GIF features == image_features of the first frame."""
     import numpy as np
     from pyspark.sql import Row
 
@@ -417,11 +412,10 @@ def test_extract_features_gif_keyframe(spark):
     palette = rng.randint(0, 256, (6, 3)).astype(np.uint8)
     frames = palette[rng.randint(0, 6, (2, 5, 5))]
     media = spark.createDataFrame(
-        [Row(media_id=2, kind="video", content=bytearray(mm.encode_gif(frames)),
-             mime="image/gif", width=5, height=5, duration_ms=200)],
+        [Row(media_id=2, kind="video", content=bytearray(mm.encode_gif(frames)))],
         mm.MEDIA_SCHEMA,
     )
-    row = mm.extract_features(media, require_real_codecs=True).collect()[0]
+    row = mm.extract_features(media).collect()[0]
     assert np.allclose(row["features"], mm.image_features(frames[0]), rtol=1e-6)
 
 
@@ -499,8 +493,7 @@ def test_jpeg_progressive_rejected():
 
 
 def test_jpeg_spark_pipeline_strict(spark):
-    """resize_media + featurize over real JPEG bytes in Spark — strict
-    codecs, so any digest-fake fallback fails."""
+    """resize_media + featurize over real JPEG bytes in Spark."""
     import numpy as np
 
     from post_modern_stack_spark.operators import jpeg
@@ -514,14 +507,10 @@ def test_jpeg_spark_pipeline_strict(spark):
                 media_id=i,
                 kind="image",
                 content=bytearray(jpeg.encode_jpeg(img, subsample=bool(i % 2))),
-                mime="image/jpeg",
-                width=16,
-                height=16,
-                duration_ms=None,
             )
         )
     media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    feats = MM.extract_features(media, require_real_codecs=True).collect()
+    feats = MM.extract_features(media).collect()
     assert len(feats) == 6
     assert all(len(r.features) == MM.FEATURE_DIM for r in feats)
     thumbs = MM.resize_media(media, out_h=8, out_w=8).collect()
@@ -529,3 +518,144 @@ def test_jpeg_spark_pipeline_strict(spark):
     for r in thumbs:
         out = jpeg.decode_jpeg(bytes(r.content))
         assert out.shape == (8, 8, 3)
+
+
+# ------------------------------------- property oracles: media queries
+# Each media query synthesizes its bytes per document with an encoder of
+# operators/multimodal; these checks rebuild them from the document's
+# text (or id) and check the query's rows against them.
+
+# µ-law's largest step is 1024/32768 (top segment), so the decoded
+# samples, and with them the RMS, stay within half a step of the input
+G711_BOUND = 512 / 32768
+# the 8×8 JPEG thumbnail (q85 4:2:0 source, re-encoded at q85 4:4:4)
+# against the nearest-neighbor resize of the source pixels: 27.5-30.0 dB
+# over the 500 sf0.001 documents
+JPEG_PSNR_FLOOR = 25.0
+
+
+def _sha(b: bytes) -> str:
+    return hashlib.sha256(b).hexdigest()
+
+
+def _thumbnails(rows, text, source):
+    assert sorted(r.media_id for r in rows) == sorted(text)
+    for r in rows:
+        thumb = source(text[r.media_id])
+        assert (r.out_h, r.out_w, r.n_bytes, r.thumb_sha) == (2, 2, len(thumb), _sha(thumb))
+
+
+def _real_features(rows, text):
+    assert sorted(r.media_id for r in rows) == sorted(text)
+    for r in rows:
+        t = text[r.media_id]
+        f = MM.image_features(MM.digest_rgb(t))
+        assert (r.n_bytes, r.content_sha) == (len(MM.digest_bmp(t)), _sha(MM.digest_bmp(t)))
+        assert abs(r.mean_r - f[2]) < 2e-6 and abs(r.std_r - f[5]) < 2e-6
+
+
+def _jpeg_pipeline(rows, text):
+    from post_modern_stack_spark.operators import jpeg
+
+    assert sorted(r.media_id for r in rows) == sorted(d for d in text if d < 2000)
+    for r in rows:
+        t = text[r.media_id]
+        src = MM.resize_image(MM.gradient_rgb(t, 16), 8, 8)
+        thumb = jpeg.encode_jpeg(MM.resize_image(jpeg.decode_jpeg(MM.gradient_jpeg(t)), 8, 8))
+        assert (r.out_h, r.out_w, r.n_bytes, r.thumb_sha) == (8, 8, len(thumb), _sha(thumb))
+        mse = np.mean((jpeg.decode_jpeg(thumb).astype(float) - src) ** 2)
+        assert 10 * np.log10(255**2 / mse) >= JPEG_PSNR_FLOOR
+
+
+def _g711_audio(rows, text):
+    assert sorted(r.media_id for r in rows) == sorted(text)
+    for r in rows:
+        wave = MM.sine_wave(text[r.media_id])
+        assert abs(r.duration_s - 0.05) < 1e-6  # a float32 feature
+        assert r.n_bytes == len(MM.g711_sine(text[r.media_id]))
+        assert abs(r.rms - np.sqrt(np.mean(wave**2))) <= G711_BOUND + 5e-6
+
+
+def _video_frames(rows, text):
+    got: dict = {}
+    for r in rows:
+        got.setdefault(r.media_id, []).append((r.frame_ts_ms, r.frame_idx, r.frame_sha))
+    assert sorted(got) == sorted(text)
+    for did, frames in got.items():
+        idx, palette = MM.gif_indices(text[did])
+        want = [(40 * i, i, _sha(palette[idx[i]].tobytes())) for i in range(4)]
+        assert sorted(frames) == want
+
+
+def _container_info(rows, text):
+    assert sorted(r.media_id for r in rows) == sorted(text)
+    for r in rows:
+        did = r.media_id
+        if did % 10 == 9:
+            assert (r.kind, r.container, r.n_units) == ("corrupt", None, 0)
+        elif did % 2 == 0:
+            n = 1 + did % 20
+            assert (r.kind, r.container, r.n_units, r.bitrate_kbps) == ("audio", "mp3", n, 128)
+            assert abs(r.duration_ms - n * 1152 * 1000 / 44100) <= 0.5
+        else:
+            assert (r.kind, r.container, r.n_units) == ("video", "mp4", 2)
+            assert r.duration_ms == 1000 * (1 + did % 30)
+
+
+MEDIA_PROPERTIES = {
+    "media_thumbnails": lambda rows, text: _thumbnails(
+        rows, text, lambda t: MM.encode_bmp(MM.resize_image(MM.digest_rgb(t), 2, 2))
+    ),
+    "media_png_pipeline": lambda rows, text: _thumbnails(
+        rows, text, lambda t: MM.encode_png(MM.resize_image(MM.gradient_rgb(t, 8), 2, 2))
+    ),
+    "media_real_features": _real_features,
+    "media_jpeg_pipeline": _jpeg_pipeline,
+    "media_g711_audio": _g711_audio,
+    "media_video_frames": _video_frames,
+    "media_container_info": _container_info,
+}
+
+
+@pytest.fixture(scope="module")
+def doc_text(spark, sf_dir):
+    from post_modern_stack_spark.registry import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    return {r.doc_id: r.text for r in docs}
+
+
+@pytest.mark.parametrize("name", sorted(MEDIA_PROPERTIES))
+def test_media_query_property(spark, sf_dir, doc_text, name):
+    import __spark_entry__
+
+    rows = __spark_entry__.queries()[name](spark, sf_dir).collect()
+    MEDIA_PROPERTIES[name](rows, doc_text)
+
+
+def test_media_modules_keep_one_boundary_and_one_codec_table():
+    """The media modules cross into Python only through
+    ``multimodal._map_rows`` (``mapInArrow``, no pandas), the strict
+    codec route is the only one, and the two codec operators dispatch
+    through ``_CODECS`` instead of testing magic bytes themselves."""
+    import ast
+    import inspect
+    import pathlib
+    import re
+    import textwrap
+
+    from post_modern_stack_spark.plans import catalog_multimodal
+
+    pandas_use = re.compile(r"^\s*(import|from) pandas\b|mapInPandas", re.M)
+    for mod in (MM, catalog_multimodal):
+        assert not pandas_use.search(pathlib.Path(mod.__file__).read_text()), mod.__name__
+    pkg = pathlib.Path(MM.__file__).resolve().parents[1]
+    assert [p for p in pkg.rglob("*.py") if "require_real_codecs" in p.read_text()] == []
+    for fn in (MM.extract_features, MM.resize_media):
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        magic = [
+            n.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, bytes) and n.value
+        ]
+        assert magic == [], fn.__name__

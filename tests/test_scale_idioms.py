@@ -460,3 +460,36 @@ def test_widen_narrow_scan_conditional(spark, tmp_path):
 
     wide = spark.range(1000).repartition(max(2, target))
     assert widen_narrow_scan(wide) is wide
+
+
+def test_widen_narrow_scan_counts_row_groups_not_splits(spark, tmp_path):
+    """A one-row-group file split into many byte ranges still reads on
+    one task, so it is widened; a file with enough row groups is not,
+    nor is a wide scan whose files have no parquet footer (CSV)."""
+    from post_modern_stack_spark.operators.skew import widen_narrow_scan
+
+    target = spark.sparkContext.defaultParallelism
+    one = str(tmp_path / "one_group.parquet")
+    many = str(tmp_path / "many_groups.parquet")
+    spark.range(20000).coalesce(1).write.parquet(one)
+    spark.range(20000).repartition(target).write.parquet(many)
+    csv = str(tmp_path / "rows.csv")
+    spark.range(20000).coalesce(1).write.csv(csv)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        split = spark.read.parquet(one)
+        assert split.rdd.getNumPartitions() >= target
+        widened = widen_narrow_scan(split)
+        assert widened is not split
+        assert widened.rdd.getNumPartitions() == target
+        assert widened.count() == 20000
+        wide = spark.read.parquet(many)
+        assert widen_narrow_scan(wide) is wide
+        text = spark.read.csv(csv)
+        assert text.rdd.getNumPartitions() >= target
+        assert widen_narrow_scan(text) is text
+    finally:
+        spark.conf.set(key, old)
+
