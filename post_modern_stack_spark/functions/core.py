@@ -84,7 +84,14 @@ def json_get(col: Column | str, key: str, cast: str | None = None) -> Column:
 
 def normalize_sku(col: Column | str) -> Column:
     """``LOWER(REPLACE(sku, ' ', '_'))`` (reference
-    shopping_events_exploded.sql:22 — C1/C2)."""
+    shopping_events_exploded.sql:22 — C1/C2).
+
+    ``lower`` follows the session's case mapping: the JVM's once
+    ``session.ensure_session_confs`` has run (``run_nep_flow`` and
+    ``registry.load_table`` call it), ICU otherwise or under a ``tr``,
+    ``az`` or ``lt`` default locale. The two differ only on Unicode
+    14-16 letters the JVM does not define (``session`` module
+    docstring)."""
     col = F.col(col) if isinstance(col, str) else col
     return F.lower(F.replace(col, F.lit(" "), F.lit("_")))
 

@@ -612,9 +612,10 @@ def image_features(img) -> list[float]:
     f = np.asarray(img[..., :3], dtype=np.float64) / 255.0
     luma = f @ np.array([0.299, 0.587, 0.114])
     gh, gw = max(h // 2, 1), max(w // 3, 1)
+    # a cell past a narrow image's edge reads its last row / column
     grid = [
-        float(luma[r * gh : (r + 1) * gh if r < 1 else h,
-                    c * gw : (c + 1) * gw if c < 2 else w].mean())
+        float(luma[min(r * gh, h - 1) : (r + 1) * gh if r < 1 else h,
+                    min(c * gw, w - 1) : (c + 1) * gw if c < 2 else w].mean())
         for r in range(2)
         for c in range(3)
     ]

@@ -43,6 +43,7 @@ from post_modern_stack_spark.plans.pipeline import (
     PipelineRunner,
     validate_start,
 )
+from post_modern_stack_spark.session import ensure_session_confs
 
 MAX_LEN = 20  # reference my_dbt_flow.py:308
 
@@ -101,7 +102,10 @@ def run_nep_flow(
     ``resume=True`` (Metaflow ``resume`` parity): stages whose
     checkpoint is already complete under this run_id are read back
     instead of recomputed — see ``PipelineRunner``."""
-    # start (I2): fail-fast validation + engine probe
+    # start (I2): engine confs (a plain session has none of them, and
+    # its ICU case mapping costs a cold run seconds), then fail-fast
+    # validation + engine probe
+    ensure_session_confs(spark)
     info = validate_start(spark, [], start_date, end_date)
 
     runner = PipelineRunner(spark, run_dir, run_id, resume=resume)

@@ -12,19 +12,41 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
   *local* time (reference upload/upload_to_snowflake.py:168-169); we pin
   UTC and document it (SURVEY.md §7 watch-list 4) so results are
   machine-independent.
+- Case mapping on the JVM, not ICU: ``lower``/``upper`` run through
+  Java's case mapping (``spark.sql.icu.caseMappings.enabled=false``).
+  ICU's first use builds a title-case table over every code point, a
+  cold-JVM cost that lands on the first task to lower a string (the
+  NEP flow's SKU normalization, C1/C2). Over all 1,112,064 scalar
+  values as one-character strings, each function differs from ICU on
+  67 code points, every one involving a Unicode 14-16 character the
+  JVM does not define (``Character.isDefined``); context cases (final
+  sigma, ß→SS, İ, ŉ, ﬃ, ΐ) agree. Non-ASCII strings use the JVM's
+  default locale, which changes results only for ``tr``, ``az`` and
+  ``lt``: under those the conf stays on ICU. Executors must share the
+  driver's locale language, as they share the UTC pin.
 - Arrow enabled for any pandas boundary (the ML edge, pandas UDFs).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 DEFAULT_SHUFFLE_PARTITIONS = 32  # sized for local[32]; a real cluster
 # would set ~2-3x total cores, or rely on AQE coalescing from a high
 # initial value. AQE re-coalesces at runtime either way.
+
+# JVM default-locale languages whose case mapping differs from the
+# root locale (dotted/dotless i, Lithuanian dot-above)
+LOCALE_CASE_LANGUAGES = frozenset({"tr", "az", "lt"})
+
+_locale_language: str | None = None
+_refused_confs: set[str] = set()
 
 
 def get_spark(
@@ -84,13 +106,24 @@ def get_spark(
     return spark
 
 
+def jvm_locale_language(spark: SparkSession) -> str:
+    """The JVM default locale's language, read once per process."""
+    global _locale_language
+    if _locale_language is None:
+        jvm = spark.sparkContext._jvm
+        _locale_language = str(jvm.java.util.Locale.getDefault().getLanguage())
+    return _locale_language
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs the engine depends on.
 
-    Called defensively from the registry too, because the grading driver
-    constructs its own SparkSession (without our builder confs) and then
-    calls ``entry(spark)``.
+    Called defensively from the registry and the NEP flow too, because
+    a caller of ``__spark_entry__.entry(spark)`` may hand in its own
+    SparkSession, without our builder confs. A conf this build refuses
+    logs one warning per conf per process.
     """
+    icu = jvm_locale_language(spark) in LOCALE_CASE_LANGUAGES
     for k, v in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
@@ -99,14 +132,15 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
         # vocab.map_literal escapes tokens with backslashes, which the
         # parser honours only while escaped string literals are off
         ("spark.sql.parser.escapedStringLiterals", "false"),
+        # module docstring: JVM case mapping unless the locale needs ICU
+        ("spark.sql.icu.caseMappings.enabled", str(icu).lower()),
     ):
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # static / unknown conf on this build — engine still works,
-            # only the events-table ns-timestamp read path needs the
-            # first one, and that raises loudly on its own if unset.
-            pass
+        except Exception as e:
+            if k not in _refused_confs:
+                _refused_confs.add(k)
+                log.warning("cannot set %s=%s on this session: %s", k, v, e)
     return spark
 
 

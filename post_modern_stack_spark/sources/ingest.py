@@ -101,9 +101,20 @@ def ingest_events(
     return out_path
 
 
+# the log as ``ingest_events`` writes it: data columns in file order,
+# then the partition column, every column nullable as parquet reads it
+RAW_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in sorted(RAW_EVENTS_SCHEMA, key=lambda f: f.name == "api_key")
+    ]
+)
+
+
 def read_raw_events(spark, path: str) -> DataFrame:
-    """Read the append-only log back (schema-on-read for raw_data)."""
-    return spark.read.parquet(path)
+    """Read the append-only log back (schema-on-read for raw_data).
+    The schema is known, so no footer job infers it."""
+    return spark.read.schema(RAW_LOG_SCHEMA).parquet(path)
 
 
 def write_csv(df: DataFrame, path: str, compression: str | None = "gzip") -> str:

@@ -75,6 +75,18 @@ def test_bmp_wav_ppm_roundtrip_numpy():
     assert (mm.decode_ppm(ppm) == img).all()
 
 
+@pytest.mark.parametrize("shape", [(1, 1), (4, 2), (1, 7)])
+def test_image_features_finite_on_images_narrower_than_the_grid(shape):
+    """A luma-grid cell past a narrow image's edge reads the nearest
+    pixel row and column instead of averaging an empty slice (NaN)."""
+    img = np.random.RandomState(3).randint(0, 256, size=(*shape, 3), dtype=np.uint8)
+    feats = MM.image_features(img)
+    assert np.isfinite(feats).all()
+    luma = img.astype(np.float64) / 255.0 @ np.array([0.299, 0.587, 0.114])
+    grid = np.asarray(feats[8:14])
+    assert (grid >= luma.min() - 1e-12).all() and (grid <= luma.max() + 1e-12).all()
+
+
 def test_extract_features_real_codecs_through_spark(spark):
     """extract_features over genuine BMP/WAV bytes: the pipeline
     decodes for real and the features match a driver-side numpy

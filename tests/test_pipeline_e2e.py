@@ -37,6 +37,9 @@ FLOW_KW = dict(api_key=API_A, start_date="2019-01-01", end_date="2019-03-14")
 # inferred its schema and the dbt test re-ran, 20 while the flow also
 # collected the vocab into a map literal and ran one action per metric).
 RESUME_JOBS = 1
+# Spark jobs of a cold flow, the read of the raw log included (which
+# names its schema instead of inferring it from a parquet footer).
+COLD_JOBS = 16
 
 
 def _event(sku, ms, action="detail", etype="event_product", session="s1"):
@@ -509,6 +512,34 @@ def test_resumed_flow_job_budget(spark, raw_log, tmp_path):
     assert out["resumed_stages"] == out["stages"]
     jobs = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
     assert len(jobs) == RESUME_JOBS
+
+
+def test_cold_flow_job_budget(spark, raw_log, tmp_path):
+    """A cold flow launches a pinned number of Spark jobs, so a new
+    eager action, or a raw-log read that infers its schema again, fails
+    here, not only in the benchmark."""
+    sc = spark.sparkContext
+    tag = "nep-cold-job-budget"
+    sc.addJobTag(tag)
+    try:
+        raw = ingest.read_raw_events(spark, raw_log)
+        run_nep_flow(spark, raw, str(tmp_path), "run-cold", **FLOW_KW)
+    finally:
+        sc.removeJobTag(tag)
+    jobs = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+    assert len(jobs) == COLD_JOBS
+
+
+def test_flow_on_plain_session_maps_case_on_the_jvm(spark, raw_log, tmp_path):
+    """A plain session (no builder or runtime confs of ours) starts on
+    ICU case mapping; the flow's start step moves it to the JVM's."""
+    icu = "spark.sql.icu.caseMappings.enabled"
+    plain = spark.newSession()
+    assert plain.conf.get(icu) == "true"
+    raw = ingest.read_raw_events(plain, raw_log)
+    out = run_nep_flow(plain, raw, str(tmp_path), "run-plain", **FLOW_KW)
+    assert out["stage_rows"]["extracted"] > 0
+    assert plain.conf.get(icu) == "false"
 
 
 def test_checkpoint_counts_artifact_when_metric_never_fires(
