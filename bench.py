@@ -16,6 +16,11 @@ stages, tasks, shuffle bytes and input rows go to BENCH_DETAIL.json's
 ``counters`` with the ``cores`` they were counted at, and stderr gets a
 diff against the committed artifact's. A query whose time moves while
 its counters repeat did the same work: the move is host noise.
+``compiles`` holds, per query, one count per sample: the generated
+classes Janino compiled during that run, read outside the timed region.
+Sweep 1 pays every compile (its counts depend on the visiting order:
+a class an earlier query compiled is a cache hit); the session keeps
+them (``session.CODEGEN_CACHE_ENTRIES``), so later samples read about 0.
 
 ``value`` = sum of per-query MEDIAN times over up to REPS sweeps (the
 driver's headline number, compared against BASELINE.md round over
@@ -27,7 +32,9 @@ printed line and BENCH_DETAIL.json, so late-sweep breakage is visible
 in the recorded artifact, not just on stderr.
 Each query is executed to completion via a noop-sink terminal action
 (``df.write.format("noop")`` so results are fully materialized without
-driver collection overhead).
+driver collection overhead). Package memos are cleared before every
+sample; Spark's generated-class cache is not, so samples after sweep 1
+measure a session that has compiled the query's classes.
 
 Noise handling: this shared host swings identical queries 0.5 s ↔ 7.5 s
 between runs (BASELINE.md variance caveat). Each query is timed up to
@@ -312,7 +319,7 @@ def _print_counter_diff(prev: dict | None, baseline_desc: str, counters: dict, c
 def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
-    from post_modern_stack_spark.session import get_spark
+    from post_modern_stack_spark.session import codegen_compiles, get_spark
 
     catalog = entry_mod.queries()
     qs = {n: catalog[n] for n in names} if names else catalog
@@ -360,14 +367,15 @@ def main(names: list[str]) -> None:
     ).mode("overwrite").save()
 
     def reset_operator_memos() -> None:
-        """Cold-path guarantee (VERDICT r11 what's-wrong #1): the
-        embedding_near_dups corpus-broadcast memo is a legitimate
-        bounded in-process cache, but within one bench session sample 1
-        paid the corpus collect + routing probe and samples 2-3 did
-        not, so the reported median measured the warm path. Clear the
-        memo (unpersisting its broadcasts) before EVERY timed run so
-        each sample pays the full cold-path cost the driver's first
-        invocation would pay. Runs OUTSIDE the timed region."""
+        """Package memos start cold in every sample (VERDICT r11
+        what's-wrong #1): the embedding_near_dups corpus-broadcast memo
+        is a legitimate bounded in-process cache, but within one bench
+        session sample 1 paid the corpus collect + routing probe and
+        samples 2-3 did not, so the reported median measured the warm
+        path. Clear the memo (unpersisting its broadcasts) before EVERY
+        timed run. Spark's generated-class cache stays warm after sweep
+        1, which pays every compile (``compiles``). Runs OUTSIDE the
+        timed region."""
         from post_modern_stack_spark.operators import dedup
 
         memo = getattr(dedup, "_corpus_memo", None)
@@ -378,15 +386,19 @@ def main(names: list[str]) -> None:
             except Exception:
                 pass
 
-    def run_once(name: str) -> float:
+    def run_once(name: str) -> None:
+        """Time one run of ``name`` into ``samples``, with its compiles."""
         reset_operator_memos()
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        samples[name].append(round(time.perf_counter() - t0, 3))
+        compiles[name].append(codegen_compiles(spark) - c0)
 
     total0 = time.perf_counter()
     failed_elapsed = 0.0  # a broken query must not IMPROVE the headline
     samples: dict[str, list[float]] = {n: [] for n in qs}
+    compiles: dict[str, list[int]] = {n: [] for n in qs}
     failed: set[str] = set()
     # sweep 1's counters per query; their reads count against the budget
     counters: dict[str, dict] = {}
@@ -447,7 +459,7 @@ def main(names: list[str]) -> None:
                 sc.addJobTag(tag)
             t0 = time.perf_counter()
             try:
-                samples[name].append(run_once(name))
+                run_once(name)
             except Exception as e:  # a broken query must not sink the bench
                 # stop sampling it, but KEEP any earlier good samples:
                 # only a query with zero successful runs reports -1 —
@@ -507,7 +519,7 @@ def main(names: list[str]) -> None:
                 break
             t0 = time.perf_counter()
             try:
-                samples[name].append(run_once(name))
+                run_once(name)
                 print(
                     f"bench: tiebreak sample for "
                     f"{'bimodal' if is_bimodal(samples[name]) else 'py-band'} "
@@ -546,6 +558,7 @@ def main(names: list[str]) -> None:
         # so a reader must not treat it as a stable median
         "bimodal": sorted(n for n, v in samples.items() if is_bimodal(v)),
         "counters": counters,
+        "compiles": compiles,
         "cores": sc.defaultParallelism,
         "counter_read_s": round(counter_read_s, 3),
     }
@@ -567,7 +580,8 @@ def main(names: list[str]) -> None:
         # a named subset prints its queries and never clobbers the artifact
         for name in qs:
             print(json.dumps({"query": name, "samples": samples[name],
-                              "median": timings[name], "counters": counters.get(name)}))
+                              "median": timings[name], "counters": counters.get(name),
+                              "compiles": compiles[name]}))
     else:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
