@@ -139,8 +139,27 @@ def is_bimodal(vals: list[float]) -> bool:
     """True when recorded samples disagree >BIMODAL_SPREAD× — the
     regime where a 2-sample min silently reports one side of a bimodal
     distribution (r08: the builder saw [1.74, 15.64] and reported
-    1.74; the driver then hit the slow mode twice and recorded 14.45)."""
+    1.74; the driver then hit the slow mode twice and recorded 14.45).
+    A run's samples are judged by :func:`run_is_bimodal`."""
     return len(vals) >= 2 and max(vals) > BIMODAL_SPREAD * max(min(vals), 1e-9)
+
+
+def warm_samples(vals: list[float], compiles: list[int]) -> list[float]:
+    """The samples that compiled no generated class. A cheap query's
+    first run can be 3× its warm runs from compiles alone
+    (``lang_distribution``: [0.734, 0.194, 0.176] with compiles
+    [8, 0, 0]); that spread is not host noise."""
+    return [v for v, c in zip(vals, compiles) if c == 0]
+
+
+def run_is_bimodal(vals: list[float], compiles: list[int]) -> bool:
+    """:func:`is_bimodal` over the warm samples, or over all samples
+    while fewer than two are warm. Sweep 1 nearly always compiles, so
+    a two-sample query has at most one warm sample; judging only that
+    would never flag [1.74, 15.64] with compiles [8, 0], and its
+    min-of-2 would be reported without a tiebreak sample."""
+    warm = warm_samples(vals, compiles)
+    return is_bimodal(warm if len(warm) >= 2 else vals)
 
 
 def estimate(vals: list[float]) -> float:
@@ -395,6 +414,9 @@ def main(names: list[str]) -> None:
         samples[name].append(round(time.perf_counter() - t0, 3))
         compiles[name].append(codegen_compiles(spark) - c0)
 
+    def bimodal(name: str) -> bool:
+        return run_is_bimodal(samples[name], compiles[name])
+
     total0 = time.perf_counter()
     failed_elapsed = 0.0  # a broken query must not IMPROVE the headline
     samples: dict[str, list[float]] = {n: [] for n in qs}
@@ -422,7 +444,7 @@ def main(names: list[str]) -> None:
             order = sorted(
                 (n for n in qs if samples[n]),
                 key=lambda n: (
-                    -is_bimodal(samples[n]),
+                    -bimodal(n),
                     -(n in py_band),
                     -samples[n][0],
                 ),
@@ -501,7 +523,7 @@ def main(names: list[str]) -> None:
             and samples[n]
             and len(samples[n]) < REPS
             and (
-                (len(samples[n]) == 2 and is_bimodal(samples[n]))
+                (len(samples[n]) == 2 and bimodal(n))
                 or n in py_band
             )
         ),
@@ -522,7 +544,7 @@ def main(names: list[str]) -> None:
                 run_once(name)
                 print(
                     f"bench: tiebreak sample for "
-                    f"{'bimodal' if is_bimodal(samples[name]) else 'py-band'} "
+                    f"{'bimodal' if bimodal(name) else 'py-band'} "
                     f"{name}: samples now {samples[name]}",
                     file=sys.stderr,
                 )
@@ -556,7 +578,7 @@ def main(names: list[str]) -> None:
         # queries whose recorded samples disagree >BIMODAL_SPREADx —
         # their point estimate is one side of a bimodal distribution,
         # so a reader must not treat it as a stable median
-        "bimodal": sorted(n for n, v in samples.items() if is_bimodal(v)),
+        "bimodal": sorted(n for n in samples if bimodal(n)),
         "counters": counters,
         "compiles": compiles,
         "cores": sc.defaultParallelism,

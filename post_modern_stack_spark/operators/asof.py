@@ -40,15 +40,14 @@ def asof_join(
     by: Sequence[str],
     right_cols: Sequence[str],
     right_tie: str | None = None,
-    strict: bool = False,
 ) -> DataFrame:
     """Backward as-of join, union-window strategy (JVM-only plan).
 
     Every ``left`` row is matched to the latest ``right`` row of the
-    same ``by`` key with ``right[on] <= left[on]`` (``<`` when
-    ``strict``); unmatched left rows keep NULL right columns (left
-    outer semantics). ``right_cols`` are emitted with their own names
-    and must not collide with left column names.
+    same ``by`` key with ``right[on] <= left[on]``; unmatched left rows
+    keep NULL right columns (left outer semantics). ``right_cols`` are
+    emitted with their own names and must not collide with left column
+    names.
 
     Plan shape: Union (narrow) → single Exchange on ``by`` → per-key
     sort → running ``last(ignorenulls)`` → filter left rows. No
@@ -56,16 +55,13 @@ def asof_join(
     window (salt upstream if one key dominates).
     """
     by = list(by)
-    # right rows sort before left rows at equal time for inclusive
-    # (<=) semantics, after them for strict (<)
-    r_side, l_side = (0, 1) if not strict else (1, 0)
     tie = F.col(right_tie) if right_tie is not None else F.lit(0)
 
     rv_struct = F.struct(*[F.col(c) for c in right_cols])
     r = right.select(
         *by,
         F.col(on).alias(_T),
-        F.lit(r_side).alias(_SIDE),
+        F.lit(0).alias(_SIDE),
         tie.alias(_TIE),
         rv_struct.alias(_RV),
     )
@@ -74,7 +70,7 @@ def asof_join(
     l = left.select(
         *by,
         F.col(on).alias(_T),
-        F.lit(l_side).alias(_SIDE),
+        F.lit(1).alias(_SIDE),
         F.lit(0).alias(_TIE),
         lp_struct.alias(_LP),
     )
@@ -86,12 +82,14 @@ def asof_join(
         l.select(*by, _T, _SIDE, _TIE, _LP, _RV)
     )
 
+    # right rows (side 0) sort before left rows (side 1) at equal time,
+    # so a right row at the left row's own time matches (<=)
     w = (
         Window.partitionBy(*by)
         .orderBy(_T, _SIDE, _TIE)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    is_left = F.col(_SIDE) == l_side
+    is_left = F.col(_SIDE) == 1
     matched = unioned.withColumn(_RV, F.last(_RV, ignorenulls=True).over(w)).filter(
         is_left
     )

@@ -1,88 +1,14 @@
-"""Data-quality expectations — dbt's four generic tests as one-pass
-aggregations (SURVEY.md §5 strategy 2; reference
-src/dbt/models/metaflow/schema.yml:9-13 declares ``unique`` +
-``not_null``; ``accepted_values`` and ``relationships`` are the other
-two generics in dbt's standard kit).
+"""Row-level data contracts with quarantine routing.
 
-Each check returns a violation count; a passing table reports all
-zeros. ``run_expectations`` evaluates a spec dict and returns a tidy
-(check, column, violations) report DataFrame — the engine analog of
-``dbt test`` output.
+The table-level dbt tests (reference
+src/dbt/models/metaflow/schema.yml:9-13: ``unique`` + ``not_null``)
+run as one aggregation in ``metrics.data_quality_checks``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def unique_violations(df: DataFrame, col: str) -> DataFrame:
-    """Rows beyond the first per value (dbt ``unique``)."""
-    return df.agg(
-        (F.count(col) - F.count_distinct(F.col(col))).alias("violations")
-    )
-
-
-def not_null_violations(df: DataFrame, col: str) -> DataFrame:
-    return df.agg(F.sum(F.col(col).isNull().cast("long")).alias("violations"))
-
-
-def accepted_values_violations(df: DataFrame, col: str, values: list) -> DataFrame:
-    """dbt ``accepted_values``: anything outside the allow-list (NULLs
-    are not violations, matching dbt's semantics)."""
-    return df.agg(
-        F.sum(
-            (~F.col(col).isin(*values) & F.col(col).isNotNull()).cast("long")
-        ).alias("violations")
-    )
-
-
-def relationship_violations(
-    child: DataFrame, child_col: str, parent: DataFrame, parent_col: str
-) -> DataFrame:
-    """dbt ``relationships`` (referential integrity): child keys with no
-    parent — a left_anti join, counting non-null orphans only."""
-    orphans = child.filter(F.col(child_col).isNotNull()).join(
-        parent.select(F.col(parent_col).alias(child_col)).distinct(),
-        child_col,
-        "left_anti",
-    )
-    return orphans.agg(F.count(F.lit(1)).alias("violations"))
-
-
-def run_expectations(
-    spark: SparkSession,
-    df: DataFrame,
-    spec: dict,
-    parents: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """Evaluate a dbt-schema.yml-shaped spec:
-
-        {"unique": ["session_id"],
-         "not_null": ["session_id", "api_key"],
-         "accepted_values": {"event_type": ["view", "click"]},
-         "relationships": {"o_custkey": ("customer", "c_custkey")}}
-
-    Returns (check, column, violations) rows; pipeline gates assert
-    every violations == 0 (the ``dbt test`` exit-code contract).
-    """
-    parents = parents or {}
-    rows = []
-    for col in spec.get("unique", []):
-        v = unique_violations(df, col).collect()[0]["violations"]
-        rows.append(("unique", col, int(v or 0)))
-    for col in spec.get("not_null", []):
-        v = not_null_violations(df, col).collect()[0]["violations"]
-        rows.append(("not_null", col, int(v or 0)))
-    for col, values in spec.get("accepted_values", {}).items():
-        v = accepted_values_violations(df, col, values).collect()[0]["violations"]
-        rows.append(("accepted_values", col, int(v or 0)))
-    for col, (parent_name, parent_col) in spec.get("relationships", {}).items():
-        v = relationship_violations(
-            df, col, parents[parent_name], parent_col
-        ).collect()[0]["violations"]
-        rows.append(("relationships", col, int(v or 0)))
-    return spark.createDataFrame(rows, ["check", "column", "violations"])
 
 
 def validate_and_split(df: DataFrame, rules: "dict[str, F.Column]"):
@@ -95,8 +21,8 @@ def validate_and_split(df: DataFrame, rules: "dict[str, F.Column]"):
 
     Row-local rules only (null/range/set/regex): shuffle-free, one
     scan evaluated twice by two filters (or once if the caller caches).
-    Cross-row rules (unique/relationship) are separate ledger joins —
-    see ``unique_violations``/``relationship_violations``.
+    Cross-row rules (uniqueness) run as one aggregate in
+    ``metrics.data_quality_checks``.
 
     Returns (valid_df, quarantine_df): quarantine has the original
     columns plus ``violations array<string>``.

@@ -271,9 +271,8 @@ def logreg_prob_expr(
     bias: float,
     n_features: int = 256,
 ) -> F.Column:
-    """The sigmoid probability as one Column expression — the form a
-    streaming gate composes into its projection
-    (streaming/curation_stream.quality_gate)."""
+    """The sigmoid probability as one Column expression, so a
+    projection can score rows without a Python boundary."""
     from itertools import chain
 
     wmap = F.create_map(

@@ -40,7 +40,6 @@ ZIGZAG = np.array(
     ],
     dtype=np.int64,
 )
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 # ITU-T T.81 Annex K.1/K.2 example quantization tables (the de-facto
 # standard ones every baseline encoder ships)
@@ -134,32 +133,14 @@ _C = np.array(
 )
 
 
-def fdct8x8(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
+def _fdct_blocks(blocks: np.ndarray) -> np.ndarray:
+    """Forward DCT of every 8×8 block in a (by, bx, 8, 8) grid."""
+    return np.einsum("ij,abjk,lk->abil", _C, blocks, _C)
 
 
-def idct8x8(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
-def fdct8x8_reference(block: np.ndarray) -> np.ndarray:
-    """Direct O(N^4) DCT from T.81 A.3.3 — the slow spec formula the
-    fast matrix path is tested against."""
-    out = np.zeros((8, 8))
-    for u in range(8):
-        for v in range(8):
-            cu = math.sqrt(0.5) if u == 0 else 1.0
-            cv = math.sqrt(0.5) if v == 0 else 1.0
-            s = 0.0
-            for x in range(8):
-                for y in range(8):
-                    s += (
-                        block[x, y]
-                        * math.cos((2 * x + 1) * u * math.pi / 16)
-                        * math.cos((2 * y + 1) * v * math.pi / 16)
-                    )
-            out[u, v] = 0.25 * cu * cv * s
-    return out
+def _idct_blocks(coef: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`_fdct_blocks`."""
+    return np.einsum("ji,abjk,kl->abil", _C, coef, _C)
 
 
 def _scaled_qt(base: np.ndarray, quality: int) -> np.ndarray:
@@ -329,7 +310,7 @@ def encode_jpeg(img: np.ndarray, quality: int = 85, subsample: bool = False) -> 
     for plane, qt in zip(planes, qts):
         blocks = _plane_blocks(plane - 128.0)
         by, bx = blocks.shape[:2]
-        coef = np.einsum("ij,abjk,lk->abil", _C, blocks, _C)
+        coef = _fdct_blocks(blocks)
         q = np.round(coef / qt).astype(np.int64)
         # zigzag: zz[k] = block.flat[ZIGZAG[k]]
         zz_planes.append(q.reshape(by, bx, 64)[..., ZIGZAG])
@@ -598,7 +579,7 @@ def decode_jpeg(content: bytes) -> np.ndarray:
     for c in comps:
         coef = c["coef"]
         by, bx = coef.shape[:2]
-        spatial = np.einsum("ji,abjk,kl->abil", _C, coef, _C) + 128.0
+        spatial = _idct_blocks(coef) + 128.0
         plane = spatial.swapaxes(1, 2).reshape(by * 8, bx * 8)
         # nearest upsample to full resolution
         plane = np.repeat(np.repeat(plane, hmax // c["h"], axis=1), vmax // c["v"], axis=0)

@@ -171,25 +171,6 @@ def encode_wav_g711(samples, rate: int) -> bytes:
     )
 
 
-def encode_wav(samples, rate: int) -> bytes:
-    """Inverse of :func:`decode_wav` (test fixture)."""
-    arr = np.asarray(samples, dtype=np.float64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    pcm = np.clip(arr * 32768.0, -32768, 32767).astype("<i2").tobytes()
-    n_ch = arr.shape[1]
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * n_ch * 2, n_ch * 2, 16)
-    return (
-        struct.pack("<4sI4s", b"RIFF", 4 + 8 + len(fmt) + 8 + len(pcm), b"WAVE")
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(pcm))
-        + pcm
-    )
-
-
 def decode_png(content: bytes):
     """REAL decoder for PNG (pure numpy + stdlib zlib — PNG's DEFLATE
     stream IS zlib, so no external media lib is needed): parses the
@@ -483,26 +464,6 @@ def decode_gif(content: bytes):
     if not frames:
         raise ValueError("GIF stream has no image frames")
     return np.stack(frames), delays
-
-
-def encode_gif(frames, delays_ms=None) -> bytes:
-    """Inverse of :func:`decode_gif`: animated GIF89a with a global
-    palette built from the frames' unique colors (≤256 required —
-    median-cut quantization is a lossy design choice this exact
-    round-trip codec deliberately refuses)."""
-    frames = np.asarray(frames, dtype=np.uint8)
-    if frames.ndim == 3:
-        frames = frames[None]
-    n, h, w, _ = frames.shape
-    flat = frames.reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise NotImplementedError(
-            f"encode_gif is exact (no quantization); got {len(colors)} colors > 256"
-        )
-    return encode_gif_indexed(
-        inverse.reshape(n, h, w), colors, delays_ms=delays_ms
-    )
 
 
 def encode_gif_indexed(indices, palette, delays_ms=None) -> bytes:

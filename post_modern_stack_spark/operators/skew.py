@@ -1,22 +1,15 @@
 """Skew-mitigation operators (SURVEY.md §7 watch-list 6).
 
 AQE's skew-join splitting covers join-side skew at runtime; these
-helpers cover the cases AQE can't re-plan:
-
-- ``salted_aggregate``: two-phase aggregation for hot grouping keys
-  (one tenant/session dominating A8/A9 shuffles). Phase 1 aggregates
-  on (key, salt) spreading a hot key over N reducers; phase 2 merges
-  the N partials. Correct for any algebraic aggregate (sum/count/min/
-  max); averages are derived as sum/count at merge time.
-- ``salted_ordered_collect``: the A7 ordered-array aggregation under a
-  hot session key — per-salt sorted partials merged with a final
-  array_sort (sort keys ride inside the structs, so the merge is still
-  deterministic).
+helpers cover the cases AQE can't re-plan: a scan with too few
+row-carrying tasks (``widen_narrow_scan``), a running sum over one hot
+key's timeline (``chunked_running_sum``) and a join on a hot key
+(``salted_join``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -102,59 +95,6 @@ def with_salt(df: DataFrame, buckets: int = 16, salt_col: str = "_salt") -> Data
     )
 
 
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    sums: dict[str, str] | None = None,
-    count_alias: str | None = "n",
-    buckets: int = 16,
-) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    ``sums`` maps input column → output alias (summed); ``count_alias``
-    adds a row count. Phase 1 shuffles on (keys..., salt) — a key with
-    10^9 rows lands on ``buckets`` reducers instead of one; phase 2
-    shuffles only the tiny per-salt partials.
-    """
-    sums = sums or {}
-    salted = with_salt(df, buckets)
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *[F.sum(src).alias(f"__s_{alias}") for src, alias in sums.items()],
-        F.count(F.lit(1)).alias("__n"),
-    )
-    aggs = [F.sum(f"__s_{alias}").alias(alias) for alias in sums.values()]
-    if count_alias:
-        aggs.append(F.sum("__n").alias(count_alias))
-    return phase1.groupBy(*keys).agg(*aggs)
-
-
-def salted_ordered_collect(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    order_by: list[str],
-    out_col: str = "arr",
-    buckets: int = 16,
-) -> DataFrame:
-    """A7 under skew: collect per (keys, salt), concatenate partials,
-    then one final sort of the combined struct array. The heavy shuffle
-    carries (keys, salt); the final per-key merge moves pre-reduced
-    arrays only.
-    """
-    struct_cols = [F.col(k).alias(f"_k{i}") for i, k in enumerate(order_by)]
-    struct_cols.append(F.col(value).alias("_v"))
-    salted = with_salt(df, buckets)
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        F.collect_list(F.struct(*struct_cols)).alias("_part")
-    )
-    merged = phase1.groupBy(*keys).agg(
-        F.array_sort(F.flatten(F.collect_list("_part"))).alias("_all")
-    )
-    return merged.select(
-        *keys, F.transform("_all", lambda s: s.getField("_v")).alias(out_col)
-    )
-
-
 def chunked_running_sum(
     df: DataFrame,
     key_cols: list[str],
@@ -166,8 +106,8 @@ def chunked_running_sum(
 ) -> DataFrame:
     """Running (prefix) sum under a HOT window key — the distributed
     prefix-sum decomposition for when one key's timeline is too large
-    for a single task's sort (the A9 running-window analog of
-    ``salted_aggregate``).
+    for a single task's sort (the A9 running-window analog of a salted
+    two-phase aggregate).
 
     A plain ``Window.partitionBy(key).orderBy(t).rowsBetween(unbounded,
     current)`` serializes each key into one task; a 100 TB feed with a

@@ -1448,9 +1448,8 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _gopher_metrics(text_col: str) -> dict:
-    """The rule battery as raw Column expressions, so both the batch
-    diagnosis table (``gopher_rules``) and the streaming gate
-    (``gopher_keep_expr``) compile the SAME row-local logic."""
+    """The rule battery as raw Column expressions (``gopher_rules``
+    projects them into its diagnosis table)."""
     text = F.col(text_col)
     lines = F.split(text, r"\n")
     n_words = F.size(F.split(text, r"\s+"))
@@ -1507,12 +1506,6 @@ def _gopher_metrics(text_col: str) -> dict:
             & r_stopwords
         ),
     }
-
-
-def gopher_keep_expr(text_col: str = "text") -> F.Column:
-    """The conjunctive Gopher keep flag as a single Column — the
-    streaming-gate form (streaming/curation_stream.quality_gate)."""
-    return _gopher_metrics(text_col)["keep"].cast("int")
 
 
 def dsir_weights(

@@ -13,8 +13,6 @@ from post_modern_stack_spark.functions import json_get
 from post_modern_stack_spark.plans.entryflow import query
 from post_modern_stack_spark.registry import load_table
 
-PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType(), True)])
-
 
 @query(
     "props_from_json",

@@ -725,7 +725,7 @@ def q_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     is applied AFTER the broadcasts so it never blocks pushdown of the
     shipdate range (which reaches the lineitem scan). orders⋈lineitem is
     the only shuffle pair — at 100 TB that is the co-partition/bucketing
-    candidate (sources/layout.write_bucketed).
+    candidate.
     """
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")

@@ -2874,7 +2874,7 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_rowwise_scorer_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] cross-engine check of the STREAMING scorer expression
+    """[EXT] cross-engine check of the row-wise scorer expression
     itself (inference.logreg_prob_expr): weights fixed to the
     arithmetic family w(b) = (b mod 7)·0.01 − 0.02 so the oracle
     replays hash → bucket → lookup → mean → sigmoid exactly. Trained

@@ -30,8 +30,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -161,22 +159,3 @@ def register_views(
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-def register_model_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register the transformation-DAG models as temp views over the
-    driver-shaped events table, exposing the dbt surface to
-    ``spark.sql`` users: querying ``session_events`` recomputes both
-    models exactly like Snowflake inlining the dbt view chain
-    (SURVEY.md §3 entry 2).
-    """
-    from post_modern_stack_spark.operators.sessionize import (
-        driver_events_exploded,
-        driver_session_events,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("events")
-    driver_events_exploded(ev).createOrReplaceTempView("events_exploded")
-    driver_session_events(ev).createOrReplaceTempView("session_events")
-    return ["events", "events_exploded", "session_events"]

@@ -1,1 +1,2 @@
-"""Sources & sinks (SURVEY.md §2 H): ingestion, ETL stamping, CSV/parquet IO."""
+"""Sources & sinks (SURVEY.md §2 H): append-only ingest, ETL stamping,
+the synthetic-events and jsonl_docs data sources."""

@@ -30,9 +30,8 @@ layout needs:
 - **A commit manifest**: each write commits ``_MANIFEST.json`` (file,
   rows, bytes per shard) exactly once, after every task succeeded —
   readers plan from the manifest when present, so shards from an
-  aborted earlier write are never picked up (the one-generation
-  transaction-log story; ``sources/merge.VersionedKeyedTable`` holds
-  the multi-version variant).
+  aborted earlier write are never picked up (a one-generation
+  transaction log).
 
 Bridge caveat (Spark 4.1): the JVM relation caches the most recently
 planned scan, so running a *differently*-filtered action against the
@@ -447,27 +446,6 @@ class JsonlDocsDataSource(DataSource):
 
     def streamReader(self, schema: T.StructType) -> JsonlDocsStreamReader:
         return JsonlDocsStreamReader(schema, dict(self.options))
-
-
-def vacuum_unreferenced(root: str) -> list[str]:
-    """Delete shards not referenced by the current manifest — the
-    cleanup pass after mode("overwrite") (which replaces the manifest,
-    making the previous generation invisible but leaving its files) or
-    after aborted writes (whose tasks may have completed shards before
-    the job died). Refuses to act without a manifest: a raw listing IS
-    the source of truth then, and everything would be 'unreferenced'."""
-    manifest = os.path.join(root, MANIFEST)
-    if not os.path.isfile(manifest):
-        return []
-    with open(manifest) as f:
-        keep = {e["name"] for e in json.load(f)["files"]}
-    removed = []
-    for p in globlib.glob(os.path.join(root, "**", "*.jsonl*"), recursive=True):
-        rel = os.path.relpath(p, root)
-        if rel not in keep and os.path.basename(p) != MANIFEST:
-            os.remove(p)
-            removed.append(rel)
-    return sorted(removed)
 
 
 def register(spark) -> None:

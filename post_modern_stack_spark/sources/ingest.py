@@ -115,64 +115,3 @@ def read_raw_events(spark, path: str) -> DataFrame:
     """Read the append-only log back (schema-on-read for raw_data).
     The schema is known, so no footer job infers it."""
     return spark.read.schema(RAW_LOG_SCHEMA).parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, compression: str | None = "gzip") -> str:
-    """H1/H2: quote-all CSV with header (reference
-    upload_to_snowflake.py:158-176 + PUT auto_compress)."""
-    w = df.write.option("header", True).option("quoteAll", True).mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.csv(path)
-    return path
-
-
-def read_csv(spark, path: str, schema: T.StructType) -> DataFrame:
-    """H3: COPY INTO parity — explicit schema (never inferSchema in
-    production paths, SURVEY.md §1.3), quoted fields, header skip."""
-    return (
-        spark.read.schema(schema)
-        .option("header", True)
-        .option("quote", '"')
-        .csv(path)
-    )
-
-
-def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> str:
-    """H-family widened: JSON-lines sink (the interchange format of
-    LLM-data pipelines — one JSON object per line, splittable when
-    uncompressed, schema carried in-band)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-    return path
-
-
-def read_jsonl(spark, path: str, schema: T.StructType) -> DataFrame:
-    """JSON-lines source with an explicit schema (never inferSchema in
-    production paths — inference is a full extra pass over 100 TB) and
-    PERMISSIVE mode: malformed lines become NULL rows instead of
-    failing the job, with the raw line preserved when the schema has a
-    ``_corrupt_record`` string field."""
-    return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-
-
-def write_orc(df: DataFrame, path: str, compression: str = "zlib") -> str:
-    """H-family widened: ORC sink (Spark-bundled columnar alternative
-    to parquet — same predicate-pushdown/column-pruning contract, ZLIB
-    or SNAPPY block compression, dictionary + RLE encodings). At 100 TB
-    ORC vs parquet is a layout choice, not a capability difference;
-    both ride the same DataSource V2 scan machinery."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
-    return path
-
-
-def read_orc(spark, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """ORC source. Schema optional: unlike CSV/JSON, ORC files embed a
-    typed schema in the footer, so schema-on-read here means projection
-    (column pruning against the footer), not inference."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)

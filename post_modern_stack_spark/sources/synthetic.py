@@ -24,14 +24,10 @@ Register once per session, then read by format name:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 SCHEMA_DDL = (
@@ -146,78 +142,3 @@ class SyntheticEventsStreamReader:
                 (_mix(i, 3) % 10_000) / 100.0,
                 '{"k": %d}' % (_mix(i, 4) % 100),
             )
-
-
-class JsonlGzSink(DataSource):
-    """Custom Python DataSource WRITER (the sink half of the Spark 4
-    Python DataSource API; the reader half is ``SyntheticEventsDataSource``):
-    ``df.write.format("jsonl_gz").option("path", dir).save()`` writes
-    gzip-compressed JSON-lines shards with a two-phase commit —
-    executors write to task-scoped temp names (attempt-isolated, so a
-    retried/zombie task never collides), the driver renames to final
-    names only in ``commit()`` and deletes temps in ``abort()``:
-    readers never observe a partial shard, same contract as Spark's
-    file commit protocol."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonl_gz"
-
-    def writer(self, schema, overwrite: bool):
-        return _JsonlGzWriter(self.options["path"], schema, overwrite)
-
-
-@dataclass
-class _ShardCommit(WriterCommitMessage):
-    tmp: str
-    rows: int
-    pid: int
-
-
-class _JsonlGzWriter(DataSourceWriter):
-    def __init__(self, path: str, schema, overwrite: bool):
-        self.path = path
-        self.fields = [f.name for f in schema.fields]
-        self.overwrite = overwrite
-
-    def write(self, iterator):
-        """Executor-side: stream one partition to a temp shard."""
-        import gzip
-        import json
-        import os
-        import uuid
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path, f"_tmp-{ctx.partitionId()}-{uuid.uuid4().hex}.jsonl.gz"
-        )
-        n = 0
-        with gzip.open(tmp, "wt") as f:
-            for row in iterator:
-                f.write(json.dumps(dict(zip(self.fields, row))) + "\n")
-                n += 1
-        return _ShardCommit(tmp=tmp, rows=n, pid=ctx.partitionId())
-
-    def commit(self, messages):
-        """Driver-side: atomically publish every shard."""
-        import os
-
-        for m in messages:
-            final = os.path.join(
-                self.path, f"part-{m.pid:05d}-{m.rows}.jsonl.gz"
-            )
-            os.replace(m.tmp, final)
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp):
-                os.remove(m.tmp)
-
-
-def register_sink(spark) -> None:
-    spark.dataSource.register(JsonlGzSink)

@@ -1,64 +1,11 @@
-"""SQL-surface engine functions (SURVEY.md §4: "registering engine
-functions as SQL UDFs for the SQL surface").
-
-Spark 4 SQL scalar UDFs (``CREATE FUNCTION ... RETURN <expr>``) keep
-the body as a Catalyst expression — fully codegen'd, no Python
-boundary — so the SQL surface gets the same engine idioms the
-DataFrame API exposes in ``functions/core.py``:
-
-- ``pad_seq(arr, n)``        — D4 Keras-parity left-pad/keep-last-n
-- ``normalize_sku(s)``       — C1/C2 lower + spaces→underscores
-- ``json_get_str/long(j,k)`` — B1 permissive path extraction
-- ``epoch_ms_to_date(ms)``   — C3 UTC date derivation
-- ``cosine_sim(a, b)``       — K3 vector cosine (NULL on zero norm)
+"""SQL-surface table functions (SURVEY.md §4: engine functions callable
+from ``spark.sql``): Python UDTFs for the FROM/LATERAL position. The
+scalar engine idioms stay DataFrame functions in ``functions/core.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-
-_FUNCTIONS = {
-    "pad_seq": """
-        CREATE OR REPLACE TEMPORARY FUNCTION pad_seq(arr ARRAY<INT>, n INT)
-        RETURNS ARRAY<INT>
-        RETURN concat(array_repeat(0, greatest(0, n - size(arr))),
-                      slice(arr, greatest(1, size(arr) - n + 1), n))
-    """,
-    "normalize_sku": """
-        CREATE OR REPLACE TEMPORARY FUNCTION normalize_sku(s STRING)
-        RETURNS STRING
-        RETURN lower(replace(s, ' ', '_'))
-    """,
-    "json_get_str": """
-        CREATE OR REPLACE TEMPORARY FUNCTION json_get_str(j STRING, k STRING)
-        RETURNS STRING
-        RETURN get_json_object(j, concat('$.', k))
-    """,
-    "json_get_long": """
-        CREATE OR REPLACE TEMPORARY FUNCTION json_get_long(j STRING, k STRING)
-        RETURNS BIGINT
-        RETURN try_cast(get_json_object(j, concat('$.', k)) AS BIGINT)
-    """,
-    "epoch_ms_to_date": """
-        CREATE OR REPLACE TEMPORARY FUNCTION epoch_ms_to_date(ms BIGINT)
-        RETURNS DATE
-        RETURN to_date(timestamp_millis(ms))
-    """,
-    "cosine_sim": """
-        CREATE OR REPLACE TEMPORARY FUNCTION cosine_sim(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>)
-        RETURNS DOUBLE
-        RETURN aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)
-               / nullif(sqrt(aggregate(a, 0.0D, (acc, v) -> acc + v * v))
-                        * sqrt(aggregate(b, 0.0D, (acc, v) -> acc + v * v)), 0.0D)
-    """,
-}
-
-
-def register_sql_functions(spark: SparkSession) -> list[str]:
-    """Install every engine SQL function into the session; idempotent."""
-    for ddl in _FUNCTIONS.values():
-        spark.sql(ddl)
-    return sorted(_FUNCTIONS)
 
 
 def register_udtfs(spark: SparkSession) -> list[str]:

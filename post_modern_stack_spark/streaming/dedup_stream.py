@@ -1,6 +1,5 @@
-"""Streaming incremental operators beyond sessionization (SURVEY.md §2
-J1/J2 × K1): watermark-bounded exact dedup and the stream-stream
-interval join.
+"""Streaming exact dedup (SURVEY.md §2 J1/J2 × K1), bounded by the
+event-time watermark.
 
 The batch K1 operator (operators/dedup.exact_dedup) reprocesses the
 whole corpus per run — the reference's append-only-log posture
@@ -57,132 +56,4 @@ def dedup_events(
         events.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def view_purchase_stream_join(
-    purchases: DataFrame,
-    views: DataFrame,
-    lookback: str = "1 hour",
-    watermark: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join (J-family): each purchase joined to
-    the same user's views from the trailing ``lookback`` window — the
-    incremental form of the batch range join
-    (operators/rangejoin.interval_join_buckets; attribution's
-    "views before purchase" semantics).
-
-    Both sides carry watermarks and the join condition bounds event
-    time on BOTH ends, which is exactly what lets Spark expire join
-    state: a buffered view can be dropped once the watermark passes
-    ``view.ts + lookback`` (no unbounded state on an unbounded feed).
-    On static frames the same call degrades to a plain inequality
-    join, so batch/stream parity is testable with identical code.
-
-    ``how='left_outer'`` keeps view-less purchases (attribution's
-    "organic conversion" rows): in streaming, the null-padded row is
-    emitted only once the watermark proves no matching view can still
-    arrive — exactly why outer stream-stream joins REQUIRE the
-    watermark + two-sided time bound that the inner join merely
-    benefits from. Note the GLOBAL watermark is the minimum over both
-    inputs (multipleWatermarkPolicy=min): null emission for the newest
-    purchases waits until BOTH feeds advance past them, so a stalled
-    view feed delays outer results — by design (emitting earlier could
-    be wrong).
-    """
-    p = purchases.select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    v = views.select(
-        F.col("user_id").alias("v_user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    )
-    if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
-    if views.isStreaming:
-        v = v.withWatermark("v_ts", watermark)
-    return p.join(
-        v,
-        F.expr(
-            f"p_user_id = v_user_id AND "
-            f"v_ts >= p_ts - INTERVAL {lookback} AND v_ts < p_ts"
-        ),
-        how,
-    ).select("p_user_id", "purchase_id", "purchase_value", "view_id", "v_ts")
-
-
-def dedup_then_windowed_counts(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_id",),
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """CHAINED stateful operators in one streaming query (Spark 4
-    multi-stateful pipelines): watermark-bounded exact dedup feeding a
-    tumbling-window aggregate — the at-least-once-feed → exactly-once-
-    metrics pipeline, without an intermediate sink. Both operators
-    share the event-time watermark; the dedup stage's state expires by
-    key horizon, the window stage's by window end. Batch degrades to
-    deterministic dedup + plain groupBy for the parity test.
-    """
-    from post_modern_stack_spark.streaming.sessionize_stream import (
-        windowed_event_counts,
-    )
-
-    deduped = dedup_events(events, keys=keys, watermark=watermark)
-    # the dedup stage already declared the event-time watermark; the
-    # window stage inherits it (re-declaring raises in Spark 4)
-    return windowed_event_counts(deduped, window=window, watermark=None)
-
-
-def dedup_against_corpus(
-    docs: DataFrame,
-    corpus_digests: DataFrame,
-    text_col: str = "text",
-    watermark_col: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Incremental-ingest exact dedup: drop arriving docs whose content
-    digest already exists in the historical corpus ledger, then drop
-    in-flight duplicates among the arrivals themselves.
-
-    ``corpus_digests`` is a STATIC frame of sha2-256 digests (the
-    ledger a batch dedup pass maintains; 32 bytes/doc, so even a
-    10 B-doc history is a few hundred GB of broadcastable/bucketable
-    state — join it, never re-scan raw history). The stream side is a
-    stream-static LEFT ANTI join (stateless per micro-batch) followed
-    by ``dropDuplicatesWithinWatermark`` on the digest for the
-    within-batch horizon. Same call works on a batch frame for the
-    backfill path (parity-tested).
-    """
-    digest = F.sha2(F.col(text_col), 256)
-    tagged = docs.withColumn("__sha", digest)
-    ledger = corpus_digests.select(F.col("sha").alias("__sha")).distinct()
-    fresh = tagged.join(ledger, "__sha", "left_anti")
-    if docs.isStreaming:
-        if watermark_col:
-            fresh = fresh.withWatermark(watermark_col, watermark)
-        else:
-            # doc feeds often carry no event time; a processing-time
-            # watermark (micro-batch timestamp) still bounds the dedup
-            # state to the horizon — the standard ingest-dedup posture
-            fresh = fresh.withColumn(
-                "__ingest_ts", F.current_timestamp()
-            ).withWatermark("__ingest_ts", watermark)
-        return (
-            fresh.dropDuplicatesWithinWatermark(["__sha"])
-            .drop("__sha", "__ingest_ts")
-        )
-    w = Window.partitionBy("__sha").orderBy(
-        *[c for c in docs.columns if c != text_col] or [text_col]
-    )
-    return (
-        fresh.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__sha")
     )

@@ -6,13 +6,9 @@ ETL (reference README.md:80). Here the same semantics run incrementally:
 - J1: file stream source over the events parquet layout (sinks call
   ``writeStream`` directly).
 - J2: event-time watermark bounding late data and state.
-- J3: sessionization both by explicit session key (the reference's
-  pre-keyed ``session_id``) and by inactivity gap
-  (``session_window``) for keyless streams.
 - J4: tumbling/sliding event-time windows.
 - J5: stateful time-ordered interaction-array accumulation via
-  ``applyInPandasWithState`` (``stateful_session_arrays_bucketed``),
-  plus the stateful ordered funnel (``stateful_funnel``).
+  ``applyInPandasWithState`` (``stateful_session_arrays_bucketed``).
 """
 
 from __future__ import annotations
@@ -25,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# a user's session (and funnel) closes after this much processing-time
+# a user's session closes after this much processing-time
 # quiet, checked at micro-batch boundaries
 _QUIET_CLOSE_MS = 5_000
 
@@ -90,31 +86,6 @@ def windowed_event_counts(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
             "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def gap_sessions(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """J3 keyless-gap variant: ``session_window`` sessionization by
-    inactivity gap — for sources with no session key (the reference
-    always has one; this is the generalization)."""
-    wm = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        wm.groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "user_id",
             "n_events",
             "total_value",
         )
@@ -287,149 +258,4 @@ def stateful_session_arrays_bucketed(
         stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def windowed_approx_distinct(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """J4 + K6 combined: watermarked tumbling windows carrying an
-    HyperLogLog++ distinct-user estimate alongside exact counts — the
-    streaming analog of the batch ``approx_sketches`` query. The HLL
-    register set is the window's aggregation state (KBs per window, so
-    state size is bounded by windows retained under the watermark, not
-    by distinct-key cardinality — the reason approx wins over
-    ``collect_set`` at 100 TB). Same expression runs on a static frame
-    for the batch-parity test.
-    """
-    wm = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        wm.groupBy(F.window("ts", window), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct("user_id", rsd).alias("approx_users"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "approx_users",
-        )
-    )
-
-
-FUNNEL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("view_ts", T.ArrayType(T.LongType()), True),
-        T.StructField("click_ts", T.ArrayType(T.LongType()), True),
-        T.StructField("purchase_ts", T.ArrayType(T.LongType()), True),
-    ]
-)
-
-FUNNEL_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("t1", T.LongType(), True),
-        T.StructField("t2", T.LongType(), True),
-        T.StructField("t3", T.LongType(), True),
-    ]
-)
-
-
-def _accumulate_funnel(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Custom stateful ordered funnel: per user, earliest view t1, then
-    earliest click strictly after t1 (t2), then earliest purchase
-    strictly after t2 (t3). Stage times are resolved at EMISSION from
-    compact per-stage candidate sets, so out-of-order arrival (a late
-    view lowering t1 and thereby re-qualifying earlier clicks) gives
-    the same answer as batch — resolving stages eagerly per batch
-    would lock in a wrong t2. State is bounded: only each stage's
-    candidate minima are kept (the single min view; clicks/purchases
-    below the current stage frontier can still matter, so per-stage
-    times dedupe through a set)."""
-    if state.hasTimedOut:
-        (views, clicks, purchases) = state.get
-        state.remove()
-        t1 = min(views) if views else None
-        t2 = min((c for c in clicks if t1 is not None and c > t1), default=None)
-        t3 = min(
-            (p for p in purchases if t2 is not None and p > t2), default=None
-        )
-        if t1 is not None:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "t1": pd.array([t1], dtype="Int64"),
-                    "t2": pd.array([t2], dtype="Int64"),
-                    "t3": pd.array([t3], dtype="Int64"),
-                }
-            )
-        return
-    views: list[int] = []
-    clicks: list[int] = []
-    purchases: list[int] = []
-    if state.exists:
-        v, c, p = state.get
-        views, clicks, purchases = list(v), list(c), list(p)
-    for pdf in pdfs:
-        for ts, et in zip(pdf["ts_ns"], pdf["event_type"]):
-            ts = int(ts)
-            if et == "view":
-                # only the minimum view matters for t1
-                views = [min(views + [ts])] if views else [ts]
-            elif et == "click":
-                clicks.append(ts)
-            elif et == "purchase":
-                purchases.append(ts)
-    state.update((views, sorted(set(clicks)), sorted(set(purchases))))
-    state.setTimeoutDuration(_QUIET_CLOSE_MS)
-    # no output on update; the timeout branch's yield keeps this a generator
-
-
-def stateful_funnel(events: DataFrame) -> DataFrame:
-    """J5 variant: ORDERED funnel as a custom stateful streaming
-    operator (``applyInPandasWithState``) — per user, the
-    view → click-after-view → purchase-after-click stage times, emitted
-    when the user goes quiet. The streaming twin of the batch
-    ``funnel_conversion`` catalog query; stage semantics are resolved
-    at emission so any arrival order converges to the batch answer.
-    """
-    prepped = events.select("user_id", "ts_ns", "event_type").filter(
-        F.col("event_type").isin("view", "click", "purchase")
-    )
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _accumulate_funnel,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def trending_top_k(
-    windowed_counts: DataFrame, k: int = 3
-) -> DataFrame:
-    """Top-k event types per time window — the 'trending now' serve
-    query. Rank-per-group is NOT expressible inside an append-mode
-    stream (a window's ranking is only final when the watermark closes
-    it), so the production shape is: stream ``windowed_event_counts``
-    into a sink, then rank the SINK table — the Kappa serving split.
-    This helper is that ranking; the parity test drives
-    stream-to-sink → rank and checks it equals ranking the batch
-    aggregate directly."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("window_start").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        windowed_counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("window_start", "rank", "event_type", "n_events")
     )

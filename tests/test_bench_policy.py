@@ -33,6 +33,22 @@ def test_synthetic_spike_is_flagged_bimodal():
     assert bench.is_bimodal([1.0, 1.1, 15.0])
 
 
+def test_bimodal_spread_ignores_compile_paying_samples():
+    """Sweep 1 pays the query's codegen compiles, so its sample can sit
+    3x above the warm ones with no host noise at all; the spread is
+    judged over the samples that compiled nothing, once there are two."""
+    assert bench.warm_samples([0.734, 0.194, 0.176], [8, 0, 0]) == [0.194, 0.176]
+    assert not bench.run_is_bimodal([0.734, 0.194, 0.176], [8, 0, 0])
+    assert bench.is_bimodal([0.734, 0.194, 0.176])  # what it used to judge
+    assert bench.run_is_bimodal([1.74, 15.64], [0, 0])
+    # a two-sample query whose sweep-1 run compiled has one warm
+    # sample: judge both, so the pair still earns its tiebreak
+    assert bench.run_is_bimodal([1.74, 15.64], [8, 0])
+    assert bench.run_is_bimodal([0.9, 3.1], [4, 0])
+    # the tiebreak sample is warm; the spread then reads 3.1 vs 1.1
+    assert not bench.run_is_bimodal([0.9, 3.1, 1.1], [4, 0, 0])
+
+
 def test_estimator_policy_min2_median3():
     assert bench.estimate([]) == -1.0
     assert bench.estimate([4.2]) == 4.2

@@ -362,115 +362,6 @@ def test_rowwise_scorer_matches_sparse_scorer(spark):
     assert all(abs(sparse[k] - rowwise[k]) < 1e-9 for k in sparse)
 
 
-def test_streaming_quality_gate_matches_batch(spark, tmp_path):
-    import numpy as np
-    from post_modern_stack_spark.registry import load_table
-    from post_modern_stack_spark.streaming import curation_stream as C
-
-    # synthetic corpus WITH stopwords (the sf testdata vocab has none,
-    # so every doc would fail r_stopwords and the gate would be vacuous)
-    rows = [
-        (
-            i,
-            f"the quick item {i} of batch and value {i % 7} runs fine",
-            "en",
-            "srcA" if i % 2 else "srcB",
-            40,
-        )
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    path = str(tmp_path / "docs_in")
-    docs.repartition(3).write.mode("overwrite").parquet(path)
-
-    rng = np.random.RandomState(5)
-    w, b = rng.randn(256) * 0.5, 0.0
-    batch = C.quality_gate(docs, w, b, min_p=0.4)
-    stream = C.quality_gate(C.stream_documents(spark, path), w, b, min_p=0.4)
-    assert stream.isStreaming
-
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("qgate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["doc_id"], r["p"]) for r in spark.table("qgate").collect()}
-    want = {(r["doc_id"], r["p"]) for r in batch.collect()}
-    assert got == want and len(want) > 0
-
-
-def test_dbt_snapshot_scd2_lifecycle(spark, tmp_path):
-    from post_modern_stack_spark.sources.snapshot import DbtSnapshot
-
-    path = str(tmp_path / "snap")
-    snap = DbtSnapshot(
-        spark, path, unique_key="id", check_cols=["city", "tier"], hard_deletes=True
-    )
-
-    v1 = spark.createDataFrame(
-        [(1, "paris", "gold"), (2, "rome", "silver"), (3, "oslo", "bronze")],
-        "id long, city string, tier string",
-    )
-    stats = snap.apply(v1, at_ts=1000)
-    assert stats == {"inserted": 3, "closed": 0, "unchanged": 0}
-
-    # id 1 changes city, id 2 unchanged, id 3 deleted, id 4 appears
-    v2 = spark.createDataFrame(
-        [(1, "lyon", "gold"), (2, "rome", "silver"), (4, "bern", "gold")],
-        "id long, city string, tier string",
-    )
-    stats = snap.apply(v2, at_ts=2000)
-    assert stats == {"inserted": 2, "closed": 2, "unchanged": 1}
-
-    rows = {
-        (r["id"], r["valid_from"]): r for r in snap.read().collect()
-    }
-    assert len(rows) == 5
-    # id 1: closed old version + new current
-    assert rows[(1, 1000)]["valid_to"] == 2000 and rows[(1, 1000)]["city"] == "paris"
-    assert rows[(1, 2000)]["valid_to"] is None and rows[(1, 2000)]["city"] == "lyon"
-    # id 2 untouched current
-    assert rows[(2, 1000)]["valid_to"] is None
-    # id 3 hard-deleted -> closed, no current row
-    assert rows[(3, 1000)]["valid_to"] == 2000
-    # id 4 new current
-    assert rows[(4, 2000)]["valid_to"] is None
-
-    # idempotent re-apply of the same source: nothing changes
-    stats = snap.apply(v2, at_ts=3000)
-    assert stats["inserted"] == 0 and stats["closed"] == 0
-    # per-key at most one current row
-    cur = snap.current().groupBy("id").count().collect()
-    assert all(r["count"] == 1 for r in cur)
-
-
-def test_dbt_snapshot_default_ignores_hard_deletes(spark, tmp_path):
-    """dbt's default hard_deletes='ignore': keys missing from the source
-    stay current (ADVICE round-3 — the close branch must be gated)."""
-    from post_modern_stack_spark.sources.snapshot import DbtSnapshot
-
-    snap = DbtSnapshot(
-        spark, str(tmp_path / "snap"), unique_key="id", check_cols=["city"]
-    )
-    v1 = spark.createDataFrame(
-        [(1, "paris"), (2, "rome")], "id long, city string"
-    )
-    snap.apply(v1, at_ts=1000)
-    v2 = spark.createDataFrame([(1, "lyon")], "id long, city string")
-    stats = snap.apply(v2, at_ts=2000)
-    assert stats == {"inserted": 1, "closed": 1, "unchanged": 1}
-    rows = {(r["id"], r["valid_from"]): r for r in snap.read().collect()}
-    # id 2 vanished from the source but remains CURRENT
-    assert rows[(2, 1000)]["valid_to"] is None
-    assert rows[(1, 1000)]["valid_to"] == 2000
-    assert rows[(1, 2000)]["valid_to"] is None
-
-
 def _reference_bpe(word_counts, n_merges):
     """Pure-Python Sennrich-style BPE for parity checking."""
     state = {w: list(w) for w in word_counts}
@@ -767,43 +658,6 @@ def test_pack_greedy_invariants_property(spark):
     run()
 
 
-def test_stream_dedup_against_corpus_matches_batch(spark, tmp_path):
-    from post_modern_stack_spark.streaming import curation_stream as C
-    from post_modern_stack_spark.streaming.dedup_stream import dedup_against_corpus
-
-    # history: docs 0/1 already ingested; arrivals repeat doc 1's text,
-    # include an in-batch duplicate pair, and two fresh docs
-    history = spark.createDataFrame(
-        [("old text one",), ("old text two",)], "text string"
-    )
-    ledger = history.select(F.sha2("text", 256).alias("sha"))
-    arrivals = [
-        (10, "old text two", "en", "s", 1),   # already in corpus -> dropped
-        (11, "fresh text a", "en", "s", 1),
-        (12, "fresh text a", "en", "s", 1),   # in-batch dup -> one survives
-        (13, "fresh text b", "en", "s", 1),
-    ]
-    docs = spark.createDataFrame(arrivals, C.DOC_SCHEMA)
-    path = str(tmp_path / "arrivals")
-    docs.repartition(2).write.mode("overwrite").parquet(path)
-
-    batch = dedup_against_corpus(docs, ledger)
-    got_batch = sorted(r["text"] for r in batch.collect())
-    assert got_batch == ["fresh text a", "fresh text b"]
-
-    stream = dedup_against_corpus(C.stream_documents(spark, path), ledger)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("corpus_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got_stream = sorted(r["text"] for r in spark.table("corpus_dedup").collect())
-    assert got_stream == got_batch
-
-
 def test_weighted_sample_matches_reference_aes(spark):
     """A-ES ranks must match a python replay of the same hash keys."""
     import hashlib
@@ -966,66 +820,6 @@ def test_container_parsers_never_crash_on_structured_fuzz():
     run_mp3()
 
 
-def test_table_diff_classifies_changes(spark, tmp_path):
-    from post_modern_stack_spark.sources.merge import VersionedKeyedTable, table_diff
-
-    path = str(tmp_path / "vkt")
-    t = VersionedKeyedTable(spark, path, n_buckets=4)
-    v0 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, val string"
-    )
-    t.create(v0, key="id")
-    updates = spark.createDataFrame(
-        [(2, "B", False), (4, "d", False), (3, None, True)],
-        "id long, val string, is_delete boolean",
-    )
-    t.merge(updates, delete_col="is_delete")
-
-    diff = {
-        r["id"]: r["change"]
-        for r in table_diff(t.read(0), t.read(), key="id").collect()
-    }
-    assert diff == {2: "changed", 3: "removed", 4: "added"}
-
-
-def test_trending_top_k_stream_sink_matches_batch(spark, tmp_path):
-    from post_modern_stack_spark.registry import load_table
-    from post_modern_stack_spark.streaming import sessionize_stream as S
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    path = str(tmp_path / "ev_in")
-    ev.repartition(3).write.mode("overwrite").parquet(path)
-
-    stream = spark.readStream.schema(ev.schema).parquet(path)
-    counts = S.windowed_event_counts(stream, window="6 hours")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("trend_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["window_start"], r["rank"], r["event_type"])
-        for r in S.trending_top_k(spark.table("trend_sink"), k=3).collect()
-    )
-    batch_rows = S.trending_top_k(
-        S.windowed_event_counts(ev, window="6 hours"), k=3
-    ).collect()
-    # append mode emits a window only when the watermark CLOSES it; the
-    # stream's final window stays open, so parity is over closed windows
-    last_open = max(r["window_start"] for r in batch_rows)
-    want = sorted(
-        (r["window_start"], r["rank"], r["event_type"])
-        for r in batch_rows
-        if r["window_start"] != last_open
-    )
-    assert got == want and len(want) > 0
-
-
 def test_validate_and_split_partitions_rows(spark):
     from post_modern_stack_spark.operators.expectations import validate_and_split
 
@@ -1046,44 +840,6 @@ def test_validate_and_split_partitions_rows(spark):
     assert got[2] == ["value_non_negative"]
     # NULL value fails both null and range rules (range is NULL -> fail)
     assert got[3] == ["value_not_null", "value_non_negative", "known_type"]
-
-
-def test_versioned_table_crashed_merge_is_invisible_and_vacuumable(spark, tmp_path):
-    """A merge that wrote bucket data but died BEFORE the manifest
-    rename must be invisible to readers (commit = the manifest), must
-    not break a retried merge (overwrite replaces orphan dirs), and
-    its orphans must fall to vacuum."""
-    import os
-
-    from post_modern_stack_spark.sources.merge import VersionedKeyedTable
-
-    path = str(tmp_path / "vkt2")
-    t = VersionedKeyedTable(spark, path, n_buckets=2)
-    t.create(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string"),
-        key="id",
-    )
-    before = sorted((r["id"], r["val"]) for r in t.read().collect())
-
-    # simulate the crash: orphan v1 bucket data, no manifest written
-    orphan = os.path.join(path, "v1", "__bucket=0")
-    spark.createDataFrame([(9, "junk")], "id long, val string").write.mode(
-        "overwrite"
-    ).parquet(orphan)
-    assert t.latest_version() == 0
-    assert sorted((r["id"], r["val"]) for r in t.read().collect()) == before
-
-    # retried merge commits cleanly over the orphan
-    t.merge(spark.createDataFrame([(2, "B", False)], "id long, val string, is_delete boolean"), delete_col="is_delete")
-    assert t.latest_version() == 1
-    got = sorted((r["id"], r["val"]) for r in t.read().collect())
-    assert got == [(1, "a"), (2, "B")]
-    assert not any(r["val"] == "junk" for r in t.read().collect())
-
-    # vacuum sweeps anything no retained manifest references
-    removed = t.vacuum(retain_last=1)
-    assert all(os.path.exists(os.path.dirname(d)) or True for d in removed)
-    assert sorted((r["id"], r["val"]) for r in t.read().collect()) == got
 
 
 def test_windowed_counts_update_mode_emits_running_aggregates(spark, tmp_path):

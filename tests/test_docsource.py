@@ -14,7 +14,6 @@ from post_modern_stack_spark.sources.docsource import (
     list_shards,
     plan_splits,
     read_split_lines,
-    vacuum_unreferenced,
 )
 
 
@@ -217,7 +216,7 @@ def test_spark_reads_byte_range_splits(spark, tmp_path):  # noqa: F811
     assert df.agg({"doc_id": "sum"}).collect()[0][0] == 3000 * 2999 // 2
 
 
-def test_spark_append_and_vacuum(spark, tmp_path):  # noqa: F811
+def test_spark_append_then_overwrite(spark, tmp_path):  # noqa: F811
     docsource.register(spark)
     out = str(tmp_path / "gen")
     one = spark.createDataFrame([(1, "a")], "doc_id long, text string")
@@ -228,15 +227,8 @@ def test_spark_append_and_vacuum(spark, tmp_path):  # noqa: F811
         "path", out
     )
     assert {r["doc_id"] for r in df.load().collect()} == {1, 2}
-    # overwrite replaces the manifest; old shards become invisible,
-    # vacuum then physically removes them
-    n_files_before = len(
-        [f for f in os.listdir(out) if f.endswith((".jsonl", ".jsonl.gz"))]
-    )
+    # overwrite replaces the manifest; the earlier shards become invisible
     two.write.format("jsonl_docs").option("path", out).mode("overwrite").save()
-    assert {r["doc_id"] for r in df.load().collect()} == {2}
-    removed = vacuum_unreferenced(out)
-    assert len(removed) >= n_files_before - 1 + 1 - 1  # all gen-1 shards gone
     assert {r["doc_id"] for r in df.load().collect()} == {2}
 
 

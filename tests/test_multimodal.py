@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row
 
 from post_modern_stack_spark.operators import multimodal as MM
+from tests.media_fixtures import encode_gif, encode_wav, fdct8x8_reference
 
 _IMG = np.random.RandomState(1).randint(0, 256, size=(6, 5, 3), dtype=np.uint8)
 _BMP = MM.encode_bmp(_IMG)
@@ -67,7 +68,7 @@ def test_bmp_wav_ppm_roundtrip_numpy():
     assert (mm.decode_bmp(mm.encode_bmp(img)) == img).all()
 
     samples = rng.uniform(-0.9, 0.9, size=(400, 2))
-    dec, rate = mm.decode_wav(mm.encode_wav(samples, 8000))
+    dec, rate = mm.decode_wav(encode_wav(samples, 8000))
     assert rate == 8000 and dec.shape == (400, 2)
     assert np.abs(dec - samples).max() < 1.0 / 32768 + 1e-9
 
@@ -101,7 +102,7 @@ def test_extract_features_real_codecs_through_spark(spark):
     wav = np.sin(2 * np.pi * 440 * np.arange(1600) / 8000.0)[:, None] * 0.5
     rows = [
         Row(media_id=1, kind="image", content=bytearray(mm.encode_bmp(img))),
-        Row(media_id=2, kind="audio", content=bytearray(mm.encode_wav(wav, 8000))),
+        Row(media_id=2, kind="audio", content=bytearray(encode_wav(wav, 8000))),
     ]
     media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
     got = {
@@ -111,7 +112,7 @@ def test_extract_features_real_codecs_through_spark(spark):
     want_img = mm.image_features(img)
     # expected audio features go through the same PCM-16 quantization
     # the wire format applies
-    want_wav = mm.audio_features(mm.decode_wav(mm.encode_wav(wav, 8000))[0], 8000)
+    want_wav = mm.audio_features(mm.decode_wav(encode_wav(wav, 8000))[0], 8000)
     assert np.allclose(got[1], want_img, atol=1e-5)
     assert np.allclose(got[2], want_wav, atol=1e-5)
 
@@ -377,12 +378,12 @@ def test_gif_lzw_and_animated_roundtrip():
         assert mm._lzw_decode_gif(mm._lzw_encode_gif(syms, mcs), mcs) == syms
     palette = rng.randint(0, 256, (12, 3)).astype(np.uint8)
     frames = palette[rng.randint(0, 12, (4, 10, 7))]
-    dec, delays = mm.decode_gif(mm.encode_gif(frames, [40, 40, 80, 120]))
+    dec, delays = mm.decode_gif(encode_gif(frames, [40, 40, 80, 120]))
     assert (dec == frames).all() and delays == [40, 40, 80, 120]
     import pytest
 
     with pytest.raises(NotImplementedError):
-        mm.encode_gif(rng.randint(0, 256, (1, 30, 30, 3)).astype(np.uint8))
+        encode_gif(rng.randint(0, 256, (1, 30, 30, 3)).astype(np.uint8))
 
 
 def test_sample_frames_timeline(spark):
@@ -398,7 +399,7 @@ def test_sample_frames_timeline(spark):
     rng = np.random.RandomState(4)
     palette = rng.randint(0, 256, (4, 3)).astype(np.uint8)
     frames = palette[rng.randint(0, 4, (3, 6, 6))]
-    gif = mm.encode_gif(frames, [100, 50, 100])  # frame starts: 0, 100, 150
+    gif = encode_gif(frames, [100, 50, 100])  # frame starts: 0, 100, 150
     media = spark.createDataFrame(
         [Row(media_id=1, kind="video", content=bytearray(gif))],
         mm.MEDIA_SCHEMA,
@@ -424,7 +425,7 @@ def test_extract_features_gif_keyframe(spark):
     palette = rng.randint(0, 256, (6, 3)).astype(np.uint8)
     frames = palette[rng.randint(0, 6, (2, 5, 5))]
     media = spark.createDataFrame(
-        [Row(media_id=2, kind="video", content=bytearray(mm.encode_gif(frames)))],
+        [Row(media_id=2, kind="video", content=bytearray(encode_gif(frames)))],
         mm.MEDIA_SCHEMA,
     )
     row = mm.extract_features(media).collect()[0]
@@ -435,16 +436,17 @@ def test_extract_features_gif_keyframe(spark):
 
 
 def test_jpeg_dct_matches_spec_reference():
-    """Fast matrix DCT must equal the direct O(N^4) T.81 A.3.3 formula
-    — guards against a complementary encode/decode transform bug."""
-    import numpy as np
-
+    """The codec's block transforms must equal the direct O(N^4) T.81
+    A.3.3 formula on every block of a grid, and invert each other —
+    guards against a complementary encode/decode transform bug."""
     from post_modern_stack_spark.operators import jpeg
 
     rng = np.random.default_rng(11)
-    blk = rng.uniform(-128, 127, (8, 8))
-    assert np.abs(jpeg.fdct8x8(blk) - jpeg.fdct8x8_reference(blk)).max() < 1e-9
-    assert np.abs(jpeg.idct8x8(jpeg.fdct8x8(blk)) - blk).max() < 1e-9
+    blocks = rng.uniform(-128, 127, (2, 3, 8, 8))
+    coef = jpeg._fdct_blocks(blocks)
+    want = np.array([[fdct8x8_reference(b) for b in row] for row in blocks])
+    assert np.abs(coef - want).max() < 1e-9
+    assert np.abs(jpeg._idct_blocks(coef) - blocks).max() < 1e-9
 
 
 def test_jpeg_roundtrip_444_and_420():

@@ -1,4 +1,4 @@
-"""operators/profile.summarize — generic single-scan column profiler."""
+"""operators/profile.summarize — generic two-pass column profiler."""
 
 from __future__ import annotations
 
@@ -46,24 +46,8 @@ def test_summarize_subset_errors_and_empty(spark):
     assert r["min_s"] is None and r["max_s"] is None
 
 
-def test_summarize_approx_mode(spark):
-    """exact=False: HLL distinct counts land within the sketch's error
-    band, null/min/max stay exact, and the plan loses the Expand — the
-    whole profile becomes one map-side-combined aggregate."""
-    df = spark.range(20_000).select(
-        (F.col("id") % 1000).alias("k"), F.col("id").cast("double").alias("v")
-    )
-    got = {r["column"]: r for r in summarize(df, exact=False).collect()}
-    assert abs(got["k"]["n_distinct"] - 1000) <= 1000 * 0.08  # 5% rsd sketch
-    assert abs(got["v"]["n_distinct"] - 20_000) <= 20_000 * 0.08
-    assert (got["k"]["min_s"], got["k"]["max_s"]) == ("0", "999")  # still exact
-    assert all(r["n_nulls"] == 0 and r["n_rows"] == 20_000 for r in got.values())
-    plan = summarize(df, exact=False)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan
-
-
 def test_summarize_scan_and_operator_shape(spark):
-    """Exact mode profiles all columns in exactly TWO aggregate passes
+    """The profile reads all columns in exactly TWO aggregate passes
     (r11: one Expand+HashAggregate pass for every countDistinct, one
     streaming keys=[] pass for nulls/min/max — the single combined agg
     forced SortAggregate over the sorted Expand fan-out because

@@ -1,145 +1,16 @@
-"""Scale-idiom tests: salted aggregation correctness under synthetic
-skew, and bucketed-join plans with zero exchanges.
+"""Scale-idiom tests: the skew operators (chunked running sums, salted
+joins, scan widening) against their plain forms, and the planner
+features the catalog relies on (join hints, dynamic partition pruning,
+AQE coalescing).
 """
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
-import pytest
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.operators import skew
 from post_modern_stack_spark.registry import load_table
-from post_modern_stack_spark.sources import layout
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_salted_aggregate_matches_plain(spark):
-    """Skewed input (one hot key = 90% of rows): salted two-phase agg
-    must equal the plain groupBy exactly."""
-    df = spark.range(10_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(
-            (F.col("id") % 7).cast("string")
-        ).alias("k"),
-        (F.col("id") % 100).cast("double").alias("v"),
-    )
-    plain = {
-        (r["k"]): (r["s"], r["n"])
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        (r["k"]): (r["s"], r["n"])
-        for r in skew.salted_aggregate(df, ["k"], sums={"v": "s"}).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_ordered_collect_matches_plain(spark):
-    from post_modern_stack_spark.functions import ordered_collect
-
-    ev = load_table(spark, SF, "events").select("user_id", "ts_ns", "event_id", "value")
-    plain = {
-        r["user_id"]: r["arr"]
-        for r in ev.groupBy("user_id")
-        .agg(ordered_collect("value", "ts_ns", "event_id").alias("arr"))
-        .collect()
-    }
-    salted = {
-        r["user_id"]: r["arr"]
-        for r in skew.salted_ordered_collect(
-            ev, ["user_id"], "value", ["ts_ns", "event_id"]
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_compaction_preserves_data(spark, tmp_path):
-    """Fragmented layout → compact to 2 files; contents identical."""
-    import glob
-
-    path = str(tmp_path / "frag")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(16).write.mode("overwrite").parquet(path)
-    assert len(glob.glob(path + "/*.parquet")) == 16
-    before = sorted(r["event_id"] for r in spark.read.parquet(path).collect())
-    n = layout.compact(spark, path, target_files=2, sort_cols=["ts_ns"])
-    assert n <= 2
-    after = sorted(r["event_id"] for r in spark.read.parquet(path).collect())
-    assert after == before
-
-
-def test_clustered_write_narrow_file_ranges(spark, tmp_path):
-    """Range-clustered files carry disjoint-ish user_id ranges (file
-    stats enable pruning); data round-trips exactly."""
-    import pyarrow.parquet as pq
-    import glob
-
-    path = str(tmp_path / "clustered")
-    ev = load_table(spark, SF, "events")
-    layout.write_clustered(
-        ev.select("event_id", "user_id", "ts_ns", "value"),
-        path,
-        ["user_id"],
-        sort_cols=["user_id", "ts_ns"],
-        partitions=4,
-    )
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) >= 2
-    ranges = []
-    for f in files:
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "user_id"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    # consecutive files must not fully overlap (clustering did happen)
-    overlaps = sum(1 for (a, b), (c, d) in zip(ranges, ranges[1:]) if c < b and a < d)
-    assert overlaps <= len(ranges) // 2
-    assert spark.read.parquet(path).count() == ev.count()
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Two tables bucketed on the join key: the join plan must contain
-    no Exchange (the 100 TB co-location payoff). Managed tables land in
-    the session warehouse dir (./spark-warehouse, gitignored) and are
-    dropped afterwards."""
-    orders = load_table(spark, SF, "orders")
-    lineitem = load_table(spark, SF, "lineitem")
-    layout.write_bucketed(orders, "b_orders", ["o_orderkey"], 8, ["o_orderkey"])
-    layout.write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        ["o_orderkey"],
-        8,
-        ["o_orderkey"],
-    )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = layout.bucketed_join_ready(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join still shuffles"
-        # and it computes the right thing
-        assert joined.count() == lineitem.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_chunked_running_sum_matches_plain_window(spark):
@@ -204,41 +75,6 @@ def _hyp_session():
     from post_modern_stack_spark.session import get_spark
 
     return get_spark()
-
-
-def test_zorder_key_is_bijective_and_pure():
-    """Morton interleave properties over random in-range pairs: the key
-    is a bijection (distinct inputs → distinct keys) and decomposes
-    back to its inputs bit-by-bit."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from post_modern_stack_spark.sources.layout import zorder_key
-
-    spark = _hyp_session()
-
-    @settings(max_examples=5, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.integers(0, 255), st.integers(0, 255)),
-            min_size=2,
-            max_size=50,
-            unique=True,
-        )
-    )
-    def prop(pairs):
-        df = spark.createDataFrame(pairs, "x long, y long")
-        rows = df.select("x", "y", zorder_key(["x", "y"], bits=8).alias("k")).collect()
-        keys = [r["k"] for r in rows]
-        assert len(set(keys)) == len(pairs)  # bijective on unique pairs
-        for r in rows:
-            x = y = 0
-            for bit in range(8):
-                x |= ((r["k"] >> (2 * bit)) & 1) << bit
-                y |= ((r["k"] >> (2 * bit + 1)) & 1) << bit
-            assert (x, y) == (r["x"], r["y"])
-
-    prop()
 
 
 def test_chunked_running_sum_property_random_timelines():
@@ -320,60 +156,6 @@ def test_salted_join_parity_with_plain_join(spark):
 
     with pytest.raises(ValueError):
         salted_join(left, right, "k", how="right_outer")
-
-
-def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_path):
-    """Rewriting one partition with dynamic mode must leave sibling
-    partitions' data intact; static overwrite would drop them. Also
-    asserts the partition filter prunes at scan (PartitionFilters)."""
-    import glob
-
-    path = str(tmp_path / "part")
-    base = spark.createDataFrame(
-        [(i, f"2024-01-0{1 + i % 3}", float(i)) for i in range(30)],
-        ["id", "day", "v"],
-    )
-    layout.write_partitioned(base, path, ["day"])
-    assert spark.read.parquet(path).count() == 30
-
-    patch = spark.createDataFrame([(99, "2024-01-02", -1.0)], ["id", "day", "v"])
-    layout.write_partitioned(patch, path, ["day"], dynamic=True)
-    after = spark.read.parquet(path)
-    # day 2 replaced by the single patch row; days 1 and 3 untouched
-    assert after.count() == 21
-    assert after.filter(F.col("day") == "2024-01-02").count() == 1
-    assert after.filter(F.col("day") == "2024-01-01").count() == 10
-
-    plan = after.filter(F.col("day") == "2024-01-03")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "day" in plan.split("PartitionFilters")[1][:120]
-
-
-def test_bloom_filter_layout_written_and_readable(spark, tmp_path):
-    """Bloom-filtered parquet round-trips, point lookups still hit, and
-    the filter bitset is actually in the files (this pyarrow build
-    doesn't surface bloom metadata, so the ~1.2 bytes/ndv footprint
-    delta vs a plain write is the observable)."""
-    import glob
-    import os
-
-    bloom_path = str(tmp_path / "bloom")
-    plain_path = str(tmp_path / "plain")
-    df = spark.range(5000).select(
-        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("key")
-    ).coalesce(1)
-    layout.write_with_bloom_filters(df, bloom_path, ["key"], ndv=5000)
-    df.write.mode("overwrite").parquet(plain_path)
-
-    back = spark.read.parquet(bloom_path)
-    assert back.count() == 5000
-    probe = back.filter(
-        F.col("key")
-        == spark.range(1).select(F.sha2(F.lit("7"), 256)).collect()[0][0]
-    )
-    assert probe.count() == 1
-
-    size = lambda p: sum(os.path.getsize(f) for f in glob.glob(f"{p}/*.parquet"))
-    assert size(bloom_path) - size(plain_path) > 4000
 
 
 def test_join_strategy_hints_are_honored(spark):
@@ -492,4 +274,3 @@ def test_widen_narrow_scan_counts_row_groups_not_splits(spark, tmp_path):
         assert widen_narrow_scan(text) is text
     finally:
         spark.conf.set(key, old)
-

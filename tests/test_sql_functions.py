@@ -1,72 +1,11 @@
-"""SQL-UDF surface: every engine function callable from spark.sql with
-results matching the DataFrame-API twins."""
+"""Engine column functions with a numeric edge (int64-overflow sums,
+the cosine fast path) and the polymorphic SQL table function."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from post_modern_stack_spark.functions import (
-    cosine_similarity,
-    epoch_ms_to_date,
-    json_get,
-    normalize_sku,
-    pad_sequence,
-)
-from post_modern_stack_spark.sql_functions import register_sql_functions
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register(spark):
-    assert register_sql_functions(spark) == [
-        "cosine_sim",
-        "epoch_ms_to_date",
-        "json_get_long",
-        "json_get_str",
-        "normalize_sku",
-        "pad_seq",
-    ]
-
-
-def test_sql_functions_match_dataframe_twins(spark):
-    df = spark.createDataFrame(
-        [
-            Row(
-                arr=[1, 2, 3],
-                s="My SKU Name",
-                j='{"k": 42, "t": "x"}',
-                ms=1_547_528_580_651,
-                a=[1.0, 2.0, 3.0],
-                b=[3.0, 2.0, 1.0],
-            )
-        ]
-    )
-    df.createOrReplaceTempView("t")
-    sql_row = spark.sql(
-        """
-        SELECT pad_seq(arr, 5)          AS p,
-               normalize_sku(s)         AS n,
-               json_get_str(j, 't')     AS js,
-               json_get_long(j, 'k')    AS jl,
-               json_get_long(j, 'nope') AS jmiss,
-               epoch_ms_to_date(ms)     AS d,
-               round(cosine_sim(a, b), 6) AS c
-        FROM t
-        """
-    ).collect()[0]
-    api_row = df.select(
-        pad_sequence("arr", 5).alias("p"),
-        normalize_sku("s").alias("n"),
-        json_get("j", "t").alias("js"),
-        json_get("j", "k", "long").alias("jl"),
-        json_get("j", "nope", "long").alias("jmiss"),
-        epoch_ms_to_date("ms").alias("d"),
-        F.round(cosine_similarity("a", "b"), 6).alias("c"),
-    ).collect()[0]
-    for f in ["p", "n", "js", "jl", "jmiss", "d", "c"]:
-        assert sql_row[f] == api_row[f], f
-    assert sql_row["jmiss"] is None
+from post_modern_stack_spark.functions import cosine_similarity
 
 
 def test_sum128_survives_int64_overflow(spark):
@@ -124,13 +63,6 @@ def test_cosine_expr_fastpath_matches_dsl(spark):
             assert d != d, r
         else:
             assert f == d, r  # bit-identical, same expression tree
-
-
-def test_cosine_sim_zero_vector_is_null(spark):
-    r = spark.sql(
-        "SELECT cosine_sim(array(0.0D, 0.0D), array(1.0D, 2.0D)) AS c"
-    ).collect()[0]
-    assert r["c"] is None
 
 
 def test_polymorphic_udtf_schema_from_argument(spark):

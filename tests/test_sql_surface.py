@@ -1,33 +1,12 @@
-"""SQL-surface tests: the model views answer spark.sql queries with the
-same results as the DataFrame API (dbt view-materialization parity).
+"""SQL-surface tests: registered tables answer spark.sql queries with
+the same results as the DataFrame API.
 """
 
 from __future__ import annotations
 
-from post_modern_stack_spark.operators.sessionize import driver_session_events
-from post_modern_stack_spark.registry import (
-    load_table,
-    register_model_views,
-    register_views,
-)
+from post_modern_stack_spark.registry import load_table, register_views
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_model_views_queryable(spark):
-    names = register_model_views(spark, SF)
-    assert names == ["events", "events_exploded", "session_events"]
-    got = {
-        r["user_id"]: (r["n_events"], r["interactions"])
-        for r in spark.sql(
-            "SELECT user_id, n_events, interactions FROM session_events"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], r["interactions"])
-        for r in driver_session_events(load_table(spark, SF, "events")).collect()
-    }
-    assert got == want
 
 
 def test_sql_join_over_registered_tables(spark):

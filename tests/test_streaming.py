@@ -1,13 +1,12 @@
-"""Streaming surface tests (J1-J5): batch/stream parity for windowed
-aggregation, gap sessionization, and the stateful ordered-array
-operator (SURVEY.md §7 Phase 5 parity requirement).
+"""Streaming surface tests (J1, J2, J4, J5): batch/stream parity for
+windowed aggregation, watermark-bounded dedup and the stateful
+ordered-array operator (SURVEY.md §7 Phase 5 parity requirement).
 """
 
 from __future__ import annotations
 
 import shutil
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,41 +61,6 @@ def test_windowed_counts_batch_stream_parity(spark, events_dir):
         assert v == bmap[k], f"window {k}: stream={v} batch={bmap[k]}"
     n_types = batch["event_type"].nunique()
     assert len(bmap) - len(gmap) <= n_types, "more than trailing windows withheld"
-
-
-def test_gap_sessions_stream_runs(spark, events_dir):
-    stream = S.stream_events(spark, events_dir)
-    out = _run_to_memory(spark, S.gap_sessions(stream, "2 hours"), "gap_sess")
-    assert out.count() > 0
-    assert set(out.columns) == {
-        "session_start",
-        "session_end",
-        "user_id",
-        "n_events",
-        "total_value",
-    }
-
-
-def test_foreachbatch_ingest_roundtrip(spark, events_dir, tmp_path):
-    """Streaming ingest writes the raw-log layout; every input event
-    lands exactly once with a batch-derived etl_id and the tenant
-    partition."""
-    from post_modern_stack_spark.streaming.ingest_stream import start_ingest_stream
-
-    out = str(tmp_path / "rawlog")
-    ckpt = str(tmp_path / "ckpt")
-    stream = S.stream_events(spark, events_dir)
-    q = start_ingest_stream(stream, out, ckpt, api_key="tenant-s")
-    q.awaitTermination(120)
-
-    raw = spark.read.parquet(out)
-    n_in = load_table(spark, SF, "events").count()
-    assert raw.count() == n_in
-    assert set(raw.select("api_key").distinct().toPandas()["api_key"]) == {"tenant-s"}
-    assert raw.select("etl_id").distinct().count() >= 1
-    # the written log is consumable by the batch JSON-extraction path
-    k = raw.select(F.get_json_object("raw_data", "$.session_id").alias("sid"))
-    assert k.filter(F.col("sid").isNull()).count() == 0
 
 
 @pytest.mark.parametrize("n_buckets", [8, 512])
@@ -194,264 +158,3 @@ def test_stream_dedup_drops_within_watermark_dupes(spark, events_dir, tmp_path):
     assert got_rows == want_rows
     # and the duplicated feed really had 2x rows before dedup
     assert spark.read.parquet(dup_dir).count() == 2 * len(want_rows)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, events_dir):
-    """J-family stream-stream join parity: the watermarked interval
-    join over two event-type streams produces exactly the batch
-    inequality-join rows (availableNow drains everything, so late-data
-    drops don't apply)."""
-    from post_modern_stack_spark.streaming.dedup_stream import (
-        view_purchase_stream_join,
-    )
-
-    stream = S.stream_events(spark, events_dir)
-    sp = stream.filter(F.col("event_type") == "purchase")
-    sv = stream.filter(F.col("event_type") == "view")
-    got = _run_to_memory(
-        spark, view_purchase_stream_join(sp, sv), "ss_join_out"
-    )
-
-    batch = load_table(spark, SF, "events")
-    bp = batch.filter(F.col("event_type") == "purchase")
-    bv = batch.filter(F.col("event_type") == "view")
-    want = view_purchase_stream_join(bp, bv)
-
-    got_rows = {tuple(r) for r in got.select("purchase_id", "view_id").collect()}
-    want_rows = {tuple(r) for r in want.select("purchase_id", "view_id").collect()}
-    assert got_rows == want_rows
-    assert len(want_rows) > 0
-
-
-def test_stream_stream_left_outer_join_emits_viewless_purchases(spark, events_dir, tmp_path):
-    """Outer stream-stream join: purchases with no in-window view come
-    out null-padded (emitted on watermark close; availableNow drains
-    state fully so the batch outer join is the exact expectation)."""
-    from post_modern_stack_spark.streaming.dedup_stream import (
-        view_purchase_stream_join,
-    )
-
-    # outer-join null rows emit only when the watermark passes the
-    # purchase's join window — append one far-future flush event so
-    # even the latest purchase's state expires before the drain ends
-    import shutil as _sh
-
-    flush_dir = str(tmp_path / "outer_feed")
-    _sh.copytree(events_dir, flush_dir)
-    far_ns = load_table(spark, SF, "events").agg(F.max("ts_ns")).collect()[0][0]
-    # one flush per SIDE: the global watermark is the MIN over all
-    # watermarked inputs, so a view-only flush would leave the purchase
-    # side's watermark (and the last purchases' outer state) behind
-    spark.createDataFrame(
-        [
-            (10**9, far_ns + 10 * 24 * 3600 * 10**9, -1, "view", 0.0, "{}"),
-            (10**9 + 1, far_ns + 10 * 24 * 3600 * 10**9, -1, "purchase", 0.0, "{}"),
-        ],
-        "event_id long, ts long, user_id long, event_type string, value double, props string",
-    ).write.mode("append").parquet(flush_dir)
-
-    stream = S.stream_events(spark, flush_dir)
-    got = _run_to_memory(
-        spark,
-        view_purchase_stream_join(
-            stream.filter(F.col("event_type") == "purchase"),
-            stream.filter(F.col("event_type") == "view"),
-            how="left_outer",
-        ),
-        "ss_outer_out",
-    )
-    batch = load_table(spark, SF, "events")
-    want = view_purchase_stream_join(
-        batch.filter(F.col("event_type") == "purchase"),
-        batch.filter(F.col("event_type") == "view"),
-        how="left_outer",
-    )
-    got_rows = {
-        tuple(r)
-        for r in got.select("purchase_id", "view_id").collect()
-        if r["purchase_id"] < 10**9  # drop the flush sentinels
-    }
-    want_rows = {tuple(r) for r in want.select("purchase_id", "view_id").collect()}
-    assert got_rows == want_rows
-    # the outer join genuinely added null-padded rows vs the inner one
-    assert any(v is None for _, v in want_rows)
-
-
-def test_stream_static_enrichment_matches_batch(spark, events_dir):
-    """J-family stream-static join: enriching the event stream with a
-    static user dimension produces exactly the batch join's rows
-    (stateless per-micro-batch join — no watermark, no withheld rows),
-    and unmatched users keep their events (left semantics)."""
-    from post_modern_stack_spark.streaming import enrich_stream
-
-    ev = load_table(spark, SF, "events")
-    # static dim covering ~half the users so the left side matters
-    dims = (
-        ev.select("user_id").distinct().filter(F.col("user_id") % 2 == 0)
-        .withColumn("segment", F.concat(F.lit("seg_"), F.col("user_id") % 3))
-    )
-
-    stream = S.stream_events(spark, events_dir)
-    got = _run_to_memory(
-        spark,
-        enrich_stream.enrich_events(stream, dims).select(
-            "event_id", "user_id", "segment"
-        ),
-        "enriched",
-    ).toPandas()
-
-    batch = (
-        enrich_stream.enrich_events(
-            ev.select("event_id", F.col("ts_ns").alias("ts"), "user_id"), dims
-        )
-        .select("event_id", "user_id", "segment")
-        .toPandas()
-    )
-    assert len(got) == len(batch) == ev.count()
-    g = got.sort_values("event_id").reset_index(drop=True).fillna("∅")
-    b = batch.sort_values("event_id").reset_index(drop=True).fillna("∅")
-    assert (g.values == b.values).all()
-    assert (b["segment"] == "∅").any(), "left join must keep unmatched users"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        enrich_stream.enrich_events(stream, dims, how="full")
-
-
-def test_windowed_approx_distinct_batch_stream_parity(spark, events_dir):
-    """HLL sketches merge deterministically, so the streaming estimate
-    must EQUAL the batch estimate for every emitted window (same
-    algorithm, same rsd — not just 'close')."""
-    stream = S.stream_events(spark, events_dir)
-    got = _run_to_memory(
-        spark, S.windowed_approx_distinct(stream, "6 hours"), "win_hll"
-    ).toPandas()
-
-    batch = S.windowed_approx_distinct(
-        load_table(spark, SF, "events"), "6 hours"
-    ).toPandas()
-
-    key = ["window_start", "window_end", "event_type"]
-    cols = key + ["n_events", "approx_users"]
-    bmap = {tuple(r[:3]): tuple(r[3:]) for r in batch[cols].values.tolist()}
-    gmap = {tuple(r[:3]): tuple(r[3:]) for r in got[cols].values.tolist()}
-    assert len(gmap) > 0
-    assert set(gmap) <= set(bmap)
-    for k, v in gmap.items():
-        assert v == bmap[k], (k, v, bmap[k])
-    # the estimate is a real estimate of a real cardinality
-    exact = (
-        load_table(spark, SF, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("exact"))
-        .collect()
-    )
-    assert all(r["exact"] > 0 for r in exact)
-
-
-def test_chained_dedup_window_multi_stateful(spark, events_dir, tmp_path):
-    """Two stateful operators chained in ONE streaming query: dedup
-    state + window state under a shared watermark. A duplicated feed
-    must produce the same emitted windows as batch dedup + agg on the
-    clean frame."""
-    import pathlib
-
-    from post_modern_stack_spark.streaming import dedup_stream as D
-
-    # duplicated feed: every file written twice
-    dup_dir = str(tmp_path / "dup_events")
-    src = spark.read.parquet(events_dir)
-    src.write.mode("overwrite").parquet(dup_dir)
-    src.write.mode("append").parquet(dup_dir)
-
-    stream = S.stream_events(spark, dup_dir)
-    got = _run_to_memory(
-        spark,
-        D.dedup_then_windowed_counts(stream, window="6 hours"),
-        "dedup_win",
-    ).toPandas()
-
-    batch = D.dedup_then_windowed_counts(
-        load_table(spark, SF, "events"), window="6 hours"
-    ).toPandas()
-
-    key = ["window_start", "window_end", "event_type"]
-    cols = key + ["n_events", "total_value"]
-    bmap = {tuple(r[:3]): tuple(r[3:]) for r in batch[cols].values.tolist()}
-    gmap = {tuple(r[:3]): tuple(r[3:]) for r in got[cols].values.tolist()}
-    assert len(gmap) > 0
-    assert set(gmap) <= set(bmap)
-    for k, v in gmap.items():
-        assert v == bmap[k], (k, v, bmap[k])
-
-
-def test_stateful_funnel_matches_batch(spark, events_dir):
-    """Custom stateful ordered funnel == the batch per-user stage
-    times, for every user that produced a view."""
-    import time
-
-    stream = S.stream_events(spark, events_dir, max_files_per_trigger=2)
-    q = (
-        S.stateful_funnel(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_state")
-        .outputMode("append")
-        .trigger(processingTime="2 seconds")
-        .start()
-    )
-    ev = load_table(spark, SF, "events")
-    expected = (
-        ev.filter(F.col("event_type") == "view").select("user_id").distinct().count()
-    )
-    # poll the sink until every viewing user's funnel row flushed (the
-    # 5 s quiet timeout keeps scheduling batches; see session-arrays test)
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table("funnel_state").count() >= expected:
-                break
-            time.sleep(2)
-        got = spark.table("funnel_state").toPandas()
-    finally:
-        q.stop()
-
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts_ns").alias("t1"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts_ns") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts_ns").alias("t2"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts_ns") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts_ns").alias("t3"))
-    )
-    batch = (
-        v.join(c, "user_id", "left").join(p, "user_id", "left").toPandas()
-    )
-    want = {
-        int(r.user_id): (
-            int(r.t1),
-            None if pd.isna(r.t2) else int(r.t2),
-            None if pd.isna(r.t3) else int(r.t3),
-        )
-        for r in batch.itertuples()
-    }
-    got_map = {
-        int(r.user_id): (
-            int(r.t1),
-            None if pd.isna(r.t2) else int(r.t2),
-            None if pd.isna(r.t3) else int(r.t3),
-        )
-        for r in got.itertuples()
-    }
-    assert got_map == want

@@ -49,22 +49,6 @@ def test_asof_backward_inclusive_hand_computed(spark):
     }
 
 
-def test_asof_strict_excludes_equal_time(spark):
-    left, right = _frames(spark)
-    out = asof_join(
-        left,
-        right,
-        on="t",
-        by=["k"],
-        right_cols=["rid"],
-        right_tie="rid",
-        strict=True,
-    )
-    got = {(r.k, r.t): r.rid for r in out.collect()}
-    assert got[("a", 10)] == 100   # t=10 right row no longer eligible
-    assert got[("b", 10)] is None  # only equal-t rows existed for b
-
-
 def test_asof_single_exchange_plan(spark):
     left, right = _frames(spark)
     out = asof_join(left, right, on="t", by=["k"], right_cols=["rid"])
