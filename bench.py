@@ -68,8 +68,6 @@ import re
 import sys
 import time
 
-import pandas as pd
-
 # samples per query (median reported) and the cumulative-wall-clock
 # cutoff for sweeps 2+. Driver runs keep the defaults; local deep
 # measurement (VERDICT r05 item 6: full 3-sample medians on a quiet
@@ -353,12 +351,12 @@ def main(names: list[str]) -> None:
     # warm the JVM + parquet footers once so per-query numbers measure
     # the plan, not session startup
     next(iter(catalog.values()))(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warm the Python/Arrow worker pool too (first pandas UDF in a
+    # warm the Python/Arrow worker pool too (first Arrow UDF in a
     # session pays ~8 s of interpreter+Arrow startup otherwise)
-    from pyspark.sql.functions import col, pandas_udf
+    from pyspark.sql.functions import arrow_udf, col
 
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
+    @arrow_udf("long")
+    def _warm(s):
         # touch the libraries the Python-band queries use so every
         # reused worker has them imported BEFORE the timed region
         # (a cold numpy import inside a worker is ~100 ms × 32 workers

@@ -8,8 +8,10 @@ analysis, multimodal columns) needed at 100 TB scale.
 
 Design principles (SURVEY.md §7):
 - DataFrame/SQL API only; Catalyst + Tungsten pick the physical plan.
-- No row-at-a-time Python UDFs in hot paths; Arrow-batched pandas UDFs
-  only where built-ins genuinely can't express the semantics.
+- No row-at-a-time Python UDFs in hot paths; batch Python crosses the
+  boundary through Arrow only (``arrow_udf``, ``mapInArrow``,
+  ``applyInArrow``), and only where built-ins genuinely can't express
+  the semantics.
 - Every operator ships with a DuckDB-oracle-checkable query where
   SQL-expressible (driver contract in ``__spark_entry__.py``).
 """

@@ -3,7 +3,7 @@ opaque ``binary`` columns keyed by ``media_id`` and ``kind``.
 
 Every Python pass here (featurize, frame sampling, resize, container
 inventory and the catalog's media synthesis) goes through one batch
-boundary, :func:`_map_rows`: a ``mapInArrow`` iterator that maps the
+boundary, the package's row map ``vectors.map_rows``, which maps the
 rows of one Arrow record batch at a time, so a task holds one batch of
 media, never a partition.
 
@@ -42,12 +42,11 @@ import struct
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
+from post_modern_stack_spark.operators import vectors
 from post_modern_stack_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
 MEDIA_SCHEMA = T.StructType(
@@ -615,20 +614,6 @@ def audio_features(samples, rate: int) -> list[float]:
     return (feats + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
 
 
-def _map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
-    """The module's one Python batch boundary: ``fn`` maps each row of
-    ``df`` (a dict) to a list of output rows of ``schema``, one Arrow
-    record batch at a time."""
-    arrow_schema = to_arrow_schema(schema)
-
-    def run(batches):
-        for batch in batches:
-            rows = [out for row in batch.to_pylist() for out in fn(row)]
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-
-    return df.mapInArrow(run, schema)
-
-
 def resize_image(img, out_h: int, out_w: int):
     """REAL nearest-neighbor resize (pure numpy): index-map sampling,
     the standard thumbnail path when no interpolation library exists.
@@ -705,7 +690,7 @@ def extract_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
         return [out]
 
     schema = FEATURES_PERMISSIVE_SCHEMA if permissive else FEATURES_SCHEMA
-    return _map_rows(media.select("media_id", "kind", "content"), run, schema)
+    return vectors.map_rows(media.select("media_id", "kind", "content"), run, schema)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -750,7 +735,7 @@ def sample_frames(media: DataFrame, every_ms: int = 40) -> DataFrame:
             )
         return out
 
-    return _map_rows(media.select("media_id", "content"), run, FRAMES_SCHEMA)
+    return vectors.map_rows(media.select("media_id", "content"), run, FRAMES_SCHEMA)
 
 
 def media_dedup(media: DataFrame) -> DataFrame:
@@ -790,7 +775,7 @@ def resize_media(media: DataFrame, out_h: int = 4, out_w: int = 4) -> DataFrame:
         thumb = encode(resize_image(decode(c), out_h, out_w))
         return [{"media_id": row["media_id"], "out_h": out_h, "out_w": out_w, "content": thumb}]
 
-    return _map_rows(media.select("media_id", "content"), run, RESIZED_SCHEMA)
+    return vectors.map_rows(media.select("media_id", "content"), run, RESIZED_SCHEMA)
 
 
 # --- MP3 / MP4 container parsing (real, stdlib-only) -----------------------
@@ -935,7 +920,7 @@ def container_info(media: DataFrame) -> DataFrame:
             info = parse_mp4_info(row["content"])
         return [{"media_id": row["media_id"], "kind": row["kind"], **info}]
 
-    return _map_rows(media.select("media_id", "kind", "content"), run, CONTAINER_SCHEMA)
+    return vectors.map_rows(media.select("media_id", "kind", "content"), run, CONTAINER_SCHEMA)
 
 
 # --- synthetic media for the catalog queries ------------------------------
@@ -957,7 +942,7 @@ def synthesize_media(docs: DataFrame, col: str, encode, kind) -> DataFrame:
             {"media_id": row["doc_id"], "kind": kind_of(value), "content": encode(value)}
         ]
 
-    return _map_rows(docs, run, MEDIA_SCHEMA)
+    return vectors.map_rows(docs, run, MEDIA_SCHEMA)
 
 
 def digest_rgb(text: str):

@@ -31,9 +31,10 @@ def summarize(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     (column, n_nulls, n_distinct, min_s, max_s, n_rows).
 
     ``n_distinct`` is exact and excludes NULL (count-distinct SQL
-    semantics). min/max aggregate on the NATIVE column type and cast
-    the RESULT to string — casting the column first would rank
-    numerics lexicographically.
+    semantics); ``n_nulls`` is a SUM, so NULL on an empty table.
+    min/max aggregate on the NATIVE column type and cast the RESULT to
+    string — casting the column first would rank numerics
+    lexicographically.
     """
     cols = list(cols) if cols is not None else list(df.columns)
     if not cols:
@@ -45,12 +46,8 @@ def summarize(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     base_aggs = [F.count(F.lit(1)).alias("n_rows")]
     for i, c in enumerate(cols):
         base_aggs += [
-            # coalesce: sum() over an EMPTY table is NULL; the
-            # profile of an empty table should read 0 nulls, not
-            # unknown
-            F.coalesce(
-                F.sum(F.col(c).isNull().cast("bigint")), F.lit(0)
-            ).alias(f"_{i}_nulls"),
+            # sum() over an EMPTY table is NULL, as in SQL
+            F.sum(F.col(c).isNull().cast("bigint")).alias(f"_{i}_nulls"),
             F.min(c).cast("string").alias(f"_{i}_min"),
             F.max(c).cast("string").alias(f"_{i}_max"),
         ]

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from post_modern_stack_spark.functions import (
-    epoch_ms_to_date,
     json_get,
     normalize_sku,
     ordered_collect,

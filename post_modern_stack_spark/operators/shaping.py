@@ -7,8 +7,11 @@ distributed DataFrame until the ML boundary.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from post_modern_stack_spark.functions import (
     last_element,
@@ -157,33 +160,39 @@ def pack_greedy(
     overflow the current one (an oversized doc gets its own bin).
 
     Engine shape: the packing state (running fill) is inherently
-    sequential PER GROUP, so it runs as applyInPandas over the
+    sequential PER GROUP, so it runs as applyInArrow over the
     doc-grain metadata projection — (group, id, size): two longs and a
-    string per doc, ~KB per group even at 100 TB of text. Groups pack
-    in parallel across executors; the text itself never moves. The
+    string per doc, ~KB per group even at 100 TB of text. Each group
+    sorts by id in Arrow and packs in one first-fit loop; groups pack
+    in parallel across executors and the text itself never moves. The
     cross-group layout is embarrassingly parallel, matching how real
     packers shard by file.
     """
-    import pandas as pd
-
     meta = df.select(group_col, id_col, size_col)
-    schema = (
-        f"{group_col} string, {id_col} long, {size_col} long, bin_id long"
+    schema = T.StructType(
+        [
+            T.StructField(group_col, T.StringType()),
+            T.StructField(id_col, T.LongType()),
+            T.StructField(size_col, T.LongType()),
+            T.StructField("bin_id", T.LongType()),
+        ]
     )
+    arrow_schema = to_arrow_schema(schema)
 
-    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+    def pack(t: pa.Table) -> pa.Table:
+        t = t.sort_by(id_col)
         bins, fill, cur = [], 0, 0
-        for sz in pdf[size_col]:
+        for sz in t.column(size_col).to_pylist():
             if fill > 0 and fill + sz > budget:
                 cur += 1
                 fill = 0
             bins.append(cur)
             fill += sz
-        pdf["bin_id"] = bins
-        return pdf
+        return t.append_column("bin_id", pa.array(bins, pa.int64())).cast(
+            arrow_schema
+        )
 
-    return meta.groupBy(group_col).applyInPandas(pack, schema=schema)
+    return meta.groupBy(group_col).applyInArrow(pack, schema=schema)
 
 
 def weighted_sample_per_group(

@@ -3,19 +3,25 @@ token counting, quality scoring, language-ID heuristic, fingerprinting.
 
 Built-in expression composition over the ``documents`` table (doc_id,
 text, lang, source, n_chars) — codegen-covered, no Python in the row
-path — with one measured exception: language_id's ``arrow`` strategy
-scores in a pandas UDF because the tiny profile dict in the closure
-beats a 1.5M-row gram explode + join (~2× at sf0.1).
+path — with two measured exceptions, both through Arrow: language_id
+scores in an ``arrow_udf`` because the tiny profile dict in the closure
+beats a 1.5M-row gram explode + join (~2× at sf0.1), and the
+duplicate-span trim masks each doc's tokens in ``vectors.map_rows``.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
-import pandas as pd
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+
+from post_modern_stack_spark.operators import vectors
 
 # minimal function-word list present in the synthetic corpus; quality
 # scoring treats their share as a fluency signal
@@ -110,158 +116,120 @@ def language_id(
     profiles: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "join",
 ) -> DataFrame:
-    """N-gram-profile language ID, two physical strategies with
-    identical results (parity-tested):
+    """N-gram-profile language ID: the per-language score of a doc is
+    the summed profile weight of its char trigrams, and the doc gets the
+    language with the highest score.
 
-    - ``join`` (default; the huge-profile scale path): explode document
-      char-trigrams, broadcast-join the (lang, ngram, weight) profile
-      table, argmax the summed weight per doc. Corpus shuffles once.
-    - ``arrow``: collect the (tiny) profile table to a dict and score
-      each Arrow batch with one pandas apply — no explode, no shuffle
-      on the gram grain. The 1.5M-substring interpreted lambda and the
-      gram-grain join dominate the join path (~3 s at sf0.1); this path
-      measured ~5× faster. Valid while the profile table is
-      driver-collectable (per-language top-N — a few KB by design);
-      same contract family as vocab.encode vs encode_via_join.
+    The (tiny) profile table is collected to a dict that rides in the
+    closure of an iterator ``arrow_udf``, which scores each Arrow batch
+    of texts and returns a struct array — no gram explode, no shuffle
+    on the gram grain. Valid while the profile table is
+    driver-collectable (per-language top-N — a few KB by design).
 
-    Docs with no profile-gram match are absent from the output in BOTH
-    strategies. Scores round to 6dp BEFORE the argmax: equal weight
-    multisets summed in different orders drift in the last ulp, so
-    ranking on the raw double would be nondeterministic run-to-run
-    (and cross-engine); the rounded score + lang tie-break is total.
+    Docs with no profile-gram match are absent from the output. Scores
+    round to 6dp BEFORE the argmax: equal weight multisets summed in
+    different orders drift in the last ulp, so ranking on the raw
+    double would be nondeterministic run-to-run (and cross-engine); the
+    rounded score + lang tie-break is total.
     """
-    if strategy == "arrow":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    prof_rows = profiles.collect()
+    langs = sorted({r["lang"] for r in prof_rows})
+    lang_ix = {lang: i for i, lang in enumerate(langs)}
+    weights: dict[str, list] = {}
+    for r in prof_rows:
+        weights.setdefault(r["ngram"], [0.0] * len(langs))[
+            lang_ix[r["lang"]]
+        ] += r["weight"]
+    n = 3
+    n_langs = len(langs)
+    # vectorized scoring (r11, guide §4.2 "hand whole batches to
+    # vectorized native libraries"): an ascii doc of >= 3 chars yields
+    # only length-3 ascii slices, so every gram packs into a 24-bit
+    # integer code and a whole batch scores as numpy searchsorted-gather
+    # + per-lang bincount-scatter — the per-character interpreted loop
+    # was ~33 s of core time at sf0.1. Profile grams that are non-ascii
+    # or not length 3 can never match such a doc, so they stay out of
+    # the code table; docs that are non-ascii or shorter than 3 chars
+    # take the per-char dict loop (identical math, including the i = 0
+    # short-slice probe for len < 3). Scores sum in position order and
+    # round to 6dp before the argmax on both routes.
+    packable = sorted(g for g in weights if len(g) == 3 and g.isascii())
+    prof_codes = np.array(
+        [
+            (b[0] << 16) | (b[1] << 8) | b[2]
+            for b in (g.encode("ascii") for g in packable)
+        ],
+        dtype=np.int64,
+    )
+    prof_w = (
+        np.array([weights[g] for g in packable], dtype=np.float64)
+        if packable
+        else np.zeros((0, n_langs), dtype=np.float64)
+    )
+    out_type = pa.struct(
+        [("predicted_lang", pa.string()), ("lang_score", pa.float64())]
+    )
 
-        prof_rows = profiles.collect()
-        langs = sorted({r["lang"] for r in prof_rows})
-        lang_ix = {lang: i for i, lang in enumerate(langs)}
-        weights: dict[str, list] = {}
-        for r in prof_rows:
-            weights.setdefault(r["ngram"], [0.0] * len(langs))[
-                lang_ix[r["lang"]]
-            ] += r["weight"]
-        n = 3
-        n_langs = len(langs)
-        # vectorized scoring (r11, guide §4.2 "hand whole batches to
-        # vectorized native libraries"): an ascii doc of >= 3 chars
-        # yields only length-3 ascii slices, so every gram packs into a
-        # 24-bit integer code and a whole batch scores as numpy
-        # searchsorted-gather + per-lang bincount-scatter — the old
-        # per-character interpreted loop was ~33 s of core time at
-        # sf0.1. Profile grams that are non-ascii or not length 3 can
-        # never match such a doc, so they stay out of the code table;
-        # docs that are non-ascii or shorter than 3 chars take the
-        # original per-char dict loop (identical math, including the
-        # i = 0 short-slice probe for len < 3). Scores still sum in
-        # position order and round to 6dp before the argmax, the same
-        # tolerance contract both existing paths rely on.
-        packable = sorted(g for g in weights if len(g) == 3 and g.isascii())
-        prof_codes = np.array(
-            [
-                (b[0] << 16) | (b[1] << 8) | b[2]
-                for b in (g.encode("ascii") for g in packable)
-            ],
-            dtype=np.int64,
-        )
-        prof_w = (
-            np.array([weights[g] for g in packable], dtype=np.float64)
-            if packable
-            else np.zeros((0, n_langs), dtype=np.float64)
-        )
+    def _pick(raw_sums):
+        # raw > 0 filter BEFORE rounding, then max on the rounded
+        # (score, lang) tuple
+        cands = [
+            (round(s, 6), langs[j]) for j, s in enumerate(raw_sums) if s > 0.0
+        ]
+        if cands:
+            s_best, l_best = max(cands)
+            return {"predicted_lang": l_best, "lang_score": s_best}
+        return None
 
-        def _pick(raw_sums):
-            # raw > 0 filter BEFORE rounding, then max on the rounded
-            # (score, lang) tuple — byte-for-byte the original policy
-            cands = [
-                (round(s, 6), langs[j])
-                for j, s in enumerate(raw_sums)
-                if s > 0.0
-            ]
-            if cands:
-                s_best, l_best = max(cands)
-                return l_best, s_best
-            return None, None
-
-        @pandas_udf("predicted_lang string, lang_score double")
-        def score(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            for texts in batches:
-                vals = ["" if t is None else t for t in texts.tolist()]
-                out_lang: list = [None] * len(vals)
-                out_score: list = [None] * len(vals)
-                fast_ix = [
-                    i
-                    for i, t in enumerate(vals)
-                    if len(t) >= n and t.isascii()
-                ]
-                if fast_ix and len(prof_codes):
-                    bufs = [vals[i].encode("ascii") for i in fast_ix]
-                    lens = np.array([len(b) for b in bufs], dtype=np.int64)
-                    byts = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-                    doc_of = np.repeat(
-                        np.arange(len(bufs), dtype=np.int64), lens
-                    )
-                    codes = (
-                        (byts[:-2].astype(np.int64) << 16)
-                        | (byts[1:-1].astype(np.int64) << 8)
-                        | byts[2:]
-                    )
-                    # a gram is in-doc iff its first and third byte
-                    # belong to the same (contiguous) document
-                    in_doc = doc_of[:-2] == doc_of[2:]
-                    pos = np.searchsorted(prof_codes, codes)
-                    pos[pos == len(prof_codes)] = 0
-                    hit = in_doc & (prof_codes[pos] == codes)
-                    hit_docs = doc_of[:-2][hit]
-                    hit_pos = pos[hit]
-                    sums = np.zeros((len(bufs), n_langs), dtype=np.float64)
-                    for j in range(n_langs):
-                        sums[:, j] = np.bincount(
-                            hit_docs,
-                            weights=prof_w[hit_pos, j],
-                            minlength=len(bufs),
-                        )
-                    for row_i, i in enumerate(fast_ix):
-                        out_lang[i], out_score[i] = _pick(sums[row_i])
-                for i, t in enumerate(vals):
-                    if len(t) >= n and t.isascii():
-                        continue  # fast path (or no packable profile)
-                    sums_py = [0.0] * n_langs
-                    for p in range(max(len(t) - n + 1, 1)):
-                        w = weights.get(t[p : p + n])
-                        if w is not None:
-                            for j, wv in enumerate(w):
-                                sums_py[j] += wv
-                    out_lang[i], out_score[i] = _pick(sums_py)
-                yield pd.DataFrame(
-                    {"predicted_lang": out_lang, "lang_score": out_score}
+    @arrow_udf("predicted_lang string, lang_score double")
+    def score(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in batches:
+            vals = ["" if t is None else t for t in texts.to_pylist()]
+            out: list = [None] * len(vals)
+            fast_ix = [i for i, t in enumerate(vals) if len(t) >= n and t.isascii()]
+            if fast_ix and len(prof_codes):
+                bufs = [vals[i].encode("ascii") for i in fast_ix]
+                lens = np.array([len(b) for b in bufs], dtype=np.int64)
+                byts = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+                doc_of = np.repeat(np.arange(len(bufs), dtype=np.int64), lens)
+                codes = (
+                    (byts[:-2].astype(np.int64) << 16)
+                    | (byts[1:-1].astype(np.int64) << 8)
+                    | byts[2:]
                 )
+                # a gram is in-doc iff its first and third byte belong
+                # to the same (contiguous) document
+                in_doc = doc_of[:-2] == doc_of[2:]
+                pos = np.searchsorted(prof_codes, codes)
+                pos[pos == len(prof_codes)] = 0
+                hit = in_doc & (prof_codes[pos] == codes)
+                hit_docs = doc_of[:-2][hit]
+                hit_pos = pos[hit]
+                sums = np.zeros((len(bufs), n_langs), dtype=np.float64)
+                for j in range(n_langs):
+                    sums[:, j] = np.bincount(
+                        hit_docs, weights=prof_w[hit_pos, j], minlength=len(bufs)
+                    )
+                for row_i, i in enumerate(fast_ix):
+                    out[i] = _pick(sums[row_i])
+            for i, t in enumerate(vals):
+                if len(t) >= n and t.isascii():
+                    continue  # fast path (or no packable profile)
+                sums_py = [0.0] * n_langs
+                for p in range(max(len(t) - n + 1, 1)):
+                    w = weights.get(t[p : p + n])
+                    if w is not None:
+                        for j, wv in enumerate(w):
+                            sums_py[j] += wv
+                out[i] = _pick(sums_py)
+            yield pa.array(out, type=out_type)
 
-        scored = df.select(F.col(id_col), score(F.col(text_col)).alias("_s"))
-        return scored.filter(F.col("_s.predicted_lang").isNotNull()).select(
-            id_col,
-            F.col("_s.predicted_lang").alias("predicted_lang"),
-            F.col("_s.lang_score").alias("lang_score"),
-        )
-
-    grams = df.select(
-        F.col(id_col), F.explode(char_ngrams(text_col)).alias("ngram")
-    )
-    scored = (
-        grams.join(F.broadcast(profiles), "ngram")
-        .groupBy(id_col, "lang")
-        .agg(F.round(F.sum("weight"), 6).alias("score"))
-    )
-    return scored.groupBy(id_col).agg(
-        F.max_by("lang", F.struct(F.col("score"), F.col("lang"))).alias(
-            "predicted_lang"
-        ),
-        F.max("score").alias("lang_score"),
+    scored = df.select(F.col(id_col), score(F.col(text_col)).alias("_s"))
+    return scored.filter(F.col("_s").isNotNull()).select(
+        id_col,
+        F.col("_s.predicted_lang").alias("predicted_lang"),
+        F.col("_s.lang_score").alias("lang_score"),
     )
 
 
@@ -649,7 +617,7 @@ def remove_duplicate_spans(
     position-grain probe would under a sort-merge position join).
     Duplicated positions collapse to a per-doc list (bounded by doc
     length), rejoin at DOC grain, and the span-mask trim runs as one
-    Arrow-batched pandas pass (a boolean mask per doc; the
+    Arrow row map, ``vectors.map_rows`` (a boolean mask per doc; the
     expression-tree alternative is O(L·|dup spans|) interpreted per
     doc). With ``hashed_keys`` the exchange moves 8-byte xxhash64
     keys, not gram strings.
@@ -758,11 +726,6 @@ def _span_trim_frame(
     counters n_grams / n_dup_grams to the Arrow pass; the rounded
     ratio is applied JVM-side by the caller). Scale shape documented
     on ``remove_duplicate_spans``."""
-    import re
-
-    import numpy as np
-
-    id_type = df.schema[id_col].dataType.simpleString()
     toks = F.split(F.col(text_col), r"\s+")
 
     def explode_positions(docs: DataFrame) -> DataFrame:
@@ -804,46 +767,41 @@ def _span_trim_frame(
         dup_positions, id_col, "left"
     )
 
-    schema = f"{id_col} {id_type}, n_tokens long, n_kept long, kept_text string"
+    fields = [
+        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField("n_tokens", T.LongType()),
+        T.StructField("n_kept", T.LongType()),
+        T.StructField("kept_text", T.StringType()),
+    ]
     if with_share:
-        schema += ", n_grams long, n_dup_grams long"
+        fields += [
+            T.StructField("n_grams", T.LongType()),
+            T.StructField("n_dup_grams", T.LongType()),
+        ]
     # Java \s == [ \t\n\x0B\f\r]; Python \s additionally matches
     # Unicode whitespace — spell the class out so trim positions match
     # the Spark split exactly. re.split with this pattern also keeps
     # leading/trailing empty tokens, like Java split(limit=-1).
     java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    def trim(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            ids, n_tok, n_kept, kept = [], [], [], []
-            n_g, n_dup = [], []
-            for doc_id, text, dups in zip(
-                pdf[id_col].values, pdf["__text"].values, pdf["__dups"].values
-            ):
-                words = java_ws.split(text)
-                mask = np.ones(len(words), dtype=bool)
-                if dups is not None and len(dups):
-                    for p in dups:
-                        mask[p : p + n] = False
-                ids.append(doc_id)
-                n_tok.append(len(words))
-                n_kept.append(int(mask.sum()))
-                kept.append(" ".join(w for w, m in zip(words, mask) if m))
-                if with_share:
-                    n_g.append(max(len(words) - n + 1, 0))
-                    n_dup.append(len(dups) if dups is not None else 0)
-            cols = {
-                id_col: ids,
-                "n_tokens": n_tok,
-                "n_kept": n_kept,
-                "kept_text": kept,
-            }
-            if with_share:
-                cols["n_grams"] = n_g
-                cols["n_dup_grams"] = n_dup
-            yield pd.DataFrame(cols)
+    def trim(row: dict) -> list[dict]:
+        words = java_ws.split(row["__text"])
+        dups = row["__dups"] or []
+        mask = np.ones(len(words), dtype=bool)
+        for p in dups:
+            mask[p : p + n] = False
+        out = {
+            id_col: row[id_col],
+            "n_tokens": len(words),
+            "n_kept": int(mask.sum()),
+            "kept_text": " ".join(w for w, m in zip(words, mask) if m),
+        }
+        if with_share:
+            out["n_grams"] = max(len(words) - n + 1, 0)
+            out["n_dup_grams"] = len(dups)
+        return [out]
 
-    return src.mapInPandas(trim, schema=schema)
+    return vectors.map_rows(src, trim, T.StructType(fields))
 
 
 def unigram_logprob(df: DataFrame, text_col: str = "text") -> DataFrame:

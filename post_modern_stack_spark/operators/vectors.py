@@ -1,4 +1,5 @@
-"""The one boundary between Arrow list columns and numpy matrices.
+"""The package's Python batch boundary: Arrow list columns to numpy
+matrices, and Arrow record batches to rows.
 
 Every embedding operator (ANN top-K, LSH buckets, whitening, k-means,
 embedding near-dups, semantic dedup, the batched predict) moves vectors
@@ -17,6 +18,11 @@ The vector contract, which every caller inherits:
   otherwise become NaN and silently corrupt every score it touches);
 - a ragged row raises
   ``ValueError("ragged embedding column; expected dim=<dim>")``.
+
+Row-at-a-time Python work (the media codecs, the duplicate-span trim)
+goes through :func:`map_rows`, a ``mapInArrow`` iterator that maps the
+rows of one Arrow record batch at a time, so a task holds one batch,
+never a partition.
 """
 
 from __future__ import annotations
@@ -24,6 +30,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def matrix(
@@ -64,3 +72,16 @@ def collect_matrix(
     frame's order through Arrow."""
     t = df.select(id_col, vec_col).toArrow()
     return t.column(0).to_numpy(), matrix(t.column(1))
+
+
+def map_rows(df: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """``fn`` maps each row of ``df`` (a dict) to a list of output rows
+    of ``schema``, one Arrow record batch at a time."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.mapInArrow(run, schema)

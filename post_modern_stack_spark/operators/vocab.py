@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from post_modern_stack_spark.operators.obs import checkpoint_observed
 
-UNK = "<UNK>"
 UNK_ID = 1
 
 

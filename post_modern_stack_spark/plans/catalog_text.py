@@ -273,24 +273,23 @@ def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K4 language-ID: char-trigram profiles trained on a deterministic
     10% sample (profiles are a small artifact — training on the full
     corpus doubles the trigram explode for no profile gain), applied to
-    the full corpus via broadcast join + argmax. Oracle-paired: the
+    the full corpus by an Arrow scorer + argmax. Oracle-paired: the
     whole train-then-score pipeline restated in SQL; per-(doc, lang)
     scores round to 6dp before the argmax on BOTH sides so the winner
     is total-ordered (score, lang) in each engine."""
     from post_modern_stack_spark.operators.skew import widen_narrow_scan
 
     # a single-row-group corpus file pins BOTH the training trigram
-    # explode and the Arrow scoring pass (a per-char Python loop) to
-    # one task/worker — widen conditionally so all workers score
-    # (no-op on wide scans; guide §2.5, r11)
+    # explode and the Arrow scoring pass to one task/worker — widen
+    # conditionally so all workers score (no-op on wide scans; guide
+    # §2.5, r11)
     d = widen_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     )
     profiles = textstats.ngram_language_profiles(d.filter(F.col("doc_id") % 10 == 0))
-    # arrow strategy: profile dict rides in the UDF closure — measured
-    # ~2× over the gram-explode broadcast join at sf0.1 (the join path
-    # stays the huge-profile scale option, parity-tested)
-    return textstats.language_id(d, profiles, strategy="arrow")
+    # the profile dict rides in the arrow_udf closure — measured ~2×
+    # over a gram-explode broadcast join at sf0.1
+    return textstats.language_id(d, profiles)
 
 
 @query(
@@ -1902,7 +1901,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] sequence packing: greedy first-fit of docs into 256-token
     training bins per source shard (shaping.pack_greedy). Sequential
-    state per group → applyInPandas over the doc-grain metadata
+    state per group → applyInArrow over the doc-grain metadata
     projection; groups pack in parallel. Oracle replays the greedy
     recurrence with a recursive CTE."""
     from post_modern_stack_spark.operators.shaping import pack_greedy

@@ -24,7 +24,7 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
   default locale, which changes results only for ``tr``, ``az`` and
   ``lt``: under those the conf stays on ICU. Executors must share the
   driver's locale language, as they share the UTC pin.
-- Arrow enabled for any pandas boundary (the ML edge, pandas UDFs).
+- Arrow enabled for the ML edge (``toPandas()``).
 - Generated-class cache sized to the catalog's working set: Spark keeps
   compiled codegen classes in a cache of
   ``spark.sql.codegen.cache.maxEntries`` (default 100), and Janino

@@ -32,7 +32,7 @@ def register_udtfs(spark: SparkSession) -> list[str]:
                 yield i, text[i : i + n]
 
     from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult
-    from pyspark.sql.types import IntegerType, StringType, StructType
+    from pyspark.sql.types import StringType, StructType
 
     class SplitFields:
         """POLYMORPHIC UDTF (Spark 4 ``analyze()``): output schema is

@@ -649,20 +649,19 @@ def test_media_query_property(spark, sf_dir, doc_text, name):
 
 def test_media_modules_keep_one_boundary_and_one_codec_table():
     """The media modules cross into Python only through
-    ``multimodal._map_rows`` (``mapInArrow``, no pandas), the strict
-    codec route is the only one, and the two codec operators dispatch
-    through ``_CODECS`` instead of testing magic bytes themselves."""
+    ``vectors.map_rows`` (the Arrow-only rule itself is checked
+    package-wide in ``test_vectors.py``), the strict codec route is the
+    only one, and the two codec operators dispatch through ``_CODECS``
+    instead of testing magic bytes themselves."""
     import ast
     import inspect
     import pathlib
-    import re
     import textwrap
 
     from post_modern_stack_spark.plans import catalog_multimodal
 
-    pandas_use = re.compile(r"^\s*(import|from) pandas\b|mapInPandas", re.M)
     for mod in (MM, catalog_multimodal):
-        assert not pandas_use.search(pathlib.Path(mod.__file__).read_text()), mod.__name__
+        assert "mapInArrow" not in pathlib.Path(mod.__file__).read_text(), mod.__name__
     pkg = pathlib.Path(MM.__file__).resolve().parents[1]
     assert [p for p in pkg.rglob("*.py") if "require_real_codecs" in p.read_text()] == []
     for fn in (MM.extract_features, MM.resize_media):

@@ -282,39 +282,17 @@ def test_minhash_bands_divisibility_guard(spark):
         dedup.minhash_lsh_candidates(df, num_hashes=64, bands=12)
 
 
-def test_language_id_arrow_join_parity(spark):
-    """language_id's two physical strategies (gram-explode broadcast
-    join vs closure-dict Arrow scoring) return identical predictions
-    and rounded scores."""
-    from pyspark.sql import functions as F
-
-    from post_modern_stack_spark.operators import textstats
-    from post_modern_stack_spark.registry import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    prof = textstats.ngram_language_profiles(d.filter(F.col("doc_id") % 10 == 0))
-    a = {
-        r["doc_id"]: (r["predicted_lang"], r["lang_score"])
-        for r in textstats.language_id(d, prof, strategy="arrow").collect()
-    }
-    b = {
-        r["doc_id"]: (r["predicted_lang"], r["lang_score"])
-        for r in textstats.language_id(d, prof, strategy="join").collect()
-    }
-    assert a and a == b
-
-
-def test_language_id_arrow_vectorized_routes_parity(spark):
-    """r11 vectorized Arrow scorer: ascii docs >= 3 chars ride the
-    numpy 24-bit-gram-code path, non-ascii and short docs the original
-    per-char dict loop, and non-ascii profile grams stay out of the
-    packed code table — all inside ONE batch. Parity vs the broadcast
-    join path (which has no such routing) over a corpus that planted a
-    doc in every route: mixed-script, short (< 3 chars), empty,
-    gram-free, and plain ascii docs, trained on mixed-script docs so
-    the profile itself holds non-packable grams."""
-    from pyspark.sql import functions as F
-
+def test_language_id_routes_match_a_python_scorer(spark):
+    """language_id's Arrow scorer routes ascii docs >= 3 chars through
+    the numpy 24-bit-gram-code path and non-ascii and short docs
+    through the per-char dict loop, and keeps non-ascii profile grams
+    out of the packed code table — all inside ONE batch. It must agree
+    with a plain Python scorer (sum the profile weights of each char
+    trigram, round to 6dp, argmax on (score, lang), drop docs with no
+    matching gram) over a corpus that plants a doc in every route:
+    mixed-script, short (< 3 chars), empty, gram-free, and plain ascii
+    docs, trained on mixed-script docs so the profile itself holds
+    non-packable grams."""
     from post_modern_stack_spark.operators import textstats
 
     rows = [
@@ -331,19 +309,32 @@ def test_language_id_arrow_vectorized_routes_parity(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     prof = textstats.ngram_language_profiles(d)  # includes non-ascii grams
-    a = {
+    unseen = (10, "xyzxyz", "en")  # scored, but none of its grams trained
+    scored = d.union(spark.createDataFrame([unseen], d.schema))
+    got = {
         r["doc_id"]: (r["predicted_lang"], r["lang_score"])
-        for r in textstats.language_id(d, prof, strategy="arrow").collect()
+        for r in textstats.language_id(scored, prof).collect()
     }
-    b = {
-        r["doc_id"]: (r["predicted_lang"], r["lang_score"])
-        for r in textstats.language_id(d, prof, strategy="join").collect()
-    }
-    assert a == b
-    # the ja docs really were scored (non-ascii route produced output)
-    assert a[2][0] == "ja" and a[8][0] == "ja"
-    # ascii route produced output too
-    assert a[1][0] == "en"
+
+    weight = {(r["lang"], r["ngram"]): r["weight"] for r in prof.collect()}
+    want = {}
+    for doc_id, text, _ in rows + [unseen]:
+        # char_ngrams: one gram per position, the whole text if shorter
+        grams = [text[i : i + 3] for i in range(max(len(text) - 2, 1))]
+        sums = {}
+        for g in grams:
+            for (lang, ngram), w in weight.items():
+                if ngram == g:
+                    sums[lang] = sums.get(lang, 0.0) + w
+        if sums:
+            score, lang = max((round(v, 6), k) for k, v in sums.items())
+            want[doc_id] = (lang, score)
+    assert got == want
+    # every route produced output: the ja docs (non-ascii) and an ascii doc
+    assert got[2][0] == "ja" and got[8][0] == "ja"
+    assert got[1][0] == "en"
+    # and a doc with no matching gram is left out
+    assert 10 not in got
 
 
 def test_pq_recall_vs_brute_force(spark):

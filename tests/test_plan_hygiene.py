@@ -12,11 +12,13 @@ is compiled (no execution) and checked for scale hazards —
   sf0.1, r07) — the token array must be projected to an attribute
   first (textstats/dedup token-projection pattern).
 
-It also holds an AST-only guard against code the system never runs:
-every public, undecorated top-level function or class in the package
-must be used by name, outside its own body, by the package, the driver
-entry point, ``bench.py``, ``perfbench/`` or ``scripts/``. A use from
-``tests/`` does not count, and neither does a bare import.
+It also holds two AST-only guards against code the system never runs:
+every public top-level function or class in the package, other than
+an ``@query`` (the catalog registers those), must be used by name,
+outside its own body, by the package, the driver entry point,
+``bench.py``, ``perfbench/`` or ``scripts/`` — a use from ``tests/``
+does not count, and neither does a bare import; and every name a
+package module imports must be used in that module.
 
 Plan compilation only: the sweep explains ~200 queries in seconds and
 catches hazard regressions without running any data.
@@ -27,6 +29,7 @@ from __future__ import annotations
 import ast
 import io
 import pathlib
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -150,7 +153,44 @@ def test_every_public_definition_is_referenced():
         for node in ast.parse(p.read_text(), str(p)).body
         if isinstance(node, _DEFS)
         and not node.name.startswith("_")
-        and not node.decorator_list
+        and not any(_is_query(d) for d in node.decorator_list)
         and node.name not in used
     ]
     assert dead == [], "\n".join(["unused by the system:", *dead])
+
+
+def _is_query(decorator: ast.expr) -> bool:
+    """``@query(...)``: the catalog's registration decorator."""
+    fn = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return isinstance(fn, ast.Name) and fn.id == "query"
+
+
+def test_every_import_is_used():
+    """Each name a package module imports is read in that module
+    (``__all__`` entries count). ``from __future__`` and an import
+    marked ``# noqa: F401`` (an import for its side effect, such as
+    the catalog modules registering their queries) are exempt."""
+    unused = []
+    for p in sorted((ROOT / "post_modern_stack_spark").rglob("*.py")):
+        src = p.read_text()
+        tree = ast.parse(src, str(p))
+        lines = src.splitlines()
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        read |= {
+            n.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            stmt = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+            if re.search(r"#\s*noqa:[\w, ]*\bF401\b", stmt):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in read:
+                    unused.append(f"{p.relative_to(ROOT)}:{node.lineno} {name}")
+    assert unused == [], "\n".join(["imported but unused:", *unused])

